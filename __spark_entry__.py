@@ -5837,47 +5837,7 @@ _FIRST50 = [
     "edit_join", "fuzzy_title_dedup", "dbscan_clusters", "pq_recall",
     # (the r7 block — asof_forward, bm25_search, buffer_lines, ... —
     # becomes the oldest evidence after this round and leads any
-    # future gate's pool. Two late-r11 operators register as queries
-    # in r12 — this round's gate is full: streaming_benford
-    # (streaming/drift.py, equality-pinned by tests/test_benford.py)
-    # Fellegi-Sunter linkage (operators/linkage.py,
-    # tests/test_linkage.py), per-key OLS trend (operators/
-    # timeseries.py trend_by_key), McNemar's paired test
-    # (operators/evals.py mcnemar_test), and degree-oriented exact
-    # triangle counting (operators/graph.py triangle_count — needs
-    # ALLOWED_BROADCAST_CROSSES = 3: the one-row vertex/edge/wedge
-    # summary frames crossed into the single output row, the
-    # hll_setops pattern; the others pre-audit clean), the
-    # declarative data-contract audit (operators/profile.py
-    # expectations_check), the deterministic Poisson-bootstrap
-    # mean CI (operators/evals.py bootstrap_mean_ci), per-key CUSUM
-    # changepoint detection (operators/timeseries.py
-    # cusum_changepoint), and the seasonal-index profile
-    # (operators/timeseries.py seasonal_profile — needs
-    # ALLOWED_BROADCAST_CROSSES = 1: the one-row totals frame
-    # crossed into the ≤period cells), and the chi-square
-    # independence audit (operators/profile.py chi2_independence +
-    # _stat — needs ALLOWED_BROADCAST_CROSSES = 2: the
-    # category-bounded marginal grid cross + the one-row grand
-    # total), phonetic (simplified-Soundex) linkage blocking
-    # (operators/linkage.py phonetic_code_col / phonetic_blocks),
-    # tie-aware Spearman rank correlation (operators/evals.py
-    # spearman_corr — needs ALLOWED_BROADCAST_CROSSES = 1: the
-    # one-row total crossed into the joint-histogram cells), and
-    # the histogram decision-stump fit (operators/mlfit.py
-    # stump_fit), Welch's t-test (operators/evals.py ttest_welch;
-    # Cramér's V rides on chi2_independence_stat), bounded-round
-    # k-core peeling (operators/graph.py kcore_peel), CUPED
-    # variance-reduced A/B (operators/evals.py cuped_ttest), the
-    # Kaplan-Meier survival estimator and its log-rank companion
-    # (operators/evals.py kaplan_meier, logrank_test — each needs
-    # ALLOWED_BROADCAST_CROSSES = 1: the one-row totals crossed
-    # into the distinct-time frame), per-group Wilson proportion
-    # intervals (operators/evals.py wilson_ci), OHLC bars
-    # (operators/timeseries.py ohlc_bars), and the
-    # streaming seasonal twin (streaming/drift.py
-    # streaming_seasonal, equality-pinned) — all unit-pinned, with
-    # oracle-grade previews in tests/test_r12_previews.py.)
+    # future gate's pool.)
 ]
 
 

@@ -331,12 +331,3 @@ def relate_match(matrix: str, pattern: str) -> Optional[bool]:
         else:
             return None
     return True
-
-
-def relate_pattern(a: Geometry, b: Geometry, pattern: str) -> Optional[bool]:
-    """ST_Relate(a, b, pattern): matrix test against an intersection
-    pattern."""
-    m = relate(a, b)
-    if m is None:
-        return None
-    return relate_match(m, pattern)

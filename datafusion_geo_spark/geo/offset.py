@@ -610,18 +610,6 @@ def _buffer_path_once(g: Geometry, w: float, quadsegs: int) -> Geometry:
     return Geometry("MultiPolygon", polys, g.srid)
 
 
-def _line_line_x(p0: Coord, p1: Coord, q0: Coord,
-                 q1: Coord) -> Optional[Coord]:
-    """Intersection of the INFINITE lines p0p1 and q0q1."""
-    d1 = (p1[0] - p0[0], p1[1] - p0[1])
-    d2 = (q1[0] - q0[0], q1[1] - q0[1])
-    den = d1[0] * d2[1] - d1[1] * d2[0]
-    if abs(den) < 1e-12:
-        return None
-    t = ((q0[0] - p0[0]) * d2[1] - (q0[1] - p0[1]) * d2[0]) / den
-    return (p0[0] + t * d1[0], p0[1] + t * d1[1])
-
-
 def _seg_seg_trim(p0: Coord, p1: Coord, q0: Coord,
                   q1: Coord) -> Optional[Coord]:
     """Intersection of SEGMENTS p0p1 and q0q1 (params in [0, 1] with

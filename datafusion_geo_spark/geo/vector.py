@@ -196,12 +196,6 @@ def points_equal_xy(b: PointBatch, px: float, py: float) -> np.ndarray:
     return (np.abs(b.x - px) <= EPS) & (np.abs(b.y - py) <= EPS)
 
 
-def points_in_bbox(b: PointBatch, xmin: float, ymin: float,
-                   xmax: float, ymax: float) -> np.ndarray:
-    return ((b.x >= xmin - EPS) & (b.x <= xmax + EPS)
-            & (b.y >= ymin - EPS) & (b.y <= ymax + EPS))
-
-
 def points_in_ring(b: PointBatch, ring: Sequence[Tuple[float, float]]) -> np.ndarray:
     """Vectorized point-in-polygon (single ring, boundary-inclusive):
     ray cast + on-edge check, looping over edges (few) not points (many)."""

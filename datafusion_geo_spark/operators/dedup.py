@@ -18,6 +18,7 @@ from typing import List, Optional, Sequence, Tuple
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from . import util
 from .text import words_col
 from .util import round6_binary
 
@@ -320,19 +321,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
             .where(F.col("jaccard") >= min_jaccard))
 
 
-#: rounds the most recent connected_components call needed — free
-#: measurement telemetry for the optimization docs (guide §1), never
-#: read by query paths (0 = the bounded driver finish ran instead)
-_CC_LAST_ROUNDS = 0
-
-#: edge-count cap for the bounded driver union-find inside
-#: connected_components: 2M narrow (src, dst) rows is a few tens of MB
-#: on the driver — the same order as a collected model aggregate, far
-#: under spark.driver.maxResultSize. Above it the distributed
-#: min-label loop runs unchanged.
-DRIVER_CC_MAX_EDGES = 2_000_000
-
-
 def _driver_components(spark, edges: DataFrame) -> DataFrame:
     """Exact min-reachable-id components of a (src, dst) edge relation
     via driver-side union-find with path compression — callable only
@@ -414,7 +402,6 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     ``max_iter`` bounds pathological chains and raises rather than
     returning a half-merged labeling."""
     from pyspark.sql import Observation
-    global _CC_LAST_ROUNDS
     spark = pairs.sparkSession
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # ``symmetric=True`` promises the input already contains both
@@ -450,7 +437,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # dbscan core graph vs 0.3 s driver-side). Larger graphs take the
     # distributed loop below unchanged — the cap is what keeps the
     # driver out of unbounded data work (guide §5).
-    if 0 < n_edges <= DRIVER_CC_MAX_EDGES:
+    if 0 < n_edges <= util.DRIVER_MAX_EDGES:
         try:
             return _driver_components(spark, e0)
         finally:
@@ -517,7 +504,6 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             changed = obs.get["chg"] or 0
             labels = new_labels.drop("_prev")
             if changed == 0:
-                _CC_LAST_ROUNDS = _round + 1
                 return labels.select(F.col("v").alias("doc_id"),
                                      F.col("label").alias("component"))
         raise RuntimeError(

@@ -1526,547 +1526,3 @@ def isotonic_calibrate(scored: DataFrame, score_col: str,
     return res.select(
         "score", "n", "n_pos", "blk_n", "blk_pos",
         _ratio6(F.col("blk_pos"), F.col("blk_n")).alias("cal"))
-
-
-def mcnemar_test(df: DataFrame, label_col: str, pred_a_col: str,
-                 pred_b_col: str) -> DataFrame:
-    """McNemar's paired test for comparing two classifiers on the
-    SAME examples — the statistically sound way to claim "model B
-    beats model A" from one eval set (paired discordance, not two
-    independent accuracies). Counts the discordant cells b (A right,
-    B wrong) and c (A wrong, B right) in one exact-int aggregate; the
-    continuity-corrected statistic (|b−c|−1)²/(b+c) is an exact
-    integer numerator over an exact integer denominator — emitted as
-    (chi2_num, chi2_den) plus the house 6-dp double; NULL when
-    b+c = 0 (no discordance, nothing to test). Also reports both
-    accuracies' raw numerators for context. ONE row out."""
-    from .text import _ratio6
-
-    ok_a = (F.col(pred_a_col) == F.col(label_col)).cast("int")
-    ok_b = (F.col(pred_b_col) == F.col(label_col)).cast("int")
-    agg = df.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(ok_a).cast("long").alias("n_correct_a"),
-        F.sum(ok_b).cast("long").alias("n_correct_b"),
-        F.sum(((ok_a == 1) & (ok_b == 0)).cast("long")).cast("long")
-        .alias("b_discordant"),
-        F.sum(((ok_a == 0) & (ok_b == 1)).cast("long")).cast("long")
-        .alias("c_discordant"))
-    b, c = F.col("b_discordant"), F.col("c_discordant")
-    d = F.abs(b - c) - F.lit(1)
-    num = F.when(d > 0, d * d).otherwise(F.lit(0)).cast("long")
-    den = (b + c).cast("long")
-    return agg.select(
-        "n", "n_correct_a", "n_correct_b", "b_discordant",
-        "c_discordant", num.alias("chi2_num"), den.alias("chi2_den"),
-        F.when(den > 0, _ratio6(num, den)).alias("chi2"))
-
-
-#: Poisson(1) CDF at k = 0..8, 6-dp micro (half-up) — universal
-#: constants embedded identically in the operator and every oracle;
-#: the residual tail mass (1e-6) maps to weight 9
-POISSON1_CDF_MICRO = (367879, 735759, 919699, 981012, 996340,
-                      999406, 999917, 999990, 999999)
-
-
-def _poisson1_weight(u_micro: Column) -> Column:
-    """Deterministic Poisson(1) draw from a micro-uniform in
-    [0, 1e6): the smallest k whose CDF micro exceeds u. Pure integer
-    comparisons against embedded constants — identical in any
-    engine."""
-    w = F.lit(9)
-    for k in range(len(POISSON1_CDF_MICRO) - 1, -1, -1):
-        w = F.when(u_micro < F.lit(POISSON1_CDF_MICRO[k]),
-                   F.lit(k)).otherwise(w)
-    return w.cast("long")
-
-
-def bootstrap_mean_ci(df: DataFrame, value_col: str,
-                      id_col: str, n_boot: int = 200,
-                      seed: str = "boot0",
-                      lo_pct: int = 5, hi_pct: int = 95) -> DataFrame:
-    """Deterministic Poisson bootstrap CI for the mean of an
-    integer-quantized column — the statistically honest error bar an
-    eval report needs, in the only shape that works at 100 TB: the
-    classic Poisson-bootstrap trick (each replica resamples every row
-    independently with a Poisson(1) weight, avoiding any global
-    resample pass), all B replicas accumulated in ONE partial+final
-    aggregate of 2B exact int64 sums.
-
-    Determinism contract: the weight for (row, replica) comes from
-    the house md5 32-bit hash (dedup.h64 — DuckDB-replayable as
-    ('0x'||substr(md5(..),1,8))::BIGINT) mapped through the embedded
-    Poisson(1) CDF micro table — integer comparisons only, so every
-    engine draws the same resample. Replica means are micro-ints (the house half-away
-    scaled ratio); the interval is the ``hist_quantiles`` rank test
-    over the B means (smallest mean whose rank reaches the
-    percentile). ONE row out: (n_rows, mean, ci_lo, ci_hi) — mean and
-    bounds as exact 6-dp doubles; NULL bounds when every replica is
-    empty (tiny frames can draw all-zero weights)."""
-    x = F.col(value_col).cast("long")
-    aggs = [F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(x).alias("sx")]
-    for b in range(n_boot):
-        from .dedup import h64
-        h = h64(F.concat(F.lit(f"{seed}|{b}|"),
-                         F.col(id_col).cast("string")))
-        u = F.pmod(h, F.lit(1_000_000)).cast("long")
-        w = _poisson1_weight(u)
-        aggs += [F.sum(w * x).alias(f"bx{b}"),
-                 F.sum(w).alias(f"bn{b}")]
-    one = df.agg(*aggs)
-    means = F.array(*[
-        F.when(F.col(f"bn{b}") > 0,
-               (F.signum(F.col(f"bx{b}"))
-                * _idiv(F.lit(2_000_000) * F.abs(F.col(f"bx{b}"))
-                        + F.col(f"bn{b}"),
-                        F.lit(2) * F.col(f"bn{b}"))).cast("long"))
-        for b in range(n_boot)])
-    good = F.filter(means, lambda m: m.isNotNull())
-    srt = F.array_sort(good)
-    nb = F.size(srt)
-
-    def pick(pct):
-        # smallest mean whose 1-based rank r satisfies
-        # 100*r >= pct*nb — the hist_quantiles rank test over the
-        # sorted replica means
-        idx = _idiv(F.lit(int(pct)) * nb + F.lit(99), F.lit(100))
-        return F.when(nb > 0, F.element_at(
-            srt, F.greatest(idx, F.lit(1)).cast("int"))
-            / F.lit(1_000_000.0))
-
-    return one.select(
-        "n_rows",
-        F.when(F.col("n_rows") > 0,
-               _sratio6(F.col("sx"), F.col("n_rows"))).alias("mean"),
-        pick(lo_pct).alias("ci_lo"), pick(hi_pct).alias("ci_hi"))
-
-
-def spearman_corr(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
-    """Tie-aware Spearman rank correlation of two INTEGER-quantized
-    columns in histogram form — no global ranking window over the
-    corpus, the auc_exact recipe. The corpus pass is ONE grouped
-    count of the joint (x, y) histogram; each axis's tied-average
-    rank comes from a cumulative window over that axis's
-    DISTINCT-VALUE frame (distinct-sized, not corpus-sized); the
-    correlation is Pearson over centered even integer ranks
-    u = 2·cum_before + cnt − n (twice the average rank minus (n+1) —
-    integer, and Σ c·u = 0 by construction), so
-    rho = Σc·u·v / sqrt(Σc·u² · Σc·v²) needs no mean subtraction.
-
-    All three sums are exact int64; the sqrt's argument is the
-    double product of two int64s (the pearson_corr precedent), and
-    the divide + 6-dp round is the house fixed expression. Overflow
-    envelope: |u| ≤ n so Σc·u² ≤ n³ — exact to ~2·10⁶ rows per
-    call; quantize or sample beyond. NULLs in either column are
-    excluded. ONE row out: (n_rows, suv_num, suu_num, svv_num,
-    rho)."""
-    cells = (df.where(F.col(x_col).isNotNull()
-                      & F.col(y_col).isNotNull())
-             .groupBy(F.col(x_col).cast("long").alias("x"),
-                      F.col(y_col).cast("long").alias("y"))
-             .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    hx = cells.groupBy("x").agg(F.sum("c").alias("cx"))
-    hy = cells.groupBy("y").agg(F.sum("c").alias("cy"))
-    wx = (Window.partitionBy().orderBy("x")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    wy = (Window.partitionBy().orderBy("y")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    hx = hx.withColumn("cumx", F.coalesce(F.sum("cx").over(wx),
-                                          F.lit(0)).cast("long"))
-    hy = hy.withColumn("cumy", F.coalesce(F.sum("cy").over(wy),
-                                          F.lit(0)).cast("long"))
-    tot = cells.agg(F.sum("c").alias("_n"))
-    j = (cells.join(hx, "x").join(hy, "y")
-         .crossJoin(F.broadcast(tot)))
-    u = F.lit(2) * F.col("cumx") + F.col("cx") - F.col("_n")
-    v = F.lit(2) * F.col("cumy") + F.col("cy") - F.col("_n")
-    agg = j.agg(
-        F.sum("c").cast("long").alias("n_rows"),
-        F.sum(F.col("c") * u * v).cast("long").alias("suv_num"),
-        F.sum(F.col("c") * u * u).cast("long").alias("suu_num"),
-        F.sum(F.col("c") * v * v).cast("long").alias("svv_num"))
-    rho = (F.col("suv_num").cast("double")
-           / F.sqrt(F.col("suu_num").cast("double")
-                    * F.col("svv_num").cast("double")))
-    return agg.select(
-        "n_rows", "suv_num", "suu_num", "svv_num",
-        F.when((F.col("suu_num") > 0) & (F.col("svv_num") > 0),
-               _r6(rho)).alias("rho"))
-
-
-def ttest_welch(df: DataFrame, value_col: str, group_col: str,
-                side_a: str, side_b: str) -> DataFrame:
-    """Welch's unequal-variance two-sample t-test of an
-    integer-quantized metric between two groups — the A/B answer to
-    ks_stat's distributional question ("did the mean shift, and by
-    how many standard errors?").
-
-    ONE conditional aggregate carries the six exact int64 moments
-    (n, Σy, Σy² per side — map-side combined, a single corpus pass);
-    the t statistic and the Welch–Satterthwaite degrees of freedom
-    are single fixed double expressions of those ints (the
-    pearson_corr discipline), each 6-dp rounded once. The exact
-    variance rationals are carried in the output (var_num = n·Σy²
-    − (Σy)², var_den = n·(n−1)) so replays are bit-for-bit.
-    Overflow envelope: n·Σy² must fit int64 — the pearson_corr
-    quantization note applies.
-
-    ONE row out: (n_a, n_b, mean_a, mean_b, var_num_a, var_num_b,
-    t_stat, df); t/df are NULL when either side has < 2 rows or
-    both variances are 0. Rows with NULL value are excluded; rows
-    outside the two sides are ignored."""
-    y = F.col(value_col).cast("long")
-    g = F.col(group_col)
-    src = df.where(y.isNotNull() & g.isin(side_a, side_b))
-
-    def side(tag, lbl):
-        cond = g == F.lit(lbl)
-        return [
-            F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-            .alias(f"n_{tag}"),
-            F.sum(F.when(cond, y).otherwise(0)).cast("long")
-            .alias(f"s_{tag}"),
-            F.sum(F.when(cond, y * y).otherwise(0)).cast("long")
-            .alias(f"ss_{tag}")]
-
-    agg = src.agg(*(side("a", side_a) + side("b", side_b)))
-
-    def tail(tag):
-        n = F.col(f"n_{tag}")
-        s = F.col(f"s_{tag}")
-        ss = F.col(f"ss_{tag}")
-        vnum = (n * ss - s * s).cast("long")
-        vden = (n * (n - 1)).cast("long")
-        return n, s, vnum, vden
-
-    na, sa, vna, vda = tail("a")
-    nb, sb, vnb, vdb = tail("b")
-    va = vna.cast("double") / vda.cast("double")
-    vb = vnb.cast("double") / vdb.cast("double")
-    sea = va / na.cast("double")
-    seb = vb / nb.cast("double")
-    se2 = sea + seb
-    t = ((sa.cast("double") / na.cast("double")
-          - sb.cast("double") / nb.cast("double")) / F.sqrt(se2))
-    dof = (se2 * se2
-           / (sea * sea / (na - 1).cast("double")
-              + seb * seb / (nb - 1).cast("double")))
-    ok = (na > 1) & (nb > 1) & ((vna > 0) | (vnb > 0))
-    return agg.select(
-        na.alias("n_a"), nb.alias("n_b"),
-        F.when(na > 0, _sratio6(sa, na)).alias("mean_a"),
-        F.when(nb > 0, _sratio6(sb, nb)).alias("mean_b"),
-        vna.alias("var_num_a"), vnb.alias("var_num_b"),
-        F.when(ok, _r6(t)).alias("t_stat"),
-        F.when(ok, _r6(dof)).alias("df"))
-
-
-def cuped_ttest(df: DataFrame, value_col: str, covariate_col: str,
-                group_col: str, side_a: str, side_b: str) -> DataFrame:
-    """CUPED variance-reduced A/B test (Deng et al. 2013, the
-    experimentation-platform standard): adjust the metric by a
-    pre-experiment covariate, y' = y − θ·(x − x̄), with
-    θ = cov(x, y)/var(x) estimated on the POOLED sample, then run
-    the Welch t-test on the adjusted metric. When the covariate is
-    the same metric pre-period, variance drops by its squared
-    correlation — the same experiment decides in a fraction of the
-    traffic.
-
-    ONE conditional aggregate carries the twelve exact int64 moments
-    (n, Σy, Σx, Σxy, Σxx, Σyy per side); θ, the adjusted means and
-    variances (var_adj = var_y + θ²·var_x − 2θ·cov, expanded from
-    the same moments — no second data pass), the Welch t, and the
-    variance-reduction ratio are fixed double expressions of those
-    ints (the ttest_welch discipline), each 6-dp rounded once.
-    Overflow envelope: n·Σxy must fit int64 (pearson_corr note).
-
-    ONE row out: (n_a, n_b, theta, mean_adj_a, mean_adj_b, t_cuped,
-    var_reduction) — var_reduction = 1 − var_adj/var_y of the pooled
-    sample, the fraction of metric variance the covariate removed.
-    t/theta NULL when either side has < 2 rows or pooled var(x) is
-    0. NULL metric or covariate rows are excluded."""
-    y = F.col(value_col).cast("long")
-    x = F.col(covariate_col).cast("long")
-    g = F.col(group_col)
-    src = df.where(y.isNotNull() & x.isNotNull()
-                   & g.isin(side_a, side_b))
-
-    def side(tag, lbl):
-        c = g == F.lit(lbl)
-        z = F.lit(0)
-        return [
-            F.sum(F.when(c, 1).otherwise(z)).cast("long")
-            .alias(f"n_{tag}"),
-            F.sum(F.when(c, y).otherwise(z)).cast("long")
-            .alias(f"sy_{tag}"),
-            F.sum(F.when(c, x).otherwise(z)).cast("long")
-            .alias(f"sx_{tag}"),
-            F.sum(F.when(c, x * y).otherwise(z)).cast("long")
-            .alias(f"sxy_{tag}"),
-            F.sum(F.when(c, x * x).otherwise(z)).cast("long")
-            .alias(f"sxx_{tag}"),
-            F.sum(F.when(c, y * y).otherwise(z)).cast("long")
-            .alias(f"syy_{tag}")]
-
-    agg = src.agg(*(side("a", side_a) + side("b", side_b)))
-
-    def m(tag, name):
-        return F.col(f"{name}_{tag}")
-
-    n = (m("a", "n") + m("b", "n")).cast("double")
-    sy = (m("a", "sy") + m("b", "sy")).cast("double")
-    sx = (m("a", "sx") + m("b", "sx")).cast("double")
-    sxy = (m("a", "sxy") + m("b", "sxy")).cast("double")
-    sxx = (m("a", "sxx") + m("b", "sxx")).cast("double")
-    syy = (m("a", "syy") + m("b", "syy")).cast("double")
-    cov_n = n * sxy - sx * sy
-    varx_n = n * sxx - sx * sx
-    vary_n = n * syy - sy * sy
-
-    # ANSI Spark raises on x/0 even for doubles, and codegen's
-    # common-subexpression elimination hoists shared terms OUT of
-    # the F.when guards below — so every denominator that can be 0
-    # is nulled instead (x / NULL = NULL, which the guards absorb).
-    def sdiv(a, b):
-        return a / F.when(b != F.lit(0.0), b)
-
-    theta = sdiv(cov_n, varx_n)
-    xbar = sdiv(sx, n)
-
-    def adj(tag):
-        ns = m(tag, "n").cast("double")
-        nn1 = ns * (ns - 1)
-        mean_y = sdiv(m(tag, "sy").cast("double"), ns)
-        mean_x = sdiv(m(tag, "sx").cast("double"), ns)
-        mean_adj = mean_y - theta * (mean_x - xbar)
-        vy = sdiv(ns * m(tag, "syy").cast("double")
-                  - m(tag, "sy").cast("double")
-                  * m(tag, "sy").cast("double"), nn1)
-        vx = sdiv(ns * m(tag, "sxx").cast("double")
-                  - m(tag, "sx").cast("double")
-                  * m(tag, "sx").cast("double"), nn1)
-        cv = sdiv(ns * m(tag, "sxy").cast("double")
-                  - m(tag, "sx").cast("double")
-                  * m(tag, "sy").cast("double"), nn1)
-        v_adj = vy + theta * theta * vx - F.lit(2.0) * theta * cv
-        return mean_adj, v_adj, ns
-
-    ma, va, nsa = adj("a")
-    mb, vb, nsb = adj("b")
-    se2 = sdiv(va, nsa) + sdiv(vb, nsb)
-    t = sdiv(ma - mb, F.sqrt(se2))
-    v_adj_pool = (vary_n + theta * theta * varx_n
-                  - F.lit(2.0) * theta * cov_n)
-    vr = F.lit(1.0) - sdiv(v_adj_pool, vary_n)
-    ok = ((m("a", "n") > 1) & (m("b", "n") > 1)
-          & (varx_n > 0) & (vary_n > 0))
-    return agg.select(
-        m("a", "n").alias("n_a"), m("b", "n").alias("n_b"),
-        F.when(ok, _r6(theta)).alias("theta"),
-        F.when(ok, _r6(ma)).alias("mean_adj_a"),
-        F.when(ok, _r6(mb)).alias("mean_adj_b"),
-        F.when(ok & (se2 > 0), _r6(t)).alias("t_cuped"),
-        F.when(ok, _r6(vr)).alias("var_reduction"))
-
-
-def kaplan_meier(df: DataFrame, duration_col: str,
-                 event_col: str) -> DataFrame:
-    """Kaplan-Meier survival estimator in histogram form — the
-    retention/churn curve with right-censoring done correctly
-    ("of users alive at day t, what fraction survive past it?"),
-    where naive retention over-counts users who simply haven't been
-    observed long enough.
-
-    The corpus pass is ONE grouped count of the (duration, event)
-    histogram. The risk set at each distinct time is N minus the
-    cumulative removals BEFORE it (a window over the distinct-time
-    frame — the auc_exact shape, never the corpus); the product
-    Π (n_t − d_t)/n_t is folded as an exact int64 cumulative sum of
-    per-time 6-dp micro-ints of ln((n−d)/n) (the fs/nbayes ln
-    discipline; ln and the closing exp are libm-calls with
-    cross-engine parity, the heldout_ppl contract). A time where
-    EVERY remaining subject fails (d == n) sends the curve exactly
-    to 0 from that time on (flagged through the cumulative max, not
-    through ln(0)).
-
-    Returns one row per distinct duration: (t, n_risk, d_events,
-    n_censored, survival, cum_hazard) with ``survival`` = S(t) just
-    after t, 6-dp rounded, and ``cum_hazard`` the Nelson-Aalen
-    estimate Σ d/n (micro-summed the same way). event_col is 1 =
-    event (death/churn), 0 = right-censored; NULL duration or event
-    rows are excluded."""
-    dur = F.col(duration_col).cast("long")
-    ev = F.col(event_col).cast("int")
-    hist = (df.where(dur.isNotNull() & ev.isNotNull())
-            .groupBy(dur.alias("t"))
-            .agg(F.sum(F.when(ev == 1, 1).otherwise(0))
-                 .cast("long").alias("d"),
-                 F.sum(F.when(ev == 1, 0).otherwise(1))
-                 .cast("long").alias("c")))
-    tot = hist.agg(F.sum(F.col("d") + F.col("c")).cast("long")
-                   .alias("_n"))
-    w_before = (Window.partitionBy().orderBy("t")
-                .rowsBetween(Window.unboundedPreceding, -1))
-    w_upto = (Window.partitionBy().orderBy("t")
-              .rowsBetween(Window.unboundedPreceding,
-                           Window.currentRow))
-    j = (hist.crossJoin(F.broadcast(tot))
-         .withColumn("n_risk",
-                     (F.col("_n") - F.coalesce(
-                         F.sum(F.col("d") + F.col("c"))
-                         .over(w_before), F.lit(0))).cast("long")))
-    ratio = ((F.col("n_risk") - F.col("d")).cast("double")
-             / F.col("n_risk").cast("double"))
-    lnm = F.when(
-        F.col("d") == 0, F.lit(0).cast("long")).otherwise(
-        F.when(F.col("d") < F.col("n_risk"),
-               (F.signum(F.log(ratio))
-                * F.floor(F.abs(F.log(ratio)) * F.lit(1e6)
-                          + F.lit(0.5))).cast("long")))
-    # Nelson-Aalen cumulative hazard rides along: H(t) = Σ d/n over
-    # event times ≤ t, each increment micro-rounded before the exact
-    # int64 running sum (total at a time where everyone fails is a
-    # plain d/n = 1 increment — no ln edge case here)
-    ham = (F.signum(F.col("d"))
-           * F.floor(F.col("d").cast("double")
-                     / F.col("n_risk").cast("double") * F.lit(1e6)
-                     + F.lit(0.5))).cast("long")
-    j = j.withColumn("_lnm", lnm).withColumn("_ham", ham)
-    cum = F.sum("_lnm").over(w_upto)
-    cum_h = F.sum("_ham").over(w_upto)
-    dead = F.max((F.col("d") == F.col("n_risk")).cast("int")) \
-        .over(w_upto)
-    return j.select(
-        "t", "n_risk", F.col("d").alias("d_events"),
-        F.col("c").alias("n_censored"),
-        F.when(dead == 1, F.lit(0.0)).otherwise(
-            _r6(F.exp(cum.cast("double") / F.lit(1_000_000.0))))
-        .alias("survival"),
-        (cum_h.cast("double") / F.lit(1_000_000.0) + F.lit(0.0))
-        .alias("cum_hazard"))
-
-
-def logrank_test(df: DataFrame, duration_col: str, event_col: str,
-                 group_col: str, side_a: str,
-                 side_b: str) -> DataFrame:
-    """Two-sample log-rank test — "are these two Kaplan-Meier curves
-    the same?", the standard significance companion to
-    :func:`kaplan_meier` (retention A vs B under right-censoring,
-    where a t-test on raw durations is biased by the censoring).
-
-    ONE grouped count builds the per-time (deaths, censored) pairs
-    for each side; risk sets come from two cumulative windows over
-    the DISTINCT-TIME frame (the kaplan_meier shape). At each time
-    the observed-minus-expected deaths in A, (d_a·n − d·n_a)/n, and
-    the hypergeometric variance d·(n_a/n)·(n_b/n)·(n−d)/(n−1) are
-    fixed double expressions micro-rounded PER TIME before the exact
-    int64 sums (the benford_audit recipe); the chi-square
-    (Σ OE)²/Σ V (1 dof) is one final fixed expression. Times where
-    the risk set is a single subject contribute zero variance by the
-    guard (not by 0/0).
-
-    ONE row out: (n_a, n_b, d_a, d_b, oe_micro, v_micro, chi2);
-    chi2 NULL when Σ V is 0 (no comparable event times). NULL
-    duration/event rows and rows outside the two sides are
-    excluded."""
-    dur = F.col(duration_col).cast("long")
-    ev = F.col(event_col).cast("int")
-    g = F.col(group_col)
-    src = df.where(dur.isNotNull() & ev.isNotNull()
-                   & g.isin(side_a, side_b))
-
-    def cnt(cond):
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-
-    hist = (src.groupBy(dur.alias("t"))
-            .agg(cnt((g == side_a) & (ev == 1)).alias("da"),
-                 cnt((g == side_a) & (ev == 0)).alias("ca"),
-                 cnt((g == side_b) & (ev == 1)).alias("db"),
-                 cnt((g == side_b) & (ev == 0)).alias("cb")))
-    tot = hist.agg(F.sum(F.col("da") + F.col("ca")).cast("long")
-                   .alias("_na"),
-                   F.sum(F.col("db") + F.col("cb")).cast("long")
-                   .alias("_nb"))
-    wb = (Window.partitionBy().orderBy("t")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    j = (hist.crossJoin(F.broadcast(tot))
-         .withColumn("ra", (F.col("_na") - F.coalesce(
-             F.sum(F.col("da") + F.col("ca")).over(wb),
-             F.lit(0))).cast("long"))
-         .withColumn("rb", (F.col("_nb") - F.coalesce(
-             F.sum(F.col("db") + F.col("cb")).over(wb),
-             F.lit(0))).cast("long")))
-    n = (F.col("ra") + F.col("rb"))
-    d = (F.col("da") + F.col("db"))
-    oe = ((F.col("da") * n - d * F.col("ra")).cast("double")
-          / n.cast("double"))
-    v = (d.cast("double") * (F.col("ra").cast("double")
-                             / n.cast("double"))
-         * (F.col("rb").cast("double") / n.cast("double"))
-         * ((n - d).cast("double") / (n - 1).cast("double")))
-
-    def micro(col):
-        return (F.signum(col)
-                * F.floor(F.abs(col) * F.lit(1e6) + F.lit(0.5))) \
-            .cast("long")
-
-    j = j.select(
-        "da", "db",
-        micro(oe).alias("_oem"),
-        F.when(n > 1, micro(v)).otherwise(F.lit(0).cast("long"))
-        .alias("_vm"),
-        F.col("_na").alias("_na"), F.col("_nb").alias("_nb"))
-    agg = j.agg(F.first("_na").alias("n_a"),
-                F.first("_nb").alias("n_b"),
-                F.sum("da").cast("long").alias("d_a"),
-                F.sum("db").cast("long").alias("d_b"),
-                F.sum("_oem").cast("long").alias("oe_micro"),
-                F.sum("_vm").cast("long").alias("v_micro"))
-    ooe = F.col("oe_micro").cast("double") / F.lit(1_000_000.0)
-    vv = F.col("v_micro").cast("double") / F.lit(1_000_000.0)
-    return agg.select(
-        "n_a", "n_b", "d_a", "d_b", "oe_micro", "v_micro",
-        F.when(F.col("v_micro") > 0, _r6(ooe * ooe / vv))
-        .alias("chi2"))
-
-
-def wilson_ci(df: DataFrame, flag_col: str,
-              group_cols: tuple = ()) -> DataFrame:
-    """Wilson score 95% confidence interval for a 0/1 proportion,
-    optionally per group — the honest way to report a filter's
-    pass-rate per domain/shard ("34% ± what?"); unlike the normal
-    approximation it never leaves [0, 1] and behaves at k = 0 / n.
-
-    ONE grouped conditional aggregate (n, k); the interval
-    center (p̂ + z²/2n) / (1 + z²/n) ± z·sqrt(p̂(1−p̂)/n + z²/4n²)
-    / (1 + z²/n) is a fixed double expression of the two ints with
-    z = 1.96 embedded as the exact double literal (196/100 — never
-    a bare decimal in the oracle, the house constant rule), each
-    bound 6-dp rounded once. NULL flags are excluded.
-
-    One row per group: (group..., n, k, p, ci_lo, ci_hi); NULL
-    bounds for empty groups (n = 0 can only appear in the global
-    no-rows case)."""
-    gc = list(group_cols)
-    flag = F.col(flag_col).cast("int")
-    src = df.where(flag.isNotNull())
-    aggs = [F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum(flag).cast("long"),
-                       F.lit(0).cast("long")).alias("k")]
-    agg = src.groupBy(*gc).agg(*aggs) if gc else src.agg(*aggs)
-    z = F.lit(196.0) / F.lit(100.0)
-    # CSE-hoist-safe n (the cuped_ttest ANSI lesson): the global
-    # no-rows row has n = 0 and p is shared across three outputs
-    n = F.when(F.col("n") > 0, F.col("n").cast("double"))
-    p = F.col("k").cast("double") / n
-    denom = F.lit(1.0) + z * z / n
-    center = (p + z * z / (F.lit(2.0) * n)) / denom
-    half = (z * F.sqrt(p * (F.lit(1.0) - p) / n
-                       + z * z / (F.lit(4.0) * n * n)) / denom)
-    ok = F.col("n") > 0
-    return agg.select(
-        *gc, "n", "k",
-        F.when(ok, _r6(p)).alias("p"),
-        F.when(ok, _r6(center - half)).alias("ci_lo"),
-        F.when(ok, _r6(center + half)).alias("ci_hi"))

@@ -44,6 +44,8 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from .util import fs_for
+
 
 def hour_col(ts_col: str = "ts") -> Column:
     """Epoch-hour bucket (long) — THE bucketing expression. Exported so
@@ -72,18 +74,6 @@ def hourly_rollup(events: DataFrame, ts_col: str = "ts",
                   .alias("sum_cents")))
 
 
-def _fs_for(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path`` — the same listing
-    abstraction Spark's own sinks use, so directory operations work on
-    any supported filesystem (local, HDFS, object-store connectors),
-    not just the local FS a driver-side ``glob`` can see."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
 def _list_bid_ids(path: str, spark: Optional[SparkSession] = None) -> list:
     """Batch ids with an existing ``_bid=N`` directory under ``path``
     (one driver-side listing of the dataset root — no data read). With
@@ -91,7 +81,7 @@ def _list_bid_ids(path: str, spark: Optional[SparkSession] = None) -> list:
     (object-store-safe); without one it falls back to a local glob."""
     ids = []
     if spark is not None:
-        fs, hpath = _fs_for(spark, path)
+        fs, hpath = fs_for(spark, path)
         if not fs.exists(hpath):
             return []
         for st in fs.listStatus(hpath):
@@ -198,7 +188,7 @@ def compact_changelog(spark: SparkSession, path: str,
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("_bid")
      .parquet(path))
-    fs, _ = _fs_for(spark, path)
+    fs, _ = fs_for(spark, path)
     jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     for bid in old_ids:
         fs.delete(jvm_path(os.path.join(path, f"_bid={bid}")), True)

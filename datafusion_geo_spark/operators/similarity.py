@@ -626,27 +626,6 @@ def semantic_dedup(emb: DataFrame, n_centroids: int = 8,
                     .alias("is_kept")))
 
 
-def ann_hyperplane_topk(emb: DataFrame, queries: DataFrame, planes: list,
-                        k: int = 10, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's hyperplane
-    bucket (equi-join on the bucket int — a plain shuffle join), then
-    exact cosine rank within bucket."""
-    c = emb.select(F.col(id_col).alias("neighbor_id"),
-                   as_double(F.col(vec_col)).alias("cv"))
-    c = c.withColumn("bucket", hyperplane_bucket(F.col("cv"), planes))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       as_double(F.col(vec_col)).alias("qv"))
-    q = F.broadcast(q.withColumn("bucket", hyperplane_bucket(F.col("qv"), planes)))
-    scored = (c.join(q, "bucket")
-              .where(F.col("neighbor_id") != F.col("query_id"))
-              .select("query_id", "neighbor_id",
-                      round6_binary(cosine(F.col("qv"), F.col("cv"))).alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
-
-
 def embedding_near_dup(emb: DataFrame, probe_max_id: int,
                        min_cosine: float = 0.99,
                        id_col: str = "vec_id",

@@ -329,30 +329,6 @@ def unigram_encode_stats(docs: DataFrame,
                     .alias("fertility")))
 
 
-def fertility_row_cols(fitted: List[Tuple[str, int, int]],
-                       text_col: str = "text") -> list:
-    """Per-DOCUMENT word/token/char counts with the fitted vocab — the
-    map-side projection SHARED by the streaming fertility monitor
-    (streaming/drift.py streaming_unigram_fertility) and pinned equal
-    to the dict-join batch report: the DP is deterministic per word,
-    so summing per-document equals summing per-distinct-word times
-    frequency. Nested JVM HOFs: the word array folds over the same
-    viterbi_bests/viterbi_pieces expressions, zero Python."""
-    smap = _score_map(fitted)
-    wds = F.filter(words_col(F.col(text_col)),
-                   lambda x: (x != "") & (F.length(x) <= MAX_WORD))
-    toks = F.aggregate(
-        wds, F.lit(0).cast("long"),
-        lambda acc, wv: acc + F.size(
-            viterbi_pieces(wv, viterbi_bests(wv, smap), smap))
-        .cast("long"))
-    chars = F.aggregate(
-        wds, F.lit(0).cast("long"),
-        lambda acc, wv: acc + F.length(wv).cast("long"))
-    return [F.size(wds).cast("long").alias("_nw"),
-            toks.alias("_nt"), chars.alias("_nc")]
-
-
 def fertility_finalize(totals: DataFrame,
                        group_col: str = "lang") -> DataFrame:
     """Shared exact 6-dp tail over (group, n_words, n_tokens,

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 
 #: DuckDB-twin of :func:`round6_binary` — oracles embed this exact text so
 #: both engines run the identical IEEE op sequence on the binary double.
@@ -36,6 +36,17 @@ def round6_binary(col: Column) -> Column:
     return round_binary(col, 6)
 
 
+#: edge-count cap for the bounded driver finish of the graph loops
+#: (dedup.connected_components, graph.pagerank_int, graph.graph_stats):
+#: at or under this many narrow (src, dst) rows — a few tens of MB, the
+#: same order as a collected model aggregate and far under
+#: spark.driver.maxResultSize — the graph is solved driver-side in one
+#: bulk transfer; above it the distributed loop runs. Callers read it as
+#: ``util.DRIVER_MAX_EDGES`` when they run, so patching this one name
+#: moves every gate.
+DRIVER_MAX_EDGES = 2_000_000
+
+
 #: default bound for the process-level fit/table memos below — far
 #: above anything one session legitimately fits (a handful of corpora x
 #: a handful of hyper-parameter keys), yet it caps driver memory over a
@@ -59,6 +70,18 @@ def memo_get(cache: dict, key, make, cap: int = MEMO_CAP):
     while len(cache) > cap:
         cache.pop(next(iter(cache)))
     return val
+
+
+def fs_for(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — the same listing
+    abstraction Spark's own sinks use, so directory operations work on
+    any supported filesystem (local, HDFS, object-store connectors),
+    not just the local FS a driver-side ``glob`` can see."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, hpath
 
 
 def fresh_name(base: str, taken) -> str:

@@ -45,14 +45,6 @@ def enable_cache() -> None:
     _CACHE_ENABLED = True
 
 
-def clear_cache() -> None:
-    global _CACHE_ENABLED
-    for df in _CACHE.values():
-        df.unpersist()
-    _CACHE.clear()
-    _CACHE_ENABLED = False
-
-
 def _memo(key, build):
     if not _CACHE_ENABLED:
         return build()

@@ -3,26 +3,23 @@
 from __future__ import annotations
 
 import contextlib
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.util import fs_for
 
-def _source_bytes(*paths: str) -> int:
-    """Total bytes under the given files/directories (driver-side local
-    listing — the fixture stream sources are local dirs; an object-store
-    deployment would take the size from its catalog or FileSystem
-    listing the same way the rollup compactor does)."""
+
+def _source_bytes(spark: SparkSession, *paths: str) -> int:
+    """Total bytes under the given files/directories, summed from the
+    Hadoop FileSystem content summary — so a URI on any supported
+    filesystem (``file://``, HDFS, object stores) counts, not only a
+    bare local path. A missing path counts 0."""
     total = 0
     for p in paths:
-        if os.path.isfile(p):
-            total += os.path.getsize(p)
-        elif os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for f in files:
-                    with contextlib.suppress(OSError):
-                        total += os.path.getsize(os.path.join(root, f))
+        fs, hpath = fs_for(spark, p)
+        if fs.exists(hpath):
+            total += fs.getContentSummary(hpath).getLength()
     return total
 
 
@@ -43,7 +40,7 @@ def stateful_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
     only reproduces today's behavior at the top end — a production
     deployment with large per-key state raises the cap with cluster
     size (state volume, not core count, is the driver)."""
-    nbytes = _source_bytes(*paths)
+    nbytes = _source_bytes(spark, *paths)
     dp = spark.sparkContext.defaultParallelism
     return max(1, min(dp, (nbytes + (32 << 20) - 1) >> 25))
 

@@ -77,36 +77,3 @@ def test_rotation_report_live_history():
         f"block hold gate slots; the contract requires >= {must_hold} "
         f"(gate {len(gate)}, never-gated {len(rep['never_gated'])}, "
         f"discretionary {DISCRETIONARY_SLOTS})")
-
-
-def test_deferred_previews_are_declared_in_first50_comment():
-    """Every oracle-grade r12 preview must be named in the _FIRST50
-    deferred-operators comment, so next round's gate rotation can
-    enumerate the pending block from ONE place. (The reverse —
-    wiring them into queries() now — is forbidden while the gate is
-    full: never_gated ⊆ gate.)"""
-    import re
-
-    src = open("__spark_entry__.py").read()
-    start = src.index("_FIRST50 = [")
-    comment = "\n".join(
-        ln for ln in src[start:start + 20000].splitlines()
-        if ln.strip().startswith("#"))
-    previews = re.findall(r"def test_preview_(\w+)\(",
-                          open("tests/test_r12_previews.py").read())
-    # map preview test names to the operator tokens the comment uses
-    alias = {"spearman": "spearman_corr", "logrank": "logrank_test",
-             "mcnemar": "mcnemar_test", "fs_linkage": "linkage",
-             "expectations": "expectations_check",
-             "chi2_independence": "chi2_independence",
-             "bootstrap_ci": "bootstrap_mean_ci"}
-    missing = []
-    for p in previews:
-        if p == "plans_scale_clean":
-            continue
-        token = alias.get(p, p)
-        if token not in comment:
-            missing.append(p)
-    assert not missing, (
-        f"previews missing from the _FIRST50 deferred comment: "
-        f"{missing}")

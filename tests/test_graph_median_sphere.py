@@ -131,17 +131,17 @@ class TestPageRankDriverPath:
     ops, so bit-identical ranks."""
 
     def _both(self, spark, rows, iters=3):
-        import datafusion_geo_spark.operators.graph as G
+        import datafusion_geo_spark.operators.util as U
         pairs = _pairs(spark, rows)
         drv = sorted(map(tuple, pagerank_int(pairs, iters=iters)
                          .collect()))
-        cap = G.DRIVER_PR_MAX_EDGES
-        G.DRIVER_PR_MAX_EDGES = 0
+        cap = U.DRIVER_MAX_EDGES
+        U.DRIVER_MAX_EDGES = 0
         try:
             dist = sorted(map(tuple, pagerank_int(pairs, iters=iters)
                               .collect()))
         finally:
-            G.DRIVER_PR_MAX_EDGES = cap
+            U.DRIVER_MAX_EDGES = cap
         return drv, dist
 
     def test_fuzz_driver_vs_distributed(self, spark):
@@ -167,15 +167,15 @@ class TestGraphStatsDriverPath:
     the forced distributed wedge-join form."""
 
     def _both(self, spark, rows):
-        import datafusion_geo_spark.operators.graph as G
+        import datafusion_geo_spark.operators.util as U
         pairs = _pairs(spark, rows)
         drv = graph_stats(pairs).collect()[0]
-        cap = G.DRIVER_PR_MAX_EDGES
-        G.DRIVER_PR_MAX_EDGES = 0
+        cap = U.DRIVER_MAX_EDGES
+        U.DRIVER_MAX_EDGES = 0
         try:
             dist = graph_stats(pairs).collect()[0]
         finally:
-            G.DRIVER_PR_MAX_EDGES = cap
+            U.DRIVER_MAX_EDGES = cap
         return tuple(drv), tuple(dist)
 
     def test_fuzz_driver_vs_distributed(self, spark):

@@ -123,12 +123,12 @@ def test_connected_components_shapes(spark):
 def test_connected_components_max_iter_raises(spark):
     """max_iter guards the DISTRIBUTED loop (the r12 bounded driver
     finish has no rounds — force past it by zeroing the cap)."""
-    import datafusion_geo_spark.operators.dedup as dd
+    import datafusion_geo_spark.operators.util as U
     from datafusion_geo_spark.operators.dedup import connected_components
     chain = spark.createDataFrame([(i, i + 1) for i in range(30)],
                                   "id_a long, id_b long")
-    cap = dd.DRIVER_CC_MAX_EDGES
-    dd.DRIVER_CC_MAX_EDGES = 0
+    cap = U.DRIVER_MAX_EDGES
+    U.DRIVER_MAX_EDGES = 0
     try:
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(chain, max_iter=2)
@@ -136,7 +136,7 @@ def test_connected_components_max_iter_raises(spark):
         got = {r["doc_id"]: r["component"]
                for r in connected_components(chain, max_iter=31).collect()}
     finally:
-        dd.DRIVER_CC_MAX_EDGES = cap
+        U.DRIVER_MAX_EDGES = cap
     assert set(got.values()) == {0}
     # the driver finish ignores max_iter by design (no rounds)
     got_drv = {r["doc_id"]: r["component"]
@@ -189,7 +189,7 @@ def test_connected_components_fuzz_vs_union_find(spark):
     at these sizes) and the distributed min-label loop (forced by
     zeroing the driver cap)."""
     import random
-    import datafusion_geo_spark.operators.dedup as dd
+    import datafusion_geo_spark.operators.util as U
     from datafusion_geo_spark.operators.dedup import connected_components
 
     rng = random.Random(1117)
@@ -215,14 +215,14 @@ def test_connected_components_fuzz_vs_union_find(spark):
                for r in connected_components(pairs, max_iter=40).collect()}
         assert got == want, f"trial {trial}"
         # the distributed loop, forced past the driver-finish gate
-        cap = dd.DRIVER_CC_MAX_EDGES
-        dd.DRIVER_CC_MAX_EDGES = 0
+        cap = U.DRIVER_MAX_EDGES
+        U.DRIVER_MAX_EDGES = 0
         try:
             got_d = {r["doc_id"]: r["component"]
                      for r in connected_components(
                          pairs, max_iter=40).collect()}
         finally:
-            dd.DRIVER_CC_MAX_EDGES = cap
+            U.DRIVER_MAX_EDGES = cap
         assert got_d == want, f"trial {trial} distributed"
         # symmetric=True on the explicitly symmetrized relation
         sym = edges + [(b, a) for a, b in edges]
