@@ -1,10 +1,10 @@
 """Public function surface: DataFrame Column functions + SQL registration.
 
 Mirrors the reference's UDF registry (SURVEY.md §2.1: 18 scalar UDFs + 1
-UDAF) and extends it to 130 SQL-registered names with the PostGIS-parity
-measures, accessors, linear-referencing, transform, set-operation,
-relate-matrix, validity, triangulation, offset/clip, and editing
-utilities (SURVEY.md §8.1). Each operator exists both as a Python Column function
+UDAF) and extends it, in the SQL registry ``_SQL_UDFS``, with the
+PostGIS-parity measures, accessors, linear-referencing, transform,
+set-operation, relate-matrix, validity, triangulation, offset/clip, and
+editing utilities (SURVEY.md §8.1). Each operator exists both as a Python Column function
 (``st_intersects(col, col) -> Column``) and as a SQL-registered UDF with
 the reference's exact names (`register_all(spark)`) — Spark SQL function
 lookup is case-insensitive, which subsumes the reference's lowercase
@@ -72,89 +72,53 @@ def _num(c, cast: str) -> Column:
 
 
 # -- pandas UDF objects (vectorized, Arrow-batched) ---------------------
-# pandas_udf infers the eval type from type hints, so each kernel gets a
-# plainly-hinted wrapper (Optional[...] defaults are not supported).
+# pandas_udf infers the eval type from type hints, so every kernel goes
+# through one plainly-hinted wrapper (Optional[...] is not supported).
 
 import pandas as pd  # noqa: E402
 
 
-def _u1(kernel, rtype):
-    def f(a: pd.Series) -> pd.Series:
-        return kernel(a)
-    f.__name__ = getattr(kernel, "__name__", "kernel")
+def _udf(kernel, rtype):
+    """The one pandas-UDF wrapper. ``*cols`` lets Spark resolve SQL calls
+    of ANY arity, which is how one SQL name serves the reference's
+    optional-SRID overloads (``one_of`` signatures,
+    reference geom_from_text.rs:21-27) and how a
+    defaulted trailing argument may be omitted. A struct return type
+    needs a DataFrame return hint; the UDF is named after its kernel,
+    which is what plans show."""
+    if isinstance(rtype, StructType):
+        def f(*cols: pd.Series) -> pd.DataFrame:
+            return kernel(*cols)
+    else:
+        def f(*cols: pd.Series) -> pd.Series:
+            return kernel(*cols)
+    f.__name__ = kernel.__name__
     return pandas_udf(f, rtype)
 
 
-def _u2(kernel, rtype):
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        return kernel(a, b)
-    f.__name__ = getattr(kernel, "__name__", "kernel")
-    return pandas_udf(f, rtype)
-
-
-def _u3(kernel, rtype):
-    def f(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
-        return kernel(a, b, c)
-    return pandas_udf(f, rtype)
-
-
-def _u4(kernel, rtype):
-    def f(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series) -> pd.Series:
-        return kernel(a, b, c, d)
-    return pandas_udf(f, rtype)
-
-
-def _u5(kernel, rtype):
-    def f(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series,
-          e: pd.Series) -> pd.Series:
-        return kernel(a, b, c, d, e)
-    return pandas_udf(f, rtype)
-
-
-def _u1_df(kernel, rtype):
-    def f(a: pd.Series) -> pd.DataFrame:
-        return kernel(a)
-    return pandas_udf(f, rtype)
-
-
-def _u_variadic(kernel, rtype, name):
-    """Variadic pandas UDF: Spark resolves SQL calls of ANY arity against
-    a ``*cols`` signature, which is how one SQL name serves the
-    reference's optional-SRID overloads (``one_of`` signatures,
-    /root/reference/src/function/geom_from_text.rs:21-27)."""
-    def f(*cols: pd.Series) -> pd.Series:
-        return kernel(*cols)
-    f.__name__ = name
-    return pandas_udf(f, rtype)
-
-
-_geom_from_text1 = _u1(kernels.geom_from_text, BinaryType())
-_geom_from_text2 = _u2(kernels.geom_from_text, BinaryType())
-_geom_from_geojson = _u1(kernels.geom_from_geojson, BinaryType())
-_geom_from_wkb1 = _u1(kernels.geom_from_wkb, BinaryType())
-_geom_from_wkb2 = _u2(kernels.geom_from_wkb, BinaryType())
-_set_srid = _u2(kernels.set_srid, BinaryType())
-_geom_from_wkb_dialect = _u2(kernels.geom_from_wkb_dialect, BinaryType())
-_geom_from_wkb_dialect_srid = _u3(kernels.geom_from_wkb_dialect, BinaryType())
-_make_envelope4 = _u4(kernels.make_envelope, BinaryType())
-_make_envelope5 = _u5(kernels.make_envelope, BinaryType())
-_point = _u2(kernels.st_point, BinaryType())
-_as_text = _u1(kernels.as_text, StringType())
-_as_ewkt = _u1(kernels.as_ewkt, StringType())
-_as_geojson = _u1(kernels.as_geojson, StringType())
-_geometry_type = _u1(kernels.geometry_type, StringType())
-_srid = _u1(kernels.srid, IntegerType())
-_npoints = _u1(kernels.npoints, IntegerType())
-_area = _u1(kernels.area, DoubleType())
-_box2d = _u1_df(kernels.box2d_rows, BOX2D_TYPE)
-_intersects = _u2(kernels.intersects, BooleanType())
-_covers = _u2(kernels.covers, BooleanType())
-_covered_by = _u2(kernels.covered_by, BooleanType())
-_equals = _u2(kernels.equals, BooleanType())
-_translate = _u3(kernels.translate, BinaryType())
-_buffer = _u3(kernels.buffer, BinaryType())
-_split = _u2(kernels.split, BinaryType())
-_as_mvt_geom = _u5(kernels.as_mvt_geom, BinaryType())
+_geom_from_text = _udf(kernels.geom_from_text, BinaryType())
+_geom_from_geojson = _udf(kernels.geom_from_geojson, BinaryType())
+_geom_from_wkb = _udf(kernels.geom_from_wkb, BinaryType())
+_set_srid = _udf(kernels.set_srid, BinaryType())
+_geom_from_wkb_dialect = _udf(kernels.geom_from_wkb_dialect, BinaryType())
+_make_envelope = _udf(kernels.make_envelope, BinaryType())
+_point = _udf(kernels.st_point, BinaryType())
+_as_text = _udf(kernels.as_text, StringType())
+_as_ewkt = _udf(kernels.as_ewkt, StringType())
+_as_geojson = _udf(kernels.as_geojson, StringType())
+_geometry_type = _udf(kernels.geometry_type, StringType())
+_srid = _udf(kernels.srid, IntegerType())
+_npoints = _udf(kernels.npoints, IntegerType())
+_area = _udf(kernels.area, DoubleType())
+_box2d = _udf(kernels.box2d_rows, BOX2D_TYPE)
+_intersects = _udf(kernels.intersects, BooleanType())
+_covers = _udf(kernels.covers, BooleanType())
+_covered_by = _udf(kernels.covered_by, BooleanType())
+_equals = _udf(kernels.equals, BooleanType())
+_translate = _udf(kernels.translate, BinaryType())
+_buffer = _udf(kernels.buffer, BinaryType())
+_split = _udf(kernels.split, BinaryType())
+_as_mvt_geom = _udf(kernels.as_mvt_geom, BinaryType())
 
 
 # -- Column API ---------------------------------------------------------
@@ -163,8 +127,8 @@ def st_geomfromtext(wkt: Union[Column, str], srid: Optional[Union[Column, int]] 
     """#1 ST_GeomFromText (/root/reference/src/function/geom_from_text.rs:13-81)."""
     c = wkt if isinstance(wkt, Column) else F.lit(wkt)
     if srid is None:
-        return _geom_from_text1(c)
-    return _geom_from_text2(c, _num(srid, "int"))
+        return _geom_from_text(c)
+    return _geom_from_text(c, _num(srid, "int"))
 
 
 def st_geomfromgeojson(geojson: Union[Column, str]) -> Column:
@@ -189,11 +153,11 @@ def st_geomfromwkb(wkb: Column, srid: Optional[Union[Column, int]] = None,
             return _geom_from_wkb_dialect(wkb, F.lit(str(dialect)))
         # one crossing: the dialect kernel stamps the SRID on the decoded
         # geometry directly instead of a second full re-parse
-        return _geom_from_wkb_dialect_srid(wkb, F.lit(str(dialect)),
+        return _geom_from_wkb_dialect(wkb, F.lit(str(dialect)),
                                            _num(srid, "int"))
     if srid is None:
-        return _geom_from_wkb1(wkb)
-    return _geom_from_wkb2(wkb, _num(srid, "int"))
+        return _geom_from_wkb(wkb)
+    return _geom_from_wkb(wkb, _num(srid, "int"))
 
 
 def st_astext(g: GeomLike) -> Column:
@@ -226,8 +190,8 @@ def st_makeenvelope(xmin, ymin, xmax, ymax, srid=None) -> Column:
     """#8 ST_MakeEnvelope (/root/reference/src/function/make_envelope.rs:11-110)."""
     args = [_num(v, "double") for v in (xmin, ymin, xmax, ymax)]
     if srid is None:
-        return _make_envelope4(*args)
-    return _make_envelope5(*args, _num(srid, "int"))
+        return _make_envelope(*args)
+    return _make_envelope(*args, _num(srid, "int"))
 
 
 def st_intersects(a: GeomLike, b: GeomLike) -> Column:
@@ -235,7 +199,7 @@ def st_intersects(a: GeomLike, b: GeomLike) -> Column:
     return _intersects(_geom(a), _geom(b))
 
 
-_disjoint = _u2(kernels.disjoint, BooleanType())
+_disjoint = _udf(kernels.disjoint, BooleanType())
 
 
 def st_disjoint(a: GeomLike, b: GeomLike) -> Column:
@@ -269,7 +233,7 @@ def st_buffer(g: GeomLike, width, quadsegs=8) -> Column:
     return _buffer(_geom(g), _num(width, "double"), _num(quadsegs, "int"))
 
 
-_boundary_udf = _u1(kernels.boundary, BinaryType())
+_boundary_udf = _udf(kernels.boundary, BinaryType())
 
 
 def st_boundary(g: GeomLike) -> Column:
@@ -326,108 +290,103 @@ def st_point(x, y) -> Column:
     return _point(_num(x, "double"), _num(y, "double"))
 
 
-_length = _u1(kernels.length, DoubleType())
-_perimeter = _u1(kernels.perimeter, DoubleType())
-_centroid = _u1(kernels.centroid, BinaryType())
-_envelope = _u1(kernels.envelope, BinaryType())
-_convex_hull = _u1(kernels.convex_hull, BinaryType())
-_simplify = _u2(kernels.simplify, BinaryType())
-_line_interp = _u2(kernels.line_interpolate_point, BinaryType())
-_line_locate = _u2(kernels.line_locate_point, DoubleType())
-_geohash = _u_variadic(kernels.st_geohash, StringType(), "st_geohash")
-_azimuth = _u2(kernels.st_azimuth, DoubleType())
-_closest_point = _u2(kernels.closest_point, BinaryType())
-_distance = _u2(kernels.distance, DoubleType())
-_dwithin = _u3(kernels.dwithin, BooleanType())
-_contains = _u2(kernels.st_contains, BooleanType())
-_within = _u2(kernels.st_within, BooleanType())
-_touches = _u2(kernels.st_touches, BooleanType())
-_overlaps = _u2(kernels.st_overlaps, BooleanType())
-_crosses = _u2(kernels.st_crosses, BooleanType())
-_is_empty = _u1(kernels.st_is_empty, BooleanType())
-_dimension = _u1(kernels.st_dimension, IntegerType())
-_exterior_ring = _u1(kernels.st_exterior_ring, BinaryType())
-_interior_ring_n = _u2(kernels.st_interior_ring_n, BinaryType())
-_num_interior_rings = _u1(kernels.st_num_interior_rings, IntegerType())
-_bounding_diagonal = _u1(kernels.st_bounding_diagonal, BinaryType())
-_distance_sphere = _u2(kernels.st_distance_sphere, DoubleType())
-_distance_spheroid = _u2(kernels.st_distance_spheroid, DoubleType())
-_area_sphere = _u1(kernels.st_area_sphere, DoubleType())
-_length_sphere = _u1(kernels.st_length_sphere, DoubleType())
-_perimeter_sphere = _u1(kernels.st_perimeter_sphere, DoubleType())
-_max_distance = _u2(kernels.st_max_distance, DoubleType())
-_longest_line = _u2(kernels.st_longest_line, BinaryType())
-_build_area = _u1(kernels.st_build_area, BinaryType())
-_geometric_median = _u1(kernels.st_geometric_median, BinaryType())
-_azimuth_sphere = _u2(kernels.st_azimuth_sphere, DoubleType())
-_project_sphere = _u3(kernels.st_project_sphere, BinaryType())
-_project_spheroid = _u3(kernels.st_project_spheroid, BinaryType())
-_tile_envelope = _u3(kernels.st_tile_envelope, BinaryType())
-_normalize = _u1(kernels.st_normalize, BinaryType())
-_offset_curve = _u_variadic(kernels.st_offset_curve, BinaryType(),
-                            "st_offsetcurve")
-_shared_paths = _u2(kernels.st_shared_paths, BinaryType())
-_clip_by_box = _u5(kernels.st_clip_by_box, BinaryType())
-_mic_center = _u1(kernels.st_max_inscribed_center, BinaryType())
-_mic_radius = _u1(kernels.st_max_inscribed_radius, DoubleType())
-_snap = _u3(kernels.st_snap, BinaryType())
-_delaunay = _u_variadic(kernels.st_delaunay_triangles, BinaryType(),
-                        "st_delaunaytriangles")
-_voronoi = _u_variadic(kernels.st_voronoi_polygons, BinaryType(),
-                       "st_voronoipolygons")
-_concave_hull = _u2(kernels.st_concave_hull, BinaryType())
-_generate_points = _u_variadic(kernels.st_generate_points, BinaryType(),
-                               "st_generatepoints")
-_is_closed = _u1(kernels.st_is_closed, BooleanType())
-_is_ring = _u1(kernels.st_is_ring, BooleanType())
-_is_simple = _u1(kernels.st_is_simple, BooleanType())
-_is_valid = _u1(kernels.st_is_valid, BooleanType())
-_is_valid_reason = _u1(kernels.st_is_valid_reason, StringType())
-_point_on_surface = _u1(kernels.st_point_on_surface, BinaryType())
-_hausdorff = _u2(kernels.st_hausdorff, DoubleType())
-_frechet = _u2(kernels.st_frechet, DoubleType())
-_affine = _u_variadic(kernels.st_affine, BinaryType(), "st_affine")
-_expand = _u_variadic(kernels.st_expand, BinaryType(), "st_expand")
-_angle = _u_variadic(kernels.st_angle, DoubleType(), "st_angle")
-_remove_repeated = _u_variadic(kernels.st_remove_repeated_points,
-                               BinaryType(), "st_removerepeatedpoints")
-_snap_to_grid = _u2(kernels.st_snap_to_grid, BinaryType())
-_add_point = _u_variadic(kernels.st_add_point, BinaryType(), "st_addpoint")
-_set_point = _u3(kernels.st_set_point, BinaryType())
-_remove_point = _u2(kernels.st_remove_point, BinaryType())
-_multi = _u1(kernels.st_multi, BinaryType())
-_collection_extract = _u2(kernels.st_collection_extract, BinaryType())
-_collection_homogenize = _u1(kernels.st_collection_homogenize, BinaryType())
-_dump = _u1(kernels.st_dump, ArrayType(BinaryType()))
-_dump_points = _u1(kernels.st_dump_points, ArrayType(BinaryType()))
-_relate = _u2(kernels.st_relate, StringType())
-_relate_pattern = _u3(kernels.st_relate_pattern, BooleanType())
-_relate_match = _u2(kernels.st_relate_match, BooleanType())
-_intersection = _u2(kernels.geom_intersection, BinaryType())
-_union_pair = _u2(kernels.geom_union, BinaryType())
-_difference = _u2(kernels.geom_difference, BinaryType())
-_union_fold = _u1(kernels.st_union_all, BinaryType())
-_symdifference = _u2(kernels.geom_symdifference, BinaryType())
-_reverse = _u1(kernels.st_reverse, BinaryType())
-_flip = _u1(kernels.st_flip_coordinates, BinaryType())
-_rotate = _u_variadic(kernels.st_rotate, BinaryType(), "st_rotate")
-_scale = _u3(kernels.st_scale2, BinaryType())
-_segmentize = _u2(kernels.st_segmentize, BinaryType())
-_chaikin = _u2(kernels.st_chaikin_smoothing, BinaryType())
-_simplify_vw = _u2(kernels.st_simplify_vw, BinaryType())
-_line_substring = _u3(kernels.st_line_substring, BinaryType())
-_reduce_precision = _u2(kernels.st_reduce_precision, BinaryType())
-_line_merge = _u1(kernels.st_line_merge, BinaryType())
-_subdivide = _u2(kernels.st_subdivide, ArrayType(BinaryType()))
-_polygonize = _u1(kernels.st_polygonize, BinaryType())
-_minbound_center = _u1(kernels.st_minbound_center, BinaryType())
-_minbound_radius = _u1(kernels.st_minbound_radius, DoubleType())
-_oriented_envelope = _u1(kernels.st_oriented_envelope, BinaryType())
-_node = _u1(kernels.st_node, BinaryType())
-_make_valid = _u1(kernels.st_make_valid, BinaryType())
-_shortest_line = _u2(kernels.st_shortest_line, BinaryType())
-_project = _u3(kernels.st_project, BinaryType())
-_polygonize_fold = _u1(kernels.st_polygonize_all, BinaryType())
+_length = _udf(kernels.length, DoubleType())
+_perimeter = _udf(kernels.perimeter, DoubleType())
+_centroid = _udf(kernels.centroid, BinaryType())
+_envelope = _udf(kernels.envelope, BinaryType())
+_convex_hull = _udf(kernels.convex_hull, BinaryType())
+_simplify = _udf(kernels.simplify, BinaryType())
+_line_interp = _udf(kernels.line_interpolate_point, BinaryType())
+_line_locate = _udf(kernels.line_locate_point, DoubleType())
+_geohash = _udf(kernels.st_geohash, StringType())
+_azimuth = _udf(kernels.st_azimuth, DoubleType())
+_closest_point = _udf(kernels.closest_point, BinaryType())
+_distance = _udf(kernels.distance, DoubleType())
+_dwithin = _udf(kernels.dwithin, BooleanType())
+_contains = _udf(kernels.st_contains, BooleanType())
+_within = _udf(kernels.st_within, BooleanType())
+_touches = _udf(kernels.st_touches, BooleanType())
+_overlaps = _udf(kernels.st_overlaps, BooleanType())
+_crosses = _udf(kernels.st_crosses, BooleanType())
+_is_empty = _udf(kernels.st_is_empty, BooleanType())
+_dimension = _udf(kernels.st_dimension, IntegerType())
+_exterior_ring = _udf(kernels.st_exterior_ring, BinaryType())
+_interior_ring_n = _udf(kernels.st_interior_ring_n, BinaryType())
+_num_interior_rings = _udf(kernels.st_num_interior_rings, IntegerType())
+_bounding_diagonal = _udf(kernels.st_bounding_diagonal, BinaryType())
+_distance_sphere = _udf(kernels.st_distance_sphere, DoubleType())
+_distance_spheroid = _udf(kernels.st_distance_spheroid, DoubleType())
+_area_sphere = _udf(kernels.st_area_sphere, DoubleType())
+_length_sphere = _udf(kernels.st_length_sphere, DoubleType())
+_perimeter_sphere = _udf(kernels.st_perimeter_sphere, DoubleType())
+_max_distance = _udf(kernels.st_max_distance, DoubleType())
+_longest_line = _udf(kernels.st_longest_line, BinaryType())
+_build_area = _udf(kernels.st_build_area, BinaryType())
+_geometric_median = _udf(kernels.st_geometric_median, BinaryType())
+_azimuth_sphere = _udf(kernels.st_azimuth_sphere, DoubleType())
+_project_sphere = _udf(kernels.st_project_sphere, BinaryType())
+_project_spheroid = _udf(kernels.st_project_spheroid, BinaryType())
+_tile_envelope = _udf(kernels.st_tile_envelope, BinaryType())
+_normalize = _udf(kernels.st_normalize, BinaryType())
+_offset_curve = _udf(kernels.st_offset_curve, BinaryType())
+_shared_paths = _udf(kernels.st_shared_paths, BinaryType())
+_clip_by_box = _udf(kernels.st_clip_by_box, BinaryType())
+_mic_center = _udf(kernels.st_max_inscribed_center, BinaryType())
+_mic_radius = _udf(kernels.st_max_inscribed_radius, DoubleType())
+_snap = _udf(kernels.st_snap, BinaryType())
+_delaunay = _udf(kernels.st_delaunay_triangles, BinaryType())
+_voronoi = _udf(kernels.st_voronoi_polygons, BinaryType())
+_concave_hull = _udf(kernels.st_concave_hull, BinaryType())
+_generate_points = _udf(kernels.st_generate_points, BinaryType())
+_is_closed = _udf(kernels.st_is_closed, BooleanType())
+_is_ring = _udf(kernels.st_is_ring, BooleanType())
+_is_simple = _udf(kernels.st_is_simple, BooleanType())
+_is_valid = _udf(kernels.st_is_valid, BooleanType())
+_is_valid_reason = _udf(kernels.st_is_valid_reason, StringType())
+_point_on_surface = _udf(kernels.st_point_on_surface, BinaryType())
+_hausdorff = _udf(kernels.st_hausdorff, DoubleType())
+_frechet = _udf(kernels.st_frechet, DoubleType())
+_affine = _udf(kernels.st_affine, BinaryType())
+_expand = _udf(kernels.st_expand, BinaryType())
+_angle = _udf(kernels.st_angle, DoubleType())
+_remove_repeated = _udf(kernels.st_remove_repeated_points, BinaryType())
+_snap_to_grid = _udf(kernels.st_snap_to_grid, BinaryType())
+_add_point = _udf(kernels.st_add_point, BinaryType())
+_set_point = _udf(kernels.st_set_point, BinaryType())
+_remove_point = _udf(kernels.st_remove_point, BinaryType())
+_multi = _udf(kernels.st_multi, BinaryType())
+_collection_extract = _udf(kernels.st_collection_extract, BinaryType())
+_collection_homogenize = _udf(kernels.st_collection_homogenize, BinaryType())
+_dump = _udf(kernels.st_dump, ArrayType(BinaryType()))
+_dump_points = _udf(kernels.st_dump_points, ArrayType(BinaryType()))
+_relate = _udf(kernels.st_relate, StringType())
+_relate_pattern = _udf(kernels.st_relate_pattern, BooleanType())
+_relate_match = _udf(kernels.st_relate_match, BooleanType())
+_intersection = _udf(kernels.geom_intersection, BinaryType())
+_union_pair = _udf(kernels.geom_union, BinaryType())
+_difference = _udf(kernels.geom_difference, BinaryType())
+_union_fold = _udf(kernels.st_union_all, BinaryType())
+_symdifference = _udf(kernels.geom_symdifference, BinaryType())
+_reverse = _udf(kernels.st_reverse, BinaryType())
+_flip = _udf(kernels.st_flip_coordinates, BinaryType())
+_rotate = _udf(kernels.st_rotate, BinaryType())
+_scale = _udf(kernels.st_scale2, BinaryType())
+_segmentize = _udf(kernels.st_segmentize, BinaryType())
+_chaikin = _udf(kernels.st_chaikin_smoothing, BinaryType())
+_simplify_vw = _udf(kernels.st_simplify_vw, BinaryType())
+_line_substring = _udf(kernels.st_line_substring, BinaryType())
+_reduce_precision = _udf(kernels.st_reduce_precision, BinaryType())
+_line_merge = _udf(kernels.st_line_merge, BinaryType())
+_subdivide = _udf(kernels.st_subdivide, ArrayType(BinaryType()))
+_polygonize = _udf(kernels.st_polygonize, BinaryType())
+_minbound_center = _udf(kernels.st_minbound_center, BinaryType())
+_minbound_radius = _udf(kernels.st_minbound_radius, DoubleType())
+_oriented_envelope = _udf(kernels.st_oriented_envelope, BinaryType())
+_node = _udf(kernels.st_node, BinaryType())
+_make_valid = _udf(kernels.st_make_valid, BinaryType())
+_shortest_line = _udf(kernels.st_shortest_line, BinaryType())
+_project = _udf(kernels.st_project, BinaryType())
+_polygonize_fold = _udf(kernels.st_polygonize_all, BinaryType())
 
 
 def st_length(g: GeomLike) -> Column:
@@ -1099,8 +1058,7 @@ def st_distance(a: GeomLike, b: GeomLike) -> Column:
     return _distance(_geom(a), _geom(b))
 
 
-_transform2 = _u2(kernels.transform_srid, BinaryType())
-_transform3 = _u3(kernels.transform_srid, BinaryType())
+_transform = _udf(kernels.transform_srid, BinaryType())
 
 
 def st_transform(g: GeomLike, to_srid, from_srid=None) -> Column:
@@ -1109,16 +1067,16 @@ def st_transform(g: GeomLike, to_srid, from_srid=None) -> Column:
     PostGIS semantics: source SRID from the geometry's EWKB header, or
     ``from_srid`` for plain-WKB inputs; output stamped with to_srid."""
     if from_srid is None:
-        return _transform2(_geom(g), _num(to_srid, "int"))
-    return _transform3(_geom(g), _num(to_srid, "int"),
+        return _transform(_geom(g), _num(to_srid, "int"))
+    return _transform(_geom(g), _num(to_srid, "int"),
                        _num(from_srid, "int"))
 
 
-_x = _u1(kernels.st_x, DoubleType())
-_y = _u1(kernels.st_y, DoubleType())
-_num_geometries = _u1(kernels.num_geometries, IntegerType())
-_geometry_n = _u2(kernels.geometry_n, BinaryType())
-_point_n = _u2(kernels.point_n, BinaryType())
+_x = _udf(kernels.st_x, DoubleType())
+_y = _udf(kernels.st_y, DoubleType())
+_num_geometries = _udf(kernels.num_geometries, IntegerType())
+_geometry_n = _udf(kernels.geometry_n, BinaryType())
+_point_n = _udf(kernels.point_n, BinaryType())
 
 
 def st_x(g: GeomLike) -> Column:
@@ -1251,11 +1209,11 @@ def _uagg_extent():
 # shuffles to its group. The scale path is ``st_extent_agg`` /
 # min-max over Box2D, which Catalyst runs as partial+final HashAggregate.
 _extent_sql = _uagg_extent()
-_box2d_from_array = _u1_df(kernels.box2d_from_array, BOX2D_TYPE)
+_box2d_from_array = _udf(kernels.box2d_from_array, BOX2D_TYPE)
 
 GEOM_BBOX_TYPE = StructType(
     [StructField("geom", BinaryType(), True)] + list(BOX2D_TYPE.fields))
-_geom_bbox_from_text = _u1_df(kernels.geom_bbox_from_text, GEOM_BBOX_TYPE)
+_geom_bbox_from_text = _udf(kernels.geom_bbox_from_text, GEOM_BBOX_TYPE)
 
 
 def st_geom_with_bbox_from_text(wkt: Union[Column, str]) -> Column:
@@ -1267,20 +1225,7 @@ def st_geom_with_bbox_from_text(wkt: Union[Column, str]) -> Column:
     return _geom_bbox_from_text(c)
 
 
-def _u2_df(kernel, rtype):
-    def f(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        return kernel(a, b)
-    return pandas_udf(f, rtype)
-
-
-def _u6_df(kernel, rtype):
-    def f(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series,
-          e: pd.Series, g: pd.Series) -> pd.DataFrame:
-        return kernel(a, b, c, d, e, g)
-    return pandas_udf(f, rtype)
-
-
-_point_bbox_from_xy = _u2_df(kernels.point_bbox_from_xy, GEOM_BBOX_TYPE)
+_point_bbox_from_xy = _udf(kernels.point_bbox_from_xy, GEOM_BBOX_TYPE)
 
 
 def st_point_with_bbox(x, y) -> Column:
@@ -1294,7 +1239,7 @@ def st_point_with_bbox(x, y) -> Column:
 _BOX_PIECES_TYPE = StructType([
     StructField("areas", ArrayType(DoubleType())),
     StructField("npts", ArrayType(IntegerType()))])
-_box_subdivide_stats = _u6_df(kernels.box_subdivide_stats,
+_box_subdivide_stats = _udf(kernels.box_subdivide_stats,
                               _BOX_PIECES_TYPE)
 
 
@@ -1310,7 +1255,7 @@ def st_box_subdivide_stats(xmin, ymin, xmax, ymax, seg, maxv) -> Column:
         _num(seg, "double"), _num(maxv, "int"))
 
 
-_wkt_roundtrip = _u1(kernels.wkt_roundtrip, StringType())
+_wkt_roundtrip = _udf(kernels.wkt_roundtrip, StringType())
 
 
 def st_wkt_canonical(wkt: Union[Column, str]) -> Column:
@@ -1324,15 +1269,13 @@ def st_wkt_canonical(wkt: Union[Column, str]) -> Column:
 # -- SQL registration ---------------------------------------------------
 
 _SQL_UDFS = {
-    # Optional-SRID names register variadic so ST_GeomFromText('…') and
+    # Every UDF is variadic, so ST_GeomFromText('…') and
     # ST_GeomFromText('…', 4326) both resolve — true overload parity with
     # the reference's one_of signatures. <name>SRID kept as aliases.
-    "ST_GeomFromText": _u_variadic(kernels.geom_from_text, BinaryType(),
-                                   "geom_from_text"),
-    "ST_GeomFromTextSRID": _geom_from_text2,
-    "ST_GeomFromWKB": _u_variadic(kernels.geom_from_wkb, BinaryType(),
-                                  "geom_from_wkb"),
-    "ST_GeomFromWKBSRID": _geom_from_wkb2,
+    "ST_GeomFromText": _geom_from_text,
+    "ST_GeomFromTextSRID": _geom_from_text,
+    "ST_GeomFromWKB": _geom_from_wkb,
+    "ST_GeomFromWKBSRID": _geom_from_wkb,
     "ST_GeomFromWKBDialect": _geom_from_wkb_dialect,
     "ST_GeomFromGeoJSON": _geom_from_geojson,
     "ST_AsText": _as_text,
@@ -1340,9 +1283,8 @@ _SQL_UDFS = {
     "ST_AsGeoJSON": _as_geojson,
     "ST_GeometryType": _geometry_type,
     "Box2D": _box2d,
-    "ST_MakeEnvelope": _u_variadic(kernels.make_envelope, BinaryType(),
-                                   "make_envelope"),
-    "ST_MakeEnvelopeSRID": _make_envelope5,
+    "ST_MakeEnvelope": _make_envelope,
+    "ST_MakeEnvelopeSRID": _make_envelope,
     "ST_Intersects": _intersects,
     "ST_Disjoint": _disjoint,
     "ST_Covers": _covers,
@@ -1455,17 +1397,14 @@ _SQL_UDFS = {
     "ST_MakeValid": _make_valid,
     "ST_ShortestLine": _shortest_line,
     "ST_Project": _project,
-    "ST_Transform": _u_variadic(kernels.transform_srid, BinaryType(),
-                                "transform_srid"),
+    "ST_Transform": _transform,
     "ST_X": _x,
     "ST_Y": _y,
     "ST_NumGeometries": _num_geometries,
     "ST_GeometryN": _geometry_n,
     "ST_PointN": _point_n,
-    "ST_StartPoint": _u1(lambda s: kernels.point_n(
-        s, pd.Series([1] * len(s))), BinaryType()),
-    "ST_EndPoint": _u1(lambda s: kernels.point_n(
-        s, pd.Series([-1] * len(s))), BinaryType()),
+    "ST_StartPoint": _udf(kernels.start_point, BinaryType()),
+    "ST_EndPoint": _udf(kernels.end_point, BinaryType()),
 }
 
 

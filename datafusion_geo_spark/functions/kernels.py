@@ -7,16 +7,20 @@ over an Arrow-delivered pandas batch inside a Spark Python worker —
 partition-level parallelism replaces the reference's rayon threads
 (SURVEY.md §3.1).
 
-Null semantics (SURVEY.md §1.2): null in → null out; binary predicates are
-null if either side is null (/root/reference/src/function/intersects.rs:111-127).
+A kernel first tries its vectorized numpy fast paths, chosen from the
+batch's shape; every other batch runs through one per-row driver,
+``_rows``, which owns the whole per-row contract:
 
-Literal arguments arrive as constant Series; kernels memoize WKB decoding
-by value (``_DecodeCache``) so a scalar side is decoded once per batch.
+- null in → null out; binary predicates are null if either side is null
+  (SURVEY.md §1.2, reference intersects.rs:111-127);
+- one memo rule: the result is memoized per distinct argument row within
+  a batch, and each distinct WKB value is decoded once, so a literal side
+  is decoded once per batch (intersects.rs:49-60).
 """
 
 from __future__ import annotations
 
-import re
+import operator
 from typing import Callable, Optional
 
 import numpy as np
@@ -30,19 +34,8 @@ from ..geo import validity as validity_mod
 from ..geo import polygonize as polygonize_mod
 from ..geo import subdivide as subdivide_mod
 from ..geo.geom import Geometry
-from ..geo.wkb import from_wkb, to_wkb, wkb_srid, point_wkb
+from ..geo.wkb import from_wkb, to_wkb, wkb_srid
 from ..geo.wkt import fmt_num, from_wkt, to_ewkt, to_wkt
-
-
-class _DecodeCache(dict):
-    """Memoized WKB→Geometry decode (hit rate ~100% for literal sides)."""
-
-    def geom(self, wkb: bytes) -> Geometry:
-        g = self.get(wkb)
-        if g is None:
-            g = from_wkb(wkb)
-            self[wkb] = g
-        return g
 
 
 def _obj_series(values) -> pd.Series:
@@ -83,9 +76,6 @@ def _num(v):
 # Keep the loop; benchmark any replacement IN-CLUSTER, not single-thread.
 
 
-_POINT_RE = re.compile(r"^POINT\s*\(\s*(\S+)\s+(\S+)\s*\)\s*$")
-
-
 def _nullable(arr: np.ndarray, valid: np.ndarray):
     """Float array → pandas-ready values with real None (NOT NaN — NaN
     survives Arrow as a non-null double) where invalid."""
@@ -102,6 +92,94 @@ def _bool_nullable(arr: np.ndarray, valid: np.ndarray) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
+# ------------------------------------------------------------ per-row driver
+
+_MISS = object()
+
+
+def _keys(kind: str, vals: list) -> list:
+    """Memo keys of one argument column; None where the cell is NULL."""
+    if kind == "g":
+        return [None if v is None or v != v else bytes(v) for v in vals]
+    if kind == "G":
+        return [None if v is None
+                else tuple(bytes(w) for w in v if w is not None) for v in vals]
+    if kind == "n":
+        return [None if _num(v) is None else float(v) for v in vals]
+    return [None if v is None or v != v else v for v in vals]
+
+
+def _rows(fn: Callable, kinds: str, *cols: Optional[pd.Series]) -> pd.Series:
+    """Run ``fn`` over the rows of ``cols`` under the kernel contract.
+
+    ``kinds`` has one letter per argument: ``g`` WKB, passed to ``fn``
+    decoded; ``G`` an array of WKB, passed as a list of decoded members
+    (null members skipped); ``n`` a number, passed as float (SQL DECIMAL
+    literals arrive as ``decimal.Decimal``); ``v`` any other value,
+    passed as is. Trailing ``None`` columns are omitted optional
+    arguments: ``fn`` is called without them, so its defaults apply.
+
+    A NULL (None, or NaN) in any argument nulls the row without calling
+    ``fn``. ``fn`` runs once per distinct argument row in the batch, and
+    each distinct WKB value is decoded once."""
+    cols = list(cols)
+    while cols and cols[-1] is None:
+        cols.pop()
+    if len(cols) > len(kinds):
+        raise TypeError(f"expected at most {len(kinds)} arguments, "
+                        f"got {len(cols)}")
+    kinds = kinds[:len(cols)]
+    memo: dict = {None: None}
+    out = []
+    if kinds in ("g", "v"):
+        # one argument: the result memo alone decodes each value once
+        decode = kinds == "g"
+        for v in cols[0].tolist():
+            r = memo.get(v, _MISS)
+            if r is _MISS:
+                r = memo[v] = (None if v != v
+                               else fn(from_wkb(v)) if decode else fn(v))
+            out.append(r)
+        return _obj_series(out)
+    geoms: dict = {}
+
+    def arg(kind: str, x):
+        if kind == "g":
+            g = geoms.get(x)
+            if g is None:
+                g = geoms[x] = from_wkb(x)
+            return g
+        return [arg("g", w) for w in x] if kind == "G" else x
+
+    for key in zip(*[_keys(k, c.tolist()) for k, c in zip(kinds, cols)]):
+        r = memo.get(key, _MISS)
+        if r is _MISS:
+            r = memo[key] = None if None in key else fn(*map(arg, kinds, key))
+        out.append(r)
+    return _obj_series(out)
+
+
+def _per_row(fn: Callable, kinds: str) -> Callable[..., pd.Series]:
+    """A kernel that is ``fn`` under the per-row contract and nothing
+    else (named after its module attribute at the end of this file)."""
+    def kernel(*cols: pd.Series) -> pd.Series:
+        return _rows(fn, kinds, *cols)
+    return kernel
+
+
+def _wkb(fn: Callable) -> Callable:
+    """``fn`` with its Geometry result encoded as (E)WKB; a None result
+    (e.g. line_substring on a non-line) stays NULL."""
+    def encoded(*args):
+        g = fn(*args)
+        return None if g is None else to_wkb(g)
+    return encoded
+
+
+def _with_srid(g: Geometry, srid=None) -> bytes:
+    return to_wkb(g if srid is None else g.with_srid(int(srid)))
+
+
 # ------------------------------------------------------------ constructors
 
 def geom_from_text(s: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
@@ -116,30 +194,7 @@ def geom_from_text(s: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
             fast = _fast_lines_from_text(s)
         if fast is not None:
             return fast
-    srids = None if srid is None else srid.tolist()
-    out = []
-    cache: dict = {}
-    for i, v in enumerate(s.tolist()):
-        if v is None:
-            out.append(None)
-            continue
-        if srids is not None:
-            r = _num(srids[i])
-            if r is None:  # srid argument present but NULL → NULL row
-                out.append(None)
-                continue
-        else:
-            r = None
-        key = (v, r)
-        b = cache.get(key)
-        if b is None:
-            g = from_wkt(v)
-            if r is not None:
-                g = g.with_srid(int(r))
-            b = to_wkb(g)
-            cache[key] = b
-        out.append(b)
-    return _obj_series(out)
+    return _rows(lambda t, r=None: _with_srid(from_wkt(t), r), "vn", s, srid)
 
 
 _POINTS_ALLNULL = object()  # sentinel: batch parsed, every row NULL
@@ -222,8 +277,7 @@ def geom_from_geojson(s: pd.Series) -> pd.Series:
     """GeoJSON text -> (E)WKB — PostGIS-parity ST_GeomFromGeoJSON; the
     inverse of as_geojson (the reference only serializes,
     /root/reference/src/function/as_geojson.rs:88-110). A legacy ``crs``
-    EPSG member becomes the SRID (EWKB). Repeated strings within a batch
-    (dimension tables, literal fan-out) hit the per-batch cache.
+    EPSG member becomes the SRID (EWKB).
 
     Fast paths mirror geom_from_text's: an all-Point batch in the
     serializer's canonical key order parses via vectorized str ops +
@@ -237,18 +291,7 @@ def geom_from_geojson(s: pd.Series) -> pd.Series:
     if fast is not None:
         return fast
     from ..geo.geojson import from_geojson
-    out = []
-    cache: dict = {}
-    for v in s.tolist():
-        if v is None:
-            out.append(None)
-            continue
-        b = cache.get(v)
-        if b is None:
-            b = to_wkb(from_geojson(v))
-            cache[v] = b
-        out.append(b)
-    return _obj_series(out)
+    return _rows(lambda t: to_wkb(from_geojson(t)), "v", s)
 
 
 _GJ_POINT_PRE = '{"type":"Point","coordinates":['
@@ -316,24 +359,7 @@ def geom_from_wkb(s: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
     ST_GeomFromWKB (/root/reference/src/function/geom_from_wkb.rs:50-76).
     Every input blob is fully parsed — the reference validates eagerly too
     (/root/reference/src/geo/builder.rs:97-110)."""
-    srids = None if srid is None else srid.tolist()
-    out = []
-    for i, v in enumerate(s.tolist()):
-        if v is None:
-            out.append(None)
-            continue
-        if srids is not None:
-            r = _num(srids[i])
-            if r is None:  # srid argument present but NULL → NULL row
-                out.append(None)
-                continue
-        else:
-            r = None
-        g = from_wkb(bytes(v))
-        if r is not None:
-            g = g.with_srid(int(r))
-        out.append(to_wkb(g))
-    return _obj_series(out)
+    return _rows(_with_srid, "gn", s, srid)
 
 
 def geom_from_wkb_dialect(s: pd.Series, dialect: pd.Series,
@@ -346,46 +372,17 @@ def geom_from_wkb_dialect(s: pd.Series, dialect: pd.Series,
     optional srid overrides the blob's SRID in the SAME crossing — no
     second decode pass."""
     from ..geo.dialect import from_dialect
-    ds = dialect.tolist()
-    srids = None if srid is None else srid.tolist()
-    out = []
-    for i, v in enumerate(s.tolist()):
-        d = ds[i]
-        if v is None or d is None:
-            out.append(None)
-            continue
-        if srids is not None:
-            r = _num(srids[i])
-            if r is None:  # srid argument present but NULL → NULL row
-                out.append(None)
-                continue
-        else:
-            r = None
-        g = from_dialect(bytes(v), str(d))
-        if r is not None:
-            g = g.with_srid(int(r))
-        out.append(to_wkb(g))
-    return _obj_series(out)
+    return _rows(lambda b, d, r=None: _with_srid(from_dialect(b, str(d)), r),
+                 "vvn", s, dialect, srid)
 
 
 def make_envelope(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
                   ymax: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
     """Rectangle polygon from corners — ring order per the reference
     (/root/reference/src/function/make_envelope.rs:82-93)."""
-    srids = None if srid is None else srid.tolist()
-    out = []
-    for i in range(len(xmin)):
-        a, b, c, d = (_num(xmin.iat[i]), _num(ymin.iat[i]),
-                      _num(xmax.iat[i]), _num(ymax.iat[i]))
-        r = _num(srids[i]) if srids is not None else None
-        if a is None or b is None or c is None or d is None or \
-                (srids is not None and r is None):
-            out.append(None)
-            continue
-        g = Geometry.box(float(a), float(b), float(c), float(d),
-                         srid=None if r is None else int(r))
-        out.append(to_wkb(g))
-    return _obj_series(out)
+    return _rows(
+        lambda a, b, c, d, r=None: _with_srid(Geometry.box(a, b, c, d), r),
+        "nnnnn", xmin, ymin, xmax, ymax, srid)
 
 
 def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
@@ -399,32 +396,18 @@ def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
 
 # ------------------------------------------------------------ serializers
 
-def _unary_to_str(fn: Callable[[Geometry], str], point_fast=None, line_fast=None):
-    def k(s: pd.Series) -> pd.Series:
+def _unary_to_str(fn: Callable[[Geometry], str], point_fast, line_fast=None):
+    def kernel(s: pd.Series) -> pd.Series:
         vals = s.tolist()
-        if point_fast is not None:
-            pb = vector.decode_points(vals)
-            if pb is not None:
-                return _obj_series(point_fast(pb))
+        pb = vector.decode_points(vals)
+        if pb is not None:
+            return _obj_series(point_fast(pb))
         if line_fast is not None:
             lb = vector.decode_uniform_lines(vals)
             if lb is not None:
                 return _obj_series(line_fast(lb))
-        cache = _DecodeCache()
-        out = []
-        memo: dict = {}
-        for v in vals:
-            if v is None:
-                out.append(None)
-                continue
-            v = bytes(v)
-            r = memo.get(v)
-            if r is None:
-                r = fn(cache.geom(v))
-                memo[v] = r
-            out.append(r)
-        return _obj_series(out)
-    return k
+        return _rows(fn, "g", s)
+    return kernel
 
 
 def _points_to_wkt(pb: vector.PointBatch) -> list:
@@ -491,24 +474,16 @@ def geometry_type_name(g: Geometry) -> str:
     return "ST_" + g.typ
 
 
-geometry_type = _unary_to_str(geometry_type_name)  # geometry_type.rs:79-92
+geometry_type = _per_row(geometry_type_name, "g")  # geometry_type.rs:79-92
 
+# Vertex count (PostGIS ST_NPoints; engine utility beyond the reference
+# surface — used to validate constructions like ST_Buffer's quadsegs
+# vertex layout).
+npoints = _per_row(lambda g: len(g.vertices()), "g")
 
-def npoints(s: pd.Series) -> pd.Series:
-    """Vertex count (PostGIS ST_NPoints; engine utility beyond the
-    reference surface — used to validate constructions like ST_Buffer's
-    quadsegs vertex layout)."""
-    cache = _DecodeCache()
-    return _obj_series([
-        None if v is None else len(cache.geom(bytes(v)).vertices())
-        for v in s.tolist()])
-
-
-def srid(s: pd.Series) -> pd.Series:
-    """SRID from the EWKB header, null when absent — ST_SRID
-    (/root/reference/src/function/srid.rs:46-67). Header-only read."""
-    return _obj_series([None if v is None else wkb_srid(bytes(v))
-                        for v in s.tolist()])
+# SRID from the EWKB header, null when absent — ST_SRID
+# (reference srid.rs:46-67). Header-only read.
+srid = _per_row(wkb_srid, "v")
 
 
 def set_srid(s: pd.Series, srid_s: pd.Series) -> pd.Series:
@@ -518,28 +493,13 @@ def set_srid(s: pd.Series, srid_s: pd.Series) -> pd.Series:
     this engine's unknown is an absent EWKB flag, so srid NULL or <= 0
     clears the header (ST_SRID then returns NULL, the same contract the
     reference's header-less WKB produces)."""
-    cache = _DecodeCache()
-    out = []
-    for v, r in zip(s.tolist(), srid_s.tolist()):
-        if v is None:
-            out.append(None)
-            continue
-        sr = None
-        if r is not None and not (isinstance(r, float) and np.isnan(r)):
-            sr = int(r)
-            if sr <= 0:
-                sr = None
-        out.append(to_wkb(cache.geom(bytes(v)).with_srid(sr)))
-    return _obj_series(out)
+    return _rows(lambda g, r: to_wkb(g.with_srid(int(r) if r >= 1 else None)),
+                 "gn", s, srid_s.where(srid_s.notna(), 0))
 
 
-def area(s: pd.Series) -> pd.Series:
-    """Planar area (PostGIS ST_Area; engine utility beyond the reference
-    surface — shells minus holes, 0 for points/lines)."""
-    cache = _DecodeCache()
-    return _obj_series([
-        None if v is None else algos.area(cache.geom(bytes(v)))
-        for v in s.tolist()])
+# Planar area (PostGIS ST_Area; engine utility beyond the reference
+# surface — shells minus holes, 0 for points/lines).
+area = _per_row(algos.area, "g")
 
 
 # ------------------------------------------------------------ bbox
@@ -561,21 +521,10 @@ def box2d_rows(s: pd.Series) -> pd.DataFrame:
                              "ymin": _nullable(ymin, lb.valid),
                              "xmax": _nullable(xmax, lb.valid),
                              "ymax": _nullable(ymax, lb.valid)})
-    cache = _DecodeCache()
-    xmin, ymin, xmax, ymax = [], [], [], []
-    for v in s.tolist():
-        if v is None:
-            xmin.append(None); ymin.append(None)
-            xmax.append(None); ymax.append(None)
-            continue
-        b = cache.geom(bytes(v)).bounds()
-        if b is None:
-            xmin.append(None); ymin.append(None)
-            xmax.append(None); ymax.append(None)
-        else:
-            xmin.append(b[0]); ymin.append(b[1])
-            xmax.append(b[2]); ymax.append(b[3])
-    return pd.DataFrame({"xmin": xmin, "ymin": ymin, "xmax": xmax, "ymax": ymax})
+    nulls = (None, None, None, None)   # a NULL or empty geometry
+    return pd.DataFrame(
+        [nulls if b is None else b for b in _rows(Geometry.bounds, "g", s)],
+        columns=["xmin", "ymin", "xmax", "ymax"])
 
 
 def extent_array(s: pd.Series):
@@ -638,24 +587,15 @@ def box_subdivide_stats(xmin: pd.Series, ymin: pd.Series,
     emitted value is byte-identical to the staged spelling — pinned by
     tests/test_subdivide.py. A NULL corner (or NULL seg/maxv) nulls the
     row, matching the staged chain's NULL propagation."""
-    out_a: list = []
-    out_n: list = []
-    for i in range(len(xmin)):
-        a, b = _num(xmin.iat[i]), _num(ymin.iat[i])
-        c, d = _num(xmax.iat[i]), _num(ymax.iat[i])
-        sg, mv = _num(seg.iat[i]), _num(maxv.iat[i])
-        if None in (a, b, c, d, sg, mv):
-            out_a.append(None)
-            out_n.append(None)
-            continue
-        g = edit.segmentize(
-            Geometry.box(float(a), float(b), float(c), float(d)),
-            float(sg))
-        pieces = subdivide_mod.subdivide(g, int(mv))
-        out_a.append([algos.area(p) for p in pieces])
-        out_n.append([len(p.vertices()) for p in pieces])
-    return pd.DataFrame({"areas": _obj_series(out_a),
-                         "npts": _obj_series(out_n)})
+    def stats(a, b, c, d, sg, mv):
+        pieces = subdivide_mod.subdivide(
+            edit.segmentize(Geometry.box(a, b, c, d), sg), int(mv))
+        return ([algos.area(p) for p in pieces],
+                [len(p.vertices()) for p in pieces])
+    rows = _rows(stats, "nnnnnn", xmin, ymin, xmax, ymax, seg, maxv).tolist()
+    return pd.DataFrame({
+        "areas": _obj_series([None if r is None else r[0] for r in rows]),
+        "npts": _obj_series([None if r is None else r[1] for r in rows])})
 
 
 def wkt_roundtrip(s: pd.Series) -> pd.Series:
@@ -689,6 +629,7 @@ def box2d_from_array(s: pd.Series) -> pd.DataFrame:
     ST_Extent's array encoding (grouped-agg pandas UDFs cannot return
     StructType) to the reference's Box2d struct
     (/root/reference/src/geo/box.rs:11-16)."""
+    # own loop: the argument is an array, and a short one nulls the row too
     cols = {k: [] for k in ("xmin", "ymin", "xmax", "ymax")}
     for v in s.tolist():
         ok = v is not None and len(v) == 4
@@ -769,7 +710,10 @@ def _box_class_fast(fn, al: list, bl: list):
 
 
 def _binary_pred(fn: Callable[[Geometry, Geometry], bool], fn_name: str):
-    def k(a: pd.Series, b: pd.Series) -> pd.Series:
+    def pred(x: Geometry, y: Geometry) -> bool:
+        return bool(fn(x, y))
+
+    def kernel(a: pd.Series, b: pd.Series) -> pd.Series:
         al, bl = a.tolist(), b.tolist()
 
         # ---- vectorized fast paths --------------------------------
@@ -819,65 +763,28 @@ def _binary_pred(fn: Callable[[Geometry, Geometry], bool], fn_name: str):
         if ga is None and gb is None and pa is None and pbb is None:
             # rectangle×rectangle batches: one evaluation per interval-
             # relation class instead of per distinct pair
-            bres = _box_class_fast(lambda x, y: bool(fn(x, y)), al, bl)
+            bres = _box_class_fast(pred, al, bl)
             if bres is not None:
                 return _obj_series(bres)
-
-        # ---- object fallback --------------------------------------
-        cache = _DecodeCache()
-        out = []
-        memo: dict = {}
-        for i in range(len(al)):
-            va, vb = al[i], bl[i]
-            if va is None or vb is None:
-                out.append(None)
-                continue
-            va, vb = bytes(va), bytes(vb)
-            key = (va, vb)
-            r = memo.get(key)
-            if r is None:
-                r = bool(fn(cache.geom(va), cache.geom(vb)))
-                memo[key] = r
-            out.append(r)
-        return _obj_series(out)
-    return k
+        return _rows(pred, "gg", a, b)
+    return kernel
 
 
 intersects = _binary_pred(algos.intersects, "intersects")    # intersects.rs:100-132
 covers = _binary_pred(algos.covers, "covers")                # covers.rs:103-122
 covered_by = _binary_pred(algos.covered_by, "covered_by")    # covered_by.rs:102-121
+equals = _binary_pred(algos.equals, "equals")                # equals.rs:103-122
 
 
 def disjoint(a: pd.Series, b: pd.Series) -> pd.Series:
     """ST_Disjoint (PostGIS; beyond-reference utility) — the exact
     negation of intersects, sharing all of its vectorized fast paths."""
-    out = intersects(a, b)
-    return _obj_series([None if v is None else not v for v in out.tolist()])
-equals = _binary_pred(algos.equals, "equals")                # equals.rs:103-122
+    return _rows(operator.not_, "v", intersects(a, b))
 
 
 # ------------------------------------------------------------ transforms
 
-def _unary_geom(fn: Callable[[Geometry], Geometry]):
-    def k(s: pd.Series) -> pd.Series:
-        cache = _DecodeCache()
-        memo: dict = {}
-        out = []
-        for v in s.tolist():
-            if v is None:
-                out.append(None)
-                continue
-            v = bytes(v)
-            r = memo.get(v)
-            if r is None:
-                r = to_wkb(fn(cache.geom(v)))
-                memo[v] = r
-            out.append(r)
-        return _obj_series(out)
-    return k
-
-
-boundary = _unary_geom(algos.boundary)         # boundary.rs:71-87
+boundary = _per_row(_wkb(algos.boundary), "g")  # boundary.rs:71-87
 
 
 def translate(s: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
@@ -898,238 +805,74 @@ def translate(s: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
         valid = lb.valid & off_ok
         c = lb.coords + np.stack([dxa, dya], axis=1)[:, None, :]
         return _obj_series(vector.encode_uniform_lines(c, valid=valid))
-    cache = _DecodeCache()
-    out = []
-    sl, dxl, dyl = s.tolist(), dx.tolist(), dy.tolist()
-    for i in range(len(sl)):
-        v, ox, oy = sl[i], _num(dxl[i]), _num(dyl[i])
-        if v is None or ox is None or oy is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        out.append(to_wkb(g.translate(float(ox), float(oy))))
-    return _obj_series(out)
+    return _rows(lambda g, x, y: to_wkb(g.translate(x, y)), "gnn", s, dx, dy)
 
 
-def buffer(s: pd.Series, width: pd.Series, quadsegs: pd.Series) -> pd.Series:
-    """ST_Buffer (/root/reference/src/function/buffer.rs:86-104)."""
-    cache = _DecodeCache()
-    out = []
-    sl, wl, ql = s.tolist(), width.tolist(), quadsegs.tolist()
-    for i in range(len(sl)):
-        v, w, q = sl[i], _num(wl[i]), _num(ql[i])
-        if v is None or w is None or q is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        out.append(to_wkb(algos.buffer(g, float(w), int(q))))
-    return _obj_series(out)
+# ST_Buffer (reference buffer.rs:86-104); quadsegs
+# defaults to 8 like the Column API.
+buffer = _per_row(_wkb(lambda g, w, q=8: algos.buffer(g, w, int(q))), "gnn")
 
+# ST_Split with PostGIS semantics — deliberately NOT the reference's
+# broken boundary∪polygonize version
+# (reference split.rs:148 FIXME; SURVEY.md §7.3).
+split = _per_row(_wkb(algos.split), "gg")
 
-def split(s: pd.Series, blade: pd.Series) -> pd.Series:
-    """ST_Split with PostGIS semantics — deliberately NOT the reference's
-    broken boundary∪polygonize version
-    (/root/reference/src/function/split.rs:148 FIXME; SURVEY.md §7.3)."""
-    cache = _DecodeCache()
-    out = []
-    sl, bl = s.tolist(), blade.tolist()
-    for i in range(len(sl)):
-        v, b = sl[i], bl[i]
-        if v is None or b is None:
-            out.append(None)
-            continue
-        out.append(to_wkb(algos.split(cache.geom(bytes(v)), cache.geom(bytes(b)))))
-    return _obj_series(out)
-
-
-def as_mvt_geom(s: pd.Series, xmin: pd.Series, ymin: pd.Series,
-                xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-    """ST_AsMVTGeom (/root/reference/src/function/as_mvt_geom.rs:86-95).
-    The reference takes a Box2d struct argument; here the tile box arrives
-    as four doubles (the struct variant is unpacked by the Column wrapper)."""
-    cache = _DecodeCache()
-    out = []
-    sl = s.tolist()
-    for i in range(len(sl)):
-        v = sl[i]
-        a, b2, c, d = (_num(xmin.iat[i]), _num(ymin.iat[i]),
-                       _num(xmax.iat[i]), _num(ymax.iat[i]))
-        if v is None or a is None or b2 is None or c is None or d is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        out.append(to_wkb(algos.as_mvt_geom(
-            g, float(a), float(b2), float(c), float(d))))
-    return _obj_series(out)
+# ST_AsMVTGeom (reference as_mvt_geom.rs:86-95). The
+# reference takes a Box2d struct argument; here the tile box arrives as
+# four doubles (the struct variant is unpacked by the Column wrapper).
+as_mvt_geom = _per_row(_wkb(algos.as_mvt_geom), "gnnnn")
 
 
 # ------------------------------------------- measures (beyond-reference)
-
-def length(s: pd.Series) -> pd.Series:
-    """ST_Length (PostGIS; beyond-reference utility — line length, 0 for
-    points/polygons)."""
-    cache = _DecodeCache()
-    return _obj_series([
-        None if v is None else algos.length(cache.geom(bytes(v)))
-        for v in s.tolist()])
-
-
-def perimeter(s: pd.Series) -> pd.Series:
-    """ST_Perimeter (PostGIS; beyond-reference utility — polygon ring
-    length incl. holes, 0 for points/lines)."""
-    cache = _DecodeCache()
-    return _obj_series([
-        None if v is None else algos.perimeter(cache.geom(bytes(v)))
-        for v in s.tolist()])
+# ST_Length: line length, 0 for points/polygons; ST_Perimeter: polygon
+# ring length incl. holes, 0 for points/lines (PostGIS).
+length = _per_row(algos.length, "g")
+perimeter = _per_row(algos.perimeter, "g")
+centroid = _per_row(_wkb(algos.centroid), "g")        # PostGIS ST_Centroid
+convex_hull = _per_row(_wkb(algos.convex_hull), "g")  # PostGIS ST_ConvexHull
+envelope = _per_row(_wkb(algos.envelope), "g")        # PostGIS ST_Envelope
 
 
-centroid = _unary_geom(algos.centroid)        # PostGIS ST_Centroid
-convex_hull = _unary_geom(algos.convex_hull)  # PostGIS ST_ConvexHull
-envelope = _unary_geom(algos.envelope)        # PostGIS ST_Envelope
+def _box_class_kernel(fn):
+    """(wkb, wkb) -> scalar kernel whose result is a pure point-set
+    function of the pair (the contains/touches/overlaps/relate family —
+    NOT coordinate-dependent kernels like azimuth/closest_point): it
+    takes the rectangle class-memo fast path (_box_class_fast) when both
+    batches are rectangles."""
+    def kernel(a: pd.Series, b: pd.Series) -> pd.Series:
+        bres = _box_class_fast(fn, a.tolist(), b.tolist())
+        if bres is not None:
+            return _obj_series(bres)
+        return _rows(fn, "gg", a, b)
+    return kernel
 
 
-def _geom_num_kernel(fn):
-    """Factory for (wkb, numeric) -> scalar/wkb kernels: decode cache,
-    null-in/null-out, (bytes, value) result memo — ONE definition for
-    the geohash / interpolate / simplify family."""
-    def k(s: pd.Series, n: pd.Series) -> pd.Series:
-        cache = _DecodeCache()
-        out = []
-        sl, nl = s.tolist(), n.tolist()
-        memo: dict = {}
-        for i in range(len(sl)):
-            v, x = sl[i], _num(nl[i])
-            if v is None or x is None:
-                out.append(None)
-                continue
-            v = bytes(v)
-            key = (v, float(x))
-            if key not in memo:
-                memo[key] = fn(cache.geom(v), x)
-            out.append(memo[key])
-        return _obj_series(out)
-    return k
-
-
-def _geom_num_num_kernel(fn):
-    """Factory for (wkb, numeric, numeric) -> wkb/scalar kernels —
-    the 2-parameter twin of _geom_num_kernel (scale / line-substring
-    family)."""
-    def k(s: pd.Series, n1: pd.Series, n2: pd.Series) -> pd.Series:
-        cache = _DecodeCache()
-        out = []
-        sl, l1, l2 = s.tolist(), n1.tolist(), n2.tolist()
-        memo: dict = {}
-        for i in range(len(sl)):
-            v, x, y = sl[i], _num(l1[i]), _num(l2[i])
-            if v is None or x is None or y is None:
-                out.append(None)
-                continue
-            v = bytes(v)
-            x, y = float(x), float(y)   # SQL DECIMAL literals
-            key = (v, x, y)
-            if key not in memo:
-                memo[key] = fn(cache.geom(v), x, y)
-            out.append(memo[key])
-        return _obj_series(out)
-    return k
-
-
-def to_wkb_opt(g):
-    """to_wkb that passes None through (kernels whose algorithm can
-    itself return NULL, e.g. line_substring on a non-line)."""
-    return None if g is None else to_wkb(g)
-
-
-def _geom_geom_scalar_kernel(fn, box_class: bool = False):
-    """Factory for (wkb, wkb) -> scalar kernels with pair memoization
-    (azimuth / line-locate family). ``box_class=True`` opts a kernel
-    whose result is a pure point-set function of the pair (the
-    contains/touches/overlaps/relate family — NOT coordinate-dependent
-    kernels like azimuth/closest_point) into the rectangle class-memo
-    fast path (_box_class_fast)."""
-    def k(a: pd.Series, b: pd.Series) -> pd.Series:
-        al, bl = a.tolist(), b.tolist()
-        if box_class:
-            bres = _box_class_fast(fn, al, bl)
-            if bres is not None:
-                return _obj_series(bres)
-        cache = _DecodeCache()
-        out = []
-        memo: dict = {}
-        for i in range(len(al)):
-            va, vb = al[i], bl[i]
-            if va is None or vb is None:
-                out.append(None)
-                continue
-            va, vb = bytes(va), bytes(vb)
-            key = (va, vb)
-            if key not in memo:
-                memo[key] = fn(cache.geom(va), cache.geom(vb))
-            out.append(memo[key])
-        return _obj_series(out)
-    return k
-
-
-def st_geohash(s: pd.Series, prec: Optional[pd.Series] = None) -> pd.Series:
-    """ST_GeoHash (PostGIS; beyond-reference utility). The optional
-    precision follows PostGIS: omitted or <= 0 means full precision."""
-    if prec is None:
-        prec = pd.Series([0] * len(s))
-    return _geom_num_kernel(lambda g, p_: algos.geohash(g, int(p_)))(s, prec)
-
-
-st_azimuth = _geom_geom_scalar_kernel(algos.azimuth)     # PostGIS ST_Azimuth
-closest_point = _geom_geom_scalar_kernel(
-    lambda a, b: to_wkb(algos.closest_point(a, b)))      # ST_ClosestPoint
+# ST_GeoHash (PostGIS; beyond-reference utility). The optional precision
+# follows PostGIS: omitted or <= 0 means full precision.
+st_geohash = _per_row(lambda g, p=0: algos.geohash(g, int(p)), "gn")
+st_azimuth = _per_row(algos.azimuth, "gg")                 # PostGIS ST_Azimuth
+closest_point = _per_row(_wkb(algos.closest_point), "gg")  # ST_ClosestPoint
 
 # topological predicates beyond the covers family (geo/relate.py;
 # PostGIS ST_Contains/Within/Touches/Overlaps/Crosses)
-st_contains = _geom_geom_scalar_kernel(relate.contains, box_class=True)
-st_within = _geom_geom_scalar_kernel(relate.within, box_class=True)
-st_touches = _geom_geom_scalar_kernel(relate.touches, box_class=True)
-st_overlaps = _geom_geom_scalar_kernel(relate.overlaps, box_class=True)
-st_crosses = _geom_geom_scalar_kernel(relate.crosses, box_class=True)
+st_contains = _box_class_kernel(relate.contains)
+st_within = _box_class_kernel(relate.within)
+st_touches = _box_class_kernel(relate.touches)
+st_overlaps = _box_class_kernel(relate.overlaps)
+st_crosses = _box_class_kernel(relate.crosses)
 
 # full DE-9IM matrix (geo/de9im.py; PostGIS ST_Relate / ST_RelateMatch;
 # beyond the reference's covers/intersects/equals predicate surface)
-st_relate = _geom_geom_scalar_kernel(de9im.relate, box_class=True)
-
-
-def st_relate_pattern(a: pd.Series, b: pd.Series,
-                      pat: pd.Series) -> pd.Series:
-    """ST_Relate(a, b, pattern) — matrix computed once per distinct
-    geometry pair, then tested against the row's pattern."""
-    al, bl, pl = a.tolist(), b.tolist(), pat.tolist()
-    cache = _DecodeCache()
-    memo: dict = {}
-    out = []
-    for i in range(len(al)):
-        va, vb, p = al[i], bl[i], pl[i]
-        if va is None or vb is None or p is None:
-            out.append(None)
-            continue
-        va, vb = bytes(va), bytes(vb)
-        key = (va, vb)
-        if key not in memo:
-            memo[key] = de9im.relate(cache.geom(va), cache.geom(vb))
-        out.append(de9im.relate_match(memo[key], str(p)))
-    return _obj_series(out)
-
-
-def st_relate_match(m: pd.Series, p: pd.Series) -> pd.Series:
-    """ST_RelateMatch — pure string matrix-vs-pattern test."""
-    out = [None if (mv is None or pv is None)
-           else de9im.relate_match(str(mv), str(pv))
-           for mv, pv in zip(m.tolist(), p.tolist())]
-    return _obj_series(out)
-
+st_relate = _box_class_kernel(de9im.relate)
+# ST_Relate(a, b, pattern): the matrix tested against the row's pattern
+st_relate_pattern = _per_row(
+    lambda a, b, p: de9im.relate_match(de9im.relate(a, b), str(p)), "ggv")
+# ST_RelateMatch — pure string matrix-vs-pattern test
+st_relate_match = _per_row(
+    lambda m, p: de9im.relate_match(str(m), str(p)), "vv")
 
 # set operations (geo/overlay.py boundary-classification overlay;
 # beyond-reference — PostGIS ST_Intersection/ST_Union/ST_Difference)
-_geom_intersection_obj = _geom_geom_scalar_kernel(
-    lambda a, b: to_wkb(overlay.intersection(a, b)))
-
 _POLY_EMPTY_WKB = b"\x01\x03\x00\x00\x00\x00\x00\x00\x00"
 
 
@@ -1147,7 +890,7 @@ def geom_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
     ba = vector.decode_boxes(al)
     bb = vector.decode_boxes(bl) if ba is not None else None
     if ba is None or bb is None:
-        return _geom_intersection_obj(a, b)
+        return _rows(_wkb(overlay.intersection), "gg", a, b)
     valid = ba.valid & bb.valid
     ix0 = np.maximum(ba.x0, bb.x0)
     iy0 = np.maximum(ba.y0, bb.y0)
@@ -1158,57 +901,37 @@ def geom_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
     out = [rects[i] if pos[i] else (_POLY_EMPTY_WKB if valid[i] else None)
            for i in range(len(al))]
     return _obj_series(out)
-geom_union = _geom_geom_scalar_kernel(
-    lambda a, b: to_wkb(overlay.union(a, b)))
-geom_difference = _geom_geom_scalar_kernel(
-    lambda a, b: to_wkb(overlay.difference(a, b)))
 
 
-def st_union_all(s: pd.Series) -> pd.Series:
-    """Fold overlay.union_all over an array<binary> column (the
-    collect_list side of the ST_Union aggregate): one fold per row —
-    rows are GROUPS, so the quadratic-ish fold is bounded by group
-    size, never the corpus."""
-    cache = _DecodeCache()
-    out = []
-    for arr in s.tolist():
-        if arr is None:
-            out.append(None)
-            continue
-        gs = [cache.geom(bytes(w)) for w in arr if w is not None]
-        u = overlay.union_all(gs)
-        out.append(None if u is None else to_wkb(u))
-    return _obj_series(out)
-line_locate_point = _geom_geom_scalar_kernel(
-    algos.line_locate_point)                             # ST_LineLocatePoint
-line_interpolate_point = _geom_num_kernel(
-    lambda g, f: to_wkb(algos.line_interpolate_point(g, float(f))))
+geom_union = _per_row(_wkb(overlay.union), "gg")
+geom_difference = _per_row(_wkb(overlay.difference), "gg")
+geom_symdifference = _per_row(_wkb(overlay.symdifference), "gg")
 
-
+# Fold overlay.union_all over an array<binary> column (the collect_list
+# side of the ST_Union aggregate): one fold per row — rows are GROUPS, so
+# the quadratic-ish fold is bounded by group size, never the corpus.
+st_union_all = _per_row(_wkb(overlay.union_all), "G")
+line_locate_point = _per_row(algos.line_locate_point, "gg")  # ST_LineLocatePoint
+line_interpolate_point = _per_row(_wkb(algos.line_interpolate_point), "gn")
 # ST_Simplify (PostGIS Douglas-Peucker, non-topology-preserving)
-simplify = _geom_num_kernel(
-    lambda g, t: to_wkb(algos.simplify(g, float(t))))
+simplify = _per_row(_wkb(algos.simplify), "gn")
 
 # editing utilities (geo/edit.py; PostGIS parity, beyond-reference)
-st_reverse = _unary_geom(edit.reverse)
-st_flip_coordinates = _unary_geom(edit.flip_coordinates)
-st_scale2 = _geom_num_num_kernel(
-    lambda g, sx, sy: to_wkb(edit.scale(g, sx, sy)))
-st_segmentize = _geom_num_kernel(
-    lambda g, m: to_wkb(edit.segmentize(g, float(m))))
-st_line_substring = _geom_num_num_kernel(
-    lambda g, s_, e_: to_wkb_opt(edit.line_substring(g, s_, e_)))
-st_reduce_precision = _geom_num_kernel(
-    lambda g, gs: to_wkb(edit.reduce_precision(g, float(gs))))
-st_chaikin_smoothing = _geom_num_kernel(
-    lambda g, n: to_wkb(edit.chaikin_smoothing(g, int(n))))
-st_simplify_vw = _geom_num_kernel(
-    lambda g, t: to_wkb(edit.simplify_vw(g, float(t))))
-st_line_merge = _unary_geom(edit.line_merge)
-st_subdivide = _geom_num_kernel(
-    lambda g, m: [to_wkb(p) for p in subdivide_mod.subdivide(g, int(m))])
-st_polygonize = _unary_geom(
-    lambda g: polygonize_mod.polygonize([g]))
+st_reverse = _per_row(_wkb(edit.reverse), "g")
+st_flip_coordinates = _per_row(_wkb(edit.flip_coordinates), "g")
+st_scale2 = _per_row(_wkb(edit.scale), "gnn")
+st_segmentize = _per_row(_wkb(edit.segmentize), "gn")
+st_line_substring = _per_row(_wkb(edit.line_substring), "gnn")
+st_reduce_precision = _per_row(_wkb(edit.reduce_precision), "gn")
+# iterations defaults to 1 like the Column API
+st_chaikin_smoothing = _per_row(
+    _wkb(lambda g, n=1: edit.chaikin_smoothing(g, int(n))), "gn")
+st_simplify_vw = _per_row(_wkb(edit.simplify_vw), "gn")
+st_line_merge = _per_row(_wkb(edit.line_merge), "g")
+# max_vertices defaults to 128 like the Column API
+st_subdivide = _per_row(lambda g, m=128: [
+    to_wkb(p) for p in subdivide_mod.subdivide(g, int(m))], "gn")
+st_polygonize = _per_row(_wkb(lambda g: polygonize_mod.polygonize([g])), "g")
 
 
 def _mbc_center(g: Geometry) -> Geometry:
@@ -1218,61 +941,23 @@ def _mbc_center(g: Geometry) -> Geometry:
     return Geometry("Point", mbc[0], g.srid)
 
 
-st_minbound_center = _unary_geom(_mbc_center)
-st_node = _unary_geom(noding.node_geometry)
-st_shortest_line = _geom_geom_scalar_kernel(
-    lambda a, b: to_wkb_opt(algos.shortest_line(a, b)))
-st_project = _geom_num_num_kernel(
-    lambda g, d_, az_: to_wkb_opt(algos.project_point(g, d_, az_)))
-st_make_valid = _unary_geom(noding.make_valid)
-st_oriented_envelope = _unary_geom(bounding.oriented_envelope)
+st_minbound_center = _per_row(_wkb(_mbc_center), "g")
+st_node = _per_row(_wkb(noding.node_geometry), "g")
+st_shortest_line = _per_row(_wkb(algos.shortest_line), "gg")
+st_project = _per_row(_wkb(algos.project_point), "gnn")
+st_make_valid = _per_row(_wkb(noding.make_valid), "g")
+st_oriented_envelope = _per_row(_wkb(bounding.oriented_envelope), "g")
+
+# Polygonize an array<binary> column (the collect_list side of the
+# ST_Polygonize AGGREGATE): one face assembly per row — rows are GROUPS,
+# so the planar walk is bounded by group linework, never the corpus.
+st_polygonize_all = _per_row(_wkb(polygonize_mod.polygonize), "G")
+
+# ST_Rotate(geom, radians[, x0, y0]) — CCW about (x0, y0), origin by
+# default (PostGIS).
+st_rotate = _per_row(_wkb(edit.rotate), "gnnn")
 
 
-def st_polygonize_all(s: pd.Series) -> pd.Series:
-    """Polygonize an array<binary> column (the collect_list side of the
-    ST_Polygonize AGGREGATE): one face assembly per row — rows are
-    GROUPS, so the planar walk is bounded by group linework, never the
-    corpus."""
-    cache = _DecodeCache()
-    out = []
-    for arr in s.tolist():
-        if arr is None:
-            out.append(None)
-            continue
-        gs = [cache.geom(bytes(w)) for w in arr if w is not None]
-        out.append(to_wkb(polygonize_mod.polygonize(gs)))
-    return _obj_series(out)
-geom_symdifference = _geom_geom_scalar_kernel(
-    lambda a, b: to_wkb(overlay.symdifference(a, b)))
-
-
-def st_rotate(s: pd.Series, angle: pd.Series,
-              x0: Optional[pd.Series] = None,
-              y0: Optional[pd.Series] = None) -> pd.Series:
-    """ST_Rotate(geom, radians[, x0, y0]) — CCW about (x0, y0), origin
-    by default (PostGIS)."""
-    if x0 is None:
-        x0 = pd.Series([0.0] * len(s))
-    if y0 is None:
-        y0 = pd.Series([0.0] * len(s))
-    cache = _DecodeCache()
-    out = []
-    al, an, xl, yl = s.tolist(), angle.tolist(), x0.tolist(), y0.tolist()
-    memo: dict = {}
-    for i in range(len(al)):
-        v = al[i]
-        ang, ox, oy = _num(an[i]), _num(xl[i]), _num(yl[i])
-        if v is None or ang is None or ox is None or oy is None:
-            out.append(None)
-            continue
-        # SQL DECIMAL literals reach pandas as decimal.Decimal
-        ang, ox, oy = float(ang), float(ox), float(oy)
-        key = (bytes(v), ang, ox, oy)
-        if key not in memo:
-            memo[key] = to_wkb(edit.rotate(cache.geom(bytes(v)),
-                                           ang, ox, oy))
-        out.append(memo[key])
-    return _obj_series(out)
 def _dist_points_to_const(pb: "vector.PointBatch", g) -> np.ndarray:
     """Vectorized distance from a point batch to one constant geometry:
     numpy point-to-segment over the constant's few edges, then zero out
@@ -1339,26 +1024,11 @@ def _distance_fast(al: list, bl: list) -> Optional[pd.Series]:
 
 def distance(a: pd.Series, b: pd.Series) -> pd.Series:
     """ST_Distance (PostGIS; beyond-reference utility). Vectorized fast
-    paths (_distance_fast); object fallback with decode+result
-    memoization otherwise."""
-    al, bl = a.tolist(), b.tolist()
-    fast = _distance_fast(al, bl)
+    paths (_distance_fast); the per-row driver otherwise."""
+    fast = _distance_fast(a.tolist(), b.tolist())
     if fast is not None:
         return fast
-    cache = _DecodeCache()
-    out = []
-    memo: dict = {}
-    for i in range(len(al)):
-        va, vb = al[i], bl[i]
-        if va is None or vb is None:
-            out.append(None)
-            continue
-        va, vb = bytes(va), bytes(vb)
-        key = (va, vb)
-        if key not in memo:
-            memo[key] = algos.distance(cache.geom(va), cache.geom(vb))
-        out.append(memo[key])
-    return _obj_series(out)
+    return _rows(algos.distance, "gg", a, b)
 
 
 def dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
@@ -1366,33 +1036,10 @@ def dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
     distance fast paths when they apply; otherwise the object path goes
     through algos.dwithin, whose bbox band rejection answers the common
     far-apart negative without the pairwise segment loop."""
-    al, bl, dl = a.tolist(), b.tolist(), d.tolist()
-    fast = _distance_fast(al, bl)
+    fast = _distance_fast(a.tolist(), b.tolist())
     if fast is not None:
-        out = []
-        for i, v in enumerate(fast.tolist()):
-            v = _num(v)
-            lim = _num(dl[i])
-            if v is None or lim is None:
-                out.append(None)
-            else:
-                out.append(bool(v <= float(lim)))
-        return _obj_series(out)
-    cache = _DecodeCache()
-    out = []
-    memo: dict = {}
-    for i in range(len(al)):
-        va, vb, lim = al[i], bl[i], _num(dl[i])
-        if va is None or vb is None or lim is None:
-            out.append(None)
-            continue
-        va, vb = bytes(va), bytes(vb)
-        key = (va, vb, float(lim))
-        if key not in memo:
-            memo[key] = algos.dwithin(cache.geom(va), cache.geom(vb),
-                                      float(lim))
-        out.append(memo[key])
-    return _obj_series(out)
+        return _rows(operator.le, "nn", fast, d)
+    return _rows(algos.dwithin, "ggn", a, b, d)
 
 
 def transform_srid(s: pd.Series, to_srid: pd.Series,
@@ -1404,9 +1051,8 @@ def transform_srid(s: pd.Series, to_srid: pd.Series,
     semantics — source SRID from the EWKB header unless from_srid is
     given.
     Vectorized numpy fast path for uniform plain-WKB point batches on
-    the 4326->3857 pair with an explicit constant from_srid; object
-    fallback with decode+result memoization otherwise (UTM pairs take
-    the memoized path)."""
+    the 4326->3857 pair with an explicit constant from_srid; the
+    per-row driver otherwise (UTM pairs take that path)."""
     from ..geo import proj
     tl = to_srid.tolist()
     fl = from_srid.tolist() if from_srid is not None else None
@@ -1474,35 +1120,11 @@ def transform_srid(s: pd.Series, to_srid: pd.Series,
                         return _obj_series(vector.encode_uniform_lines(
                             np.stack([x, y], axis=-1),
                             valid=lb.valid, srid=t0i))
-    cache = _DecodeCache()
-    out = []
-    memo: dict = {}
-    for i, v in enumerate(vals):
-        t = _num(tl[i])
-        f = _num(fl[i]) if fl is not None else None
-        if v is None or t is None or (fl is not None and f is None):
-            out.append(None)
-            continue
-        v = bytes(v)
-        key = (v, t, f)
-        if key not in memo:
-            memo[key] = to_wkb(proj.transform_geometry(
-                cache.geom(v), int(t),
-                None if f is None else int(f)))
-        out.append(memo[key])
-    return _obj_series(out)
+    return _rows(lambda g, t, f=None: to_wkb(proj.transform_geometry(
+        g, int(t), None if f is None else int(f))), "gnn", s, to_srid, from_srid)
 
 
 # ------------------------------------------- accessors (beyond-reference)
-
-def _unary_to_num(fn):
-    def k(s: pd.Series) -> pd.Series:
-        cache = _DecodeCache()
-        return _obj_series([
-            None if v is None else fn(cache.geom(bytes(v)))
-            for v in s.tolist()])
-    return k
-
 
 def _pt_x(g) -> Optional[float]:
     if g.typ != "Point" or g.parts is None:
@@ -1522,7 +1144,7 @@ def st_x(s: pd.Series) -> pd.Series:
     pb = vector.decode_points(s.tolist())
     if pb is not None:
         return pd.Series(_nullable(pb.x, pb.valid & ~np.isnan(pb.x)))
-    return _unary_to_num(_pt_x)(s)
+    return _rows(_pt_x, "g", s)
 
 
 def st_y(s: pd.Series) -> pd.Series:
@@ -1530,7 +1152,7 @@ def st_y(s: pd.Series) -> pd.Series:
     pb = vector.decode_points(s.tolist())
     if pb is not None:
         return pd.Series(_nullable(pb.y, pb.valid & ~np.isnan(pb.y)))
-    return _unary_to_num(_pt_y)(s)
+    return _rows(_pt_y, "g", s)
 
 
 def _mbc_radius(g: Geometry) -> Optional[float]:
@@ -1538,10 +1160,9 @@ def _mbc_radius(g: Geometry) -> Optional[float]:
     return None if mbc is None else float(mbc[1])
 
 
-def st_minbound_radius(s: pd.Series) -> pd.Series:
-    """ST_MinimumBoundingRadius's radius field (PostGIS returns a
-    record; the center half is st_minbound_center)."""
-    return _unary_to_num(_mbc_radius)(s)
+# ST_MinimumBoundingRadius's radius field (PostGIS returns a record; the
+# center half is st_minbound_center).
+st_minbound_radius = _per_row(_mbc_radius, "g")
 
 
 def _direct_members(g: Geometry) -> list:
@@ -1561,56 +1182,38 @@ def _direct_members(g: Geometry) -> list:
     return [Geometry("Polygon", poly, g.srid) for poly in g.parts]
 
 
-def num_geometries(s: pd.Series) -> pd.Series:
-    """ST_NumGeometries (PostGIS): direct-member count — 1 for simple
-    non-empty geometries, len for multi/collection, 0 for empty."""
-    return _unary_to_num(lambda g: len(_direct_members(g)))(s)
+# ST_NumGeometries (PostGIS): direct-member count — 1 for simple
+# non-empty geometries, len for multi/collection, 0 for empty.
+num_geometries = _per_row(lambda g: len(_direct_members(g)), "g")
 
 
-def geometry_n(s: pd.Series, n: pd.Series) -> pd.Series:
+def _geometry_n(g: Geometry, k: float) -> Optional[bytes]:
     """ST_GeometryN (PostGIS, 1-based): nth DIRECT member of a multi/
     collection; the geometry itself for n=1 on a simple type; NULL out
     of range."""
-    cache = _DecodeCache()
-    out = []
-    sl, nl = s.tolist(), n.tolist()
-    for i in range(len(sl)):
-        v, k = sl[i], _num(nl[i])
-        if v is None or k is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        k = int(k)
-        members = _direct_members(g)
-        if 1 <= k <= len(members):
-            out.append(to_wkb(members[k - 1].with_srid(g.srid)))
-        else:
-            out.append(None)
-    return _obj_series(out)
+    k = int(k)
+    members = _direct_members(g)
+    if 1 <= k <= len(members):
+        return to_wkb(members[k - 1].with_srid(g.srid))
+    return None
 
 
-def point_n(s: pd.Series, n: pd.Series) -> pd.Series:
+def _point_n(g: Geometry, k: float) -> Optional[bytes]:
     """ST_PointN (PostGIS, 1-based; negative counts from the end):
     nth vertex of a LINESTRING; NULL otherwise / out of range."""
-    cache = _DecodeCache()
-    out = []
-    sl, nl = s.tolist(), n.tolist()
-    for i in range(len(sl)):
-        v, k = sl[i], _num(nl[i])
-        if v is None or k is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        if g.typ != "LineString":
-            out.append(None)
-            continue
-        k = int(k)
-        idx = k - 1 if k > 0 else len(g.parts) + k
-        if 0 <= idx < len(g.parts):
-            out.append(to_wkb(Geometry("Point", g.parts[idx], g.srid)))
-        else:
-            out.append(None)
-    return _obj_series(out)
+    if g.typ != "LineString":
+        return None
+    k = int(k)
+    idx = k - 1 if k > 0 else len(g.parts) + k
+    if 0 <= idx < len(g.parts):
+        return to_wkb(Geometry("Point", g.parts[idx], g.srid))
+    return None
+
+
+geometry_n = _per_row(_geometry_n, "gn")
+point_n = _per_row(_point_n, "gn")
+start_point = _per_row(lambda g: _point_n(g, 1), "g")   # ST_StartPoint
+end_point = _per_row(lambda g: _point_n(g, -1), "g")    # ST_EndPoint
 
 
 # ------------------------------------------------- editing utilities (r5)
@@ -1619,158 +1222,68 @@ def point_n(s: pd.Series, n: pd.Series) -> pd.Series:
 # ST_Multi / ST_CollectionExtract / ST_CollectionHomogenize / ST_Dump
 # (geo/edit.py; PostGIS parity, beyond-reference)
 
-def st_affine(s: pd.Series, a: pd.Series, b: pd.Series, d: pd.Series,
-              e: pd.Series, xoff: pd.Series, yoff: pd.Series) -> pd.Series:
-    cache = _DecodeCache()
-    out = []
-    cols = [s.tolist()] + [c.tolist() for c in (a, b, d, e, xoff, yoff)]
-    memo: dict = {}
-    for i in range(len(cols[0])):
-        v = cols[0][i]
-        nums = [_num(c[i]) for c in cols[1:]]
-        if v is None or any(n is None for n in nums):
-            out.append(None)
-            continue
-        v = bytes(v)
-        nums = [float(n) for n in nums]
-        key = (v, *nums)
-        if key not in memo:
-            memo[key] = to_wkb(edit.affine(cache.geom(v), *nums))
-        out.append(memo[key])
-    return _obj_series(out)
+def _point_coords(*gs: Geometry) -> Optional[list]:
+    """The coordinates of each argument, or None unless all are
+    non-empty POINTs."""
+    if any(g.typ != "Point" or g.parts is None for g in gs):
+        return None
+    return [g.parts for g in gs]
 
 
-def st_expand(s: pd.Series, dx: pd.Series,
-              dy: Optional[pd.Series] = None) -> pd.Series:
-    if dy is None:
-        return _geom_num_kernel(
-            lambda g, v: to_wkb(edit.expand(g, float(v))))(s, dx)
-    return _geom_num_num_kernel(
-        lambda g, x, y: to_wkb(edit.expand(g, x, y)))(s, dx, dy)
-
-
-def st_angle(p1: pd.Series, p2: pd.Series, p3: pd.Series,
-             p4: Optional[pd.Series] = None) -> pd.Series:
+def _angle(*gs: Geometry) -> Optional[float]:
     """ST_Angle over POINT args (3- or 4-point form)."""
-    cache = _DecodeCache()
-    cols = [p1.tolist(), p2.tolist(), p3.tolist()]
-    if p4 is not None:
-        cols.append(p4.tolist())
-    out = []
-    for i in range(len(cols[0])):
-        vs = [c[i] for c in cols]
-        if any(v is None for v in vs):
-            out.append(None)
-            continue
-        pts = []
-        ok = True
-        for v in vs:
-            g = cache.geom(bytes(v))
-            if g.typ != "Point" or g.parts is None:
-                ok = False
-                break
-            pts.append(g.parts)
-        out.append(edit.angle(*pts) if ok else None)
-    return _obj_series(out)
+    pts = _point_coords(*gs)
+    return None if pts is None else edit.angle(*pts)
 
 
-def st_remove_repeated_points(s: pd.Series,
-                              tol: Optional[pd.Series] = None) -> pd.Series:
-    if tol is None:
-        return _unary_geom(edit.remove_repeated_points)(s)
-    return _geom_num_kernel(
-        lambda g, v: to_wkb(edit.remove_repeated_points(g, float(v))))(s, tol)
+def _add_point(g: Geometry, p: Geometry, pos: float = -1) -> Optional[Geometry]:
+    pt = _point_coords(p)
+    return None if pt is None else edit.add_point(g, pt[0], int(pos))
 
 
-st_snap_to_grid = _geom_num_kernel(
-    lambda g, v: to_wkb(edit.snap_to_grid(g, float(v))))
-st_remove_point = _geom_num_kernel(
-    lambda g, v: (lambda r: None if r is None else to_wkb(r))(
-        edit.remove_point(g, int(v))))
-st_multi = _unary_geom(edit.multi)
-st_collection_extract = _geom_num_kernel(
-    lambda g, v: to_wkb(edit.collection_extract(g, int(v))))
-st_collection_homogenize = _unary_geom(edit.collection_homogenize)
+def _set_point(g: Geometry, pos: float, p: Geometry) -> Optional[Geometry]:
+    pt = _point_coords(p)
+    return None if pt is None else edit.set_point(g, int(pos), pt[0])
 
 
-def st_add_point(s: pd.Series, pt: pd.Series,
-                 pos: Optional[pd.Series] = None) -> pd.Series:
-    cache = _DecodeCache()
-    sl, ptl = s.tolist(), pt.tolist()
-    posl = [-1] * len(sl) if pos is None else pos.tolist()
-    out = []
-    for i in range(len(sl)):
-        v, pv, k = sl[i], ptl[i], _num(posl[i])
-        if v is None or pv is None or k is None:
-            out.append(None)
-            continue
-        gp = cache.geom(bytes(pv))
-        if gp.typ != "Point" or gp.parts is None:
-            out.append(None)
-            continue
-        r = edit.add_point(cache.geom(bytes(v)), gp.parts, int(k))
-        out.append(None if r is None else to_wkb(r))
-    return _obj_series(out)
-
-
-def st_set_point(s: pd.Series, pos: pd.Series, pt: pd.Series) -> pd.Series:
-    cache = _DecodeCache()
-    sl, posl, ptl = s.tolist(), pos.tolist(), pt.tolist()
-    out = []
-    for i in range(len(sl)):
-        v, k, pv = sl[i], _num(posl[i]), ptl[i]
-        if v is None or k is None or pv is None:
-            out.append(None)
-            continue
-        gp = cache.geom(bytes(pv))
-        if gp.typ != "Point" or gp.parts is None:
-            out.append(None)
-            continue
-        r = edit.set_point(cache.geom(bytes(v)), int(k), gp.parts)
-        out.append(None if r is None else to_wkb(r))
-    return _obj_series(out)
-
-
-def st_dump(s: pd.Series) -> pd.Series:
+def _dump(g: Geometry) -> list:
     """ST_Dump as an ARRAY of member WKBs — explode() DataFrame-side
     (the set-returning form is not expressible as a pandas UDF; the
     array + explode composition is the idiomatic Spark spelling)."""
-    cache = _DecodeCache()
-    out = []
-    for v in s.tolist():
-        if v is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        out.append([to_wkb(m.with_srid(g.srid)) for m in g.geometries()
-                    if m.parts is not None and (m.typ == "Point" or m.parts)])
-    return _obj_series(out)
+    return [to_wkb(m.with_srid(g.srid)) for m in g.geometries()
+            if m.parts is not None and (m.typ == "Point" or m.parts)]
 
 
-def st_dump_points(s: pd.Series) -> pd.Series:
+def _dump_points(g: Geometry) -> list:
     """ST_DumpPoints as an ARRAY of vertex POINT WKBs, in coordinate
     order (ring/member order preserved)."""
-    cache = _DecodeCache()
-    out = []
-    for v in s.tolist():
-        if v is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        pts = []
+    pts = []
+    for m in g.geometries():
+        if m.typ == "Point" and m.parts is not None:
+            pts.append(m.parts)
+        elif m.typ == "LineString":
+            pts.extend(m.parts)
+        elif m.typ == "Polygon":
+            for r in m.parts:
+                pts.extend(r)
+    return [to_wkb(Geometry("Point", p, g.srid)) for p in pts]
 
-        def walk(m):
-            if m.typ == "Point" and m.parts is not None:
-                pts.append(m.parts)
-            elif m.typ == "LineString":
-                pts.extend(m.parts)
-            elif m.typ == "Polygon":
-                for r in m.parts:
-                    pts.extend(r)
-        for m in g.geometries():
-            walk(m)
-        out.append([to_wkb(Geometry("Point", p, g.srid)) for p in pts])
-    return _obj_series(out)
+
+st_affine = _per_row(_wkb(edit.affine), "gnnnnnn")
+st_expand = _per_row(_wkb(edit.expand), "gnn")
+st_angle = _per_row(_angle, "gggg")
+st_remove_repeated_points = _per_row(_wkb(edit.remove_repeated_points), "gn")
+st_snap_to_grid = _per_row(_wkb(edit.snap_to_grid), "gn")
+st_remove_point = _per_row(
+    _wkb(lambda g, v: edit.remove_point(g, int(v))), "gn")
+st_multi = _per_row(_wkb(edit.multi), "g")
+st_collection_extract = _per_row(
+    _wkb(lambda g, v: edit.collection_extract(g, int(v))), "gn")
+st_collection_homogenize = _per_row(_wkb(edit.collection_homogenize), "g")
+st_add_point = _per_row(_wkb(_add_point), "ggn")
+st_set_point = _per_row(_wkb(_set_point), "gng")
+st_dump = _per_row(_dump, "g")
+st_dump_points = _per_row(_dump_points, "g")
 
 
 # --------------------------------------- validity & interior-point (r5)
@@ -1778,14 +1291,14 @@ def st_dump_points(s: pd.Series) -> pd.Series:
 # (geo/validity.py), ST_PointOnSurface and the discrete Hausdorff /
 # Fréchet distances (geo/metrics.py). PostGIS parity, beyond-reference.
 
-st_is_closed = _unary_to_num(validity_mod.is_closed)
-st_is_ring = _unary_to_num(validity_mod.is_ring)
-st_is_simple = _unary_to_num(validity_mod.is_simple)
-st_is_valid = _unary_to_num(validity_mod.is_valid)
-st_is_valid_reason = _unary_to_num(validity_mod.is_valid_reason)
-st_point_on_surface = _unary_geom(metrics_mod.point_on_surface)
-st_hausdorff = _geom_geom_scalar_kernel(metrics_mod.hausdorff_distance)
-st_frechet = _geom_geom_scalar_kernel(metrics_mod.frechet_distance)
+st_is_closed = _per_row(validity_mod.is_closed, "g")
+st_is_ring = _per_row(validity_mod.is_ring, "g")
+st_is_simple = _per_row(validity_mod.is_simple, "g")
+st_is_valid = _per_row(validity_mod.is_valid, "g")
+st_is_valid_reason = _per_row(validity_mod.is_valid_reason, "g")
+st_point_on_surface = _per_row(_wkb(metrics_mod.point_on_surface), "g")
+st_hausdorff = _per_row(metrics_mod.hausdorff_distance, "gg")
+st_frechet = _per_row(metrics_mod.frechet_distance, "gg")
 
 
 # ------------------------------------ triangulations & derivatives (r5)
@@ -1793,50 +1306,27 @@ st_frechet = _geom_geom_scalar_kernel(metrics_mod.frechet_distance)
 # ST_GeneratePoints (geo/triangulate.py; PostGIS parity,
 # beyond-reference).
 
-def st_delaunay_triangles(s: pd.Series,
-                          flags: Optional[pd.Series] = None) -> pd.Series:
-    """flags 0 (default) -> GEOMETRYCOLLECTION of triangles; 1 ->
-    MULTILINESTRING of unique edges (PostGIS flag semantics)."""
-    if flags is None:
-        return _unary_geom(triangulate_mod.delaunay_geometry)(s)
-    return _geom_num_kernel(
-        lambda g, v: to_wkb(
-            triangulate_mod.delaunay_geometry(g, edges=int(v) == 1)))(s, flags)
+# flags 0 (default) -> GEOMETRYCOLLECTION of triangles; 1 ->
+# MULTILINESTRING of unique edges (PostGIS flag semantics)
+st_delaunay_triangles = _per_row(_wkb(
+    lambda g, f=0: triangulate_mod.delaunay_geometry(g, edges=int(f) == 1)),
+    "gn")
 
 
 def st_voronoi_polygons(s: pd.Series,
                         extend_to: Optional[pd.Series] = None) -> pd.Series:
-    if extend_to is None:
-        return _unary_geom(triangulate_mod.voronoi_geometry)(s)
-    cache = _DecodeCache()
-    sl, el = s.tolist(), extend_to.tolist()
-    out = []
-    for i in range(len(sl)):
-        v = sl[i]
-        if v is None:
-            out.append(None)
-            continue
-        ext = None if el[i] is None else cache.geom(bytes(el[i]))
-        out.append(to_wkb(triangulate_mod.voronoi_geometry(
-            cache.geom(bytes(v)), ext)))
-    return _obj_series(out)
+    """A NULL extend_to means no extension (PostGIS's default), not a
+    NULL row, so it reaches the driver as an empty value."""
+    if extend_to is not None:
+        extend_to = extend_to.where(extend_to.notna(), b"")
+    return _rows(_wkb(lambda g, e=b"": triangulate_mod.voronoi_geometry(
+        g, from_wkb(e) if e else None)), "gv", s, extend_to)
 
 
-def st_concave_hull(s: pd.Series, ratio: pd.Series) -> pd.Series:
-    return _geom_num_kernel(
-        lambda g, v: to_wkb(triangulate_mod.concave_hull(g, float(v))))(
-        s, ratio)
-
-
-def st_generate_points(s: pd.Series, n: pd.Series,
-                       seed: Optional[pd.Series] = None) -> pd.Series:
-    if seed is None:
-        return _geom_num_kernel(
-            lambda g, v: to_wkb(
-                triangulate_mod.generate_points(g, int(v))))(s, n)
-    return _geom_num_num_kernel(
-        lambda g, a, b: to_wkb(
-            triangulate_mod.generate_points(g, int(a), int(b))))(s, n, seed)
+st_concave_hull = _per_row(_wkb(triangulate_mod.concave_hull), "gn")
+st_generate_points = _per_row(_wkb(
+    lambda g, n, seed=1: triangulate_mod.generate_points(g, int(n), int(seed))),
+    "gnn")
 
 
 # ---------------------------- max inscribed circle + snapping (r5)
@@ -1844,42 +1334,19 @@ def st_generate_points(s: pd.Series, n: pd.Series,
 # split across two SQL names like the min-bounding pair) and ST_Snap
 # (geo/edit.py). PostGIS parity, beyond-reference.
 
-def _mic(g):
-    return bounding.max_inscribed_circle(g)
+def _mic_center(g: Geometry) -> Geometry:
+    r = bounding.max_inscribed_circle(g)
+    return Geometry("Point", None if r is None else r[0], g.srid)
 
 
-def st_max_inscribed_center(s: pd.Series) -> pd.Series:
-    def f(g):
-        r = _mic(g)
-        return to_wkb(Geometry("Point", None if r is None else r[0],
-                               g.srid))
-    return _unary_to_num(f)(s)
+def _mic_radius(g: Geometry) -> Optional[float]:
+    r = bounding.max_inscribed_circle(g)
+    return None if r is None else float(r[1])
 
 
-def st_max_inscribed_radius(s: pd.Series) -> pd.Series:
-    def f(g):
-        r = _mic(g)
-        return None if r is None else float(r[1])
-    return _unary_to_num(f)(s)
-
-
-def st_snap(a: pd.Series, b: pd.Series, tol: pd.Series) -> pd.Series:
-    cache = _DecodeCache()
-    al, bl, tl = a.tolist(), b.tolist(), tol.tolist()
-    memo: dict = {}
-    out = []
-    for i in range(len(al)):
-        va, vb, t = al[i], bl[i], _num(tl[i])
-        if va is None or vb is None or t is None:
-            out.append(None)
-            continue
-        va, vb = bytes(va), bytes(vb)
-        key = (va, vb, float(t))
-        if key not in memo:
-            memo[key] = to_wkb(edit.snap(cache.geom(va), cache.geom(vb),
-                                         float(t)))
-        out.append(memo[key])
-    return _obj_series(out)
+st_max_inscribed_center = _per_row(_wkb(_mic_center), "g")
+st_max_inscribed_radius = _per_row(_mic_radius, "g")
+st_snap = _per_row(_wkb(edit.snap), "ggn")
 
 
 # -------------------- offset curve / shared paths / box clip (r5)
@@ -1889,105 +1356,60 @@ def st_snap(a: pd.Series, b: pd.Series, tol: pd.Series) -> pd.Series:
 def st_offset_curve(s: pd.Series, d: pd.Series,
                     quadsegs: Optional[pd.Series] = None) -> pd.Series:
     from ..geo import offset as offset_mod
-    if quadsegs is None:
-        return _geom_num_kernel(
-            lambda g, v: (lambda r: None if r is None else to_wkb(r))(
-                offset_mod.offset_curve_geometry(g, float(v))))(s, d)
-    return _geom_num_num_kernel(
-        lambda g, v, q: (lambda r: None if r is None else to_wkb(r))(
-            offset_mod.offset_curve_geometry(g, v, int(q))))(s, d, quadsegs)
+    return _rows(_wkb(lambda g, v, q=8: offset_mod.offset_curve_geometry(
+        g, v, int(q))), "gnn", s, d, quadsegs)
 
 
-st_shared_paths = _geom_geom_scalar_kernel(
-    lambda a, b: (lambda r: None if r is None else to_wkb(r))(
-        overlay.shared_paths(a, b)))
+st_shared_paths = _per_row(_wkb(overlay.shared_paths), "gg")
+st_clip_by_box = _per_row(_wkb(overlay.clip_by_box), "gnnnn")
 
 
-def st_clip_by_box(s: pd.Series, xmin: pd.Series, ymin: pd.Series,
-                   xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-    cache = _DecodeCache()
-    sl = s.tolist()
-    bl = [c.tolist() for c in (xmin, ymin, xmax, ymax)]
-    out = []
-    for i in range(len(sl)):
-        v = sl[i]
-        nums = [_num(c[i]) for c in bl]
-        if v is None or any(n is None for n in nums):
-            out.append(None)
-            continue
-        r = overlay.clip_by_box(cache.geom(bytes(v)),
-                                *[float(n) for n in nums])
-        out.append(None if r is None else to_wkb(r))
-    return _obj_series(out)
+# ---------------------------------------- spherical measures (r5)
+# ST_DistanceSphere / ST_DistanceSpheroid / ST_AzimuthSphere over POINT
+# lon/lat geometries and the geography ST_Area / ST_Length /
+# ST_Perimeter twins (geo/proj.py; PostGIS mean-radius sphere, WGS84
+# Vincenty with deterministic fixed iterations). Beyond-reference.
+
+def _proj_on_points(name: str) -> Callable:
+    """geo/proj.py ``name`` over two POINTs' lon/lat; NULL unless both
+    are non-empty POINTs."""
+    def call(a: Geometry, b: Geometry):
+        from ..geo import proj
+        pts = _point_coords(a, b)
+        if pts is None:
+            return None
+        (x1, y1), (x2, y2) = pts[0][:2], pts[1][:2]
+        return getattr(proj, name)(x1, y1, x2, y2)
+    return call
 
 
-# ---------------------------------------- spherical distance (r5)
-# ST_DistanceSphere over POINT geometries (geo/proj.py haversine;
-# PostGIS mean-radius sphere). Beyond-reference.
-
-def st_distance_sphere(a: pd.Series, b: pd.Series) -> pd.Series:
-    from ..geo import proj as proj_mod
-    cache = _DecodeCache()
-    al, bl = a.tolist(), b.tolist()
-    out = []
-    for i in range(len(al)):
-        va, vb = al[i], bl[i]
-        if va is None or vb is None:
-            out.append(None)
-            continue
-        ga, gb = cache.geom(bytes(va)), cache.geom(bytes(vb))
-        if ga.typ != "Point" or gb.typ != "Point" \
-                or ga.parts is None or gb.parts is None:
-            out.append(None)
-            continue
-        out.append(proj_mod.haversine_m(ga.parts[0], ga.parts[1],
-                                        gb.parts[0], gb.parts[1]))
-    return _obj_series(out)
+def _proj_destination(name: str) -> Callable:
+    """Destination POINT (source SRID kept) of a geo/proj.py direct
+    problem from a POINT, a distance in meters and an azimuth."""
+    def call(g: Geometry, d: float, az: float):
+        from ..geo import proj
+        if _point_coords(g) is None:
+            return None
+        lon2, lat2 = getattr(proj, name)(g.parts[0], g.parts[1], d, az)
+        return to_wkb(Geometry("Point", (lon2, lat2), g.srid))
+    return call
 
 
-def st_distance_spheroid(a: pd.Series, b: pd.Series) -> pd.Series:
-    """ST_DistanceSpheroid over POINT geometries (geo/proj.py
-    vincenty_m: Vincenty inverse, WGS84, deterministic 8 fixed
-    iterations). Beyond-reference; the ellipsoidal twin of
-    st_distance_sphere."""
-    from ..geo import proj as proj_mod
-    cache = _DecodeCache()
-    al, bl = a.tolist(), b.tolist()
-    out = []
-    for i in range(len(al)):
-        va, vb = al[i], bl[i]
-        if va is None or vb is None:
-            out.append(None)
-            continue
-        ga, gb = cache.geom(bytes(va)), cache.geom(bytes(vb))
-        if ga.typ != "Point" or gb.typ != "Point" \
-                or ga.parts is None or gb.parts is None:
-            out.append(None)
-            continue
-        out.append(proj_mod.vincenty_m(ga.parts[0], ga.parts[1],
-                                       gb.parts[0], gb.parts[1]))
-    return _obj_series(out)
+def _proj_measure(name: str) -> Callable:
+    def call(g: Geometry):
+        from ..geo import proj
+        return getattr(proj, name)(g)
+    return call
 
 
-def _sphere_measure_kernel(fn_name):
-    """Factory for the geography measure twins (area / length /
-    perimeter on the R_SPHERE sphere, geo/proj.py)."""
-    def k(s: pd.Series) -> pd.Series:
-        from ..geo import proj as proj_mod
-        fn = getattr(proj_mod, fn_name)
-        cache = _DecodeCache()
-        return _obj_series([
-            None if v is None else fn(cache.geom(bytes(v)))
-            for v in s.tolist()])
-    k.__name__ = fn_name
-    return k
-
-
-# Geography ST_Area / ST_Length / ST_Perimeter twins (lon/lat degrees
-# in, meters/m² on the PostGIS mean-radius sphere). Beyond-reference.
-st_area_sphere = _sphere_measure_kernel("sphere_area_m2")
-st_length_sphere = _sphere_measure_kernel("sphere_length_m")
-st_perimeter_sphere = _sphere_measure_kernel("sphere_perimeter_m")
+st_distance_sphere = _per_row(_proj_on_points("haversine_m"), "gg")
+st_distance_spheroid = _per_row(_proj_on_points("vincenty_m"), "gg")
+st_azimuth_sphere = _per_row(_proj_on_points("sphere_azimuth"), "gg")
+st_project_sphere = _per_row(_proj_destination("sphere_project"), "gnn")
+st_project_spheroid = _per_row(_proj_destination("vincenty_direct"), "gnn")
+st_area_sphere = _per_row(_proj_measure("sphere_area_m2"), "g")
+st_length_sphere = _per_row(_proj_measure("sphere_length_m"), "g")
+st_perimeter_sphere = _per_row(_proj_measure("sphere_perimeter_m"), "g")
 
 
 # ------------------------------- tile envelope + normalize (r5)
@@ -1995,39 +1417,28 @@ st_perimeter_sphere = _sphere_measure_kernel("sphere_perimeter_m")
 _MERC_WORLD = 20037508.342789244
 
 
-def st_tile_envelope(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
+def _tile_envelope(z: float, x: float, y: float) -> Optional[bytes]:
     """ST_TileEnvelope: web-mercator XYZ tile bounds as a POLYGON
     stamped SRID 3857 (exact power-of-two arithmetic)."""
-    out = []
-    zl, xl, yl = z.tolist(), x.tolist(), y.tolist()
-    for i in range(len(zl)):
-        zz, xx, yy = _num(zl[i]), _num(xl[i]), _num(yl[i])
-        if zz is None or xx is None or yy is None:
-            out.append(None)
-            continue
-        zz, xx, yy = int(zz), int(xx), int(yy)
-        n = 1 << zz
-        if not (0 <= xx < n and 0 <= yy < n):
-            out.append(None)
-            continue
-        size = 2.0 * _MERC_WORLD / n
-        x0 = -_MERC_WORLD + xx * size
-        y1 = _MERC_WORLD - yy * size
-        ring = [(x0, y1 - size), (x0 + size, y1 - size),
-                (x0 + size, y1), (x0, y1), (x0, y1 - size)]
-        out.append(to_wkb(Geometry("Polygon", [ring], 3857)))
-    return _obj_series(out)
+    z, x, y = int(z), int(x), int(y)
+    n = 1 << z
+    if not (0 <= x < n and 0 <= y < n):
+        return None
+    size = 2.0 * _MERC_WORLD / n
+    x0 = -_MERC_WORLD + x * size
+    y1 = _MERC_WORLD - y * size
+    ring = [(x0, y1 - size), (x0 + size, y1 - size),
+            (x0 + size, y1), (x0, y1), (x0, y1 - size)]
+    return to_wkb(Geometry("Polygon", [ring], 3857))
 
 
-st_normalize = _unary_geom(edit.normalize)
+st_tile_envelope = _per_row(_tile_envelope, "nnn")
+st_normalize = _per_row(_wkb(edit.normalize), "g")
 
 
 # ----------------------------------------- simple accessors II (r5)
 # ST_IsEmpty / ST_Dimension / ST_ExteriorRing / ST_InteriorRingN /
 # ST_NumInteriorRings / ST_BoundingDiagonal (PostGIS parity).
-
-st_is_empty = _unary_to_num(lambda g: g.is_empty())
-
 
 def _g_dimension(g: Geometry):
     dims = [2 if m.typ == "Polygon" and m.parts else
@@ -2038,31 +1449,18 @@ def _g_dimension(g: Geometry):
     return max(dims) if dims else 0
 
 
-st_dimension = _unary_to_num(_g_dimension)
-
-
 def _g_exterior_ring(g: Geometry):
     if g.typ != "Polygon" or not g.parts:
         return None
     return to_wkb(Geometry("LineString", list(g.parts[0]), g.srid))
 
 
-st_exterior_ring = _unary_to_num(_g_exterior_ring)
-
-
-def st_interior_ring_n(s: pd.Series, n: pd.Series) -> pd.Series:
+def _g_interior_ring_n(g: Geometry, k: float):
     """1-based like PostGIS; NULL out of range / non-polygon."""
-    def f(g: Geometry, k) -> object:
-        k = int(k)
-        if g.typ != "Polygon" or not g.parts or not (1 <= k <= len(g.parts) - 1):
-            return None
-        return to_wkb(Geometry("LineString", list(g.parts[k]), g.srid))
-    return _geom_num_kernel(f)(s, n)
-
-
-st_num_interior_rings = _unary_to_num(
-    lambda g: max(len(g.parts) - 1, 0) if g.typ == "Polygon" and g.parts
-    else None)
+    k = int(k)
+    if g.typ != "Polygon" or not g.parts or not (1 <= k <= len(g.parts) - 1):
+        return None
+    return to_wkb(Geometry("LineString", list(g.parts[k]), g.srid))
 
 
 def _g_bounding_diagonal(g: Geometry):
@@ -2073,85 +1471,31 @@ def _g_bounding_diagonal(g: Geometry):
                            [(bb[0], bb[1]), (bb[2], bb[3])], g.srid))
 
 
-st_bounding_diagonal = _unary_to_num(_g_bounding_diagonal)
-
-
-# ------------------------- spherical azimuth / destination (r5)
-
-def st_azimuth_sphere(a: pd.Series, b: pd.Series) -> pd.Series:
-    from ..geo import proj as proj_mod
-    cache = _DecodeCache()
-    al, bl = a.tolist(), b.tolist()
-    out = []
-    for i in range(len(al)):
-        va, vb = al[i], bl[i]
-        if va is None or vb is None:
-            out.append(None)
-            continue
-        ga, gb = cache.geom(bytes(va)), cache.geom(bytes(vb))
-        if ga.typ != "Point" or gb.typ != "Point" \
-                or ga.parts is None or gb.parts is None:
-            out.append(None)
-            continue
-        out.append(proj_mod.sphere_azimuth(ga.parts[0], ga.parts[1],
-                                           gb.parts[0], gb.parts[1]))
-    return _obj_series(out)
-
-
-def st_project_sphere(s: pd.Series, d: pd.Series,
-                      az: pd.Series) -> pd.Series:
-    from ..geo import proj as proj_mod
-    cache = _DecodeCache()
-    sl, dl, azl = s.tolist(), d.tolist(), az.tolist()
-    out = []
-    for i in range(len(sl)):
-        v, dd, aa = sl[i], _num(dl[i]), _num(azl[i])
-        if v is None or dd is None or aa is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        if g.typ != "Point" or g.parts is None:
-            out.append(None)
-            continue
-        lon2, lat2 = proj_mod.sphere_project(g.parts[0], g.parts[1],
-                                             float(dd), float(aa))
-        out.append(to_wkb(Geometry("Point", (lon2, lat2), g.srid)))
-    return _obj_series(out)
-
-
-def st_project_spheroid(s: pd.Series, d: pd.Series,
-                        az: pd.Series) -> pd.Series:
-    """Spheroid ST_Project twin (geo/proj.py vincenty_direct: Vincenty
-    direct problem on WGS84, deterministic fixed iterations)."""
-    from ..geo import proj as proj_mod
-    cache = _DecodeCache()
-    sl, dl, azl = s.tolist(), d.tolist(), az.tolist()
-    out = []
-    for i in range(len(sl)):
-        v, dd, aa = sl[i], _num(dl[i]), _num(azl[i])
-        if v is None or dd is None or aa is None:
-            out.append(None)
-            continue
-        g = cache.geom(bytes(v))
-        if g.typ != "Point" or g.parts is None:
-            out.append(None)
-            continue
-        lon2, lat2 = proj_mod.vincenty_direct(g.parts[0], g.parts[1],
-                                              float(dd), float(aa))
-        out.append(to_wkb(Geometry("Point", (lon2, lat2), g.srid)))
-    return _obj_series(out)
+st_is_empty = _per_row(Geometry.is_empty, "g")
+st_dimension = _per_row(_g_dimension, "g")
+st_exterior_ring = _per_row(_g_exterior_ring, "g")
+st_interior_ring_n = _per_row(_g_interior_ring_n, "gn")
+st_num_interior_rings = _per_row(
+    lambda g: max(len(g.parts) - 1, 0) if g.typ == "Polygon" and g.parts
+    else None, "g")
+st_bounding_diagonal = _per_row(_g_bounding_diagonal, "g")
 
 
 # ST_GeometricMedian (geo/metrics.py Weiszfeld; fixed rounds) — r5
-st_geometric_median = _unary_geom(metrics_mod.geometric_median)
+st_geometric_median = _per_row(_wkb(metrics_mod.geometric_median), "g")
 
 
 # ST_BuildArea (geo/noding.py even-odd face parity) — r5
-st_build_area = _unary_geom(noding.build_area)
+st_build_area = _per_row(_wkb(noding.build_area), "g")
 
 
 # ST_MaxDistance / ST_LongestLine (geo/metrics.py vertex-pair scan) — r5
-st_max_distance = _geom_geom_scalar_kernel(metrics_mod.max_distance)
-st_longest_line = _geom_geom_scalar_kernel(
-    lambda a, b: (lambda r: None if r is None else to_wkb(r))(
-        metrics_mod.longest_line(a, b)))
+st_max_distance = _per_row(metrics_mod.max_distance, "gg")
+st_longest_line = _per_row(_wkb(metrics_mod.longest_line), "gg")
+
+
+# UDF plans show a kernel's __name__: each kernel built by a factory
+# above takes the name it is bound to here.
+for _name, _fn in list(globals().items()):
+    if getattr(_fn, "__name__", None) == "kernel":
+        _fn.__name__ = _fn.__qualname__ = _name

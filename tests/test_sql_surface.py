@@ -194,6 +194,25 @@ def test_disjoint_and_fixture_views_sql_only(spark):
                      "ST_GeomFromText('POINT(0 0)'))").collect()[0][0] is False
 
 
+def test_sql_defaulted_trailing_argument_may_be_omitted(sql):
+    """A SQL call may omit the trailing argument the Column API defaults
+    (st_buffer quadsegs=8, st_chaikinsmoothing iterations=1,
+    st_subdivide max_vertices=128), with the same result as passing it."""
+    row = sql("""
+        SELECT ST_AsText(ST_Buffer(g, 1.5)) AS buf,
+               ST_AsText(ST_Buffer(g, 1.5, 8)) AS buf8,
+               ST_AsText(ST_ChaikinSmoothing(l)) AS ch,
+               ST_AsText(ST_ChaikinSmoothing(l, 1)) AS ch1,
+               ST_Subdivide(l) AS sub,
+               ST_Subdivide(l, 128) AS sub128
+        FROM (SELECT ST_GeomFromText('POINT(1 2)') AS g,
+                     ST_GeomFromText('LINESTRING(0 0,4 0,4 4)') AS l)
+    """)[0]
+    assert row["buf"] == row["buf8"] and row["buf"].startswith("POLYGON((")
+    assert row["ch"] == row["ch1"] == "LINESTRING(0 0,3 0,4 1,4 4)"
+    assert row["sub"] == row["sub128"] and len(row["sub"]) == 1
+
+
 def test_setsrid_roundtrip_sql(spark):
     from datafusion_geo_spark.functions import register_all
     register_all(spark)
