@@ -114,16 +114,36 @@ def _is_degenerate(cs: List[Coord], tol: float) -> bool:
     return False
 
 
-def _snap_closure(cs: List[Coord], tol: float) -> List[Coord]:
-    """Snap a nearly-closed open path exactly closed: a start/end gap
-    below ``tol`` creates geometric features SMALLER than the
-    arrangement's side-classification probe offset (~1e-6), which
-    misclassifies every boundary piece (fuzz-found: a triangle path
-    closing to within 2.4e-07 of its start emptied the buffer while the
-    exactly-closed and 1e-3-gap variants were fine)."""
-    if len(cs) >= 3 and cs[0] != cs[-1] and dist(cs[0], cs[-1]) <= tol:
-        return cs[:-1] + [cs[0]]
-    return cs
+def _snap_revisits(cs: List[Coord], tol: float) -> List[Coord]:
+    """Snap every vertex lying within ``tol`` of an EARLIER vertex onto
+    it, then drop repeated back-and-forth traversals (…A,B,A,B → …A,B:
+    the same segment, so the same buffer). A revisit gap below ``tol``
+    creates geometric features SMALLER than the arrangement's
+    side-classification probe offset (~1e-6), which misclassifies every
+    boundary piece, and a segment traversed three times leaves
+    coincident offset pieces the arrangement double-counts (fuzz-found:
+    a triangle path closing to within 2.4e-07 of its start emptied the
+    buffer; LINESTRING(0 0,1 0,5.96e-08 0,1 0,0 0) covered none of its
+    vertices at twice the capsule's area). Earlier vertices are found
+    through a ``tol``-sized grid, so the pass stays linear."""
+    grid: dict = {}
+    out: List[Coord] = []
+    for i, p in enumerate(cs):
+        cx, cy = math.floor(p[0] / tol), math.floor(p[1] / tol)
+        near = [(j, v) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+                for j, v in grid.get((cx + dx, cy + dy), ())
+                if dist(v, p) <= tol]
+        if near:
+            p = min(near)[1]
+        else:
+            grid.setdefault((cx, cy), []).append((i, p))
+        if out and p == out[-1]:
+            continue
+        if len(out) >= 3 and p == out[-2] and out[-1] == out[-3]:
+            out.pop()
+            continue
+        out.append(p)
+    return out
 
 
 def _drop_collinear(cs: List[Coord], tol: float) -> List[Coord]:
@@ -216,7 +236,7 @@ def offset_open_ring(coords: Sequence[Coord], w: float,
         # points; dropping it unconditionally changed pinned counts)
         tol = max(_EPS, abs(w) * 1e-3)
         cs = _snap_spikes(_drop_collinear(
-            _snap_closure(_dedupe(cs, tol=tol), tol), tol))
+            _snap_revisits(_dedupe(cs, tol=tol), tol), tol))
     if len(cs) == 1:  # degenerate: pure disc
         x, y = cs[0]
         n = 4 * max(1, int(quadsegs))

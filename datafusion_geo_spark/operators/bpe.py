@@ -93,12 +93,9 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
         left, right = p.split(SEP)
         merged = left + right
         merges.append((r, left, right, merged, int(cnt)))
-        nxt = (cur.select("n", merge_fold(F.col("toks"), left, right,
+        cur = (cur.select("n", merge_fold(F.col("toks"), left, right,
                                           merged).alias("toks"))
                .localCheckpoint(eager=True))
-        cur.unpersist()
-        cur = nxt
-    cur.unpersist()
     return spark.createDataFrame(
         merges, "merge_rank int, left_tok string, right_tok string, "
                 "merged string, pair_count long")

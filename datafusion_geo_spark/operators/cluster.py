@@ -42,6 +42,7 @@ from typing import Optional, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from . import util
 from .dedup import connected_components
 
 __all__ = ["cluster_within_points", "dbscan_points",
@@ -108,7 +109,6 @@ def dbscan_points(df: DataFrame, eps: float, min_pts: int,
     """
     if min_pts < 1:
         raise ValueError(f"dbscan_points: min_pts must be >= 1, got {min_pts}")
-    ids = df.select(F.col(id_col).alias("_pid")).persist()
     pts = df.select(F.col(id_col).alias("_pid"),
                     F.col(x_col).cast("double").alias("_px"),
                     F.col(y_col).cast("double").alias("_py"))
@@ -130,23 +130,21 @@ def dbscan_points(df: DataFrame, eps: float, min_pts: int,
     # At scale this is the duplicate-skew kill: per-cell pair work is
     # quadratic in DISTINCT coordinates per cell, not points (the
     # bench lattice has ~8 points per position → 64× fewer pair rows).
-    grp = (pts.groupBy("_px", "_py")
-           .agg(F.min("_pid").alias("_gid"),
-                F.count(F.lit(1)).alias("_w"))).persist()
-    # eager materialization (lazy-persist race, see dedup.py
-    # jaccard_prefix_pairs): the pair join's two sides and the member
-    # join all scan ``grp`` as parallel stages
-    grp.count()
-    gpts = grp.select(F.col("_gid").alias("id"), F.col("_px").alias("x"),
-                      F.col("_py").alias("y"), F.col("_w"))
-    pairs = (eps_neighbor_pairs(gpts, eps, carry=["_w"])).persist()
-    pairs.count()
-    mem = pts.join(grp, ["_px", "_py"]).select("_pid", "_gid")
-    try:
-        core = (pairs.groupBy("ia").agg(F.sum("ib_w").alias("_deg"))
-                .where(F.col("_deg") >= min_pts)
-                .select(F.col("ia").alias("_core_id"))).persist()
-        core.count()
+    with util.cache_scope() as scope:
+        # cached: the pair join's two sides and the member join all
+        # scan ``grp``
+        grp, _ = scope.cache(pts.groupBy("_px", "_py")
+                             .agg(F.min("_pid").alias("_gid"),
+                                  F.count(F.lit(1)).alias("_w")))
+        gpts = grp.select(F.col("_gid").alias("id"),
+                          F.col("_px").alias("x"),
+                          F.col("_py").alias("y"), F.col("_w"))
+        pairs, _ = scope.cache(eps_neighbor_pairs(gpts, eps, carry=["_w"]))
+        mem = pts.join(grp, ["_px", "_py"]).select("_pid", "_gid")
+        core, _ = scope.cache(
+            pairs.groupBy("ia").agg(F.sum("ib_w").alias("_deg"))
+            .where(F.col("_deg") >= min_pts)
+            .select(F.col("ia").alias("_core_id")))
         core_edges = (pairs.select("ia", "ib")
                       .join(core.withColumnRenamed("_core_id", "ia"), "ia")
                       .join(core.withColumnRenamed("_core_id", "ib"), "ib"))
@@ -174,22 +172,14 @@ def dbscan_points(df: DataFrame, eps: float, min_pts: int,
                   .select(F.col("_pid").alias(id_col),
                           F.lit(False).alias("is_core"), "cluster"))
         labeled = core_lab.unionByName(border)
-        noise = (ids.join(labeled.select(F.col(id_col).alias("_pid")),
-                          "_pid", "left_anti")
+        noise = (pts.select("_pid")
+                 .join(labeled.select(F.col(id_col).alias("_pid")),
+                       "_pid", "left_anti")
                  .select(F.col("_pid").alias(id_col),
                          F.lit(False).alias("is_core"),
                          F.lit(None).cast("long").alias("cluster")))
-        out = labeled.unionByName(noise)
-        # materialize before unpersisting the inputs the plan still needs
-        return out.localCheckpoint()
-    finally:
-        pairs.unpersist()
-        grp.unpersist()
-        ids.unpersist()
-        try:
-            core.unpersist()
-        except Exception:
-            pass
+        # materialized while the caches it reads are held
+        return labeled.unionByName(noise).localCheckpoint(eager=True)
 
 
 def cluster_within_points(df: DataFrame, d: float, id_col: str = "id",
@@ -206,21 +196,20 @@ def cluster_within_points(df: DataFrame, d: float, id_col: str = "id",
     pts = df.select(F.col(id_col).alias("_pid"),
                     F.col(x_col).cast("double").alias("_px"),
                     F.col(y_col).cast("double").alias("_py"))
-    grp = (pts.groupBy("_px", "_py")
-           .agg(F.min("_pid").alias("_gid"))).persist()
-    grp.count()
-    gpts = grp.select(F.col("_gid").alias("id"), F.col("_px").alias("x"),
-                      F.col("_py").alias("y"))
-    pairs = eps_neighbor_pairs(gpts, d)
-    comp = connected_components(pairs, "ia", "ib", max_iter=64,
-                                symmetric=True)
-    out = (pts.join(grp, ["_px", "_py"])
-           .join(comp.select(F.col("doc_id").alias("_gid"),
-                             F.col("component")), "_gid")
-           .select(F.col("_pid").alias(id_col),
-                   F.col("component").alias("cluster"))).localCheckpoint()
-    grp.unpersist()
-    return out
+    with util.cache_scope() as scope:
+        grp, _ = scope.cache(pts.groupBy("_px", "_py")
+                             .agg(F.min("_pid").alias("_gid")))
+        gpts = grp.select(F.col("_gid").alias("id"),
+                          F.col("_px").alias("x"), F.col("_py").alias("y"))
+        pairs = eps_neighbor_pairs(gpts, d)
+        comp = connected_components(pairs, "ia", "ib", max_iter=64,
+                                    symmetric=True)
+        return (pts.join(grp, ["_px", "_py"])
+                .join(comp.select(F.col("doc_id").alias("_gid"),
+                                  F.col("component")), "_gid")
+                .select(F.col("_pid").alias(id_col),
+                        F.col("component").alias("cluster"))
+                .localCheckpoint(eager=True))
 
 
 def kmeans_points(df: DataFrame, k: int = 4, iters: int = 2,

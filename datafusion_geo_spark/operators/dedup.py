@@ -157,10 +157,11 @@ def lsh_pairs(sig: DataFrame, id_col: str = "doc_id",
     the joined pair — the two est_sim join-backs of the r10 shape (and
     their exchanges) are gone, and the pair dedup is one distinct over
     (id_a, id_b, est_sim), which is exactly (id_a, id_b) since est_sim
-    is functionally dependent on the pair. The banded frame is
-    persisted (MEMORY_AND_DISK) — it is read by the hot-bucket
-    aggregation plus both sides of the band join; signatures are
-    computed ONCE into it (with the map-only minhash_signature the
+    is functionally dependent on the pair. The banded frame is eagerly
+    localCheckpoint-ed — it is read by the hot-bucket aggregation plus
+    both sides of the band join of the returned lazy plan, so its
+    blocks live as long as that plan (see util.cache_scope); signatures
+    are computed ONCE into it (with the map-only minhash_signature the
     upstream is a pure projection, but the md5 shingle hashing is
     still worth not re-running 3x). Band keys come from ONE explode of
     a literal (band, bkey) struct array rather than a ``bands``-way
@@ -178,12 +179,7 @@ def lsh_pairs(sig: DataFrame, id_col: str = "doc_id",
               .select(id_col, F.col("bb.band").alias("band"),
                       F.col("bb.bkey").alias("bkey"),
                       *[F.col(f"mh{i}") for i in range(num_hashes)])
-              .persist())
-    # eager materialization: the cap's hot-bucket count and BOTH join
-    # sides scan ``banded`` as parallel stages of one action — a lazy
-    # persist makes them race and re-run the signature pipeline per
-    # stage (see jaccard_prefix_pairs; same fix, measured there)
-    banded.count()
+              .localCheckpoint(eager=True))
     banded = _cap_buckets(banded, ("band", "bkey"), max_bucket, log_dropped)
     left = banded.select(
         "band", "bkey", F.col(id_col).alias("id_a"),
@@ -252,10 +248,9 @@ def simhash_near_pairs(sig: DataFrame, id_col: str = "doc_id",
     assert max_hamming < chunks, "pigeonhole completeness needs hamming < chunks"
     cbits = bits // chunks
     mask = (1 << cbits) - 1
-    sig = sig.persist()
-    # eager: both sides of the chunk self-join scan ``sig`` as parallel
-    # stages of one action (lazy-persist race — see jaccard_prefix_pairs)
-    sig.count()
+    # checkpointed: both sides of the chunk self-join in the returned
+    # lazy plan scan ``sig`` (see util.cache_scope)
+    sig = sig.localCheckpoint(eager=True)
     chunk_structs = F.array(*[
         F.struct(
             F.lit(c).alias("chunk"),
@@ -301,11 +296,10 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     sh = df.select(F.col(id_col),
                    F.explode(word_shingles(F.col(text_col), shingle_n)).alias("s")) \
            .distinct()
-    sh = _cap_buckets(sh, ("s",), max_shingle_df, log_dropped).persist()
-    # eager: sizes (scanned twice) and both join sides read ``sh`` as
-    # parallel stages of one action (lazy-persist race — see
-    # jaccard_prefix_pairs)
-    sh.count()
+    # checkpointed: sizes (scanned twice) and both join sides of the
+    # returned lazy plan read ``sh`` (see util.cache_scope)
+    sh = _cap_buckets(sh, ("s",), max_shingle_df,
+                      log_dropped).localCheckpoint(eager=True)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("nsh"))
     l = sh.select(F.col(id_col).alias("id_a"), "s")
     r = sh.select(F.col(id_col).alias("id_b"), "s")
@@ -321,16 +315,15 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
             .where(F.col("jaccard") >= min_jaccard))
 
 
-def _driver_components(spark, edges: DataFrame) -> DataFrame:
-    """Exact min-reachable-id components of a (src, dst) edge relation
+def _driver_components(pdf):
+    """Exact min-reachable-id components of a (src, dst) edge table
     via driver-side union-find with path compression — callable only
     through :func:`connected_components`'s bounded-size gate. Output is
     identical to the distributed loop's unique fixpoint: one row per
-    vertex appearing in ``edges``, component = min id reachable from
+    vertex appearing in the edges, component = min id reachable from
     it (union-find components are the same equivalence classes, and
     the representative is re-mapped to the class minimum)."""
-    from pyspark.sql.types import StructField, StructType
-    vtype = edges.schema["src"].dataType
+    import pandas as pd
     parent: dict = {}
 
     def find(x):
@@ -341,10 +334,6 @@ def _driver_components(spark, edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # ONE bulk transfer (arrow/pandas when available): a partition-wise
-    # toLocalIterator measured ~0.1 s of round-trip latency PER
-    # PARTITION, which dwarfed the union-find on small graphs
-    pdf = edges.toPandas()
     for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
         if a not in parent:
             parent[a] = a
@@ -359,10 +348,8 @@ def _driver_components(spark, edges: DataFrame) -> DataFrame:
         m = comp_min.get(r)
         if m is None or v < m:
             comp_min[r] = v
-    out = [(v, comp_min[find(v)]) for v in parent]
-    schema = StructType([StructField("doc_id", vtype),
-                         StructField("component", vtype)])
-    return spark.createDataFrame(out, schema)
+    return pd.DataFrame({"doc_id": list(parent),
+                         "component": [comp_min[find(v)] for v in parent]})
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -402,6 +389,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     ``max_iter`` bounds pathological chains and raises rather than
     returning a half-merged labeling."""
     from pyspark.sql import Observation
+    from pyspark.sql.types import StructField, StructType
     spark = pairs.sparkSession
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # ``symmetric=True`` promises the input already contains both
@@ -410,109 +398,108 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     if not symmetric:
         e = e.unionAll(e.select(F.col("dst").alias("src"),
                                 F.col("src").alias("dst")))
-    # r12, |E|-derived loop partitioning (guide §2 "scale-adaptive, not
-    # a constant"): every round of the loop moves |V|-or-|E|-sized
-    # narrow frames through several exchanges, and each exchange pays
-    # per-partition scheduling/commit overhead whether or not the
-    # partition holds rows — at the session's core-count default a
-    # 2k-vertex graph ran 8 rounds x 32-partition exchanges of mostly
-    # empty partitions (~0.6 s/round of pure overhead). Staging the
-    # edge relation once (the cache below materializes it anyway),
-    # counting it, and running the WHOLE loop at ceil(|E|/500k)
-    # partitions (clamped to defaultParallelism) sizes every per-round
-    # exchange to the data; a bigger graph gets more partitions by the
-    # same rule. The conf is scoped and restored — partition count
-    # never changes results.
-    e0 = e.persist()
-    n_edges = e0.count()
-    # r12, bounded driver finish (the mlfit/isotonic "bounded driver
-    # solve" pattern, with an explicit cap instead of a by-construction
-    # bound): when the deduplicated edge relation fits comfortably on
-    # the driver (<= 2M narrow rows ~ tens of MB, far under
-    # spark.driver.maxResultSize), a path-compressed union-find
-    # computes the identical min-reachable-id labeling in one pass —
-    # where the distributed loop pays O(log d) rounds of per-round
-    # plan/codegen + checkpoint + convergence-metric latency (~0.6 s a
-    # round at ANY partition count; measured 8 rounds = 4.8 s on the
-    # dbscan core graph vs 0.3 s driver-side). Larger graphs take the
-    # distributed loop below unchanged — the cap is what keeps the
-    # driver out of unbounded data work (guide §5).
-    if 0 < n_edges <= util.DRIVER_MAX_EDGES:
+    with util.cache_scope() as scope:
+        e0, n_edges = scope.cache(e)
+        # r12, bounded driver finish (the mlfit/isotonic "bounded driver
+        # solve" pattern, with an explicit cap instead of a by-construction
+        # bound): when the deduplicated edge relation fits comfortably on
+        # the driver (<= 2M narrow rows ~ tens of MB, far under
+        # spark.driver.maxResultSize), a path-compressed union-find
+        # computes the identical min-reachable-id labeling in one pass —
+        # where the distributed loop pays O(log d) rounds of per-round
+        # plan/codegen + checkpoint + convergence-metric latency (~0.6 s a
+        # round at ANY partition count; measured 8 rounds = 4.8 s on the
+        # dbscan core graph vs 0.3 s driver-side). Larger graphs take the
+        # distributed loop below unchanged — the cap is what keeps the
+        # driver out of unbounded data work (guide §5).
+        if 0 < n_edges <= util.DRIVER_MAX_EDGES:
+            vtype = e0.schema["src"].dataType
+            schema = StructType([StructField("doc_id", vtype),
+                                 StructField("component", vtype)])
+            return util.driver_finish(e0, _driver_components, schema)
+        # r12, |E|-derived loop partitioning (guide §2 "scale-adaptive, not
+        # a constant"): every round of the loop moves |V|-or-|E|-sized
+        # narrow frames through several exchanges, and each exchange pays
+        # per-partition scheduling/commit overhead whether or not the
+        # partition holds rows — at the session's core-count default a
+        # 2k-vertex graph ran 8 rounds x 32-partition exchanges of mostly
+        # empty partitions (~0.6 s/round of pure overhead). Staging the
+        # edge relation once (the cache below materializes it anyway),
+        # counting it, and running the WHOLE loop at ceil(|E|/500k)
+        # partitions (clamped to defaultParallelism) sizes every per-round
+        # exchange to the data; a bigger graph gets more partitions by the
+        # same rule. The conf is scoped and restored — partition count
+        # never changes results.
+        dp = spark.sparkContext.defaultParallelism
+        n_parts = max(1, min(dp, (n_edges + 499_999) // 500_000))
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
         try:
-            return _driver_components(spark, e0)
-        finally:
-            e0.unpersist()
-    dp = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(dp, (n_edges + 499_999) // 500_000))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    edges = e0.repartition(n_parts, "src").persist()
-    try:
-        # localCheckpoint (not just persist) each round: an iterative
-        # join grows the LOGICAL plan exponentially — by ~round 25 the
-        # nested plan alone OOMs the driver during codegen. Checkpointing
-        # truncates lineage so every round starts from a flat scan.
-        # (On a cluster with lossy executors, point
-        # spark.sparkContext.setCheckpointDir at durable storage and use
-        # .checkpoint() instead.)
-        labels = (edges.select(F.col("src").alias("v"))
-                  .distinct()
-                  .withColumn("label", F.col("v"))).localCheckpoint(eager=True)
-        e0.unpersist()  # edges cache is materialized now
-        if labels.count() == 0:
-            # empty graph: nothing to label (and a zero-task action
-            # would never deliver the observe metric below)
-            return labels.select(F.col("v").alias("doc_id"),
-                                 F.col("label").alias("component"))
-        vtype = labels.schema["label"].dataType
-        for _round in range(max_iter):
-            lab_src = labels.select(F.col("v").alias("src"),
-                                    F.col("label").alias("_lsrc"))
-            # neighbor minimum: cached src-partitioned edges, zero
-            # edge-side exchange
-            j1 = (edges.join(lab_src, "src")
-                  .select(F.col("dst"), F.col("_lsrc"),
-                          F.lit(None).cast(vtype).alias("_prev")))
-            # pointer edge label(v) -> v: contributes label(label(v))
-            # and carries v's previous label for the convergence metric
-            # (exactly one row per vertex — label(v) is itself a vertex).
-            # r12 MEASURED AND REJECTED (guide §1.1): a deeper
-            # label(label(label(v))) chain (one more |V| join per round,
-            # zero subtree recompute — labels is a checkpointed scan)
-            # did NOT cut rounds on the dbscan lattice (8 rounds either
-            # way; per-round chg decays ~x0.55 because the min ids
-            # spread through the edge graph, not down pointer trees), so
-            # the extra join is pure cost. The per-round overhead fix is
-            # the |E|-derived loop partitioning below instead.
-            lft, rgt = labels.alias("l"), labels.alias("r")
-            j2 = (lft.join(rgt, F.col("l.label") == F.col("r.v"))
-                  .select(F.col("l.v").alias("dst"),
-                          F.col("r.label").alias("_lsrc"),
-                          F.col("l.label").alias("_prev")))
-            obs = Observation()
-            new_labels = (j1.unionAll(j2)
-                          .groupBy(F.col("dst").alias("v"))
-                          .agg(F.min("_lsrc").alias("label"),
-                               F.max("_prev").alias("_prev"))
-                          .observe(obs, F.sum(
-                              F.when(F.col("label") != F.col("_prev"), 1)
-                              .otherwise(0)).alias("chg"))
-                          # eager=True explicitly: obs.get below blocks
-                          # until an action delivers the metric — THIS
-                          # checkpoint is that action (ADVICE r11)
-                          ).localCheckpoint(eager=True)
-            changed = obs.get["chg"] or 0
-            labels = new_labels.drop("_prev")
-            if changed == 0:
+            edges, _ = scope.cache(e0.repartition(n_parts, "src"))
+            scope.release(e0)
+            # localCheckpoint (not just persist) each round: an iterative
+            # join grows the LOGICAL plan exponentially — by ~round 25 the
+            # nested plan alone OOMs the driver during codegen. Checkpointing
+            # truncates lineage so every round starts from a flat scan.
+            # (On a cluster with lossy executors, point
+            # spark.sparkContext.setCheckpointDir at durable storage and use
+            # .checkpoint() instead.)
+            labels = (edges.select(F.col("src").alias("v"))
+                      .distinct()
+                      .withColumn("label", F.col("v"))
+                      .localCheckpoint(eager=True))
+            if labels.count() == 0:
+                # empty graph: nothing to label (and a zero-task action
+                # would never deliver the observe metric below)
                 return labels.select(F.col("v").alias("doc_id"),
                                      F.col("label").alias("component"))
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"— pathological chain graph; raise max_iter")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        edges.unpersist()
-        e0.unpersist()
+            vtype = labels.schema["label"].dataType
+            for _round in range(max_iter):
+                lab_src = labels.select(F.col("v").alias("src"),
+                                        F.col("label").alias("_lsrc"))
+                # neighbor minimum: cached src-partitioned edges, zero
+                # edge-side exchange
+                j1 = (edges.join(lab_src, "src")
+                      .select(F.col("dst"), F.col("_lsrc"),
+                              F.lit(None).cast(vtype).alias("_prev")))
+                # pointer edge label(v) -> v: contributes label(label(v))
+                # and carries v's previous label for the convergence metric
+                # (exactly one row per vertex — label(v) is itself a vertex).
+                # r12 MEASURED AND REJECTED (guide §1.1): a deeper
+                # label(label(label(v))) chain (one more |V| join per round,
+                # zero subtree recompute — labels is a checkpointed scan)
+                # did NOT cut rounds on the dbscan lattice (8 rounds either
+                # way; per-round chg decays ~x0.55 because the min ids
+                # spread through the edge graph, not down pointer trees), so
+                # the extra join is pure cost. The per-round overhead fix is
+                # the |E|-derived loop partitioning below instead.
+                lft, rgt = labels.alias("l"), labels.alias("r")
+                j2 = (lft.join(rgt, F.col("l.label") == F.col("r.v"))
+                      .select(F.col("l.v").alias("dst"),
+                              F.col("r.label").alias("_lsrc"),
+                              F.col("l.label").alias("_prev")))
+                obs = Observation()
+                new_labels = (j1.unionAll(j2)
+                              .groupBy(F.col("dst").alias("v"))
+                              .agg(F.min("_lsrc").alias("label"),
+                                   F.max("_prev").alias("_prev"))
+                              .observe(obs, F.sum(
+                                  F.when(F.col("label") != F.col("_prev"), 1)
+                                  .otherwise(0)).alias("chg"))
+                              # eager=True explicitly: obs.get below blocks
+                              # until an action delivers the metric — THIS
+                              # checkpoint is that action (ADVICE r11)
+                              ).localCheckpoint(eager=True)
+                changed = obs.get["chg"] or 0
+                labels = new_labels.drop("_prev")
+                if changed == 0:
+                    return labels.select(F.col("v").alias("doc_id"),
+                                         F.col("label").alias("component"))
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                f"— pathological chain graph; raise max_iter")
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def chunk_documents(df: DataFrame, chunk_tokens: int = 64,
@@ -777,19 +764,18 @@ def dup_span_stats(df: DataFrame, text_col: str = "text",
     so sort parallelism grows with the corpus. No all-pairs stage
     anywhere: the classic suffix-array pass is re-expressed as windowed
     grouping, which is the form that survives 100 TB."""
-    out, base = _dup_span_stats_lazy(df, text_col, id_col, n)
-    # per-doc rows only; materializing releases the corpus cache
-    out = out.localCheckpoint(eager=True)
-    base.unpersist()
-    return out
+    with util.cache_scope() as scope:
+        # per-doc rows only
+        return (_dup_span_stats_lazy(scope, df, text_col, id_col, n)
+                .localCheckpoint(eager=True))
 
 
-def _dup_span_stats_lazy(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", n: int = 8):
-    """Lazy per-doc stats frame + the corpus cache it reads (see
-    :func:`dup_span_stats`, the public wrapper that materializes and
-    releases it). Split out so the physical plan of the real pipeline
-    stays inspectable behind the wrapper's checkpoint
+def _dup_span_stats_lazy(scope, df: DataFrame, text_col: str = "text",
+                         id_col: str = "doc_id", n: int = 8) -> DataFrame:
+    """Lazy per-doc stats frame over a corpus cache held in ``scope``
+    (see :func:`dup_span_stats`, the public wrapper that materializes
+    it). Split out so the physical plan of the real pipeline stays
+    inspectable behind the wrapper's checkpoint
     (tests/test_scale_plans.py)."""
     from pyspark.sql import Window
 
@@ -797,13 +783,11 @@ def _dup_span_stats_lazy(df: DataFrame, text_col: str = "text",
 
     w = df.select(F.col(id_col).alias("doc_id"),
                   words_col(F.col(text_col)).alias("w"))
-    # persisted: consumed twice (the occurrence pass + the final
-    # per-doc join) — re-tokenizing the corpus per consumer otherwise
-    # (the jaccard_prefix persist discipline; released below)
-    base = w.select("doc_id",
-                    F.size("w").cast("long").alias("n_words"),
-                    ngram_array(F.col("w"), n).alias("gs")).persist()
-    base.count()
+    # cached: consumed twice (the occurrence pass + the final per-doc
+    # join) — re-tokenizing the corpus per consumer otherwise
+    base, _ = scope.cache(w.select("doc_id",
+                                   F.size("w").cast("long").alias("n_words"),
+                                   ngram_array(F.col("w"), n).alias("gs")))
     grams = base.select("doc_id", F.posexplode("gs").alias("pos", "g"))
     # r12: corpus-wide occurrence marking as ONE window over the exact
     # gram (count > 1 over partition g) instead of md5-hash -> grouped
@@ -846,34 +830,27 @@ def _dup_span_stats_lazy(df: DataFrame, text_col: str = "text",
                    .alias("dup_words"))
            .withColumn("keep",
                        F.col("dup_words") * F.lit(2) <= F.col("n_words")))
-    return out, base
+    return out
 
 
-def _jaccard_prefix_verified(df: DataFrame, text_col: str,
+def _jaccard_prefix_verified(scope, df: DataFrame, text_col: str,
                              id_col: str, threshold_num: int,
                              threshold_den: int, shingle_n: int,
-                             max_token_df: Optional[int]):
-    """Lazy verified-pair frame + the caches it reads (see
+                             max_token_df: Optional[int]) -> DataFrame:
+    """Lazy verified-pair frame over caches held in ``scope`` (see
     :func:`jaccard_prefix_pairs`, the public wrapper that materializes
-    and releases them). Split out so the physical plan of the real
-    pipeline stays inspectable behind the wrapper's checkpoint."""
+    it). Split out so the physical plan of the real pipeline stays
+    inspectable behind the wrapper's checkpoint."""
     from pyspark.sql import Window
     from .text import _idiv
 
     arr = F.array_distinct(word_shingles(F.col(text_col), shingle_n))
-    # persisted: consumed three times (token explode + both sides of
-    # the verification join) — re-shingling the corpus per consumer
-    # costs a full text pass each (same discipline as lsh_pairs'
-    # banded persist; evicted LRU, size = one array row per doc)
-    arrs = df.select(F.col(id_col).alias("_id"), arr.alias("_arr"),
-                     F.size(arr).cast("long").alias("sz")).persist()
-    # MATERIALIZE the cache before wiring the consumers (guide §1.1
-    # empirical loop): the three consumers are PARALLEL stages of the
-    # one final action, and a lazy persist makes them race — each
-    # stage re-shingles the corpus before any cached partition lands
-    # (measured 16.9 s lazy vs 6.5 s eager for the full query at
-    # sf0.1). One bounded count() populates the cache once.
-    arrs.count()
+    # cached: consumed three times (token explode + both sides of the
+    # verification join) — re-shingling the corpus per consumer costs
+    # a full text pass each (size = one array row per doc)
+    arrs, _ = scope.cache(df.select(F.col(id_col).alias("_id"),
+                                    arr.alias("_arr"),
+                                    F.size(arr).cast("long").alias("sz")))
     toks = arrs.select("_id", "sz", F.explode("_arr").alias("tok"))
     dft = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("dft"))
     if max_token_df is not None:
@@ -884,15 +861,15 @@ def _jaccard_prefix_verified(df: DataFrame, text_col: str,
     # prefix length = sz - ceil(t*sz) + 1, all int64
     need = _idiv(F.col("sz") * F.lit(threshold_num)
                  + F.lit(threshold_den - 1), F.lit(threshold_den))
-    # persisted + materialized: BOTH sides of the self-join below read
-    # this relation, and Catalyst does not recognize the aliased
-    # subtrees as one (r11's after-plan shows the dft join + window
-    # pipeline planned TWICE, once per side — guide §2.4 "two
-    # operations keyed the same way can share one exchange"); caching
-    # the ~|prefix| rows runs the global-df + rank pipeline once
-    prefix = (ranked.where(F.col("r") <= F.col("sz") - need + F.lit(1))
-              .select("_id", "tok", "sz", "r").persist())
-    prefix.count()
+    # cached: BOTH sides of the self-join below read this relation,
+    # and Catalyst does not recognize the aliased subtrees as one
+    # (r11's after-plan shows the dft join + window pipeline planned
+    # TWICE, once per side — guide §2.4 "two operations keyed the same
+    # way can share one exchange"); caching the ~|prefix| rows runs the
+    # global-df + rank pipeline once
+    prefix, _ = scope.cache(
+        ranked.where(F.col("r") <= F.col("sz") - need + F.lit(1))
+        .select("_id", "tok", "sz", "r"))
     # PPJoin positional filter (provably output-preserving): a shared
     # prefix token at positions (ra, rb) of the two docs' identically-
     # ordered token lists bounds the intersection by
@@ -961,7 +938,7 @@ def _jaccard_prefix_verified(df: DataFrame, text_col: str,
                           >= F.lit(threshold_num) * F.col("union_sz"))
                 .select("id_a", "id_b", "inter", "size_a", "size_b",
                         "union_sz"))
-    return verified, (prefix, arrs)
+    return verified
 
 
 def jaccard_prefix_pairs(df: DataFrame, text_col: str = "text",
@@ -1004,14 +981,9 @@ def jaccard_prefix_pairs(df: DataFrame, text_col: str = "text",
     output-preserving: it removes only pairs verification rejects.
 
     r12: the verified pair set (pair-count-sized) is materialized via
-    localCheckpoint and both internal caches are released before
-    returning (the edit_join discipline, ADVICE r11 — no cached
-    relation leaks per call)."""
-    verified, caches = _jaccard_prefix_verified(
-        df, text_col, id_col, threshold_num, threshold_den, shingle_n,
-        max_token_df)
-    try:
-        return verified.localCheckpoint(eager=True)
-    finally:
-        for c in caches:
-            c.unpersist()
+    localCheckpoint while both internal caches are held, so no cached
+    relation outlives the call."""
+    with util.cache_scope() as scope:
+        return _jaccard_prefix_verified(
+            scope, df, text_col, id_col, threshold_num, threshold_den,
+            shingle_n, max_token_df).localCheckpoint(eager=True)

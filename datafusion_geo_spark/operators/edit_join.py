@@ -27,6 +27,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from . import util
+
 __all__ = ["edit_distance_join", "deletion_variants"]
 
 
@@ -86,31 +88,23 @@ def edit_distance_join(df: DataFrame, col: str, k: int = 2) -> DataFrame:
     # (a collision only adds a candidate the exact levenshtein filter
     # removes; same-string variants always collide-by-design), so use
     # the codegen'd xxhash64 instead of md5-hex→conv (r11, guide §4.1)
-    ex = (s.select("s", F.length("s").alias("_len"),
-                   F.explode(deletion_variants(F.col("s"), k))
-                   .alias("_v"))
-          .select("s", "_len", F.xxhash64(F.col("_v")).alias("_vh"))
-          .persist())
-    # eager: both sides of the variant self-join scan ``ex`` as
-    # parallel stages of one action (lazy-persist race — see
-    # dedup.jaccard_prefix_pairs); a lazy persist re-runs the variant
-    # explode + hash per side
-    ex.count()
-    a = ex.select(F.col("s").alias("a"), F.col("_len").alias("_la"),
-                  "_vh")
-    b = ex.select(F.col("s").alias("b"), F.col("_len").alias("_lb"),
-                  "_vh")
-    cand = (a.join(b, "_vh")
-            .where((F.col("a") < F.col("b"))
-                   & (F.abs(F.col("_la") - F.col("_lb")) <= F.lit(k)))
-            .select("a", "b").distinct())
-    out = (cand.withColumn("dist", F.levenshtein("a", "b")
-                           .cast("long"))
-           .where(F.col("dist") <= F.lit(k)))
-    # materialize the (small) verified pair set so ``ex`` can be
-    # unpersisted HERE instead of leaking a cached relation per call
-    # (ADVICE r11); eager=True pins the materializing action
-    try:
+    with util.cache_scope() as scope:
+        # cached: both sides of the variant self-join scan ``ex``
+        ex, _ = scope.cache(
+            s.select("s", F.length("s").alias("_len"),
+                     F.explode(deletion_variants(F.col("s"), k))
+                     .alias("_v"))
+            .select("s", "_len", F.xxhash64(F.col("_v")).alias("_vh")))
+        a = ex.select(F.col("s").alias("a"), F.col("_len").alias("_la"),
+                      "_vh")
+        b = ex.select(F.col("s").alias("b"), F.col("_len").alias("_lb"),
+                      "_vh")
+        cand = (a.join(b, "_vh")
+                .where((F.col("a") < F.col("b"))
+                       & (F.abs(F.col("_la") - F.col("_lb")) <= F.lit(k)))
+                .select("a", "b").distinct())
+        out = (cand.withColumn("dist", F.levenshtein("a", "b")
+                               .cast("long"))
+               .where(F.col("dist") <= F.lit(k)))
+        # the (small) verified pair set, materialized while ``ex`` is held
         return out.localCheckpoint(eager=True)
-    finally:
-        ex.unpersist()

@@ -29,6 +29,7 @@ from typing import List, Sequence, Tuple
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from . import util
 from .text import words_col
 
 #: feature names, in model order: bias, word count, short words
@@ -186,8 +187,8 @@ def logreg_fit(feat: DataFrame, iters: int = LOGREG_ITERS,
     k = 4
     n = None
     w = [0.0] * k
-    feat = feat.persist()
-    try:
+    with util.cache_scope() as scope:
+        feat, _ = scope.cache(feat)
         for _ in range(iters):
             z = round6_binary(_scaled_z(w))
             p = round6_binary(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
@@ -206,8 +207,6 @@ def logreg_fit(feat: DataFrame, iters: int = LOGREG_ITERS,
                 gbar = r6((row[f"g{j}"] / 1000000.0) / n)
                 w[j] = r6(w[j] - r6(lr * gbar))
         return w
-    finally:
-        feat.unpersist()
 
 
 def logreg_weights_df(df: DataFrame, label: Column,

@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..functions import box2d, st_intersects
+from . import util
 
 BBOX_COLS = ("xmin", "ymin", "xmax", "ymax")
 
@@ -519,13 +520,6 @@ def knn_point_join(left: DataFrame, right: DataFrame, k: int,
           .select(F.struct(*[F.col(c) for c in left.columns]).alias("la"),
                   F.col(left_key).alias("_lk"),
                   F.col("xmin").alias("_lx"), F.col("ymin").alias("_ly")))
-    rb = (ensure_bbox(right, geom_right)
-          .where(F.col(geom_right).isNotNull())
-          .select(F.col(right_key).alias("_rk"),
-                  F.col("xmin").alias("_rx"), F.col("ymin").alias("_ry"))
-          .persist())
-    rb.count()
-
     d2 = ((F.col("_lx") - F.col("_rx")) * (F.col("_lx") - F.col("_rx"))
           + (F.col("_ly") - F.col("_ry")) * (F.col("_ly") - F.col("_ry")))
     w = Window.partitionBy("_lk").orderBy(F.col("_d2").asc(),
@@ -536,69 +530,66 @@ def knn_point_join(left: DataFrame, right: DataFrame, k: int,
                 .withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") <= k))
 
-    remaining = la.persist()
-    resolved = []
-    r = float(cell)
     offsets = [F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
                for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    for _ in range(max_rounds):
-        rcells = rb.select(
-            "_rk", "_rx", "_ry",
-            F.floor(F.col("_rx") / r).alias("cx"),
-            F.floor(F.col("_ry") / r).alias("cy"))
-        probes = (remaining
-                  .withColumn("_o", F.explode(F.array(*offsets)))
-                  .select("la", "_lk", "_lx", "_ly",
-                          (F.floor(F.col("_lx") / r)
-                           + F.col("_o.dx")).alias("cx"),
-                          (F.floor(F.col("_ly") / r)
-                           + F.col("_o.dy")).alias("cy")))
-        top = topk(probes.join(rcells, ["cx", "cy"]))
-        safe_keys = (top.groupBy("_lk")
-                     .agg(F.count("*").alias("_n"),
-                          F.max("_d2").alias("_kth"))
-                     .where((F.col("_n") == k)
-                            & (F.col("_kth") <= F.lit(r * r)))
-                     .select("_lk"))
-        # r12: materialize this round's k-row-per-key result NOW, while
-        # ``remaining``/``rb`` are still cached. The former lazy persist
-        # was only forced by the final union's checkpoint — after the
-        # loop had already unpersisted every earlier round's
-        # ``remaining``, so each round's probe-join chain re-ran from
-        # the source scan (the lazy-persist lifetime bug; measured as
-        # the bulk of this operator's wall time at sf0.1).
-        resolved.append(
-            top.join(safe_keys, "_lk", "left_semi")
-               .select("la", "_lk", F.col("_rk"), "_d2", "rn")
-               .localCheckpoint(eager=True))
-        nxt = remaining.join(safe_keys, "_lk", "left_anti").persist()
-        n_left = nxt.count()
-        remaining.unpersist()
-        remaining = nxt
-        if n_left == 0:
-            break
-        r *= 3.0
-    else:
-        # brute force for isolated stragglers: broadcast the (tiny)
-        # remaining left side over one scan of the right points
-        brute = topk(F.broadcast(remaining).crossJoin(rb))
-        resolved.append(
-            brute.select("la", "_lk", F.col("_rk"), "_d2", "rn"))
-    out = resolved[0]
-    for part in resolved[1:]:
-        out = out.unionByName(part)
-    out = out.select("la", F.col("_rk").alias("rk"),
-                     F.sqrt(F.col("_d2")).alias("dist"), "rn")
-    # the loop already ran per-round actions, so one eager checkpoint
-    # adds no extra pass over the data — and it lets every temp cache
-    # (rb + per-round resolved frames) be released here instead of
-    # accumulating executor storage across calls in a long session
-    out = out.localCheckpoint(eager=True)
-    for part in resolved:
-        part.unpersist()
-    remaining.unpersist()
-    rb.unpersist()
-    return out
+    with util.cache_scope() as scope:
+        rb, _ = scope.cache(
+            ensure_bbox(right, geom_right)
+            .where(F.col(geom_right).isNotNull())
+            .select(F.col(right_key).alias("_rk"),
+                    F.col("xmin").alias("_rx"), F.col("ymin").alias("_ry")))
+        remaining, _ = scope.cache(la)
+        resolved = []
+        r = float(cell)
+        for _ in range(max_rounds):
+            rcells = rb.select(
+                "_rk", "_rx", "_ry",
+                F.floor(F.col("_rx") / r).alias("cx"),
+                F.floor(F.col("_ry") / r).alias("cy"))
+            probes = (remaining
+                      .withColumn("_o", F.explode(F.array(*offsets)))
+                      .select("la", "_lk", "_lx", "_ly",
+                              (F.floor(F.col("_lx") / r)
+                               + F.col("_o.dx")).alias("cx"),
+                              (F.floor(F.col("_ly") / r)
+                               + F.col("_o.dy")).alias("cy")))
+            top = topk(probes.join(rcells, ["cx", "cy"]))
+            safe_keys = (top.groupBy("_lk")
+                         .agg(F.count("*").alias("_n"),
+                              F.max("_d2").alias("_kth"))
+                         .where((F.col("_n") == k)
+                                & (F.col("_kth") <= F.lit(r * r)))
+                         .select("_lk"))
+            # r12: materialize this round's k-row-per-key result NOW,
+            # while ``remaining``/``rb`` are still cached — a lazy frame
+            # forced only by the final checkpoint re-ran every earlier
+            # round's probe-join chain from the source scan (measured as
+            # the bulk of this operator's wall time at sf0.1).
+            resolved.append(
+                top.join(safe_keys, "_lk", "left_semi")
+                   .select("la", "_lk", F.col("_rk"), "_d2", "rn")
+                   .localCheckpoint(eager=True))
+            nxt, n_left = scope.cache(
+                remaining.join(safe_keys, "_lk", "left_anti"))
+            scope.release(remaining)
+            remaining = nxt
+            if n_left == 0:
+                break
+            r *= 3.0
+        else:
+            # brute force for isolated stragglers: broadcast the (tiny)
+            # remaining left side over one scan of the right points
+            brute = topk(F.broadcast(remaining).crossJoin(rb))
+            resolved.append(
+                brute.select("la", "_lk", F.col("_rk"), "_d2", "rn"))
+        out = resolved[0]
+        for part in resolved[1:]:
+            out = out.unionByName(part)
+        # the loop already ran per-round actions, so one eager
+        # checkpoint adds no extra pass over the data
+        return (out.select("la", F.col("_rk").alias("rk"),
+                           F.sqrt(F.col("_d2")).alias("dist"), "rn")
+                .localCheckpoint(eager=True))
 
 
 def nearest_segment_join(points: DataFrame, segs: DataFrame, r: float,

@@ -264,6 +264,24 @@ def test_buffer_containment_property():
     contains()
 
 
+def test_buffer_doubled_back_line_is_its_segment_capsule():
+    """Hypothesis-found: a line running 0→1→5.96e-08→1→0 along the x
+    axis revisits its start within 6e-8 and traverses one segment three
+    times; its buffer covered none of its vertices at twice the area.
+    Its buffer is the segment's capsule, as for LINESTRING(0 0,1 0,0 0)."""
+    g = Geometry("LineString", [(0.0, 0.0), (1.0, 0.0),
+                                (5.960464477539063e-08, 0.0), (1.0, 0.0),
+                                (0.0, 0.0)])
+    b = algos.buffer(g, 1.0, Q)
+    once = algos.buffer(Geometry("LineString",
+                                 [(0.0, 0.0), (1.0, 0.0), (0.0, 0.0)]),
+                        1.0, Q)
+    assert algos.area(b) == pytest.approx(algos.area(once))
+    assert algos.area(once) == pytest.approx(2.0 + CIRCLE_POLY(1.0))
+    for v in g.vertices():
+        assert algos.covers(b, Geometry("Point", v)), v
+
+
 def test_buffer_near_coincident_start_not_empty():
     """Deep-fuzz regression: a path start 6e-8 off a later joint/segment
     made both the arrangement and the single small-jitter retry empty;

@@ -263,13 +263,11 @@ def test_dup_spans_window_partitions_by_doc(spark):
     count-over-gram window (r12): a single exchange moves the exploded
     corpus once, no hash key, no join-back."""
     from datafusion_geo_spark.operators.dedup import _dup_span_stats_lazy
+    from datafusion_geo_spark.operators.util import cache_scope
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "text")
-    out, base = _dup_span_stats_lazy(docs)
-    try:
-        plan = plan_of(out)
-    finally:
-        base.unpersist()
+    with cache_scope() as scope:
+        plan = plan_of(_dup_span_stats_lazy(scope, docs))
     flat = plan.lower().replace(" ", "")
     # islands window keyed by doc_id
     assert "windowspecdefinition(doc_id#" in flat
