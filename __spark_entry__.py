@@ -5482,23 +5482,9 @@ def _q_streaming_unigram_fertility(spark: SparkSession,
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS: the driver's correctness gate checks exactly the
-    # FIRST 50 entries per round. Rotation policy (r6 verdict item 1):
-    # queries that have never earned a driver CORRECTNESS row lead the
-    # dict; a couple of heavy previously-green canaries follow; the
-    # remainder are all driver-green in some earlier round and stay
-    # gated locally by tests/test_entry_oracle.py every run.
-    #
-    # ROUND 11: the _FIRST50 list below pins the gate slots
-    # explicitly — the dict itself lists every query in its
-    # historical grouping and is reordered on return. Rotation
-    # policy (unchanged): never-gated new queries > queries whose
-    # kernels changed since their last driver-green row > oldest
-    # green rows; 2 heavy canaries every round. This round: the 2
-    # new artifact-export round trips; 4 re-gates for the r10-ADVICE
-    # kernels (dsir/Albers/LAEA/split); the FULL 30-query r5-stale
-    # block (VERDICT r10 item 2); and the alphabetically-first 12 of
-    # the r6 block. Staleness is now machine-visible:
-    # rotation_report() below emits the age histogram per round.
+    # FIRST 50 entries. The dict lists every query in its historical
+    # grouping; _FIRST50 below pins the gate slots and the dict is
+    # reordered on return (see the rotation policy there).
     q = {
         # --- ROUND-8 GATE SLOTS 1-16: never driver-gated (added r7) ---
         "kmv_quantiles": _q_kmv_quantiles,
@@ -5804,40 +5790,36 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return out
 
 
-#: The driver's correctness gate checks EXACTLY these 50, in order
-#: (round-11 rotation — see the rotation policy in queries()).
+#: The correctness gate checks EXACTLY these 50, in order.
+#: Rotation policy: queries that never earned a CORRECTNESS row
+#: come first, then queries whose kernel or Column-function code changed
+#: since their latest green row, then the oldest green rows (every query
+#: of the oldest round when they fit, then the next round alphabetically),
+#: plus the two heavy canaries grid_spatial_join and minhash_pairs.
+#: ``rotation_report()`` computes the staleness this policy works down;
+#: tests/test_gate_rotation.py checks it against the CORRECTNESS history.
 _FIRST50 = [
-    # ---- ROUND-12 GATE ----
-    # the FULL r6-stale block (oldest gate evidence — every remaining
-    # query whose latest driver-green row is round 6), alphabetical:
-    # 40 names, machine-checked by the rotation contract
-    # (tests/test_gate_rotation.py::test_rotation_report_live_history)
-    "accessors2_literal", "audio_frames", "batch_sessions",
-    "bloom_new_docs", "bpe_merges", "buildarea_literal",
-    "count_min_topk", "dedup_keep_one", "edit_utils_literal",
-    "embed_quantize", "geom_edit_points", "geometric_median",
-    "graph_stats", "hilbert_keys", "hll_registers",
-    "line_edit_literal", "line_merge_literal", "longest_line_literal",
-    "map_match", "mic_snap_literal", "offset_clip_literal",
-    "pack_sequences", "pagerank_neardup", "quality_filter",
-    "random_projection", "relate_literal", "session_window_agg",
-    "setops_literal", "shortline_project", "smoothing_literal",
-    "sphere_nav", "sphere_paths", "streaming_enrich",
-    "streaming_geofence", "streaming_hexbin", "streaming_hll",
-    "streaming_map_match", "subdivide_boxes", "tile_normalize_literal",
-    "unigram_logprob",
-    # heavy regression canaries (every round)
+    # kernels changed after the previous gate was pinned
+    "streaming_join", "ann_recall", "hamming_recall", "pq_topk",
+    "ivfpq_topk", "spatial_knn_join", "knn_join", "cluster_within",
+    "neardup_components",
+    # the oldest green rows (round 6)
+    "url_dedup", "validity_literal", "value_quantiles", "vocab_encode",
+    "zonal_stats",
+    # queries calling a Column function whose coercion or kernel changed
+    "setsrid_roundtrip", "geoparquet_roundtrip", "accessors_lines",
+    "accessors2_literal", "relate_matrix", "sphere_nav",
+    "tile_normalize_literal", "offset_clip_literal", "mic_snap_literal",
+    "triangulate_literal", "edit_utils_literal", "smoothing_literal",
+    # heavy regression canaries (every gate)
     "grid_spatial_join", "minhash_pairs",
-    # re-gates for kernels CHANGED by this optimization round
-    # (jaccard prefix persist + accumulated-overlap filter; rollup
-    # changelog compaction plumbing; edit_join cache release; CC /
-    # streaming / PQ items as they land) — the changed-kernel slot of
-    # the rotation policy
-    "jaccard_prefix", "dup_spans", "hourly_rollup", "streaming_rollup",
-    "edit_join", "fuzzy_title_dedup", "dbscan_clusters", "pq_recall",
-    # (the r7 block — asof_forward, bm25_search, buffer_lines, ... —
-    # becomes the oldest evidence after this round and leads any
-    # future gate's pool.)
+    # the next-oldest green rows (round 7), alphabetically
+    "alpha_resample", "asof_nearest", "auc_by_group", "auc_eval",
+    "bpe_encode", "calibration_bins", "chunk_udtf", "corpus_diff",
+    "csv_roundtrip", "domain_entropy", "dup_cluster_hist", "events_pivot",
+    "feature_corr", "hard_negatives", "heldout_ppl", "hll_by_group",
+    "hll_estimate", "hll_setops", "join_size_estimate", "ks_drift",
+    "lang_confusion", "linreg_score",
 ]
 
 

@@ -10,6 +10,19 @@ the reference's exact names (`register_all(spark)`) — Spark SQL function
 lookup is case-insensitive, which subsumes the reference's lowercase
 aliases (/root/reference/src/function/geom_from_text.rs:28).
 
+One declaration per function: a ``def`` whose body is only its
+docstring, decorated with ``@_sql(*sql_names, kernel=, rtype=)``, is the
+Column function, its pandas UDF and its SQL registration at once (see
+``_sql``). Its parameter annotations say how each argument is coerced:
+
+- ``Geom``: a Column, or a Geometry / WKB bytes / WKT str literal;
+- ``Double`` / ``Int``: a Column or a column-name str, cast to double /
+  int, or a Python number literal cast the same way;
+- ``Text``: a literal unless it is a Column.
+
+Only functions that do more than coerce their arguments and call one
+UDF are written by hand.
+
 ``st_extent`` is NOT a Python UDAF: per SURVEY.md §2.1 #19 it lowers to
 built-in min/max over a Box2D struct, so Catalyst runs its own two-phase
 (partial/final) hash aggregate — the Spark-native equivalent of the
@@ -18,6 +31,8 @@ reference's Accumulator lifecycle (/root/reference/src/function/extent.rs:75-128
 
 from __future__ import annotations
 
+import functools
+import inspect
 from typing import Optional, Union
 
 import pyspark.sql.functions as F
@@ -31,7 +46,11 @@ from ..geo.wkb import to_wkb
 from ..geo.wkt import from_wkt
 from . import kernels
 
-GeomLike = Union[Column, Geometry, bytes, str]
+# the argument kinds of a declared function (see ``_COERCE``)
+Geom = Union[Column, Geometry, bytes, str]
+Double = Union[Column, str, float]
+Int = Union[Column, str, int]
+Text = Union[Column, str]
 
 BOX2D_TYPE = StructType([
     StructField("xmin", DoubleType(), True),
@@ -52,7 +71,7 @@ def geom_lit(g: Union[Geometry, bytes, str]) -> Column:
     return F.lit(g)
 
 
-def _geom(c: GeomLike) -> Column:
+def _geom(c: Geom) -> Column:
     if isinstance(c, Column):
         return c
     if isinstance(c, (Geometry, bytes, str)):
@@ -69,6 +88,15 @@ def _num(c, cast: str) -> Column:
     if isinstance(c, str):
         return F.col(c).cast(cast)
     return F.lit(c).cast(cast)
+
+
+#: annotation of a declared function's parameter -> its coercion
+_COERCE = {
+    "Geom": _geom,
+    "Double": lambda v: _num(v, "double"),
+    "Int": lambda v: _num(v, "int"),
+    "Text": lambda v: v if isinstance(v, Column) else F.lit(v),
+}
 
 
 # -- pandas UDF objects (vectorized, Arrow-batched) ---------------------
@@ -96,47 +124,74 @@ def _udf(kernel, rtype):
     return pandas_udf(f, rtype)
 
 
-_geom_from_text = _udf(kernels.geom_from_text, BinaryType())
-_geom_from_geojson = _udf(kernels.geom_from_geojson, BinaryType())
-_geom_from_wkb = _udf(kernels.geom_from_wkb, BinaryType())
-_set_srid = _udf(kernels.set_srid, BinaryType())
-_geom_from_wkb_dialect = _udf(kernels.geom_from_wkb_dialect, BinaryType())
-_make_envelope = _udf(kernels.make_envelope, BinaryType())
-_point = _udf(kernels.st_point, BinaryType())
-_as_text = _udf(kernels.as_text, StringType())
-_as_ewkt = _udf(kernels.as_ewkt, StringType())
-_as_geojson = _udf(kernels.as_geojson, StringType())
-_geometry_type = _udf(kernels.geometry_type, StringType())
-_srid = _udf(kernels.srid, IntegerType())
-_npoints = _udf(kernels.npoints, IntegerType())
-_area = _udf(kernels.area, DoubleType())
-_box2d = _udf(kernels.box2d_rows, BOX2D_TYPE)
-_intersects = _udf(kernels.intersects, BooleanType())
-_covers = _udf(kernels.covers, BooleanType())
-_covered_by = _udf(kernels.covered_by, BooleanType())
-_equals = _udf(kernels.equals, BooleanType())
-_translate = _udf(kernels.translate, BinaryType())
-_buffer = _udf(kernels.buffer, BinaryType())
-_split = _udf(kernels.split, BinaryType())
-_as_mvt_geom = _udf(kernels.as_mvt_geom, BinaryType())
+#: SQL name -> pandas UDF, filled by ``_sql`` and, for the SQL-only
+#: names, at the end of this module; ``register_all`` registers them
+_SQL_UDFS: dict = {}
+
+
+def _sql(*names: str, kernel, rtype):
+    """The one declaration of a function, put on a ``def`` whose body is
+    only its docstring. Builds ``kernel``'s pandas UDF once (``_udf``),
+    stores it in ``_SQL_UDFS`` under each of ``names`` (none for a
+    Column-only function; a ``*SRID`` alias is one more name) and
+    returns the Column function, which keeps the def's name, signature
+    and docstring. A call is bound to that signature (defaults applied),
+    trailing optional arguments (default None) still None are left out,
+    so the kernel's own defaults apply as in a shorter SQL call, and
+    each argument is coerced by its annotation (``_COERCE``); any other
+    None is a NULL literal (``st_setsrid(g, None)`` clears the SRID)."""
+    udf = _udf(kernel, rtype)
+    for name in names:
+        _SQL_UDFS[name] = udf
+
+    def declare(fn):
+        sig = inspect.signature(fn)
+        params = list(sig.parameters.values())
+        coerce = [_COERCE[p.annotation] for p in params]
+        optional = [p.default is None for p in params]
+
+        @functools.wraps(fn)
+        def column_fn(*args, **kwargs) -> Column:
+            bound = sig.bind(*args, **kwargs)
+            bound.apply_defaults()
+            vals = list(bound.arguments.values())
+            while vals and vals[-1] is None and optional[len(vals) - 1]:
+                vals.pop()
+            return udf(*(F.lit(None) if v is None else c(v)
+                         for c, v in zip(coerce, vals)))
+        return column_fn
+    return declare
 
 
 # -- Column API ---------------------------------------------------------
 
-def st_geomfromtext(wkt: Union[Column, str], srid: Optional[Union[Column, int]] = None) -> Column:
+@_sql("ST_GeomFromText", "ST_GeomFromTextSRID",
+      kernel=kernels.geom_from_text, rtype=BinaryType())
+def st_geomfromtext(wkt: Text, srid: Int = None) -> Column:
     """#1 ST_GeomFromText (/root/reference/src/function/geom_from_text.rs:13-81)."""
-    c = wkt if isinstance(wkt, Column) else F.lit(wkt)
-    if srid is None:
-        return _geom_from_text(c)
-    return _geom_from_text(c, _num(srid, "int"))
 
 
-def st_geomfromgeojson(geojson: Union[Column, str]) -> Column:
+@_sql("ST_GeomFromGeoJSON",
+      kernel=kernels.geom_from_geojson, rtype=BinaryType())
+def st_geomfromgeojson(geojson: Text) -> Column:
     """PostGIS-parity ST_GeomFromGeoJSON: GeoJSON geometry text → (E)WKB
     (geo/geojson.py). Inverse of st_asgeojson; the reference only
     serializes (/root/reference/src/function/as_geojson.rs:88-110)."""
-    c = geojson if isinstance(geojson, Column) else F.lit(geojson)
-    return _geom_from_geojson(c)
+
+
+@_sql("ST_GeomFromWKB", "ST_GeomFromWKBSRID",
+      kernel=kernels.geom_from_wkb, rtype=BinaryType())
+def _geomfromwkb(wkb: Geom, srid: Int = None) -> Column:
+    """st_geomfromwkb without a dialect."""
+
+
+# one crossing: the dialect kernel stamps the SRID on the decoded
+# geometry directly instead of a second full re-parse
+@_sql("ST_GeomFromWKBDialect",
+      kernel=kernels.geom_from_wkb_dialect, rtype=BinaryType())
+def _geomfromwkb_dialect(wkb: Geom, dialect: Text,
+                         srid: Int = None) -> Column:
+    """st_geomfromwkb with a dialect."""
 
 
 def st_geomfromwkb(wkb: Column, srid: Optional[Union[Column, int]] = None,
@@ -148,738 +203,623 @@ def st_geomfromwkb(wkb: Column, srid: Optional[Union[Column, int]] = None,
     'geopackage', 'spatialite', 'mysql', 'tagged' (the reference's own
     tag-prefixed storage), or 'auto' (framing sniff; cannot detect
     MySQL's bare-int prefix). Output is always canonical (E)WKB."""
-    if dialect is not None:
-        if srid is None:
-            return _geom_from_wkb_dialect(wkb, F.lit(str(dialect)))
-        # one crossing: the dialect kernel stamps the SRID on the decoded
-        # geometry directly instead of a second full re-parse
-        return _geom_from_wkb_dialect(wkb, F.lit(str(dialect)),
-                                           _num(srid, "int"))
-    if srid is None:
-        return _geom_from_wkb(wkb)
-    return _geom_from_wkb(wkb, _num(srid, "int"))
+    if isinstance(wkb, str):
+        wkb = F.col(wkb)   # the blob column's name, not WKT
+    if dialect is None:
+        return _geomfromwkb(wkb, srid)
+    return _geomfromwkb_dialect(wkb, str(dialect), srid)
 
 
-def st_astext(g: GeomLike) -> Column:
+@_sql("ST_AsText", kernel=kernels.as_text, rtype=StringType())
+def st_astext(g: Geom) -> Column:
     """#3 ST_AsText (/root/reference/src/function/as_text.rs:13-110)."""
-    return _as_text(_geom(g))
 
 
-def st_asewkt(g: GeomLike) -> Column:
+@_sql("ST_AsEWKT", kernel=kernels.as_ewkt, rtype=StringType())
+def st_asewkt(g: Geom) -> Column:
     """#4 ST_AsEWKT (/root/reference/src/function/as_ewkt.rs:13-101)."""
-    return _as_ewkt(_geom(g))
 
 
-def st_asgeojson(g: GeomLike) -> Column:
+@_sql("ST_AsGeoJSON", kernel=kernels.as_geojson, rtype=StringType())
+def st_asgeojson(g: Geom) -> Column:
     """#5 ST_AsGeoJSON (/root/reference/src/function/as_geojson.rs:13-110)."""
-    return _as_geojson(_geom(g))
 
 
-def st_geometrytype(g: GeomLike) -> Column:
+@_sql("ST_GeometryType", kernel=kernels.geometry_type, rtype=StringType())
+def st_geometrytype(g: Geom) -> Column:
     """#6 ST_GeometryType (/root/reference/src/function/geometry_type.rs:10-92)."""
-    return _geometry_type(_geom(g))
 
 
-def box2d(g: GeomLike) -> Column:
+@_sql("Box2D", kernel=kernels.box2d_rows, rtype=BOX2D_TYPE)
+def box2d(g: Geom) -> Column:
     """#7 Box2D → struct{xmin,ymin,xmax,ymax}
     (/root/reference/src/function/box2d.rs:11-82)."""
-    return _box2d(_geom(g))
 
 
-def st_makeenvelope(xmin, ymin, xmax, ymax, srid=None) -> Column:
+@_sql("ST_MakeEnvelope", "ST_MakeEnvelopeSRID",
+      kernel=kernels.make_envelope, rtype=BinaryType())
+def st_makeenvelope(xmin: Double, ymin: Double, xmax: Double, ymax: Double,
+                    srid: Int = None) -> Column:
     """#8 ST_MakeEnvelope (/root/reference/src/function/make_envelope.rs:11-110)."""
-    args = [_num(v, "double") for v in (xmin, ymin, xmax, ymax)]
-    if srid is None:
-        return _make_envelope(*args)
-    return _make_envelope(*args, _num(srid, "int"))
 
 
-def st_intersects(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Intersects", kernel=kernels.intersects, rtype=BooleanType())
+def st_intersects(a: Geom, b: Geom) -> Column:
     """#9 ST_Intersects (/root/reference/src/function/intersects.rs:13-132)."""
-    return _intersects(_geom(a), _geom(b))
 
 
-_disjoint = _udf(kernels.disjoint, BooleanType())
-
-
-def st_disjoint(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Disjoint", kernel=kernels.disjoint, rtype=BooleanType())
+def st_disjoint(a: Geom, b: Geom) -> Column:
     """NOT ST_Intersects, with the same fast paths (PostGIS
     ST_Disjoint; beyond-reference utility)."""
-    return _disjoint(_geom(a), _geom(b))
 
 
-def st_covers(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Covers", kernel=kernels.covers, rtype=BooleanType())
+def st_covers(a: Geom, b: Geom) -> Column:
     """#10 ST_Covers (/root/reference/src/function/covers.rs:15-122)."""
-    return _covers(_geom(a), _geom(b))
 
 
-def st_coveredby(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_CoveredBy", kernel=kernels.covered_by, rtype=BooleanType())
+def st_coveredby(a: Geom, b: Geom) -> Column:
     """#11 ST_CoveredBy (/root/reference/src/function/covered_by.rs:14-121)."""
-    return _covered_by(_geom(a), _geom(b))
 
 
-def st_equals(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Equals", kernel=kernels.equals, rtype=BooleanType())
+def st_equals(a: Geom, b: Geom) -> Column:
     """#12 ST_Equals — topological (/root/reference/src/function/equals.rs:15-122)."""
-    return _equals(_geom(a), _geom(b))
 
 
-def st_translate(g: GeomLike, dx, dy) -> Column:
+@_sql("ST_Translate", kernel=kernels.translate, rtype=BinaryType())
+def st_translate(g: Geom, dx: Double, dy: Double) -> Column:
     """#13 ST_Translate (/root/reference/src/function/translate.rs:11-103)."""
-    return _translate(_geom(g), _num(dx, "double"), _num(dy, "double"))
 
 
-def st_buffer(g: GeomLike, width, quadsegs=8) -> Column:
+@_sql("ST_Buffer", kernel=kernels.buffer, rtype=BinaryType())
+def st_buffer(g: Geom, width: Double, quadsegs: Int = 8) -> Column:
     """#14 ST_Buffer (/root/reference/src/function/buffer.rs:14-104)."""
-    return _buffer(_geom(g), _num(width, "double"), _num(quadsegs, "int"))
 
 
-_boundary_udf = _udf(kernels.boundary, BinaryType())
-
-
-def st_boundary(g: GeomLike) -> Column:
+@_sql("ST_Boundary", kernel=kernels.boundary, rtype=BinaryType())
+def st_boundary(g: Geom) -> Column:
     """#15 ST_Boundary (/root/reference/src/function/boundary.rs:14-87)."""
-    return _boundary_udf(_geom(g))
 
 
-def st_split(g: GeomLike, blade: GeomLike) -> Column:
+@_sql("ST_Split", kernel=kernels.split, rtype=BinaryType())
+def st_split(g: Geom, blade: Geom) -> Column:
     """#16 ST_Split — PostGIS semantics, not the reference's broken kernel
     (/root/reference/src/function/split.rs:148)."""
-    return _split(_geom(g), _geom(blade))
 
 
-def st_srid(g: GeomLike) -> Column:
+@_sql("ST_SRID", kernel=kernels.srid, rtype=IntegerType())
+def st_srid(g: Geom) -> Column:
     """#17 ST_SRID (/root/reference/src/function/srid.rs:11-72)."""
-    return _srid(_geom(g))
 
 
-def st_setsrid(g: GeomLike, srid) -> Column:
+@_sql("ST_SetSRID", kernel=kernels.set_srid, rtype=BinaryType())
+def st_setsrid(g: Geom, srid: Int) -> Column:
     """ST_SetSRID (PostGIS pair of #17 ST_SRID): stamp or clear the
     EWKB SRID header; NULL/<=0 clears (see kernels.set_srid)."""
-    return _set_srid(_geom(g), srid if isinstance(srid, Column)
-                     else F.lit(srid))
 
 
-def st_asmvtgeom(g: GeomLike, xmin, ymin, xmax, ymax) -> Column:
+@_sql("ST_AsMVTGeom", kernel=kernels.as_mvt_geom, rtype=BinaryType())
+def st_asmvtgeom(g: Geom, xmin: Double, ymin: Double, xmax: Double,
+                 ymax: Double) -> Column:
     """#18 ST_AsMVTGeom (/root/reference/src/function/as_mvt_geom.rs:13-102).
     The reference signature takes (geom, Box2d); pass the box as four
     doubles or a Box2D struct column via ``st_asmvtgeom_box``."""
-    return _as_mvt_geom(_geom(g), _num(xmin, "double"), _num(ymin, "double"),
-                        _num(xmax, "double"), _num(ymax, "double"))
 
 
-def st_asmvtgeom_box(g: GeomLike, box: Column) -> Column:
+def st_asmvtgeom_box(g: Geom, box: Column) -> Column:
     """#18 variant taking a Box2D struct column (matches the reference's
     (geom, Box2d) signature exactly)."""
-    return _as_mvt_geom(_geom(g), box["xmin"], box["ymin"], box["xmax"], box["ymax"])
+    return st_asmvtgeom(g, box["xmin"], box["ymin"], box["xmax"], box["ymax"])
 
 
-def st_npoints(g: GeomLike) -> Column:
+@_sql("ST_NPoints", kernel=kernels.npoints, rtype=IntegerType())
+def st_npoints(g: Geom) -> Column:
     """Vertex count (PostGIS ST_NPoints; beyond-reference utility)."""
-    return _npoints(_geom(g))
 
 
-def st_area(g: GeomLike) -> Column:
+@_sql("ST_Area", kernel=kernels.area, rtype=DoubleType())
+def st_area(g: Geom) -> Column:
     """Planar area (PostGIS ST_Area; beyond-reference utility —
     shells minus holes, 0 for points/lines)."""
-    return _area(_geom(g))
 
 
-def st_point(x, y) -> Column:
+@_sql("ST_Point", kernel=kernels.st_point, rtype=BinaryType())
+def st_point(x: Double, y: Double) -> Column:
     """Fast point constructor (PostGIS ST_Point; no direct reference
     analogue — used to derive fixture geometry, FIXTURES.md §2)."""
-    return _point(_num(x, "double"), _num(y, "double"))
 
 
-_length = _udf(kernels.length, DoubleType())
-_perimeter = _udf(kernels.perimeter, DoubleType())
-_centroid = _udf(kernels.centroid, BinaryType())
-_envelope = _udf(kernels.envelope, BinaryType())
-_convex_hull = _udf(kernels.convex_hull, BinaryType())
-_simplify = _udf(kernels.simplify, BinaryType())
-_line_interp = _udf(kernels.line_interpolate_point, BinaryType())
-_line_locate = _udf(kernels.line_locate_point, DoubleType())
-_geohash = _udf(kernels.st_geohash, StringType())
-_azimuth = _udf(kernels.st_azimuth, DoubleType())
-_closest_point = _udf(kernels.closest_point, BinaryType())
-_distance = _udf(kernels.distance, DoubleType())
-_dwithin = _udf(kernels.dwithin, BooleanType())
-_contains = _udf(kernels.st_contains, BooleanType())
-_within = _udf(kernels.st_within, BooleanType())
-_touches = _udf(kernels.st_touches, BooleanType())
-_overlaps = _udf(kernels.st_overlaps, BooleanType())
-_crosses = _udf(kernels.st_crosses, BooleanType())
-_is_empty = _udf(kernels.st_is_empty, BooleanType())
-_dimension = _udf(kernels.st_dimension, IntegerType())
-_exterior_ring = _udf(kernels.st_exterior_ring, BinaryType())
-_interior_ring_n = _udf(kernels.st_interior_ring_n, BinaryType())
-_num_interior_rings = _udf(kernels.st_num_interior_rings, IntegerType())
-_bounding_diagonal = _udf(kernels.st_bounding_diagonal, BinaryType())
-_distance_sphere = _udf(kernels.st_distance_sphere, DoubleType())
-_distance_spheroid = _udf(kernels.st_distance_spheroid, DoubleType())
-_area_sphere = _udf(kernels.st_area_sphere, DoubleType())
-_length_sphere = _udf(kernels.st_length_sphere, DoubleType())
-_perimeter_sphere = _udf(kernels.st_perimeter_sphere, DoubleType())
-_max_distance = _udf(kernels.st_max_distance, DoubleType())
-_longest_line = _udf(kernels.st_longest_line, BinaryType())
-_build_area = _udf(kernels.st_build_area, BinaryType())
-_geometric_median = _udf(kernels.st_geometric_median, BinaryType())
-_azimuth_sphere = _udf(kernels.st_azimuth_sphere, DoubleType())
-_project_sphere = _udf(kernels.st_project_sphere, BinaryType())
-_project_spheroid = _udf(kernels.st_project_spheroid, BinaryType())
-_tile_envelope = _udf(kernels.st_tile_envelope, BinaryType())
-_normalize = _udf(kernels.st_normalize, BinaryType())
-_offset_curve = _udf(kernels.st_offset_curve, BinaryType())
-_shared_paths = _udf(kernels.st_shared_paths, BinaryType())
-_clip_by_box = _udf(kernels.st_clip_by_box, BinaryType())
-_mic_center = _udf(kernels.st_max_inscribed_center, BinaryType())
-_mic_radius = _udf(kernels.st_max_inscribed_radius, DoubleType())
-_snap = _udf(kernels.st_snap, BinaryType())
-_delaunay = _udf(kernels.st_delaunay_triangles, BinaryType())
-_voronoi = _udf(kernels.st_voronoi_polygons, BinaryType())
-_concave_hull = _udf(kernels.st_concave_hull, BinaryType())
-_generate_points = _udf(kernels.st_generate_points, BinaryType())
-_is_closed = _udf(kernels.st_is_closed, BooleanType())
-_is_ring = _udf(kernels.st_is_ring, BooleanType())
-_is_simple = _udf(kernels.st_is_simple, BooleanType())
-_is_valid = _udf(kernels.st_is_valid, BooleanType())
-_is_valid_reason = _udf(kernels.st_is_valid_reason, StringType())
-_point_on_surface = _udf(kernels.st_point_on_surface, BinaryType())
-_hausdorff = _udf(kernels.st_hausdorff, DoubleType())
-_frechet = _udf(kernels.st_frechet, DoubleType())
-_affine = _udf(kernels.st_affine, BinaryType())
-_expand = _udf(kernels.st_expand, BinaryType())
-_angle = _udf(kernels.st_angle, DoubleType())
-_remove_repeated = _udf(kernels.st_remove_repeated_points, BinaryType())
-_snap_to_grid = _udf(kernels.st_snap_to_grid, BinaryType())
-_add_point = _udf(kernels.st_add_point, BinaryType())
-_set_point = _udf(kernels.st_set_point, BinaryType())
-_remove_point = _udf(kernels.st_remove_point, BinaryType())
-_multi = _udf(kernels.st_multi, BinaryType())
-_collection_extract = _udf(kernels.st_collection_extract, BinaryType())
-_collection_homogenize = _udf(kernels.st_collection_homogenize, BinaryType())
-_dump = _udf(kernels.st_dump, ArrayType(BinaryType()))
-_dump_points = _udf(kernels.st_dump_points, ArrayType(BinaryType()))
-_relate = _udf(kernels.st_relate, StringType())
-_relate_pattern = _udf(kernels.st_relate_pattern, BooleanType())
-_relate_match = _udf(kernels.st_relate_match, BooleanType())
-_intersection = _udf(kernels.geom_intersection, BinaryType())
-_union_pair = _udf(kernels.geom_union, BinaryType())
-_difference = _udf(kernels.geom_difference, BinaryType())
-_union_fold = _udf(kernels.st_union_all, BinaryType())
-_symdifference = _udf(kernels.geom_symdifference, BinaryType())
-_reverse = _udf(kernels.st_reverse, BinaryType())
-_flip = _udf(kernels.st_flip_coordinates, BinaryType())
-_rotate = _udf(kernels.st_rotate, BinaryType())
-_scale = _udf(kernels.st_scale2, BinaryType())
-_segmentize = _udf(kernels.st_segmentize, BinaryType())
-_chaikin = _udf(kernels.st_chaikin_smoothing, BinaryType())
-_simplify_vw = _udf(kernels.st_simplify_vw, BinaryType())
-_line_substring = _udf(kernels.st_line_substring, BinaryType())
-_reduce_precision = _udf(kernels.st_reduce_precision, BinaryType())
-_line_merge = _udf(kernels.st_line_merge, BinaryType())
-_subdivide = _udf(kernels.st_subdivide, ArrayType(BinaryType()))
-_polygonize = _udf(kernels.st_polygonize, BinaryType())
-_minbound_center = _udf(kernels.st_minbound_center, BinaryType())
-_minbound_radius = _udf(kernels.st_minbound_radius, DoubleType())
-_oriented_envelope = _udf(kernels.st_oriented_envelope, BinaryType())
-_node = _udf(kernels.st_node, BinaryType())
-_make_valid = _udf(kernels.st_make_valid, BinaryType())
-_shortest_line = _udf(kernels.st_shortest_line, BinaryType())
-_project = _udf(kernels.st_project, BinaryType())
-_polygonize_fold = _udf(kernels.st_polygonize_all, BinaryType())
-
-
-def st_length(g: GeomLike) -> Column:
+@_sql("ST_Length", kernel=kernels.length, rtype=DoubleType())
+def st_length(g: Geom) -> Column:
     """Line length (PostGIS ST_Length; beyond-reference utility —
     0 for points/polygons, see st_perimeter)."""
-    return _length(_geom(g))
 
 
-def st_perimeter(g: GeomLike) -> Column:
+@_sql("ST_Perimeter", kernel=kernels.perimeter, rtype=DoubleType())
+def st_perimeter(g: Geom) -> Column:
     """Polygon ring length incl. holes (PostGIS ST_Perimeter;
     beyond-reference utility)."""
-    return _perimeter(_geom(g))
 
 
-def st_centroid(g: GeomLike) -> Column:
+@_sql("ST_Centroid", kernel=kernels.centroid, rtype=BinaryType())
+def st_centroid(g: Geom) -> Column:
     """Centroid of the highest-dimension components (PostGIS/GEOS
     ST_Centroid; beyond-reference utility)."""
-    return _centroid(_geom(g))
 
 
-def st_envelope(g: GeomLike) -> Column:
+@_sql("ST_Envelope", kernel=kernels.envelope, rtype=BinaryType())
+def st_envelope(g: Geom) -> Column:
     """Bounding box as a geometry, with PostGIS degenerate forms
     (POINT / LINESTRING for collapsed extents; ST_Envelope;
     beyond-reference utility)."""
-    return _envelope(_geom(g))
 
 
-def st_convexhull(g: GeomLike) -> Column:
+@_sql("ST_ConvexHull", kernel=kernels.convex_hull, rtype=BinaryType())
+def st_convexhull(g: Geom) -> Column:
     """Convex hull with GEOS degenerate semantics, canonical-CCW shell
     (PostGIS ST_ConvexHull; beyond-reference utility)."""
-    return _convex_hull(_geom(g))
 
 
-def st_simplify(g: GeomLike, tolerance) -> Column:
+@_sql("ST_Simplify", kernel=kernels.simplify, rtype=BinaryType())
+def st_simplify(g: Geom, tolerance: Double) -> Column:
     """Douglas-Peucker simplification, non-topology-preserving
     (PostGIS ST_Simplify; beyond-reference utility)."""
-    return _simplify(_geom(g), _num(tolerance, "double"))
 
 
-def st_lineinterpolatepoint(g: GeomLike, fraction) -> Column:
+@_sql("ST_LineInterpolatePoint",
+      kernel=kernels.line_interpolate_point, rtype=BinaryType())
+def st_lineinterpolatepoint(g: Geom, fraction: Double) -> Column:
     """Point at ``fraction`` of a LINESTRING's length, clamped to [0,1]
     (PostGIS ST_LineInterpolatePoint; beyond-reference utility)."""
-    return _line_interp(_geom(g), _num(fraction, "double"))
 
 
-def st_geohash(g: GeomLike, precision=0) -> Column:
+@_sql("ST_GeoHash", kernel=kernels.st_geohash, rtype=StringType())
+def st_geohash(g: Geom, precision: Int = 0) -> Column:
     """Base-32 geohash of a lon/lat POINT (PostGIS ST_GeoHash;
     beyond-reference utility) — THE cheap spatial bucketing key for
     equi-join/group-by pipelines. precision <= 0 (the default, PostGIS
     parity) means full precision (20 chars)."""
-    return _geohash(_geom(g), _num(precision, "int"))
 
 
-def st_azimuth(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Azimuth", kernel=kernels.st_azimuth, rtype=DoubleType())
+def st_azimuth(a: Geom, b: Geom) -> Column:
     """Clockwise angle from north of a->b in [0, 2*pi); NULL for
     coincident points (PostGIS ST_Azimuth; beyond-reference)."""
-    return _azimuth(_geom(a), _geom(b))
 
 
-def st_closestpoint(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_ClosestPoint", kernel=kernels.closest_point, rtype=BinaryType())
+def st_closestpoint(a: Geom, b: Geom) -> Column:
     """The point ON a nearest to b — the witness of st_distance
     (PostGIS ST_ClosestPoint; beyond-reference utility)."""
-    return _closest_point(_geom(a), _geom(b))
 
 
-def st_contains(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Contains", kernel=kernels.st_contains, rtype=BooleanType())
+def st_contains(a: Geom, b: Geom) -> Column:
     """ST_Contains (PostGIS/DE-9IM; beyond-reference): covers + the
     interiors actually meet — a geometry does not contain its boundary
     (geo/relate.py)."""
-    return _contains(_geom(a), _geom(b))
 
 
-def st_within(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Within", kernel=kernels.st_within, rtype=BooleanType())
+def st_within(a: Geom, b: Geom) -> Column:
     """ST_Within — converse of st_contains (PostGIS; beyond-reference)."""
-    return _within(_geom(a), _geom(b))
 
 
-def st_touches(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Touches", kernel=kernels.st_touches, rtype=BooleanType())
+def st_touches(a: Geom, b: Geom) -> Column:
     """ST_Touches: intersect at boundaries only (PostGIS;
     beyond-reference)."""
-    return _touches(_geom(a), _geom(b))
 
 
-def st_overlaps(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Overlaps", kernel=kernels.st_overlaps, rtype=BooleanType())
+def st_overlaps(a: Geom, b: Geom) -> Column:
     """ST_Overlaps: same-dimension partial interior overlap, neither
     covering the other (PostGIS; beyond-reference)."""
-    return _overlaps(_geom(a), _geom(b))
 
 
-def st_crosses(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Crosses", kernel=kernels.st_crosses, rtype=BooleanType())
+def st_crosses(a: Geom, b: Geom) -> Column:
     """ST_Crosses: interiors meet in a lower dimension — lines crossing
     at points, a line passing through a polygon, a point set split
     across b (PostGIS; beyond-reference)."""
-    return _crosses(_geom(a), _geom(b))
 
 
-def _numcol(v) -> Column:
-    return v if isinstance(v, Column) else F.lit(float(v))
-
-
-def st_maxdistance(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_MaxDistance", kernel=kernels.st_max_distance, rtype=DoubleType())
+def st_maxdistance(a: Geom, b: Geom) -> Column:
     """PostGIS ST_MaxDistance: largest distance between the two
     geometries (attained at a vertex pair)."""
-    return _max_distance(_geom(a), _geom(b))
 
 
-def st_longestline(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_LongestLine", kernel=kernels.st_longest_line, rtype=BinaryType())
+def st_longestline(a: Geom, b: Geom) -> Column:
     """PostGIS ST_LongestLine: the max-distance witness pair as a
     LINESTRING (deterministic smallest-pair tie-break)."""
-    return _longest_line(_geom(a), _geom(b))
 
 
-def st_buildarea(g: GeomLike) -> Column:
+@_sql("ST_BuildArea", kernel=kernels.st_build_area, rtype=BinaryType())
+def st_buildarea(g: Geom) -> Column:
     """PostGIS ST_BuildArea: areal geometry from closed linework —
     even-odd nesting (enclosed faces become holes), dangling edges
     ignored, shared edges dissolved (geo/noding.py)."""
-    return _build_area(_geom(g))
 
 
-def st_geometricmedian(g: GeomLike) -> Column:
+@_sql("ST_GeometricMedian",
+      kernel=kernels.st_geometric_median, rtype=BinaryType())
+def st_geometricmedian(g: Geom) -> Column:
     """PostGIS ST_GeometricMedian over (multi)points: Weiszfeld
     iteration, fixed 8 rounds with 9-dp rounded iterates
     (deterministic; geo/metrics.py)."""
-    return _geometric_median(_geom(g))
 
 
-def st_azimuthsphere(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_AzimuthSphere", kernel=kernels.st_azimuth_sphere, rtype=DoubleType())
+def st_azimuthsphere(a: Geom, b: Geom) -> Column:
     """Initial great-circle bearing a->b, radians clockwise from north
     (geography twin of ST_Azimuth; geo/proj.py)."""
-    return _azimuth_sphere(_geom(a), _geom(b))
 
 
-def st_projectsphere(g: GeomLike, distance_m, azimuth) -> Column:
+@_sql("ST_ProjectSphere", kernel=kernels.st_project_sphere, rtype=BinaryType())
+def st_projectsphere(g: Geom, distance_m: Double, azimuth: Double) -> Column:
     """Geography ST_Project: destination point dist meters along the
     great circle at the given initial bearing (mean-radius sphere)."""
-    return _project_sphere(_geom(g), _numcol(distance_m),
-                           _numcol(azimuth))
 
 
-def st_projectspheroid(g: GeomLike, distance_m, azimuth) -> Column:
+@_sql("ST_ProjectSpheroid",
+      kernel=kernels.st_project_spheroid, rtype=BinaryType())
+def st_projectspheroid(g: Geom, distance_m: Double,
+                       azimuth: Double) -> Column:
     """Spheroid ST_Project (geography default): destination point
     dist meters along the WGS84 geodesic at the given initial bearing
     — Vincenty direct problem, deterministic fixed iterations
     (geo/proj.py vincenty_direct); the ellipsoidal twin of
     st_projectsphere."""
-    return _project_spheroid(_geom(g), _numcol(distance_m),
-                             _numcol(azimuth))
 
 
-def st_isempty(g: GeomLike) -> Column:
+@_sql("ST_IsEmpty", kernel=kernels.st_is_empty, rtype=BooleanType())
+def st_isempty(g: Geom) -> Column:
     """PostGIS ST_IsEmpty."""
-    return _is_empty(_geom(g))
 
 
-def st_dimension(g: GeomLike) -> Column:
+@_sql("ST_Dimension", kernel=kernels.st_dimension, rtype=IntegerType())
+def st_dimension(g: Geom) -> Column:
     """PostGIS ST_Dimension: topological dimension (max over members;
     0 for empty, matching PostGIS's 0-for-POINT convention)."""
-    return _dimension(_geom(g))
 
 
-def st_exteriorring(g: GeomLike) -> Column:
+@_sql("ST_ExteriorRing", kernel=kernels.st_exterior_ring, rtype=BinaryType())
+def st_exteriorring(g: Geom) -> Column:
     """PostGIS ST_ExteriorRing: polygon shell as a LINESTRING; NULL
     for non-polygons."""
-    return _exterior_ring(_geom(g))
 
 
-def st_interiorringn(g: GeomLike, n) -> Column:
+@_sql("ST_InteriorRingN",
+      kernel=kernels.st_interior_ring_n, rtype=BinaryType())
+def st_interiorringn(g: Geom, n: Int) -> Column:
     """PostGIS ST_InteriorRingN (1-based); NULL out of range."""
-    k = n if isinstance(n, Column) else F.lit(int(n))
-    return _interior_ring_n(_geom(g), k)
 
 
-def st_numinteriorrings(g: GeomLike) -> Column:
+@_sql("ST_NumInteriorRings",
+      kernel=kernels.st_num_interior_rings, rtype=IntegerType())
+def st_numinteriorrings(g: Geom) -> Column:
     """PostGIS ST_NumInteriorRings; NULL for non-polygons."""
-    return _num_interior_rings(_geom(g))
 
 
-def st_boundingdiagonal(g: GeomLike) -> Column:
+@_sql("ST_BoundingDiagonal",
+      kernel=kernels.st_bounding_diagonal, rtype=BinaryType())
+def st_boundingdiagonal(g: Geom) -> Column:
     """PostGIS ST_BoundingDiagonal: the bbox min->max corner
     LINESTRING (LINESTRING EMPTY for empty input)."""
-    return _bounding_diagonal(_geom(g))
 
 
-def st_tileenvelope(z, x, y) -> Column:
+@_sql("ST_TileEnvelope", kernel=kernels.st_tile_envelope, rtype=BinaryType())
+def st_tileenvelope(z: Int, x: Int, y: Int) -> Column:
     """PostGIS ST_TileEnvelope: XYZ web-mercator tile bounds as a
     POLYGON stamped SRID 3857; NULL for out-of-range tiles."""
-    def c(v):
-        return v if isinstance(v, Column) else F.lit(int(v))
-    return _tile_envelope(c(z), c(x), c(y))
 
 
-def st_normalize(g: GeomLike) -> Column:
+@_sql("ST_Normalize", kernel=kernels.st_normalize, rtype=BinaryType())
+def st_normalize(g: Geom) -> Column:
     """ST_Normalize (documented canonical form, geo/edit.py): shells
     CCW / holes CW at canonical starts, lines from their smaller
     endpoint, sorted multi-members. Idempotent; equality-after-
     normalize compares point sets."""
-    return _normalize(_geom(g))
 
 
-def st_distancesphere(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_DistanceSphere",
+      kernel=kernels.st_distance_sphere, rtype=DoubleType())
+def st_distancesphere(a: Geom, b: Geom) -> Column:
     """PostGIS ST_DistanceSphere: great-circle meters between POINT
     lon/lat geometries (haversine on the mean-radius sphere,
     geo/proj.py). For the JVM-native scale path over raw lon/lat
     DOUBLE columns, inline the same formula with pyspark.sql.functions
     trig — this kernel is the geometry-typed convenience."""
-    return _distance_sphere(_geom(a), _geom(b))
 
 
-def st_distancespheroid(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_DistanceSpheroid",
+      kernel=kernels.st_distance_spheroid, rtype=DoubleType())
+def st_distancespheroid(a: Geom, b: Geom) -> Column:
     """PostGIS ST_DistanceSpheroid (WGS84): ellipsoidal geodesic
     meters between POINT lon/lat geometries — Vincenty inverse with a
     deterministic fixed iteration count (geo/proj.py vincenty_m), the
     geography-ST_Distance-default twin of st_distancesphere (which
     underestimates by up to ~0.5% on the sphere)."""
-    return _distance_spheroid(_geom(a), _geom(b))
 
 
-def st_areasphere(g: GeomLike) -> Column:
+@_sql("ST_AreaSphere", kernel=kernels.st_area_sphere, rtype=DoubleType())
+def st_areasphere(g: Geom) -> Column:
     """Geography ST_Area twin: polygon area in m² on the mean-radius
     sphere (JPL edge-sum formula, geo/proj.py sphere_area_m2); holes
     subtracted, non-areal parts 0."""
-    return _area_sphere(_geom(g))
 
 
-def st_lengthsphere(g: GeomLike) -> Column:
+@_sql("ST_LengthSphere", kernel=kernels.st_length_sphere, rtype=DoubleType())
+def st_lengthsphere(g: Geom) -> Column:
     """Geography ST_Length twin: great-circle line length in meters
     (haversine per segment, geo/proj.py sphere_length_m); areal and
     puntal parts 0."""
-    return _length_sphere(_geom(g))
 
 
-def st_perimetersphere(g: GeomLike) -> Column:
+@_sql("ST_PerimeterSphere",
+      kernel=kernels.st_perimeter_sphere, rtype=DoubleType())
+def st_perimetersphere(g: Geom) -> Column:
     """Geography ST_Perimeter twin: great-circle ring length in meters
     over shells and holes (geo/proj.py sphere_perimeter_m)."""
-    return _perimeter_sphere(_geom(g))
 
 
-def st_offsetcurve(g: GeomLike, d, quadsegs=None) -> Column:
+@_sql("ST_OffsetCurve", kernel=kernels.st_offset_curve, rtype=BinaryType())
+def st_offsetcurve(g: Geom, d: Double, quadsegs: Int = None) -> Column:
     """PostGIS ST_OffsetCurve: one-sided parallel of a (Multi)LineString
     — positive d left, negative d right with reversed output. Round
     outward joins, trimmed inward joins (geo/offset.py)."""
-    if quadsegs is None:
-        return _offset_curve(_geom(g), _numcol(d))
-    q = quadsegs if isinstance(quadsegs, Column) else F.lit(int(quadsegs))
-    return _offset_curve(_geom(g), _numcol(d), q)
 
 
-def st_sharedpaths(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_SharedPaths", kernel=kernels.st_shared_paths, rtype=BinaryType())
+def st_sharedpaths(a: Geom, b: Geom) -> Column:
     """PostGIS ST_SharedPaths: GC of (same-direction, opposite-
     direction) collinear-overlap MULTILINESTRINGs."""
-    return _shared_paths(_geom(a), _geom(b))
 
 
-def st_clipbybox2d(g: GeomLike, xmin, ymin, xmax, ymax) -> Column:
+@_sql("ST_ClipByBox2D", kernel=kernels.st_clip_by_box, rtype=BinaryType())
+def st_clipbybox2d(g: Geom, xmin: Double, ymin: Double, xmax: Double,
+                   ymax: Double) -> Column:
     """PostGIS ST_ClipByBox2D: overlay intersection with an axis-
     aligned rectangle (exact ST_Intersection semantics)."""
-    return _clip_by_box(_geom(g), _numcol(xmin), _numcol(ymin),
-                        _numcol(xmax), _numcol(ymax))
 
 
-def st_maxinscribedcenter(g: GeomLike) -> Column:
+@_sql("ST_MaxInscribedCenter",
+      kernel=kernels.st_max_inscribed_center, rtype=BinaryType())
+def st_maxinscribedcenter(g: Geom) -> Column:
     """Center of PostGIS ST_MaximumInscribedCircle (polylabel quadtree
     refinement, geo/bounding.py). Split across two functions like the
     min-bounding pair — Spark SQL UDFs return one column."""
-    return _mic_center(_geom(g))
 
 
-def st_maxinscribedradius(g: GeomLike) -> Column:
+@_sql("ST_MaxInscribedRadius",
+      kernel=kernels.st_max_inscribed_radius, rtype=DoubleType())
+def st_maxinscribedradius(g: Geom) -> Column:
     """Radius of PostGIS ST_MaximumInscribedCircle."""
-    return _mic_radius(_geom(g))
 
 
-def st_snap(g: GeomLike, ref: GeomLike, tolerance) -> Column:
+@_sql("ST_Snap", kernel=kernels.st_snap, rtype=BinaryType())
+def st_snap(g: Geom, ref: Geom, tolerance: Double) -> Column:
     """PostGIS ST_Snap: vertices of g within tolerance of a ref vertex
     move onto it; ref vertices near g's segments are inserted."""
-    return _snap(_geom(g), _geom(ref), _numcol(tolerance))
 
 
-def st_delaunaytriangles(g: GeomLike, flags=None) -> Column:
+@_sql("ST_DelaunayTriangles",
+      kernel=kernels.st_delaunay_triangles, rtype=BinaryType())
+def st_delaunaytriangles(g: Geom, flags: Int = None) -> Column:
     """PostGIS ST_DelaunayTriangles (geo/triangulate.py Bowyer-Watson):
     flags 0/None = GEOMETRYCOLLECTION of triangles, 1 = MULTILINESTRING
     of unique edges."""
-    if flags is None:
-        return _delaunay(_geom(g))
-    f = flags if isinstance(flags, Column) else F.lit(int(flags))
-    return _delaunay(_geom(g), f)
 
 
-def st_voronoipolygons(g: GeomLike, extend_to: "GeomLike | None" = None
-                       ) -> Column:
+@_sql("ST_VoronoiPolygons",
+      kernel=kernels.st_voronoi_polygons, rtype=BinaryType())
+def st_voronoipolygons(g: Geom, extend_to: Geom = None) -> Column:
     """PostGIS ST_VoronoiPolygons: cell polygons per distinct site,
     clipped to the input bbox expanded by its larger dimension (or the
     extend_to envelope)."""
-    if extend_to is None:
-        return _voronoi(_geom(g))
-    return _voronoi(_geom(g), _geom(extend_to))
 
 
-def st_concavehull(g: GeomLike, ratio) -> Column:
+@_sql("ST_ConcaveHull", kernel=kernels.st_concave_hull, rtype=BinaryType())
+def st_concavehull(g: Geom, ratio: Double) -> Column:
     """PostGIS ST_ConcaveHull (edge-length-ratio chi-shape; ratio 1 =
     convex hull, smaller = tighter)."""
-    return _concave_hull(_geom(g), _numcol(ratio))
 
 
-def st_generatepoints(g: GeomLike, n, seed=None) -> Column:
+@_sql("ST_GeneratePoints",
+      kernel=kernels.st_generate_points, rtype=BinaryType())
+def st_generatepoints(g: Geom, n: Int, seed: Int = None) -> Column:
     """PostGIS ST_GeneratePoints: seeded deterministic uniform points
     inside a polygonal geometry."""
-    nn = n if isinstance(n, Column) else F.lit(int(n))
-    if seed is None:
-        return _generate_points(_geom(g), nn)
-    s = seed if isinstance(seed, Column) else F.lit(int(seed))
-    return _generate_points(_geom(g), nn, s)
 
 
-def st_isclosed(g: GeomLike) -> Column:
+@_sql("ST_IsClosed", kernel=kernels.st_is_closed, rtype=BooleanType())
+def st_isclosed(g: Geom) -> Column:
     """PostGIS ST_IsClosed: line start == end (all members for
     multi-lines); points/polygons are closed (geo/validity.py)."""
-    return _is_closed(_geom(g))
 
 
-def st_isring(g: GeomLike) -> Column:
+@_sql("ST_IsRing", kernel=kernels.st_is_ring, rtype=BooleanType())
+def st_isring(g: Geom) -> Column:
     """PostGIS ST_IsRing: closed AND simple LINESTRING."""
-    return _is_ring(_geom(g))
 
 
-def st_issimple(g: GeomLike) -> Column:
+@_sql("ST_IsSimple", kernel=kernels.st_is_simple, rtype=BooleanType())
+def st_issimple(g: Geom) -> Column:
     """PostGIS/OGC ST_IsSimple: no anomalous self-intersection."""
-    return _is_simple(_geom(g))
 
 
-def st_isvalid(g: GeomLike) -> Column:
+@_sql("ST_IsValid", kernel=kernels.st_is_valid, rtype=BooleanType())
+def st_isvalid(g: Geom) -> Column:
     """PostGIS ST_IsValid (geo/validity.py rule set; the interior-
     connectedness rule is documented out of scope)."""
-    return _is_valid(_geom(g))
 
 
-def st_isvalidreason(g: GeomLike) -> Column:
+@_sql("ST_IsValidReason",
+      kernel=kernels.st_is_valid_reason, rtype=StringType())
+def st_isvalidreason(g: Geom) -> Column:
     """PostGIS ST_IsValidReason: 'Valid Geometry' or the first
     violation with its [x y] location."""
-    return _is_valid_reason(_geom(g))
 
 
-def st_pointonsurface(g: GeomLike) -> Column:
+@_sql("ST_PointOnSurface",
+      kernel=kernels.st_point_on_surface, rtype=BinaryType())
+def st_pointonsurface(g: Geom) -> Column:
     """PostGIS ST_PointOnSurface: a point guaranteed ON the geometry
     (GEOS interior-point algorithms, geo/metrics.py)."""
-    return _point_on_surface(_geom(g))
 
 
-def st_hausdorffdistance(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_HausdorffDistance", kernel=kernels.st_hausdorff, rtype=DoubleType())
+def st_hausdorffdistance(a: Geom, b: Geom) -> Column:
     """PostGIS ST_HausdorffDistance (discrete form, vertex-to-geometry
     — what GEOS computes without densification)."""
-    return _hausdorff(_geom(a), _geom(b))
 
 
-def st_frechetdistance(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_FrechetDistance", kernel=kernels.st_frechet, rtype=DoubleType())
+def st_frechetdistance(a: Geom, b: Geom) -> Column:
     """PostGIS ST_FrechetDistance (discrete, ordered vertex walks —
     direction-sensitive unlike Hausdorff)."""
-    return _frechet(_geom(a), _geom(b))
 
 
-def st_affine(g: GeomLike, a, b, d, e, xoff, yoff) -> Column:
+@_sql("ST_Affine", kernel=kernels.st_affine, rtype=BinaryType())
+def st_affine(g: Geom, a: Double, b: Double, d: Double, e: Double,
+              xoff: Double, yoff: Double) -> Column:
     """PostGIS ST_Affine (2D): x' = a·x + b·y + xoff,
     y' = d·x + e·y + yoff (geo/edit.py; beyond-reference)."""
-    return _affine(_geom(g), _numcol(a), _numcol(b), _numcol(d),
-                   _numcol(e), _numcol(xoff), _numcol(yoff))
 
 
-def st_expand(g: GeomLike, dx, dy=None) -> Column:
+@_sql("ST_Expand", kernel=kernels.st_expand, rtype=BinaryType())
+def st_expand(g: Geom, dx: Double, dy: Double = None) -> Column:
     """PostGIS ST_Expand: bounding box grown by dx/dy, as a POLYGON."""
-    if dy is None:
-        return _expand(_geom(g), _numcol(dx))
-    return _expand(_geom(g), _numcol(dx), _numcol(dy))
 
 
-def st_angle(p1: GeomLike, p2: GeomLike, p3: GeomLike,
-             p4: "GeomLike | None" = None) -> Column:
+@_sql("ST_Angle", kernel=kernels.st_angle, rtype=DoubleType())
+def st_angle(p1: Geom, p2: Geom, p3: Geom, p4: Geom = None) -> Column:
     """PostGIS ST_Angle over POINTs: 3-point form = angle at vertex p2
     of p1-p2-p3; 4-point form = clockwise angle from direction p1→p2
     to p3→p4. Radians in [0, 2π)."""
-    if p4 is None:
-        return _angle(_geom(p1), _geom(p2), _geom(p3))
-    return _angle(_geom(p1), _geom(p2), _geom(p3), _geom(p4))
 
 
-def st_removerepeatedpoints(g: GeomLike, tolerance=None) -> Column:
+@_sql("ST_RemoveRepeatedPoints",
+      kernel=kernels.st_remove_repeated_points, rtype=BinaryType())
+def st_removerepeatedpoints(g: Geom, tolerance: Double = None) -> Column:
     """PostGIS ST_RemoveRepeatedPoints: consecutive vertices closer
     than the tolerance dissolved (exact duplicates by default)."""
-    if tolerance is None:
-        return _remove_repeated(_geom(g))
-    return _remove_repeated(_geom(g), _numcol(tolerance))
 
 
-def st_snaptogrid(g: GeomLike, size) -> Column:
+@_sql("ST_SnapToGrid", kernel=kernels.st_snap_to_grid, rtype=BinaryType())
+def st_snaptogrid(g: Geom, size: Double) -> Column:
     """PostGIS ST_SnapToGrid (origin 0): coords to grid multiples,
     duplicates dissolved, collapsed parts dropped."""
-    return _snap_to_grid(_geom(g), _numcol(size))
 
 
-def st_addpoint(g: GeomLike, pt: GeomLike, pos=None) -> Column:
+@_sql("ST_AddPoint", kernel=kernels.st_add_point, rtype=BinaryType())
+def st_addpoint(g: Geom, pt: Geom, pos: Int = None) -> Column:
     """PostGIS ST_AddPoint: insert a POINT into a LINESTRING before
     0-based index pos (default append)."""
-    if pos is None:
-        return _add_point(_geom(g), _geom(pt))
-    p = pos if isinstance(pos, Column) else F.lit(int(pos))
-    return _add_point(_geom(g), _geom(pt), p)
 
 
-def st_setpoint(g: GeomLike, pos, pt: GeomLike) -> Column:
+@_sql("ST_SetPoint", kernel=kernels.st_set_point, rtype=BinaryType())
+def st_setpoint(g: Geom, pos: Int, pt: Geom) -> Column:
     """PostGIS ST_SetPoint: replace vertex pos (negative from end) of a
     LINESTRING."""
-    p = pos if isinstance(pos, Column) else F.lit(int(pos))
-    return _set_point(_geom(g), p, _geom(pt))
 
 
-def st_removepoint(g: GeomLike, pos) -> Column:
+@_sql("ST_RemovePoint", kernel=kernels.st_remove_point, rtype=BinaryType())
+def st_removepoint(g: Geom, pos: Int) -> Column:
     """PostGIS ST_RemovePoint: drop vertex pos of a LINESTRING."""
-    p = pos if isinstance(pos, Column) else F.lit(int(pos))
-    return _remove_point(_geom(g), p)
 
 
-def st_multi(g: GeomLike) -> Column:
+@_sql("ST_Multi", kernel=kernels.st_multi, rtype=BinaryType())
+def st_multi(g: Geom) -> Column:
     """PostGIS ST_Multi: promote to the multi-type."""
-    return _multi(_geom(g))
 
 
-def st_collectionextract(g: GeomLike, dimtype) -> Column:
+@_sql("ST_CollectionExtract",
+      kernel=kernels.st_collection_extract, rtype=BinaryType())
+def st_collectionextract(g: Geom, dimtype: Int) -> Column:
     """PostGIS ST_CollectionExtract: members of type 1=points 2=lines
     3=polygons as a multi-geometry."""
-    t = dimtype if isinstance(dimtype, Column) else F.lit(int(dimtype))
-    return _collection_extract(_geom(g), t)
 
 
-def st_collectionhomogenize(g: GeomLike) -> Column:
+@_sql("ST_CollectionHomogenize",
+      kernel=kernels.st_collection_homogenize, rtype=BinaryType())
+def st_collectionhomogenize(g: Geom) -> Column:
     """PostGIS ST_CollectionHomogenize: simplest representation of the
     collection contents."""
-    return _collection_homogenize(_geom(g))
 
 
-def st_dump(g: GeomLike) -> Column:
+@_sql("ST_Dump", kernel=kernels.st_dump, rtype=ArrayType(BinaryType()))
+def st_dump(g: Geom) -> Column:
     """PostGIS ST_Dump, Spark-shaped: ARRAY of member WKBs — compose
     with explode() for the set-returning form."""
-    return _dump(_geom(g))
 
 
-def st_dumppoints(g: GeomLike) -> Column:
+@_sql("ST_DumpPoints",
+      kernel=kernels.st_dump_points, rtype=ArrayType(BinaryType()))
+def st_dumppoints(g: Geom) -> Column:
     """PostGIS ST_DumpPoints, Spark-shaped: ARRAY of vertex POINTs in
     coordinate order."""
-    return _dump_points(_geom(g))
 
 
-def st_relate(a: GeomLike, b: GeomLike,
+@_sql("ST_Relate", kernel=kernels.st_relate, rtype=StringType())
+def _relate_matrix(a: Geom, b: Geom) -> Column:
+    """st_relate without a pattern: the DE-9IM matrix string."""
+
+
+@_sql(kernel=kernels.st_relate_pattern, rtype=BooleanType())
+def _relate_pattern(a: Geom, b: Geom, pattern: Text) -> Column:
+    """st_relate with a pattern: the matrix-vs-pattern test."""
+
+
+def st_relate(a: Geom, b: Geom,
               pattern: "Column | str | None" = None) -> Column:
     """PostGIS ST_Relate (beyond-reference; geo/de9im.py): without a
     pattern, the 9-char DE-9IM matrix string of a vs b; with one, the
     boolean matrix-vs-pattern test. NULL for GeometryCollection /
     mixed-dimension inputs (GEOS refuses those too)."""
     if pattern is None:
-        return _relate(_geom(a), _geom(b))
-    pat = pattern if isinstance(pattern, Column) else F.lit(pattern)
-    return _relate_pattern(_geom(a), _geom(b), pat)
+        return _relate_matrix(a, b)
+    return _relate_pattern(a, b, pattern)
 
 
-def st_relatematch(matrix: "Column | str", pattern: "Column | str") -> Column:
+@_sql("ST_RelateMatch", kernel=kernels.st_relate_match, rtype=BooleanType())
+def st_relatematch(matrix: Text, pattern: Text) -> Column:
     """PostGIS ST_RelateMatch: DE-9IM matrix string vs intersection
     pattern ('T'/'F'/'0'/'1'/'2'/'*'). Pure string logic — usable on
     precomputed matrices. In SQL the 3-arg relate form is spelled
     st_relatematch(st_relate(a, b), pattern)."""
-    m = matrix if isinstance(matrix, Column) else F.lit(matrix)
-    p = pattern if isinstance(pattern, Column) else F.lit(pattern)
-    return _relate_match(m, p)
 
 
-def st_intersection(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Intersection", kernel=kernels.geom_intersection, rtype=BinaryType())
+def st_intersection(a: Geom, b: Geom) -> Column:
     """Geometric intersection (PostGIS ST_Intersection; beyond-reference
     — the reference has no set ops). Polygon×polygon is the dissolving
     boundary-classification overlay (geo/overlay.py); line/point
     operands clip; dimensional collapses are dropped (documented
     deviation: touching polygons -> POLYGON EMPTY, not LINESTRING)."""
-    return _intersection(_geom(a), _geom(b))
 
 
-def st_union(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Union", kernel=kernels.geom_union, rtype=BinaryType())
+def st_union(a: Geom, b: Geom) -> Column:
     """Pairwise geometric union (PostGIS ST_Union; beyond-reference).
     Areal inputs dissolve shared boundaries; mixed dimensions return
     GEOMETRYCOLLECTION((a - b), b). For the aggregate form see
     st_union_agg."""
-    return _union_pair(_geom(a), _geom(b))
 
 
-def st_difference(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Difference", kernel=kernels.geom_difference, rtype=BinaryType())
+def st_difference(a: Geom, b: Geom) -> Column:
     """Geometric difference a - b (PostGIS ST_Difference;
     beyond-reference). Lower-dimensional b leaves a unchanged."""
-    return _difference(_geom(a), _geom(b))
+
+
+# ST_UnionFromArray: the fold over one group's collected geometries
+_union_fold = _udf(kernels.st_union_all, BinaryType())
 
 
 def st_union_agg(g: Column) -> Column:
@@ -890,13 +830,16 @@ def st_union_agg(g: Column) -> Column:
     return _union_fold(F.collect_list(g))
 
 
-def st_polygonize(g: GeomLike) -> Column:
+@_sql("ST_Polygonize", kernel=kernels.st_polygonize, rtype=BinaryType())
+def st_polygonize(g: Geom) -> Column:
     """ST_Polygonize of ONE geometry's linework (typically a
     MultiLineString/collection; PostGIS parity on correctly-noded
     input — no noding is performed). Bounded faces come back as
     (Multi)Polygon, holes assigned, GEOMETRYCOLLECTION EMPTY when the
     linework closes nothing."""
-    return _polygonize(_geom(g))
+
+
+_polygonize_fold = _udf(kernels.st_polygonize_all, BinaryType())
 
 
 def st_polygonize_agg(g: Column) -> Column:
@@ -907,220 +850,211 @@ def st_polygonize_agg(g: Column) -> Column:
     return _polygonize_fold(F.collect_list(g))
 
 
-def st_node(g: GeomLike) -> Column:
+@_sql("ST_Node", kernel=kernels.st_node, rtype=BinaryType())
+def st_node(g: Geom) -> Column:
     """ST_Node: fully node lineal input — every path split at each
     crossing / endpoint touch, duplicate pieces dissolved (PostGIS;
     beyond-reference)."""
-    return _node(_geom(g))
 
 
-def st_makevalid(g: GeomLike) -> Column:
+@_sql("ST_MakeValid", kernel=kernels.st_make_valid, rtype=BinaryType())
+def st_makevalid(g: Geom) -> Column:
     """ST_MakeValid, LINEWORK method (PostGIS; beyond-reference): node
     the boundary rings, polygonize the arrangement, keep odd even-odd
     parity faces, drop zero-area spikes. Bowties split, pinches become
     multipolygons, overlapping multipolygon members XOR (the documented
     linework behavior); valid input round-trips. Non-areal input is
     returned unchanged."""
-    return _make_valid(_geom(g))
 
 
-def st_shortestline(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_ShortestLine", kernel=kernels.st_shortest_line, rtype=BinaryType())
+def st_shortestline(a: Geom, b: Geom) -> Column:
     """ST_ShortestLine: the 2-point LINESTRING realizing
     distance(a, b) (PostGIS; beyond-reference). Intersecting operands
     yield the degenerate zero-length line at the shared witness."""
-    return _shortest_line(_geom(a), _geom(b))
 
 
-def st_project(g: GeomLike, distance, azimuth) -> Column:
+@_sql("ST_Project", kernel=kernels.st_project, rtype=BinaryType())
+def st_project(g: Geom, distance: Double, azimuth: Double) -> Column:
     """ST_Project (planar geometry form): point ``distance`` away along
     ``azimuth`` radians clockwise from north — the ST_Azimuth
     convention, so st_azimuth(p, st_project(p, d, az)) == az."""
-    return _project(_geom(g), _num(distance, "double"),
-                    _num(azimuth, "double"))
 
 
-def st_minimumboundingradius(g: GeomLike) -> Column:
+@_sql("ST_MinimumBoundingRadius",
+      kernel=kernels.st_minbound_radius, rtype=DoubleType())
+def st_minimumboundingradius(g: Geom) -> Column:
     """Radius of the smallest enclosing circle (the radius field of
     PostGIS ST_MinimumBoundingRadius's record; the center is
     st_minboundcenter — Spark SQL UDFs return one column, so the
     record splits into two functions, documented deviation)."""
-    return _minbound_radius(_geom(g))
 
 
-def st_minboundcenter(g: GeomLike) -> Column:
+@_sql("ST_MinBoundCenter",
+      kernel=kernels.st_minbound_center, rtype=BinaryType())
+def st_minboundcenter(g: Geom) -> Column:
     """Center POINT of the smallest enclosing circle (the center field
     of PostGIS ST_MinimumBoundingRadius's record)."""
-    return _minbound_center(_geom(g))
 
 
-def st_orientedenvelope(g: GeomLike) -> Column:
+@_sql("ST_OrientedEnvelope",
+      kernel=kernels.st_oriented_envelope, rtype=BinaryType())
+def st_orientedenvelope(g: Geom) -> Column:
     """ST_OrientedEnvelope: minimum-area rotated rectangle (PostGIS;
     beyond-reference). Degenerates like PostGIS (point/collinear
     inputs); deterministic canonical ring start."""
-    return _oriented_envelope(_geom(g))
 
 
-def st_symdifference(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_SymDifference",
+      kernel=kernels.geom_symdifference, rtype=BinaryType())
+def st_symdifference(a: Geom, b: Geom) -> Column:
     """ST_SymDifference — points in exactly one operand (PostGIS;
     beyond-reference). Areal pairs are a single overlay pass
     (geo/overlay.py symdifference)."""
-    return _symdifference(_geom(a), _geom(b))
 
 
-def st_reverse(g: GeomLike) -> Column:
+@_sql("ST_Reverse", kernel=kernels.st_reverse, rtype=BinaryType())
+def st_reverse(g: Geom) -> Column:
     """ST_Reverse: vertex order flipped (PostGIS; beyond-reference)."""
-    return _reverse(_geom(g))
 
 
-def st_flipcoordinates(g: GeomLike) -> Column:
+@_sql("ST_FlipCoordinates",
+      kernel=kernels.st_flip_coordinates, rtype=BinaryType())
+def st_flipcoordinates(g: Geom) -> Column:
     """ST_FlipCoordinates: (x, y) -> (y, x) (PostGIS;
     beyond-reference)."""
-    return _flip(_geom(g))
 
 
-def st_rotate(g: GeomLike, angle, x0=None, y0=None) -> Column:
+@_sql("ST_Rotate", kernel=kernels.st_rotate, rtype=BinaryType())
+def st_rotate(g: Geom, angle: Double, x0: Double = None,
+              y0: Double = None) -> Column:
     """ST_Rotate: CCW radians about (x0, y0), origin by default
     (PostGIS; beyond-reference)."""
-    if x0 is None:
-        return _rotate(_geom(g), _num(angle, "double"))
-    return _rotate(_geom(g), _num(angle, "double"),
-                   _num(x0, "double"), _num(y0 if y0 is not None else 0.0,
-                                            "double"))
 
 
-def st_scale(g: GeomLike, sx, sy) -> Column:
+@_sql("ST_Scale", kernel=kernels.st_scale2, rtype=BinaryType())
+def st_scale(g: Geom, sx: Double, sy: Double) -> Column:
     """ST_Scale about the origin (PostGIS; beyond-reference)."""
-    return _scale(_geom(g), _num(sx, "double"), _num(sy, "double"))
 
 
-def st_segmentize(g: GeomLike, max_len) -> Column:
+@_sql("ST_Segmentize", kernel=kernels.st_segmentize, rtype=BinaryType())
+def st_segmentize(g: Geom, max_len: Double) -> Column:
     """ST_Segmentize: no segment longer than max_len, minimal equal
     splits per segment (PostGIS/GEOS; beyond-reference)."""
-    return _segmentize(_geom(g), _num(max_len, "double"))
 
 
-def st_chaikinsmoothing(g: GeomLike, iterations=1) -> Column:
+@_sql("ST_ChaikinSmoothing",
+      kernel=kernels.st_chaikin_smoothing, rtype=BinaryType())
+def st_chaikinsmoothing(g: Geom, iterations: Double = 1) -> Column:
     """ST_ChaikinSmoothing: iterative 1/4–3/4 corner cutting on lines
     and polygon rings; iterations clamp to [1, 5] (PostGIS parity,
     geo/edit.py)."""
-    return _chaikin(_geom(g), _num(iterations, "double"))
 
 
-def st_simplifyvw(g: GeomLike, tolerance) -> Column:
+@_sql("ST_SimplifyVW", kernel=kernels.st_simplify_vw, rtype=BinaryType())
+def st_simplifyvw(g: Geom, tolerance: Double) -> Column:
     """ST_SimplifyVW: Visvalingam–Whyatt area-threshold simplification
     (smallest effective triangle removed first; rings keep at least a
     triangle — geo/edit.py)."""
-    return _simplify_vw(_geom(g), _num(tolerance, "double"))
 
 
-def st_linesubstring(g: GeomLike, start, end) -> Column:
+@_sql("ST_LineSubstring", kernel=kernels.st_line_substring, rtype=BinaryType())
+def st_linesubstring(g: Geom, start: Double, end: Double) -> Column:
     """ST_LineSubstring: the fractional arc-length window [start, end]
     of a LINESTRING; start == end yields the interpolated point
     (PostGIS; beyond-reference)."""
-    return _line_substring(_geom(g), _num(start, "double"),
-                           _num(end, "double"))
 
 
-def st_reduceprecision(g: GeomLike, gridsize) -> Column:
+@_sql("ST_ReducePrecision",
+      kernel=kernels.st_reduce_precision, rtype=BinaryType())
+def st_reduceprecision(g: Geom, gridsize: Double) -> Column:
     """Grid-snap coordinates to multiples of gridsize (PostGIS
     ST_ReducePrecision minus the GEOS validity repair — documented;
     beyond-reference)."""
-    return _reduce_precision(_geom(g), _num(gridsize, "double"))
 
 
-def st_linemerge(g: GeomLike) -> Column:
+@_sql("ST_LineMerge", kernel=kernels.st_line_merge, rtype=BinaryType())
+def st_linemerge(g: Geom) -> Column:
     """ST_LineMerge: sew (Multi)LineString linework at degree-2 nodes,
     reversing pieces as needed (PostGIS/GEOS semantics with a
     deterministic input-order chain start; beyond-reference). Non-lineal
     input yields GEOMETRYCOLLECTION EMPTY."""
-    return _line_merge(_geom(g))
 
 
-def st_subdivide(g: GeomLike, max_vertices=128) -> Column:
+@_sql("ST_Subdivide",
+      kernel=kernels.st_subdivide, rtype=ArrayType(BinaryType()))
+def st_subdivide(g: Geom, max_vertices: Int = 128) -> Column:
     """ST_Subdivide: recursive longer-axis halving until every piece has
     <= max_vertices vertices (PostGIS; beyond-reference). Returns
     array<wkb> — explode() it for the PostGIS set-returning shape. The
     pre-shard step that keeps per-pair refinement bounded when joining
     continent-sized polygons at scale."""
-    return _subdivide(_geom(g), _num(max_vertices, "int"))
 
 
-def st_linelocatepoint(g: GeomLike, p: GeomLike) -> Column:
+@_sql("ST_LineLocatePoint",
+      kernel=kernels.line_locate_point, rtype=DoubleType())
+def st_linelocatepoint(g: Geom, p: Geom) -> Column:
     """Fraction of the line's length at the closest point to p —
     the inverse of st_lineinterpolatepoint (PostGIS ST_LineLocatePoint;
     beyond-reference utility)."""
-    return _line_locate(_geom(g), _geom(p))
 
 
-def st_distance(a: GeomLike, b: GeomLike) -> Column:
+@_sql("ST_Distance", kernel=kernels.distance, rtype=DoubleType())
+def st_distance(a: Geom, b: Geom) -> Column:
     """Minimum planar distance; NULL for empty operands (PostGIS
     ST_Distance; beyond-reference utility)."""
-    return _distance(_geom(a), _geom(b))
 
 
-_transform = _udf(kernels.transform_srid, BinaryType())
-
-
-def st_transform(g: GeomLike, to_srid, from_srid=None) -> Column:
+@_sql("ST_Transform", kernel=kernels.transform_srid, rtype=BinaryType())
+def st_transform(g: Geom, to_srid: Int, from_srid: Int = None) -> Column:
     """ST_Transform for EPSG:4326 <-> EPSG:3857 (spherical web
     mercator, closed-form — geo/proj.py; beyond-reference utility).
     PostGIS semantics: source SRID from the geometry's EWKB header, or
     ``from_srid`` for plain-WKB inputs; output stamped with to_srid."""
-    if from_srid is None:
-        return _transform(_geom(g), _num(to_srid, "int"))
-    return _transform(_geom(g), _num(to_srid, "int"),
-                       _num(from_srid, "int"))
 
 
-_x = _udf(kernels.st_x, DoubleType())
-_y = _udf(kernels.st_y, DoubleType())
-_num_geometries = _udf(kernels.num_geometries, IntegerType())
-_geometry_n = _udf(kernels.geometry_n, BinaryType())
-_point_n = _udf(kernels.point_n, BinaryType())
-
-
-def st_x(g: GeomLike) -> Column:
+@_sql("ST_X", kernel=kernels.st_x, rtype=DoubleType())
+def st_x(g: Geom) -> Column:
     """x of a POINT, NULL otherwise (PostGIS ST_X; beyond-reference)."""
-    return _x(_geom(g))
 
 
-def st_y(g: GeomLike) -> Column:
+@_sql("ST_Y", kernel=kernels.st_y, rtype=DoubleType())
+def st_y(g: Geom) -> Column:
     """y of a POINT, NULL otherwise (PostGIS ST_Y; beyond-reference)."""
-    return _y(_geom(g))
 
 
-def st_numgeometries(g: GeomLike) -> Column:
+@_sql("ST_NumGeometries", kernel=kernels.num_geometries, rtype=IntegerType())
+def st_numgeometries(g: Geom) -> Column:
     """Member count (PostGIS ST_NumGeometries; beyond-reference)."""
-    return _num_geometries(_geom(g))
 
 
-def st_geometryn(g: GeomLike, n) -> Column:
+@_sql("ST_GeometryN", kernel=kernels.geometry_n, rtype=BinaryType())
+def st_geometryn(g: Geom, n: Int) -> Column:
     """1-based nth member (PostGIS ST_GeometryN; beyond-reference)."""
-    return _geometry_n(_geom(g), _num(n, "int"))
 
 
-def st_pointn(g: GeomLike, n) -> Column:
+@_sql("ST_PointN", kernel=kernels.point_n, rtype=BinaryType())
+def st_pointn(g: Geom, n: Int) -> Column:
     """1-based nth vertex of a LINESTRING, negative from the end
     (PostGIS ST_PointN; beyond-reference)."""
-    return _point_n(_geom(g), _num(n, "int"))
 
 
-def st_startpoint(g: GeomLike) -> Column:
+@_sql("ST_StartPoint", kernel=kernels.start_point, rtype=BinaryType())
+def st_startpoint(g: Geom) -> Column:
     """First vertex of a LINESTRING (PostGIS ST_StartPoint)."""
-    return _point_n(_geom(g), F.lit(1))
 
 
-def st_endpoint(g: GeomLike) -> Column:
+@_sql("ST_EndPoint", kernel=kernels.end_point, rtype=BinaryType())
+def st_endpoint(g: Geom) -> Column:
     """Last vertex of a LINESTRING (PostGIS ST_EndPoint)."""
-    return _point_n(_geom(g), F.lit(-1))
 
 
-def st_dwithin(a: GeomLike, b: GeomLike, d) -> Column:
+@_sql("ST_DWithin", kernel=kernels.dwithin, rtype=BooleanType())
+def st_dwithin(a: Geom, b: Geom, d: Double) -> Column:
     """distance(a, b) <= d (PostGIS ST_DWithin; beyond-reference
     utility). For distance-band JOINS prefer expanding one side's bbox
     by d and using the grid/broadcast spatial-join machinery
     (operators/spatial_join.py) with this as the exact refinement."""
-    return _dwithin(_geom(a), _geom(b), _num(d, "double"))
 
 
 # -- extent aggregate ---------------------------------------------------
@@ -1139,7 +1073,7 @@ def st_extent_agg(bbox: Column) -> Column:
     )
 
 
-def st_extent(g: GeomLike) -> Column:
+def st_extent(g: Geom) -> Column:
     """#19 st_extent directly over a geometry column. Prefer materializing
     ``box2d(geom)`` once (``df.withColumn("bbox", box2d(g))``) then
     ``st_extent_agg(col("bbox"))`` — one Python eval instead of four."""
@@ -1211,201 +1145,57 @@ def _uagg_extent():
 _extent_sql = _uagg_extent()
 _box2d_from_array = _udf(kernels.box2d_from_array, BOX2D_TYPE)
 
+
 GEOM_BBOX_TYPE = StructType(
     [StructField("geom", BinaryType(), True)] + list(BOX2D_TYPE.fields))
-_geom_bbox_from_text = _udf(kernels.geom_bbox_from_text, GEOM_BBOX_TYPE)
 
 
-def st_geom_with_bbox_from_text(wkt: Union[Column, str]) -> Column:
+@_sql(kernel=kernels.geom_bbox_from_text, rtype=GEOM_BBOX_TYPE)
+def st_geom_with_bbox_from_text(wkt: Text) -> Column:
     """Fused ST_GeomFromText + Box2D: struct{geom,xmin,ymin,xmax,ymax} in
     one Python crossing instead of two chained pandas-UDF stages. Use at
     ingest so downstream spatial joins read native bbox columns
     (ensure_bbox skips its Python pass when they exist)."""
-    c = wkt if isinstance(wkt, Column) else F.lit(wkt)
-    return _geom_bbox_from_text(c)
 
 
-_point_bbox_from_xy = _udf(kernels.point_bbox_from_xy, GEOM_BBOX_TYPE)
-
-
-def st_point_with_bbox(x, y) -> Column:
+@_sql(kernel=kernels.point_bbox_from_xy, rtype=GEOM_BBOX_TYPE)
+def st_point_with_bbox(x: Double, y: Double) -> Column:
     """Fused ST_Point + Box2D (r11): struct{geom,xmin,ymin,xmax,ymax}
     in ONE Python crossing — the POINT analogue of
     st_geom_with_bbox_from_text, for ingest paths that derive point
     geometry from coordinate columns."""
-    return _point_bbox_from_xy(_num(x, "double"), _num(y, "double"))
 
 
 _BOX_PIECES_TYPE = StructType([
     StructField("areas", ArrayType(DoubleType())),
     StructField("npts", ArrayType(IntegerType()))])
-_box_subdivide_stats = _udf(kernels.box_subdivide_stats,
-                              _BOX_PIECES_TYPE)
 
 
-def st_box_subdivide_stats(xmin, ymin, xmax, ymax, seg, maxv) -> Column:
+@_sql(kernel=kernels.box_subdivide_stats, rtype=_BOX_PIECES_TYPE)
+def st_box_subdivide_stats(xmin: Double, ymin: Double, xmax: Double,
+                           ymax: Double, seg: Double, maxv: Int) -> Column:
     """Fused ST_MakeEnvelope -> ST_Segmentize -> ST_Subdivide ->
     per-piece (ST_Area, ST_NPoints) in ONE Python crossing (r12):
     struct{areas: array<double>, npts: array<int>} aligned per piece.
     Byte-identical to the five-stage spelling (same kernels, same
     order, no WKB hops between them); NULL in == NULL out."""
-    return _box_subdivide_stats(
-        _num(xmin, "double"), _num(ymin, "double"),
-        _num(xmax, "double"), _num(ymax, "double"),
-        _num(seg, "double"), _num(maxv, "int"))
 
 
-_wkt_roundtrip = _udf(kernels.wkt_roundtrip, StringType())
-
-
-def st_wkt_canonical(wkt: Union[Column, str]) -> Column:
+@_sql(kernel=kernels.wkt_roundtrip, rtype=StringType())
+def st_wkt_canonical(wkt: Text) -> Column:
     """Fused ST_AsText(ST_GeomFromText(x)): canonical-form WKT in one
     Python crossing instead of two chained pandas-UDF stages (same fusion
     rationale as st_geom_with_bbox_from_text; null in → null out)."""
-    c = wkt if isinstance(wkt, Column) else F.lit(wkt)
-    return _wkt_roundtrip(c)
 
 
 # -- SQL registration ---------------------------------------------------
 
-_SQL_UDFS = {
-    # Every UDF is variadic, so ST_GeomFromText('…') and
-    # ST_GeomFromText('…', 4326) both resolve — true overload parity with
-    # the reference's one_of signatures. <name>SRID kept as aliases.
-    "ST_GeomFromText": _geom_from_text,
-    "ST_GeomFromTextSRID": _geom_from_text,
-    "ST_GeomFromWKB": _geom_from_wkb,
-    "ST_GeomFromWKBSRID": _geom_from_wkb,
-    "ST_GeomFromWKBDialect": _geom_from_wkb_dialect,
-    "ST_GeomFromGeoJSON": _geom_from_geojson,
-    "ST_AsText": _as_text,
-    "ST_AsEWKT": _as_ewkt,
-    "ST_AsGeoJSON": _as_geojson,
-    "ST_GeometryType": _geometry_type,
-    "Box2D": _box2d,
-    "ST_MakeEnvelope": _make_envelope,
-    "ST_MakeEnvelopeSRID": _make_envelope,
-    "ST_Intersects": _intersects,
-    "ST_Disjoint": _disjoint,
-    "ST_Covers": _covers,
-    "ST_CoveredBy": _covered_by,
-    "ST_Equals": _equals,
-    "ST_Translate": _translate,
-    "ST_Buffer": _buffer,
-    "ST_Boundary": _boundary_udf,
-    "ST_Split": _split,
-    "ST_SRID": _srid,
-    "ST_SetSRID": _set_srid,
-    "ST_AsMVTGeom": _as_mvt_geom,
-    "ST_Point": _point,
-    "ST_NPoints": _npoints,
-    "ST_Area": _area,
+# the SQL-only names; every other name is registered by its ``_sql``
+_SQL_UDFS.update({
     "ST_Extent": _extent_sql,
     "ST_Box2DFromArray": _box2d_from_array,
-    "ST_Length": _length,
-    "ST_Perimeter": _perimeter,
-    "ST_Centroid": _centroid,
-    "ST_Envelope": _envelope,
-    "ST_ConvexHull": _convex_hull,
-    "ST_Simplify": _simplify,
-    "ST_LineInterpolatePoint": _line_interp,
-    "ST_LineLocatePoint": _line_locate,
-    "ST_GeoHash": _geohash,
-    "ST_Azimuth": _azimuth,
-    "ST_ClosestPoint": _closest_point,
-    "ST_Distance": _distance,
-    "ST_DWithin": _dwithin,
-    "ST_Contains": _contains,
-    "ST_Within": _within,
-    "ST_Touches": _touches,
-    "ST_Overlaps": _overlaps,
-    "ST_Crosses": _crosses,
-    "ST_Relate": _relate,
-    "ST_RelateMatch": _relate_match,
-    "ST_DistanceSphere": _distance_sphere,
-    "ST_DistanceSpheroid": _distance_spheroid,
-    "ST_AreaSphere": _area_sphere,
-    "ST_LengthSphere": _length_sphere,
-    "ST_PerimeterSphere": _perimeter_sphere,
-    "ST_MaxDistance": _max_distance,
-    "ST_LongestLine": _longest_line,
-    "ST_BuildArea": _build_area,
-    "ST_GeometricMedian": _geometric_median,
-    "ST_AzimuthSphere": _azimuth_sphere,
-    "ST_ProjectSphere": _project_sphere,
-    "ST_ProjectSpheroid": _project_spheroid,
-    "ST_IsEmpty": _is_empty,
-    "ST_Dimension": _dimension,
-    "ST_ExteriorRing": _exterior_ring,
-    "ST_InteriorRingN": _interior_ring_n,
-    "ST_NumInteriorRings": _num_interior_rings,
-    "ST_BoundingDiagonal": _bounding_diagonal,
-    "ST_TileEnvelope": _tile_envelope,
-    "ST_Normalize": _normalize,
-    "ST_OffsetCurve": _offset_curve,
-    "ST_SharedPaths": _shared_paths,
-    "ST_ClipByBox2D": _clip_by_box,
-    "ST_MaxInscribedCenter": _mic_center,
-    "ST_MaxInscribedRadius": _mic_radius,
-    "ST_Snap": _snap,
-    "ST_DelaunayTriangles": _delaunay,
-    "ST_VoronoiPolygons": _voronoi,
-    "ST_ConcaveHull": _concave_hull,
-    "ST_GeneratePoints": _generate_points,
-    "ST_IsClosed": _is_closed,
-    "ST_IsRing": _is_ring,
-    "ST_IsSimple": _is_simple,
-    "ST_IsValid": _is_valid,
-    "ST_IsValidReason": _is_valid_reason,
-    "ST_PointOnSurface": _point_on_surface,
-    "ST_HausdorffDistance": _hausdorff,
-    "ST_FrechetDistance": _frechet,
-    "ST_Affine": _affine,
-    "ST_Expand": _expand,
-    "ST_Angle": _angle,
-    "ST_RemoveRepeatedPoints": _remove_repeated,
-    "ST_SnapToGrid": _snap_to_grid,
-    "ST_AddPoint": _add_point,
-    "ST_SetPoint": _set_point,
-    "ST_RemovePoint": _remove_point,
-    "ST_Multi": _multi,
-    "ST_CollectionExtract": _collection_extract,
-    "ST_CollectionHomogenize": _collection_homogenize,
-    "ST_Dump": _dump,
-    "ST_DumpPoints": _dump_points,
-    "ST_Intersection": _intersection,
-    "ST_Union": _union_pair,
-    "ST_Difference": _difference,
     "ST_UnionFromArray": _union_fold,
-    "ST_SymDifference": _symdifference,
-    "ST_Reverse": _reverse,
-    "ST_FlipCoordinates": _flip,
-    "ST_Rotate": _rotate,
-    "ST_Scale": _scale,
-    "ST_Segmentize": _segmentize,
-    "ST_ChaikinSmoothing": _chaikin,
-    "ST_SimplifyVW": _simplify_vw,
-    "ST_LineSubstring": _line_substring,
-    "ST_ReducePrecision": _reduce_precision,
-    "ST_LineMerge": _line_merge,
-    "ST_Subdivide": _subdivide,
-    "ST_Polygonize": _polygonize,
-    "ST_MinimumBoundingRadius": _minbound_radius,
-    "ST_MinBoundCenter": _minbound_center,
-    "ST_OrientedEnvelope": _oriented_envelope,
-    "ST_Node": _node,
-    "ST_MakeValid": _make_valid,
-    "ST_ShortestLine": _shortest_line,
-    "ST_Project": _project,
-    "ST_Transform": _transform,
-    "ST_X": _x,
-    "ST_Y": _y,
-    "ST_NumGeometries": _num_geometries,
-    "ST_GeometryN": _geometry_n,
-    "ST_PointN": _point_n,
-    "ST_StartPoint": _udf(kernels.start_point, BinaryType()),
-    "ST_EndPoint": _udf(kernels.end_point, BinaryType()),
-}
+})
 
 
 def register_all(spark: SparkSession) -> None:

@@ -223,11 +223,10 @@ def _turns(cs: Sequence[Coord], closed: bool) -> Tuple[List[float], List[float]]
     return th, turns
 
 
-def offset_open_ring(coords: Sequence[Coord], w: float,
-                     quadsegs: int) -> List[Coord]:
-    """Raw offset curve of an OPEN polyline (dilation): right side
-    forward, round end cap, left side backward, round start cap; round
-    arc at every interior joint. Overall CCW; returns a closed ring."""
+def _clean_path(coords: Sequence[Coord], w: float) -> List[Coord]:
+    """``coords`` without consecutive duplicates; a path carrying a
+    degenerate feature (``_is_degenerate``) also goes through the
+    snapping pipeline."""
     cs = _dedupe(coords)
     if _is_degenerate(cs, max(_EPS, abs(w) * 1e-3)):
         # robustness pipeline for pathological paths ONLY — well-formed
@@ -237,6 +236,43 @@ def offset_open_ring(coords: Sequence[Coord], w: float,
         tol = max(_EPS, abs(w) * 1e-3)
         cs = _snap_spikes(_drop_collinear(
             _snap_revisits(_dedupe(cs, tol=tol), tol), tol))
+    return cs
+
+
+def offset_path(coords: Sequence[Coord], w: float,
+                quadsegs: int) -> List[List[Coord]]:
+    """Raw offset rings of a path (dilation), resolved as one group
+    under the positive-winding rule. A path that ends exactly where it
+    starts, with three or more segments and no doubling-back joint, has
+    no caps: its rings are the right side forward and the left side
+    backward, each a closed loop with a round arc at every joint, the
+    closing one included. Capping it instead puts two half-circle caps
+    on the same center whose arcs are rotated copies of each other by
+    the closing turn, and a near-zero rotation makes near-coincident
+    arc chords the arrangement cannot stitch (fuzz-found:
+    LINESTRING(50 1e-05,0 0,50 50,50 1e-05) buffered to EMPTY, and the
+    jitter retries are snapped back onto the same closed path). Any
+    other path is one ring (``offset_open_ring``)."""
+    cs = _clean_path(coords, w)
+    if len(cs) >= 4 and cs[0] == cs[-1]:
+        loop = cs[:-1]
+        _, turns = _turns(loop, closed=True)
+        if all(abs(abs(t) - math.pi) >= _SPIKE_EPS for t in turns):
+            return [_loop_offset(loop, w, quadsegs, "out"),
+                    _loop_offset(loop[::-1], w, quadsegs, "out")]
+    return [_open_offset(cs, w, quadsegs)]
+
+
+def offset_open_ring(coords: Sequence[Coord], w: float,
+                     quadsegs: int) -> List[Coord]:
+    """Raw offset curve of an OPEN polyline (dilation): right side
+    forward, round end cap, left side backward, round start cap; round
+    arc at every interior joint. Overall CCW; returns a closed ring."""
+    return _open_offset(_clean_path(coords, w), w, quadsegs)
+
+
+def _open_offset(cs: List[Coord], w: float, quadsegs: int) -> List[Coord]:
+    """``offset_open_ring`` of an already cleaned path."""
     if len(cs) == 1:  # degenerate: pure disc
         x, y = cs[0]
         n = 4 * max(1, int(quadsegs))
@@ -291,6 +327,15 @@ def ring_offset_curve(ring: Sequence[Coord], w: float, quadsegs: int,
         return offset_open_ring(cs, w, quadsegs) if side == "out" else []
     if ring_area2(cs + [cs[0]]) < 0:
         cs = [cs[0]] + cs[1:][::-1]
+    return _loop_offset(cs, w, quadsegs, side)
+
+
+def _loop_offset(cs: List[Coord], w: float, quadsegs: int,
+                 side: str) -> List[Coord]:
+    """Raw offset curve of the closed loop ``cs`` (no repeated closing
+    vertex) in its given direction: ``'out'`` offsets along the right
+    normals with a round arc at every joint, ``'in'`` along the left
+    normals with arcs at right turns only (see ``ring_offset_curve``)."""
     th, turns = _turns(cs, closed=True)
     nseg = len(th)
     nshift = -math.pi / 2.0 if side == "out" else math.pi / 2.0
@@ -485,6 +530,16 @@ def resolve(groups: List[List[List[Coord]]],
             cands = [c for c in outgoing.get(_node_key(e[1]), [])
                      if id(c) not in used]
             if not cands:
+                # the node may straddle a rounding boundary of the key
+                # grid: its pieces' computed ends can differ by an ulp
+                # and round to neighboring keys
+                if dist(e[1], start[0]) <= 1e-7:
+                    break
+                kx, ky = _node_key(e[1])
+                cands = [c for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+                         for c in outgoing.get((kx + dx, ky + dy), [])
+                         if id(c) not in used and dist(c[0], e[1]) <= 1e-7]
+            if not cands:
                 ring = []
                 break
             if len(cands) == 1:
@@ -608,8 +663,7 @@ def _buffer_path_once(g: Geometry, w: float, quadsegs: int) -> Geometry:
         elif part.typ == "LineString":
             if part.parts:
                 part_polys.append(
-                    resolve([[offset_open_ring(part.parts, w, quadsegs)]],
-                            ["pos"]))
+                    resolve([offset_path(part.parts, w, quadsegs)], ["pos"]))
         elif part.typ == "Polygon":
             if part.parts:
                 part_polys.append(_buffer_polygon(part.parts, w, quadsegs))

@@ -282,6 +282,38 @@ def test_buffer_doubled_back_line_is_its_segment_capsule():
         assert algos.covers(b, Geometry("Point", v)), v
 
 
+def test_buffer_closed_path_has_no_caps():
+    """Containment-property find: a triangle path closing exactly on its
+    start, whose first segment is 2e-7 rad off the x axis, buffered to
+    POLYGON EMPTY — its coinciding start and end caps were rotated
+    copies of each other by that angle. A closed path is buffered
+    without caps; the result is the axis-aligned twin's annulus."""
+    g = Geometry("LineString", [(50.0, 1e-05), (0.0, 0.0), (50.0, 50.0),
+                                (50.0, 1e-05)])
+    b = algos.buffer(g, 0.5, Q)
+    twin = algos.buffer(Geometry("LineString", [(50.0, 0.0), (0.0, 0.0),
+                                                (50.0, 50.0), (50.0, 0.0)]),
+                        0.5, Q)
+    assert b.typ == "Polygon" and len(b.parts) == 2  # shell + hole
+    assert algos.area(b) == pytest.approx(algos.area(twin), rel=1e-5)
+    for v in g.vertices():
+        assert algos.covers(b, Geometry("Point", v)), v
+    sample_check(b, 0.5, ((-2, 52), (-2, 52)), [g.parts])
+
+
+def test_buffer_closed_quadrilateral_keeps_its_hole():
+    """Closed-path fuzz find: two pieces of the inner offset ring met at
+    a node whose computed ends differed by an ulp and rounded to
+    neighboring stitching keys, so the hole was dropped and the buffer
+    filled the whole quadrilateral."""
+    ring = [(20.0, 50.0), (50.00001, -50.0), (-29.99999, -49.9999998),
+            (-30.0, 50.0000002), (20.0, 50.0)]
+    b = algos.buffer(Geometry("LineString", ring), 0.5, Q)
+    assert b.typ == "Polygon" and len(b.parts) == 2
+    assert algos.point_in_polygon((10.0, 0.0), b.parts) < 0
+    sample_check(b, 0.5, ((-32, 52), (-52, 52)), [ring])
+
+
 def test_buffer_near_coincident_start_not_empty():
     """Deep-fuzz regression: a path start 6e-8 off a later joint/segment
     made both the arrangement and the single small-jitter retry empty;
