@@ -4340,30 +4340,25 @@ def _q_grid_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_geo_parquet_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatially-partitioned parquet sink + pruned window read
-    (sources.geoio): write the order-lines fixture bucketed by bbox-
-    centroid grid cell, read back the window [100,140]² through the
-    partition-filter + bbox-stats path, then apply the exact
-    ST_Intersects predicate. The k-range oracle is analytic: the slope-1
-    segment (k,k+1)→(k+4,k+5) meets the window iff 96 ≤ k ≤ 139; NULL
-    geometries (o_orderkey%7=0) have NULL bboxes and are excluded."""
+    """Standard GeoParquet sink + bbox window read (sources.geoio):
+    write the order-lines fixture with a ``bbox`` covering column, read
+    back the window [100,140]² (files whose footer bbox misses it are
+    skipped, and the window becomes a covering range filter pushed to
+    parquet row-group statistics), then apply the exact ST_Intersects
+    predicate. The k-range oracle is analytic: the slope-1 segment
+    (k,k+1)→(k+4,k+5) meets the window iff 96 ≤ k ≤ 139; NULL geometries
+    (o_orderkey%7=0) have NULL bboxes and are excluded."""
     import os
     from datafusion_geo_spark.functions import st_intersects
     from datafusion_geo_spark.sources.fixtures import lines_orders
-    from datafusion_geo_spark.sources.geoio import (read_geo_parquet,
-                                                    write_geo_parquet)
+    from datafusion_geo_spark.sources.geoio import (read_geoparquet_std,
+                                                    write_geoparquet_std)
     tag = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         ".cache", "geoparquet", tag)
-    src = lines_orders(spark, sf_dir, with_bbox=True) \
-        .select("o_orderkey", "k", "geom", "xmin", "ymin", "xmax", "ymax")
-    # cell = window width (guide §6 file sizing): cell=8 sharded the
-    # diagonal fixture into 252 single-task directories whose commit
-    # work dominated the sink (measured 13.6 s warm of the query's
-    # 12.5 s); window-sized cells keep directory pruning effective
-    # ([100,140] still reads ~6 of ~27 cells) at ~5x fewer directories
-    write_geo_parquet(src, path, cell=40.0)
-    win = read_geo_parquet(spark, path, bbox=(100.0, 100.0, 140.0, 140.0))
+    src = lines_orders(spark, sf_dir).select("o_orderkey", "k", "geom")
+    write_geoparquet_std(src, path, covering=True)
+    win = read_geoparquet_std(spark, path, bbox=(100.0, 100.0, 140.0, 140.0))
     box = "POLYGON((100 100,140 100,140 140,100 140,100 100))"
     return (win.where(st_intersects(F.col("geom"), box))
             .select("o_orderkey", "k"))
@@ -5811,6 +5806,7 @@ _FIRST50 = [
     "accessors2_literal", "relate_matrix", "sphere_nav",
     "tile_normalize_literal", "offset_clip_literal", "mic_snap_literal",
     "triangulate_literal", "edit_utils_literal", "smoothing_literal",
+    "geo_parquet_window",
     # heavy regression canaries (every gate)
     "grid_spatial_join", "minhash_pairs",
     # the next-oldest green rows (round 7), alphabetically
@@ -5819,7 +5815,7 @@ _FIRST50 = [
     "csv_roundtrip", "domain_entropy", "dup_cluster_hist", "events_pivot",
     "feature_corr", "hard_negatives", "heldout_ppl", "hll_by_group",
     "hll_estimate", "hll_setops", "join_size_estimate", "ks_drift",
-    "lang_confusion", "linreg_score",
+    "lang_confusion",
 ]
 
 

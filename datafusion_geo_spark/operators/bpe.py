@@ -110,12 +110,6 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
 _MERGE_CACHE: dict = {}
 
 
-def clear_merge_cache() -> None:
-    """Drop every memoized fit — for test fixtures that rewrite the
-    data under a reused path within one process."""
-    _MERGE_CACHE.clear()
-
-
 def _key_fingerprint(cache_key) -> tuple:
     """Augment path-shaped key elements with (mtime_ns, size) so a
     corpus rewritten IN PLACE within one process (e.g. a reused tmp
@@ -148,9 +142,8 @@ def bpe_train_cached(docs: DataFrame, text_col: str = "text",
     ``(sf_dir, "documents")``) — the caller owns that contract; None
     disables caching. Path-shaped key elements are fingerprinted with
     their mtime/size (:func:`_key_fingerprint`), so in-place rewrites
-    of the corpus invalidate the memo; :func:`clear_merge_cache` is
-    the explicit hook. The fit is deterministic, so a cache hit is
-    bit-identical to a refit."""
+    of the corpus invalidate the memo. The fit is deterministic, so a
+    cache hit is bit-identical to a refit."""
     def fit():
         return [(r["merge_rank"], r["left_tok"], r["right_tok"],
                  r["merged"], r["pair_count"])

@@ -842,7 +842,7 @@ def _jaccard_prefix_verified(scope, df: DataFrame, text_col: str,
     it). Split out so the physical plan of the real pipeline stays
     inspectable behind the wrapper's checkpoint."""
     from pyspark.sql import Window
-    from .text import _idiv
+    from .util import idiv
 
     arr = F.array_distinct(word_shingles(F.col(text_col), shingle_n))
     # cached: consumed three times (token explode + both sides of the
@@ -859,8 +859,8 @@ def _jaccard_prefix_verified(scope, df: DataFrame, text_col: str,
               .withColumn("r", F.row_number().over(
                   Window.partitionBy("_id").orderBy("dft", "tok"))))
     # prefix length = sz - ceil(t*sz) + 1, all int64
-    need = _idiv(F.col("sz") * F.lit(threshold_num)
-                 + F.lit(threshold_den - 1), F.lit(threshold_den))
+    need = idiv(F.col("sz") * F.lit(threshold_num)
+                + F.lit(threshold_den - 1), F.lit(threshold_den))
     # cached: BOTH sides of the self-join below read this relation,
     # and Catalyst does not recognize the aliased subtrees as one
     # (r11's after-plan shows the dft join + window pipeline planned
@@ -885,9 +885,9 @@ def _jaccard_prefix_verified(scope, df: DataFrame, text_col: str,
     # stays valid with the stop-word guard on.)
     sa, sb = F.col("a.sz"), F.col("b.sz")
     ra, rb = F.col("a.r"), F.col("b.r")
-    alpha = _idiv(F.lit(threshold_num) * (sa + sb)
-                  + F.lit(threshold_num + threshold_den - 1),
-                  F.lit(threshold_num + threshold_den))
+    alpha = idiv(F.lit(threshold_num) * (sa + sb)
+                 + F.lit(threshold_num + threshold_den - 1),
+                 F.lit(threshold_num + threshold_den))
     ubound = (F.least(ra, rb)
               + F.least(sa - ra, sb - rb))
     # r12, accumulated-overlap positional filter (the set-based form of
@@ -906,7 +906,7 @@ def _jaccard_prefix_verified(scope, df: DataFrame, text_col: str,
     # array-attach joins below.
     o = F.count(F.lit(1))
     tail = F.least(F.max(sa) - F.max(ra), F.max(sb) - F.max(rb))
-    alpha_pair = _idiv(
+    alpha_pair = idiv(
         F.lit(threshold_num) * (F.max(sa) + F.max(sb))
         + F.lit(threshold_num + threshold_den - 1),
         F.lit(threshold_num + threshold_den))

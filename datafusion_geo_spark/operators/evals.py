@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from .util import idiv, round6_binary
+
 __all__ = ["auc_exact", "ks_stat", "ks_from_hist", "pearson_corr",
            "hist_quantiles", "quantiles_from_hist", "categorical_drift",
            "cat_drift_from_hist", "cohen_kappa", "embedding_drift",
@@ -30,12 +32,6 @@ __all__ = ["auc_exact", "ks_stat", "ks_from_hist", "pearson_corr",
            "kendall_overlap", "rrf_fuse", "rrf_weights_micro",
            "f1_per_class", "js_unigram_divergence", "adjusted_rand",
            "krippendorff_alpha", "bleu_corpus", "js_unigram_divergence_flagged", "word_error_rate", "chrf_corpus"]
-
-
-def _r6(col):
-    """6-dp round-half-up on the scaled value (house convention)."""
-    return (F.signum(col) * F.floor(F.abs(col) * F.lit(1e6) + F.lit(0.5))
-            / F.lit(1e6) + F.lit(0.0))
 
 
 def auc_exact(scored: DataFrame, score_col: str, label_col: str,
@@ -77,7 +73,8 @@ def auc_exact(scored: DataFrame, score_col: str, label_col: str,
     num = (F.col("rank2_pos")
            - F.col("p_total") * (F.col("p_total") + F.lit(1)))
     den = F.lit(2) * F.col("p_total") * F.col("n_total")
-    auc = F.when(den > 0, _r6(num.cast("double") / den.cast("double")))
+    auc = F.when(den > 0, round6_binary(num.cast("double")
+                                        / den.cast("double")))
     return agg.select(*gc, "p_total", "n_total", "rank2_pos",
                       auc.alias("auc"))
 
@@ -129,8 +126,8 @@ def ks_from_hist(hist: DataFrame, value_col: str) -> DataFrame:
         F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
         F.max(F.abs(F.col("ca") * F.col("n_b")
                     - F.col("cb") * F.col("n_a"))).alias("d_num"))
-    ks = _r6(F.col("d_num").cast("double")
-             / (F.col("n_a") * F.col("n_b")).cast("double"))
+    ks = round6_binary(F.col("d_num").cast("double")
+                       / (F.col("n_a") * F.col("n_b")).cast("double"))
     return agg.select("n_a", "n_b", "d_num", ks.alias("ks"))
 
 
@@ -163,7 +160,7 @@ def pearson_corr(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
                       cov.cast("long").alias("cov_num"),
                       vx.cast("long").alias("varx_num"),
                       vy.cast("long").alias("vary_num"),
-                      _r6(r).alias("corr"))
+                      round6_binary(r).alias("corr"))
 
 
 def hist_quantiles(df: DataFrame, value_col: str,
@@ -344,7 +341,7 @@ def cohen_kappa(conf: DataFrame, true_col: str, pred_col: str,
     num = (F.col("n_total") * F.col("trace") - F.col("pe_num"))
     den = (F.col("n_total") * F.col("n_total") - F.col("pe_num"))
     kappa = F.when(den != 0,
-                   _r6(num.cast("double") / den.cast("double")))
+                   round6_binary(num.cast("double") / den.cast("double")))
     return j.select("n_total", "trace", "pe_num", kappa.alias("kappa"))
 
 
@@ -469,8 +466,8 @@ def ndcg_overlap(bf: DataFrame, ann: DataFrame, k: int = 10) -> DataFrame:
          .withColumn("dcg_num",
                      F.coalesce(F.col("dcg_num"), F.lit(0)).cast("long")))
     ndcg = F.when(F.col("idcg_num") > 0,
-                  _r6(F.col("dcg_num").cast("double")
-                      / F.col("idcg_num").cast("double")))
+                  round6_binary(F.col("dcg_num").cast("double")
+                                / F.col("idcg_num").cast("double")))
     return j.select("query_id", "n_judged", "dcg_num", "idcg_num",
                     ndcg.alias("ndcg"))
 
@@ -496,7 +493,6 @@ def embedding_drift(old: DataFrame, new: DataFrame,
     prenorm contract note in operators/similarity.py).
     Returns (label, n_old, n_new, cos_micro)."""
     from .similarity import dot, norm
-    from .util import round6_binary
 
     def mean_vec(df, mcol):
         e = df.select(F.col(label_col).alias("label"),
@@ -522,15 +518,6 @@ def embedding_drift(old: DataFrame, new: DataFrame,
     return j.select("label", "n_old", "n_new", micro.alias("cos_micro"))
 
 
-def _idiv(num, den):
-    """Exact integer division for non-negative longs (text._idiv
-    twin): (num - num % den) is exactly divisible, and the double
-    quotient of int64s < 2^53 with an integral result is exact."""
-    num = num.cast("long")
-    den = den.cast("long")
-    return ((num - num % den) / den).cast("long")
-
-
 def _sratio6(num, den):
     """Signed exact 6-dp half-AWAY ratio of int64s: sign(num) ·
     ((2e6·|num| + den) div (2·den)) / 1e6 with den > 0 — the signed
@@ -540,7 +527,7 @@ def _sratio6(num, den):
     a double (identical on both engines)."""
     num = num.cast("long")
     den = den.cast("long")
-    micro = _idiv(F.lit(2_000_000) * F.abs(num) + den, F.lit(2) * den)
+    micro = idiv(F.lit(2_000_000) * F.abs(num) + den, F.lit(2) * den)
     return (F.signum(num) * micro / F.lit(1_000_000.0) + F.lit(0.0))
 
 
@@ -589,7 +576,7 @@ def mcc_multiclass(conf: DataFrame, true_col: str, pred_col: str,
     sr = F.sqrt((nn - F.col("rr_num")).cast("double"))
     sc_ = F.sqrt((nn - F.col("cc_num")).cast("double"))
     mcc = F.when((nn > F.col("rr_num")) & (nn > F.col("cc_num")),
-                 _r6(num / (sr * sc_)))
+                 round6_binary(num / (sr * sc_)))
     return j.select("n_total", "trace", "rc_num", "rr_num", "cc_num",
                     mcc.alias("mcc"))
 
@@ -625,16 +612,16 @@ def average_precision(scored: DataFrame, score_col: str,
         F.col("n"), F.col("npos"),
         F.sum("npos").over(w).cast("long").alias("cum_tp"),
         F.sum("n").over(w).cast("long").alias("cum_n"))
-    p_micro = _idiv(F.lit(2_000_000) * F.col("cum_tp") + F.col("cum_n"),
-                    F.lit(2) * F.col("cum_n"))
+    p_micro = idiv(F.lit(2_000_000) * F.col("cum_tp") + F.col("cum_n"),
+                   F.lit(2) * F.col("cum_n"))
     agg = cum.agg(
         F.sum("npos").cast("long").alias("n_pos"),
         (F.sum("n") - F.sum("npos")).cast("long").alias("n_neg"),
         F.count(F.lit(1)).cast("long").alias("n_scores"),
         F.sum(F.col("npos") * p_micro).cast("long").alias("ap_sum_micro"))
     ap = F.when(F.col("n_pos") > 0,
-                _idiv(F.lit(2) * F.col("ap_sum_micro") + F.col("n_pos"),
-                      F.lit(2) * F.col("n_pos")) / F.lit(1_000_000.0)
+                idiv(F.lit(2) * F.col("ap_sum_micro") + F.col("n_pos"),
+                     F.lit(2) * F.col("n_pos")) / F.lit(1_000_000.0)
                 + F.lit(0.0))
     return agg.select("n_pos", "n_neg", "n_scores", "ap_sum_micro",
                       ap.alias("ap"))
@@ -645,7 +632,7 @@ def ece_bin_col(conf_micro_col: str, n_bins: int = 10):
     confidence: min(conf_micro·B div 1e6, B−1) — exported so the
     streaming twin bins identically."""
     cm = F.col(conf_micro_col).cast("long")
-    return F.least(_idiv(cm * F.lit(int(n_bins)), F.lit(1_000_000)),
+    return F.least(idiv(cm * F.lit(int(n_bins)), F.lit(1_000_000)),
                    F.lit(int(n_bins) - 1))
 
 
@@ -681,8 +668,8 @@ def ece_from_hist(bins: DataFrame) -> DataFrame:
     agg = bins.agg(F.sum("n").cast("long").alias("n_total"),
                    F.count(F.lit(1)).cast("long").alias("n_bins_used"),
                    F.sum(gap).cast("long").alias("gap_sum_micro"))
-    ece = (_idiv(F.lit(2) * F.col("gap_sum_micro") + F.col("n_total"),
-                 F.lit(2) * F.col("n_total")) / F.lit(1_000_000.0)
+    ece = (idiv(F.lit(2) * F.col("gap_sum_micro") + F.col("n_total"),
+                F.lit(2) * F.col("n_total")) / F.lit(1_000_000.0)
            + F.lit(0.0))
     return agg.select("n_total", "n_bins_used", "gap_sum_micro",
                       ece.alias("ece"))
@@ -807,7 +794,7 @@ def _js_tail(u: DataFrame) -> DataFrame:
                 F.sum(ta).cast("long").alias("jsa_micro_sum"),
                 F.sum(tb).cast("long").alias("jsb_micro_sum"))
     s = (F.col("jsa_micro_sum") + F.col("jsb_micro_sum")).cast("long")
-    js_micro = F.signum(s) * _idiv(F.abs(s) + F.lit(1), F.lit(2))
+    js_micro = F.signum(s) * idiv(F.abs(s) + F.lit(1), F.lit(2))
     js = js_micro / F.lit(1_000_000.0) + F.lit(0.0)
     return agg.select("n_vocab_union", "n_old_tokens", "n_new_tokens",
                       "jsa_micro_sum", "jsb_micro_sum", js.alias("js"))
@@ -960,7 +947,7 @@ def adjusted_rand(conf: DataFrame, a_col: str, b_col: str,
         ARI = (Σij C(nij,2) − E) / (½·(Σa + Σb) − E),
           E = Σa·Σb / C(n,2)
 
-    with Σa/Σb the row/column marginal pair sums — halved via _idiv,
+    with Σa/Σb the row/column marginal pair sums — halved via idiv,
     so every pair count is exact for ALL counts in the operator's
     domain n·(n−1) ≤ 2^63 (n_total up to ~3.0e9 items; beyond that
     C(n,2) itself overflows int64 and ANSI mode raises rather than
@@ -976,7 +963,7 @@ def adjusted_rand(conf: DataFrame, a_col: str, b_col: str,
     def pairs2(c):
         # c*(c-1) is even and non-negative, so shiftright(·, 1) IS
         # the exact /2 for the whole int64 domain — a double '/2'
-        # (and _idiv, whose quotient is a double) round past 2^53.
+        # (and idiv, whose quotient is a double) round past 2^53.
         c = c.cast("long")
         return F.shiftright(c * (c - F.lit(1)), 1)
 
@@ -995,7 +982,8 @@ def adjusted_rand(conf: DataFrame, a_col: str, b_col: str,
     den = ((F.col("sum_a_pairs") + F.col("sum_b_pairs")).cast("double")
            / F.lit(2.0) - e)
     ari = F.when(den != F.lit(0.0),
-                 _r6((F.col("sum_ab_pairs").cast("double") - e) / den))
+                 round6_binary((F.col("sum_ab_pairs").cast("double") - e)
+                               / den))
     return j.select("n_total", "sum_ab_pairs", "sum_a_pairs",
                     "sum_b_pairs", ari.alias("ari"))
 
@@ -1063,7 +1051,7 @@ def krippendorff_alpha(units: DataFrame, label_cols: list,
         .cast("double")
     den = (F.lit(m - 1) * nn_mis).cast("double")
     alpha = F.when(nn_mis > F.lit(0),
-                   _r6(F.lit(1.0) - num / den))
+                   round6_binary(F.lit(1.0) - num / den))
     return j.select("n_units", "n_skipped", "n_ratings", "o_mis2",
                     nn_mis.alias("nn_mis"), alpha.alias("alpha"))
 
@@ -1162,7 +1150,8 @@ def bleu_corpus(pairs: DataFrame, cand_col: str, ref_col: str,
     bp = F.when(F.col("c_len") >= F.col("r_len"), F.lit(1.0)) \
         .otherwise(F.exp(F.lit(1.0) - F.col("r_len").cast("double")
                          / F.col("c_len").cast("double")))
-    bleu = F.when(ok, _r6(bp * F.exp(logsum / F.lit(float(max_n)))))
+    bleu = F.when(ok, round6_binary(
+        bp * F.exp(logsum / F.lit(float(max_n)))))
     cols = [c for n in range(1, max_n + 1) for c in (f"m{n}", f"t{n}")]
     return j.select(*cols, "c_len", "r_len", bleu.alias("bleu"))
 
@@ -1335,8 +1324,8 @@ def chrf_corpus(pairs: DataFrame, cand_col: str, ref_col: str,
     b2 = float(beta) * float(beta)
     chrf = F.when(
         ok & ((F.lit(b2) * pavg + ravg) > F.lit(0.0)),
-        _r6((F.lit(1.0 + b2) * pavg * ravg)
-            / (F.lit(b2) * pavg + ravg)))
+        round6_binary((F.lit(1.0 + b2) * pavg * ravg)
+                      / (F.lit(b2) * pavg + ravg)))
     cols = [c for n in range(1, max_n + 1)
             for c in (f"m{n}", f"tc{n}", f"tr{n}")]
     return one.select(*cols, chrf.alias("chrf"))

@@ -23,14 +23,18 @@ from typing import Optional, Tuple
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from ..sources.geoio import _part1by1 as _spread16
-
 __all__ = ["morton_key", "zorder_layout"]
 
-# The bit-spreading ladder is shared with sources/geoio.py, whose
-# cell-size-based morton_key serves the write_geo_parquet within-cell
-# clustering; this module's bounds-quantized variant is the global
-# layout key (fixed [0, 2^bits) grid over known bounds).
+
+def _part1by1(x: Column) -> Column:
+    """Spread the low 16 bits of x to even bit positions ("magic bits"
+    Morton spreading) — pure JVM shift/and expressions."""
+    x = x.bitwiseAND(F.lit(0xFFFF))
+    x = (x.bitwiseOR(F.shiftleft(x, 8))).bitwiseAND(F.lit(0x00FF00FF))
+    x = (x.bitwiseOR(F.shiftleft(x, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
+    x = (x.bitwiseOR(F.shiftleft(x, 2))).bitwiseAND(F.lit(0x33333333))
+    x = (x.bitwiseOR(F.shiftleft(x, 1))).bitwiseAND(F.lit(0x55555555))
+    return x
 
 
 def morton_key(x: Column, y: Column,
@@ -55,7 +59,7 @@ def morton_key(x: Column, y: Column,
 
     qx = cell(x, xmin, xmax)
     qy = cell(y, ymin, ymax)
-    z = _spread16(qx).bitwiseOR(F.shiftleft(_spread16(qy), 1))
+    z = _part1by1(qx).bitwiseOR(F.shiftleft(_part1by1(qy), 1))
     # greatest/least IGNORE nulls (they'd clamp NULL to cell 0 and give
     # junk rows a real spatial key) — keep null-in/null-out explicit
     return F.when(x.isNull() | y.isNull(), F.lit(None).cast("long")) \

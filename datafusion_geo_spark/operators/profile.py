@@ -129,7 +129,7 @@ def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     quantize coarser for more. One row per unordered pair (i < j in
     ``cols`` order): (col_x, col_y, n_rows, cov_num, varx_num,
     vary_num, corr 6-dp); corr is NULL for a zero-variance column."""
-    from .evals import _r6
+    from .util import round6_binary
 
     k = len(cols)
     if k < 2:
@@ -158,7 +158,7 @@ def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
                 cov.cast("long").alias("cov_num"),
                 vx.cast("long").alias("varx_num"),
                 vy.cast("long").alias("vary_num"),
-                F.when((vx > 0) & (vy > 0), _r6(r)).alias("corr")))
+                F.when((vx > 0) & (vy > 0), round6_binary(r)).alias("corr")))
     return (one.select(F.explode(F.array(*pairs)).alias("_p"))
             .select("_p.*"))
 
@@ -281,7 +281,7 @@ def benford_aggs():
 
 def benford_finalize(totals: DataFrame) -> DataFrame:
     """The fixed-order nine-term chi-square tail over a totals row."""
-    from .evals import _r6
+    from .util import round6_binary
 
     n = (F.col("n_rows") - F.col("n_excluded")).cast("long")
     chi = None
@@ -293,4 +293,4 @@ def benford_finalize(totals: DataFrame) -> DataFrame:
     return totals.select(
         n.alias("n"), "n_excluded",
         *[F.col(f"o{d}") for d in range(1, 10)],
-        F.when(n > 0, _r6(chi)).alias("chi2"))
+        F.when(n > 0, round6_binary(chi)).alias("chi2"))

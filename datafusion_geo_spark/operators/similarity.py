@@ -37,10 +37,6 @@ def norm(v: Column) -> Column:
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cos6(num: Column, den: Column) -> Column:
     """6-dp cosine ``num/den`` with the zero-denominator case pinned to
     -2.0 — strictly below any true cosine, so a zero-norm vector LOSES

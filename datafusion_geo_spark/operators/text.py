@@ -15,7 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from .util import round6_binary
+from .util import idiv, round6_binary
 
 # Shared constants (mirrored into oracle SQL) ---------------------------
 
@@ -71,15 +71,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_REGEX), F.lit(0)))
 
 
-def _idiv(num: Column, den: Column) -> Column:
-    """Exact integer division for non-negative longs, without SQL strings:
-    (num - num % den) is exactly divisible, and the double quotient of two
-    int64s < 2^53 with an integral result is exact."""
-    num = num.cast("long")
-    den = den.cast("long")
-    return ((num - num % den) / den).cast("long")
-
-
 def _ratio6(num: Column, den: Column) -> Column:
     """round-half-up(num/den · 1e6) / 1e6 computed in exact int64
     arithmetic. ``F.round`` on the double quotient is representation-
@@ -87,8 +78,8 @@ def _ratio6(num: Column, den: Column) -> Column:
     DuckDB on the binary value disagreed for 1/500 docs in round 1); the
     scaled-integer form is deterministic and the oracle mirrors it with
     DuckDB's ``//``."""
-    q6 = _idiv(F.lit(2_000_000) * num.cast("long") + den.cast("long"),
-               F.lit(2) * den.cast("long"))
+    q6 = idiv(F.lit(2_000_000) * num.cast("long") + den.cast("long"),
+              F.lit(2) * den.cast("long"))
     return q6 / F.lit(1_000_000.0)
 
 
@@ -112,8 +103,8 @@ def text_stats(df: DataFrame, text_col: str = "text",
     #   P = 4000·min(100,n)·n + 300000·(n − stops + distinct)
     p = (F.lit(4000) * F.least(F.lit(100).cast("long"), n_tokens) * n_tokens
          + F.lit(300_000) * (n_tokens - stops + distinct_tokens))
-    quality = _idiv(F.lit(2) * p + n_tokens,
-                    F.lit(2) * n_tokens) / F.lit(1_000_000.0)
+    quality = idiv(F.lit(2) * p + n_tokens,
+                   F.lit(2) * n_tokens) / F.lit(1_000_000.0)
     return df.select(
         id_col, *keep_cols,
         n_tokens.cast("int").alias("n_tokens"),

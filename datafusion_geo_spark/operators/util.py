@@ -38,6 +38,15 @@ def round6_binary(col: Column) -> Column:
     return round_binary(col, 6)
 
 
+def idiv(num: Column, den: Column) -> Column:
+    """Exact integer division for non-negative longs, without SQL strings:
+    (num - num % den) is exactly divisible, and the double quotient of two
+    int64s < 2^53 with an integral result is exact."""
+    num = num.cast("long")
+    den = den.cast("long")
+    return ((num - num % den) / den).cast("long")
+
+
 #: edge-count cap for the bounded driver finish of the graph loops
 #: (dedup.connected_components, graph.pagerank_int, graph.graph_stats):
 #: at or under this many narrow (src, dst) rows — a few tens of MB, the

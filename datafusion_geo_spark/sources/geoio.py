@@ -2,29 +2,36 @@
 
 The reference delegates all I/O to its host engine and only ever uses
 in-memory tables (SURVEY.md §2 "Scans/sources/sinks — HOST"); the Spark
-build inherits every Spark source/sink. This module adds the two
+build inherits every Spark source/sink. This module adds the
 geo-specific shapes pipelines actually need:
 
 * **WKT text ingestion** — CSV/JSONL land geometry as WKT strings;
   ``read_wkt_csv`` parses them into the engine's WKB Binary convention
   in one pass.
-* **Spatially-partitioned parquet** — ``write_geo_parquet`` buckets
-  rows by grid cell of their bbox centroid and writes
-  ``PARTITIONED BY (cell_x, cell_y)``, so spatial-predicate readers get
-  partition pruning from the directory layout: a bbox query reads only
-  overlapping cells (the storage-side twin of the grid join's shuffle
-  key). ``read_geo_parquet`` + ``cells_for_bbox`` does the pruned read.
+* **GeoJSON lines** — ``read_geojsonl``/``write_geojsonl``, one RFC 7946
+  Feature per line.
+* **Standard GeoParquet 1.1** — ``write_geoparquet_std`` stamps the
+  spec's ``geo`` key into every file footer (with the file's own bbox),
+  optionally persists a ``bbox`` covering column, and writes a
+  ``_geo_manifest.json`` of per-file bboxes. ``read_geoparquet_std``
+  with ``bbox=`` skips files whose bbox misses the window and turns the
+  window into a range filter on the covering column, pushed to parquet
+  row-group statistics. Row clustering is the caller's choice (e.g.
+  ``operators.layout.zorder_layout`` before the write).
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 from typing import Optional, Tuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import box2d, st_geomfromtext
+from ..geo.proj import CRS_META, projjson
 
 
 def read_wkt_csv(spark: SparkSession, path: str, wkt_col: str = "wkt",
@@ -36,182 +43,6 @@ def read_wkt_csv(spark: SparkSession, path: str, wkt_col: str = "wkt",
     df = spark.read.option("header", header).csv(path)
     out = df.withColumn(geom_col, st_geomfromtext(F.col(wkt_col)))
     return out.drop(wkt_col) if drop_wkt else out
-
-
-BBOX_COLS = ("xmin", "ymin", "xmax", "ymax")
-
-
-def _part1by1(x: Column) -> Column:
-    """Spread the low 16 bits of x to even bit positions ("magic bits"
-    Morton spreading) — pure JVM shift/and expressions."""
-    x = x.bitwiseAND(F.lit(0xFFFF))
-    x = (x.bitwiseOR(F.shiftleft(x, 8))).bitwiseAND(F.lit(0x00FF00FF))
-    x = (x.bitwiseOR(F.shiftleft(x, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
-    x = (x.bitwiseOR(F.shiftleft(x, 2))).bitwiseAND(F.lit(0x33333333))
-    x = (x.bitwiseOR(F.shiftleft(x, 1))).bitwiseAND(F.lit(0x55555555))
-    return x
-
-
-def morton_key(x: Column, y: Column, cell: float = 1.0) -> Column:
-    """Z-order (Morton) key of a point: interleave the bits of the two
-    cell indices (16 bits each after a +2^15 offset to keep negatives
-    ordered). Nearby points share key prefixes, so sorting by this key
-    clusters 2-D neighborhoods into the same parquet row groups — the
-    standard lakehouse OPTIMIZE ZORDER layout, as a plain
-    WholeStageCodegen expression."""
-    cx = (F.floor(x / cell).cast("long") + (1 << 15)).bitwiseAND(F.lit(0xFFFF))
-    cy = (F.floor(y / cell).cast("long") + (1 << 15)).bitwiseAND(F.lit(0xFFFF))
-    return _part1by1(cx).bitwiseOR(F.shiftleft(_part1by1(cy), 1))
-
-
-def write_geo_parquet(df: DataFrame, path: str, cell: float = 8.0,
-                      geom_col: str = "geom",
-                      mode: str = "overwrite",
-                      files_per_cell: int = 1,
-                      zorder: bool = False) -> None:
-    """Sink: parquet partitioned by the grid cell of each geometry's
-    bbox centroid, with plain ``xmin..ymax`` bbox columns persisted
-    alongside (the GeoParquet "covering" pattern). At 100 TB readers get
-    BOTH directory-level partition pruning and parquet min/max row-group
-    skipping on the bbox columns; rows with NULL geometry land in the
-    NULL cell partitions and are never silently dropped.
-
-    A ``_geo_meta`` sidecar (underscore-prefixed → invisible to parquet
-    dataset readers) records the cell size and the maximum geometry
-    extent, so the read side can widen its centroid-cell slop correctly —
-    centroid partitioning alone would silently drop any geometry wider
-    than ~2 cells whose centroid sits outside the naive ±1 window."""
-    b = box2d(F.col(geom_col))
-    out = df
-    if not all(c in df.columns for c in BBOX_COLS):
-        out = out.withColumn("_bbox", b)
-        for c in BBOX_COLS:
-            out = out.withColumn(c, F.col(f"_bbox.{c}"))
-        out = out.drop("_bbox")
-    with_cells = (out
-                  .withColumn("cell_x", F.floor(
-                      (F.col("xmin") + F.col("xmax")) / (2 * cell))
-                      .cast("long"))
-                  .withColumn("cell_y", F.floor(
-                      (F.col("ymin") + F.col("ymax")) / (2 * cell))
-                      .cast("long")))
-    # Cluster by the partition columns before the partitioned write:
-    # without this every shuffle task opens a writer in EVERY cell
-    # directory → tasks × cells tiny files (measured 37 s for a 600k-row
-    # write; 9 s after). maxRecordsPerFile re-splits a huge cell's
-    # FILES, but one task still writes the whole cell — for skewed data
-    # raise ``files_per_cell`` to salt the clustering shuffle so a hot
-    # cell spreads across that many tasks (bounded: at most
-    # files_per_cell writers per directory, never tasks × cells).
-    keys = [F.col("cell_x"), F.col("cell_y")]
-    if files_per_cell > 1:
-        keys.append(F.pmod(F.xxhash64(*[F.col(c) for c in BBOX_COLS]),
-                           F.lit(files_per_cell)))
-    clustered = with_cells.repartition(*keys)
-    if zorder:
-        # Z-order rows WITHIN each cell at cell/16 granularity: bbox
-        # min/max stats per row group then cover compact 2-D
-        # neighborhoods instead of insertion-order stripes, so a window
-        # read skips more row groups inside the cells it must open.
-        # Map-side sort after the clustering shuffle — no extra exchange.
-        # The partition columns MUST lead the sort key: a partitioned
-        # write requires its data sorted by the partition columns, and
-        # if our sort doesn't already satisfy that, V1Writes inserts its
-        # own non-stable sort on (cell_x, cell_y) that scrambles the
-        # Morton order again (verified: without the prefix, a quarter of
-        # the written files came out unsorted).
-        clustered = clustered.sortWithinPartitions(
-            F.col("cell_x"), F.col("cell_y"),
-            morton_key((F.col("xmin") + F.col("xmax")) / 2,
-                       (F.col("ymin") + F.col("ymax")) / 2,
-                       cell=cell / 16))
-    # extent metadata rides the write job itself as observed metrics
-    # (r11, guide §1.2 "don't compute things twice"): the old shape
-    # re-read every written file for a 2-double aggregate — a second
-    # full scan whose per-file open cost grows with the cell count.
-    from pyspark.sql import Observation
-    obs = Observation("geo_extent")
-    clustered = clustered.observe(
-        obs, F.max(F.col("xmax") - F.col("xmin")).alias("w"),
-        F.max(F.col("ymax") - F.col("ymin")).alias("h"))
-    (clustered.write.mode(mode)
-     .option("maxRecordsPerFile", 5_000_000)
-     .partitionBy("cell_x", "cell_y").parquet(path))
-    ext = obs.get
-    # one 1-row sidecar file: written driver-side with pyarrow — a
-    # spark job (createDataFrame + coalesce(1) write) for one row cost
-    # ~0.5 s of scheduler/commit overhead per sink call
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    max_w, max_h = float(ext["w"] or 0.0), float(ext["h"] or 0.0)
-    old = _read_geo_meta(path)
-    if mode == "append" and old is not None:
-        # appended batches widen, never shrink, the recorded extent
-        max_w = max(max_w, float(old["max_w"]))
-        max_h = max(max_h, float(old["max_h"]))
-    os.makedirs(path + "/_geo_meta", exist_ok=True)
-    pq.write_table(
-        pa.table({"cell": pa.array([float(cell)], pa.float64()),
-                  "max_w": pa.array([max_w], pa.float64()),
-                  "max_h": pa.array([max_h], pa.float64())}),
-        os.path.join(path, "_geo_meta", "meta.parquet"))
-
-
-def _read_geo_meta(path: str) -> Optional[dict]:
-    """Driver-side read of the 1-row ``_geo_meta`` sidecar (any parquet
-    file in the dir — spark-written legacy part files included). A
-    spark.read job for one row cost ~0.5 s per windowed read."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-    files = sorted(_glob.glob(os.path.join(path, "_geo_meta", "*.parquet")))
-    for f in files:
-        t = pq.read_table(f)
-        if t.num_rows:
-            return {c: t.column(c)[0].as_py() for c in t.column_names}
-    return None
-
-
-def read_geo_parquet(spark: SparkSession, path: str,
-                     bbox: Optional[Tuple[float, float, float, float]] = None,
-                     cell: float = 8.0) -> DataFrame:
-    """Read a spatially-partitioned dataset; with ``bbox`` set, restrict
-    to overlapping cells via a NATIVE partition-column predicate (shows
-    up as PartitionFilters — non-matching directories are never opened)
-    plus a bbox-column range filter (pushed to parquet min/max stats for
-    row-group skipping). The cell slop is widened by the dataset's max
-    geometry extent from ``_geo_meta``, so wide geometries whose centroid
-    cell is far from the query window are still found. The exact geometry
-    predicate still applies downstream (both filters over-approximate).
-
-    Rows with NULL geometry have NULL bbox columns and are excluded —
-    correct for a spatial window query (NULL can't overlap)."""
-    df = spark.read.parquet(path)
-    if bbox is None:
-        return df
-    xmin, ymin, xmax, ymax = bbox
-    import math
-    slop_x, slop_y = 1, 1
-    try:
-        meta = _read_geo_meta(path)
-        mcell = float(meta["cell"])
-        # centroid of a geometry with half-extent hw can sit up to
-        # ceil(hw/cell) cells away from any cell its bbox overlaps
-        slop_x = int(math.ceil((meta["max_w"] / 2.0) / mcell)) + 1
-        slop_y = int(math.ceil((meta["max_h"] / 2.0) / mcell)) + 1
-        cell = mcell
-    except Exception:
-        pass  # legacy dataset without metadata: keep ±1 (documented risk)
-    pruned = df.where(
-        (F.col("cell_x") >= math.floor(xmin / cell) - slop_x)
-        & (F.col("cell_x") <= math.floor(xmax / cell) + slop_x)
-        & (F.col("cell_y") >= math.floor(ymin / cell) - slop_y)
-        & (F.col("cell_y") <= math.floor(ymax / cell) + slop_y))
-    if all(c in df.columns for c in BBOX_COLS):
-        pruned = pruned.where(
-            (F.col("xmin") <= xmax) & (F.col("xmax") >= xmin)
-            & (F.col("ymin") <= ymax) & (F.col("ymax") >= ymin))
-    return pruned
 
 
 def read_geojsonl(spark: SparkSession, path: str, geom_col: str = "geom",
@@ -272,37 +103,64 @@ def write_geojsonl(df: DataFrame, path: str, geom_col: str = "geom",
 #: GeoParquet spec version written into the ``geo`` footer key.
 GEOPARQUET_VERSION = "1.1.0"
 
+_BBOX = ("xmin", "ymin", "xmax", "ymax")
+
+
+def _geo_key(geom_col: str, types, srids, bbox, crs_projjson: Optional[dict],
+             covering: bool) -> dict:
+    """The ``geo`` metadata of one file or of the whole dataset, from
+    its geometry-type names, its non-zero SRIDs and its bbox (None when
+    it holds no non-NULL geometry). Engine type names are PostGIS-style
+    (``ST_Point``) and become spec names (``Point``). Without
+    ``crs_projjson``, a registry PROJJSON is stamped iff the SRIDs are
+    one registered non-4326 code; mixed or unregistered SRIDs write no
+    ``crs`` (the spec default OGC:CRS84)."""
+    col = {"encoding": "WKB",
+           "geometry_types": sorted(t[3:] if t.startswith("ST_") else t
+                                    for t in types)}
+    if bbox is not None:
+        col["bbox"] = list(bbox)
+    if covering:
+        col["covering"] = {"bbox": {c: ["bbox", c] for c in _BBOX}}
+    srids = sorted(srids)
+    if crs_projjson is not None:
+        col["crs"] = crs_projjson
+    elif len(srids) == 1 and srids[0] != 4326 and srids[0] in CRS_META:
+        col["crs"] = projjson(srids[0])
+    return {"version": GEOPARQUET_VERSION, "primary_column": geom_col,
+            "columns": {geom_col: col}}
+
 
 def write_geoparquet_std(df: DataFrame, path: str,
                          geom_col: str = "geom",
                          mode: str = "overwrite",
                          crs_projjson: Optional[dict] = None,
                          covering: bool = False) -> dict:
-    """Standard GeoParquet sink (r9 verdict gap 2): every data file
-    carries the spec's ``geo`` key in its parquet footer metadata, so
-    external readers (GDAL >= 3.5, geopandas.read_parquet) auto-
-    discover the geometry column — the interop piece
-    ``write_geo_parquet`` (the covering/partition layout above) does
-    not provide, because Spark's native parquet writer cannot attach
-    file-level key-value metadata.
+    """Standard GeoParquet sink: every data file carries the spec's
+    ``geo`` key in its parquet footer metadata, so external readers
+    (GDAL >= 3.5, geopandas.read_parquet) auto-discover the geometry
+    column — Spark's native parquet writer cannot attach file-level
+    key-value metadata.
 
-    Spark-first mechanics: geometry is re-encoded to ISO WKB
-    (EWKB SRID header stripped — the spec carries CRS in metadata,
-    not per-value), the ``geo`` JSON is built from ONE column-pruned
-    aggregate (distinct geometry types + dataset bbox, both native
-    min/max — no second pass through Python), and the files are
-    written by pyarrow INSIDE ``mapInArrow`` tasks — one file per
-    partition, no driver collect, the exact DataSource-V2 writer
-    shape. Each task buffers its partition's Arrow batches to stamp
-    the file's OWN bbox into its footer (parquet footers are written
-    last but fixed at writer-open in pyarrow 16, so a one-partition
-    buffer — bounded by spark.sql.files.maxPartitionBytes upstream —
-    is the cost of per-file pruning metadata). Paths are
-    task-local writes to a shared filesystem (local/NFS/fuse mounts;
-    an object store would swap the open() for fsspec — the task
-    structure is unchanged).
+    Spark-first mechanics: geometry is re-encoded to ISO WKB (EWKB SRID
+    header stripped — the spec carries CRS in metadata, not per-value)
+    and the files are written by pyarrow INSIDE ``mapInArrow`` tasks —
+    one file per partition, no driver collect, the exact DataSource-V2
+    writer shape. The ``geo`` statistics (geometry types, SRIDs, bbox)
+    ride the write job as hidden helper columns fused into the same
+    Arrow crossing as the ISO re-encode, are aggregated per task and
+    come back on the task report rows — one corpus pass. Each task
+    buffers its partition's Arrow batches to stamp the file's OWN
+    ``geo`` (types, bbox and, without ``crs_projjson``, a registry crs
+    iff the file's SRIDs allow one) into its footer: pyarrow fixes the
+    footer metadata at writer-open, so a one-partition buffer — bounded
+    by spark.sql.files.maxPartitionBytes upstream — is the cost of
+    per-file pruning metadata. The dataset-level ``geo`` is assembled
+    driver-side from the reports. Paths are task-local writes to a
+    shared filesystem (local/NFS/fuse mounts; an object store would
+    swap the open() for fsspec — the task structure is unchanged).
 
-    Commit protocol (r10 ADVICE): each task writes
+    Commit protocol: each task writes
     ``part-<partitionId>.parquet.<attemptId>.tmp`` and atomically
     renames to the deterministic ``part-<partitionId>.parquet`` only
     after its writer closes — a retried attempt OVERWRITES its
@@ -315,11 +173,8 @@ def write_geoparquet_std(df: DataFrame, path: str,
     ``crs_projjson`` is embedded verbatim under ``columns.<geom>.crs``
     (omit for the spec default OGC:CRS84 = WGS84 lon/lat). When it is
     omitted and every geometry carries the SAME registered non-4326
-    SRID (r10 verdict item 3), the PROJJSON is emitted automatically
-    from the engine's CRS registry (``geo.proj.projjson``) — the SRID
-    column of the same one-pass stats aggregate decides, so auto-CRS
-    costs no extra scan. Data with mixed or unregistered SRIDs writes
-    no ``crs`` (spec default), unchanged from before. Returns the
+    SRID, the PROJJSON comes from the engine's CRS registry
+    (``geo.proj.projjson``); see ``_geo_key``. Returns the dataset-level
     ``geo`` metadata dict that was written.
 
     ``covering=True`` additionally persists a ``bbox`` struct column
@@ -328,12 +183,11 @@ def write_geoparquet_std(df: DataFrame, path: str,
     mechanism. This is the ROW-GROUP-scale pruning path: parquet
     min/max statistics on the struct children let any reader (and
     ``read_geoparquet_std``'s bbox filter) skip row groups, the layer
-    below the per-FILE footer-bbox pruning, and the layer a 100 TB
-    scan actually lives on.
+    below the per-FILE footer-bbox pruning.
     """
-    import json
-    import os
     import shutil
+
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from ..functions import st_geometrytype, st_setsrid, st_srid
 
@@ -343,52 +197,18 @@ def write_geoparquet_std(df: DataFrame, path: str,
         raise ValueError(f"write_geoparquet_std: path exists: {path}")
     os.makedirs(path, exist_ok=True)
 
-    # ONE corpus pass (r11, guide §1.2 "don't skip ahead of the
-    # algorithm"): the r10 shape ran a separate stats aggregate
-    # (geometry types + SRID set + dataset bbox, each through the
-    # Python kernels) BEFORE the write job — a second full pass that
-    # cost ~1.4 s of the 4.5 s sink at sf0.1. The stats now ride the
-    # write job itself as hidden helper columns (fused into the same
-    # ArrowEvalPython crossing as the ISO re-encode), are aggregated
-    # per task, and come back on the task report rows; the
-    # dataset-level ``geo`` is assembled driver-side from the reports.
-    # Per-file footers carry the FILE's own geometry_types/bbox (the
-    # spec's file-describes-itself reading) and, when ``crs_projjson``
-    # is not given, a registry PROJJSON iff the FILE's SRIDs are one
-    # registered non-4326 code; dataset-level readers take the
-    # manifest ``geo`` (geoparquet_metadata prefers it), so a
-    # mixed-SRID dataset still reads back crs-less exactly as before.
     # SRID must be read BEFORE the ISO re-encode strips it; the helper
     # column fuses into the same Python crossing as the strip itself
-    iso = (df.withColumn("__gp_s", st_srid(F.col(geom_col)))
+    out = (df.withColumn("__gp_s", st_srid(F.col(geom_col)))
            .withColumn(geom_col, st_setsrid(F.col(geom_col), 0)))
-    explicit_crs = crs_projjson
-    col_meta = {"encoding": "WKB", "geometry_types": []}
-    if covering:
-        col_meta["covering"] = {"bbox": {
-            "xmin": ["bbox", "xmin"], "ymin": ["bbox", "ymin"],
-            "xmax": ["bbox", "xmax"], "ymax": ["bbox", "ymax"]}}
-    if explicit_crs is not None:
-        col_meta["crs"] = explicit_crs
-    geo = {"version": GEOPARQUET_VERSION,
-           "primary_column": geom_col,
-           "columns": {geom_col: col_meta}}
-    geo_bytes = json.dumps(geo, sort_keys=True).encode("utf-8")
-
-    _HX = ["__gp_x0", "__gp_y0", "__gp_x1", "__gp_y1",
-           "__gp_t", "__gp_s"]
     bx = box2d(F.col(geom_col))
-    withbb = iso
     if covering:  # persisted covering column, spec field names
-        withbb = withbb.withColumn("bbox", F.struct(
-            bx["xmin"].alias("xmin"), bx["ymin"].alias("ymin"),
-            bx["xmax"].alias("xmax"), bx["ymax"].alias("ymax")))
-    withbb = (withbb.withColumn(_HX[0], bx["xmin"])
-              .withColumn(_HX[1], bx["ymin"])
-              .withColumn(_HX[2], bx["xmax"])
-              .withColumn(_HX[3], bx["ymax"])
-              .withColumn(_HX[4], st_geometrytype(F.col(geom_col))))
-    # _HX[5] == "__gp_s", already added before the ISO strip above
+        out = out.withColumn("bbox", F.struct(
+            *[bx[c].alias(c) for c in _BBOX]))
+    _HX = ["__gp_x0", "__gp_y0", "__gp_x1", "__gp_y1", "__gp_t", "__gp_s"]
+    for h, c in zip(_HX, _BBOX):
+        out = out.withColumn(h, bx[c])
+    out = out.withColumn(_HX[4], st_geometrytype(F.col(geom_col)))
 
     def _write(batches):
         import pyarrow as pa
@@ -422,35 +242,18 @@ def write_geoparquet_std(df: DataFrame, path: str,
             chunks.append(batch.select(keep))
             n += batch.num_rows
         if chunks:
-            fgeo = json.loads(geo_bytes.decode("utf-8"))
-            fcol = fgeo["columns"][geom_col]
-            # engine names are PostGIS-style ST_Point -> spec Point
-            fcol["geometry_types"] = sorted(
-                t[3:] if t.startswith("ST_") else t for t in ftypes)
-            if fb[0] is not None:
-                fcol["bbox"] = fb
-            else:
-                fcol.pop("bbox", None)  # all-NULL-geometry file
-            if explicit_crs is None:
-                from datafusion_geo_spark.geo.proj import (CRS_META,
-                                                           projjson)
-                fs = sorted(fsrids)
-                # Per-file crs: stamped only when THIS file's SRIDs are
-                # one registered non-4326 code. In a mixed-SRID dataset
-                # different files can therefore carry DIVERGENT crs
-                # footers (each true of its own file, per spec: file
-                # metadata describes the file); the DATASET-level
-                # decision lives in the manifest, which this engine's
-                # reader prefers. External readers that unify footer
-                # schemas across files should read the manifest or
-                # treat footer crs as per-file (ADVICE r11, documented
-                # divergence).
-                if len(fs) == 1 and fs[0] != 4326 and fs[0] in CRS_META:
-                    fcol["crs"] = projjson(fs[0])
-            fbytes = json.dumps(fgeo, sort_keys=True).encode("utf-8")
+            # Per-file crs is stamped only when THIS file's SRIDs allow
+            # one, so in a mixed-SRID dataset different files can carry
+            # divergent crs footers (each true of its own file, per
+            # spec); the dataset-level decision lives in the manifest,
+            # which this engine's reader prefers.
+            fgeo = _geo_key(geom_col, ftypes, fsrids,
+                            fb if fb[0] is not None else None,
+                            crs_projjson, covering)
             table = pa.Table.from_batches(chunks)
             table = table.replace_schema_metadata(
-                {**(chunks[0].schema.metadata or {}), b"geo": fbytes})
+                {**(chunks[0].schema.metadata or {}),
+                 b"geo": json.dumps(fgeo, sort_keys=True).encode("utf-8")})
             pq.write_table(table, tmp)
             os.replace(tmp, final)  # atomic per-task commit
             yield pa.RecordBatch.from_pydict(
@@ -465,38 +268,25 @@ def write_geoparquet_std(df: DataFrame, path: str,
                  "srids": pa.array([sorted(fsrids)],
                                    type=pa.list_(pa.int64()))})
 
-    written = withbb.mapInArrow(
+    written = out.mapInArrow(
         _write, "file string, rows long, xmin double, ymin double, "
                 "xmax double, ymax double, types array<string>, "
                 "srids array<long>").collect()
-    # dataset-level geo: the union of the per-task stats (the same
-    # values the r10 pre-pass aggregated, now for free)
-    all_types = sorted({t for r in written for t in (r["types"] or [])})
-    all_srids = sorted({s for r in written for s in (r["srids"] or [])})
-    col_meta["geometry_types"] = [t[3:] if t.startswith("ST_") else t
-                                  for t in all_types]
     xs = [r for r in written if r["xmin"] is not None]
-    if xs:
-        col_meta["bbox"] = [min(r["xmin"] for r in xs),
-                            min(r["ymin"] for r in xs),
-                            max(r["xmax"] for r in xs),
-                            max(r["ymax"] for r in xs)]
-    if explicit_crs is None:
-        from ..geo.proj import CRS_META, projjson
-        if (len(all_srids) == 1 and all_srids[0] != 4326
-                and all_srids[0] in CRS_META):
-            col_meta["crs"] = projjson(all_srids[0])
-    geo = {"version": GEOPARQUET_VERSION,
-           "primary_column": geom_col,
-           "columns": {geom_col: col_meta}}
-    geo_bytes = json.dumps(geo, sort_keys=True).encode("utf-8")
+    geo = _geo_key(
+        geom_col, {t for r in written for t in (r["types"] or [])},
+        {s for r in written for s in (r["srids"] or [])},
+        ([min(r["xmin"] for r in xs), min(r["ymin"] for r in xs),
+          max(r["xmax"] for r in xs), max(r["ymax"] for r in xs)]
+         if xs else None),
+        crs_projjson, covering)
     if not written:  # empty input: still emit one all-metadata file
         import pyarrow as pa
         import pyarrow.parquet as pq
-        empty = spark_schema_to_arrow(iso.drop("__gp_s"))
-        pq.write_table(
-            empty.replace_schema_metadata({b"geo": geo_bytes}),
-            os.path.join(path, "part-00000.parquet"))
+        schema = to_arrow_schema(out.drop(*_HX).schema).with_metadata(
+            {b"geo": json.dumps(geo, sort_keys=True).encode("utf-8")})
+        pq.write_table(schema.empty_table(),
+                       os.path.join(path, "part-00000.parquet"))
     # Dataset manifest sidecar (underscore-prefixed → invisible to
     # parquet dataset readers): per-file rows + bbox collected from
     # the task reports, so a windowed read prunes from ONE small JSON
@@ -520,71 +310,56 @@ def write_geoparquet_std(df: DataFrame, path: str,
     return geo
 
 
-def spark_schema_to_arrow(df: DataFrame):
-    """Empty Arrow table with df's schema (driver-side, for the
-    zero-row GeoParquet write)."""
-    import pyarrow as pa
-    return pa.Table.from_batches([], schema=pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in df.schema]))
+def _footer_geo(f: str) -> Optional[dict]:
+    """The ``geo`` key of one parquet file's footer, or None."""
+    import pyarrow.parquet as pq
+    md = pq.read_schema(f).metadata or {}
+    return json.loads(md[b"geo"].decode("utf-8")) if b"geo" in md else None
 
 
-def _arrow_type(dt):
-    import pyarrow as pa
-    from pyspark.sql import types as T
-    m = {T.BinaryType: pa.binary(), T.StringType: pa.string(),
-         T.LongType: pa.int64(), T.IntegerType: pa.int32(),
-         T.DoubleType: pa.float64(), T.BooleanType: pa.bool_()}
-    for k, v in m.items():
-        if isinstance(dt, k):
-            return v
-    raise TypeError(f"zero-row GeoParquet write: unmapped type {dt}")
+def _dataset_meta(path: str):
+    """``(geo, files, entries)`` of a GeoParquet dataset: the data files
+    (``*.parquet``, sorted), the dataset-level ``geo`` and the per-file
+    ``{rows, bbox}`` entries of the sink's ``_geo_manifest.json``.
+
+    The manifest is trusted only while its file-name set matches the
+    directory's actual ``*.parquet`` listing — files added or removed by
+    other tools otherwise let a stale sidecar silently shadow the real
+    footers. (A same-name in-place rewrite is undetectable from names
+    alone and remains the documented limitation of any sidecar
+    catalog.) A missing, corrupt or stale manifest gives ``entries``
+    None and ``geo`` from the first data file's footer (the spec
+    requires every file to carry the key); ``geo`` is None when the
+    dataset has no GeoParquet metadata anywhere."""
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    try:
+        with open(os.path.join(path, "_geo_manifest.json"),
+                  encoding="utf-8") as fh:
+            m = json.load(fh)
+        if set(m.get("files") or {}) != {os.path.basename(f)
+                                         for f in files}:
+            m = {}  # stale sidecar → footer fallback
+    except (OSError, ValueError, AttributeError, TypeError):
+        m = {}  # missing or corrupt sidecar → footer fallback
+    geo = m.get("geo")
+    if geo is None and files:
+        geo = _footer_geo(files[0])
+    return geo, files, m.get("files")
 
 
 def geoparquet_metadata(path: str) -> Optional[dict]:
     """Read back the DATASET-level ``geo`` metadata of a GeoParquet
-    dataset. Preferred source (r11): the sink's ``_geo_manifest.json``
+    dataset. Preferred source: the sink's ``_geo_manifest.json``
     sidecar, whose ``geo`` key is assembled from every task's stats —
-    since the r11 single-pass sink, per-FILE footers carry the file's
-    OWN geometry_types/bbox (and a crs only when that file's SRIDs
-    allow one), so the manifest is the authoritative dataset view.
-    Fallback for datasets written by other tools: the first data
-    file's footer (the spec requires every file to carry the key).
-    None when the dataset has no GeoParquet metadata anywhere. NOTE:
-    on the footer-fallback path ``bbox`` is that FILE's bbox; for the
-    dataset extent, aggregate the per-file bboxes (as
-    ``read_geoparquet_std``'s pruning does).
-
-    Staleness guard (ADVICE r11): the manifest is trusted only while
-    its file-name set matches the directory's actual ``*.parquet``
-    listing — files added or removed by other tools otherwise let a
-    stale sidecar silently shadow the real footers. (A same-name
-    in-place rewrite is undetectable from names alone and remains the
-    documented limitation of any sidecar catalog.)"""
-    import glob
-    import json
-
-    import pyarrow.parquet as pq
-    mpath = os.path.join(path, "_geo_manifest.json")
-    if os.path.exists(mpath):
-        try:
-            with open(mpath, encoding="utf-8") as fh:
-                m = json.load(fh)
-            mgeo = m.get("geo")
-            names = set(m.get("files") or {})
-            actual = {os.path.basename(f) for f in
-                      glob.glob(os.path.join(path, "*.parquet"))}
-            if mgeo is not None and names == actual:
-                return mgeo
-            # name-set mismatch: sidecar is stale → footer fallback
-        except Exception:
-            pass  # corrupt sidecar → footer fallback
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        md = pq.read_schema(f).metadata or {}
-        if b"geo" in md:
-            return json.loads(md[b"geo"].decode("utf-8"))
-        return None
-    return None
-
+    per-FILE footers carry the file's OWN geometry_types/bbox (and a
+    crs only when that file's SRIDs allow one), so the manifest is the
+    authoritative dataset view. Fallback for datasets written by other
+    tools, or when the manifest is stale (see ``_dataset_meta``): the
+    first data file's footer. None when the dataset has no GeoParquet
+    metadata anywhere. NOTE: on the footer-fallback path ``bbox`` is
+    that FILE's bbox; for the dataset extent, aggregate the per-file
+    bboxes (as ``read_geoparquet_std``'s pruning does)."""
+    return _dataset_meta(path)[0]
 
 
 def read_geoparquet_std(spark: SparkSession, path: str,
@@ -599,56 +374,30 @@ def read_geoparquet_std(spark: SparkSession, path: str,
     Datasets without the footer key read back unchanged, so this is a
     drop-in for spark.read.parquet on any parquet directory.
 
-    With ``bbox=(xmin, ymin, xmax, ymax)`` (r10 verdict item 4), files
-    whose footer ``geo`` bbox does not intersect the window are
-    PRUNED from the scan — the sink stamps each file's own bbox, so
-    this is the footer-metadata twin of the covering-layout reader's
-    partition pruning (``read_geo_parquet``). When the sink's
-    ``_geo_manifest.json`` sidecar is present the per-file bboxes come
-    from that ONE file (the catalog-scale path — no per-file footer
-    reads at 100k files); otherwise footer reads are metadata-only
-    (no data pages). Files without a bbox anywhere are conservatively
-    kept. When the dataset declares a 1.1 ``covering``
-    bbox column, the window additionally becomes a row-level range
-    filter on it — pushed to parquet column statistics for row-group
-    skipping (NULL-geometry rows are dropped by it, like any bbox
-    candidate filter). Without a covering, the result contains every
-    row of the surviving files — apply the exact spatial predicate on
-    top, same as any stats-pruned scan."""
-    import glob as _glob
-    import json
-
-    import pyarrow.parquet as pq
-
-    geo = geoparquet_metadata(path)
+    With ``bbox=(xmin, ymin, xmax, ymax)``, files whose bbox does not
+    intersect the window are PRUNED from the scan — the sink stamps
+    each file's own bbox. When the sink's ``_geo_manifest.json``
+    sidecar is current the per-file bboxes come from that ONE file (the
+    catalog-scale path — no per-file footer reads at 100k files);
+    otherwise footer reads are metadata-only (no data pages). Files
+    without a bbox anywhere are conservatively kept. When the dataset
+    declares a 1.1 ``covering`` bbox column, the window additionally
+    becomes a row-level range filter on it — pushed to parquet column
+    statistics for row-group skipping (NULL-geometry rows are dropped
+    by it, like any bbox candidate filter). Without a covering, the
+    result contains every row of the surviving files — apply the exact
+    spatial predicate on top, same as any stats-pruned scan."""
+    geo, files, entries = _dataset_meta(path)
+    pcol = (geo or {}).get("primary_column")
+    gcol = ((geo or {}).get("columns", {}).get(pcol) or {})
     if bbox is not None and geo:
         qx0, qy0, qx1, qy1 = (float(v) for v in bbox)
-        pcol = geo.get("primary_column")
-        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        mpath = os.path.join(path, "_geo_manifest.json")
-        mfiles = None
-        if os.path.exists(mpath):
-            try:  # sidecar from this engine's sink: ONE metadata read
-                with open(mpath, encoding="utf-8") as fh:
-                    mfiles = json.load(fh).get("files")
-                # staleness guard (ADVICE r11): same name-set check as
-                # geoparquet_metadata — a listing that drifted from the
-                # sidecar means other tools touched the dataset
-                if mfiles is not None and set(mfiles) != \
-                        {os.path.basename(f) for f in files}:
-                    mfiles = None
-            except Exception:
-                mfiles = None  # corrupt sidecar → footer fallback
 
         def _file_bbox(f):
-            name = os.path.basename(f)
-            if mfiles is not None and name in mfiles:
-                return mfiles[name].get("bbox")
-            md = pq.read_schema(f).metadata or {}
-            fgeo = (json.loads(md[b"geo"].decode("utf-8"))
-                    if b"geo" in md else {})
-            return (fgeo.get("columns", {}).get(pcol, {}) or {}) \
-                .get("bbox")
+            if entries is not None:
+                return entries[os.path.basename(f)].get("bbox")
+            return ((_footer_geo(f) or {}).get("columns", {})
+                    .get(pcol) or {}).get("bbox")
 
         kept = []
         for f in files:
@@ -659,28 +408,23 @@ def read_geoparquet_std(spark: SparkSession, path: str,
         if not kept:  # nothing intersects: empty frame, same schema
             return spark.read.parquet(path).where(F.lit(False))
         df = spark.read.parquet(*kept)
-    else:
-        df = spark.read.parquet(path)
-    if bbox is not None and geo:
-        cov = ((geo.get("columns", {})
-                .get(geo.get("primary_column"), {}) or {})
-               .get("covering", {}) or {}).get("bbox")
+        cov = (gcol.get("covering") or {}).get("bbox")
         if cov:
-            qx0, qy0, qx1, qy1 = (float(v) for v in bbox)
             cx0, cy0 = ".".join(cov["xmin"]), ".".join(cov["ymin"])
             cx1, cy1 = ".".join(cov["xmax"]), ".".join(cov["ymax"])
             df = df.where((F.col(cx0) <= qx1) & (F.col(cx1) >= qx0)
                           & (F.col(cy0) <= qy1) & (F.col(cy1) >= qy0))
+    else:
+        df = spark.read.parquet(path)
     if not geo or not set_srid:
         return df
-    col = geo.get("primary_column")
-    crs = (geo.get("columns", {}).get(col, {}) or {}).get("crs")
+    crs = gcol.get("crs")
     code = None
     if isinstance(crs, dict):
         ident = crs.get("id") or {}
         if ident.get("authority") == "EPSG":
             code = ident.get("code")
-    if col in df.columns and code:
+    if pcol in df.columns and code:
         from ..functions import st_setsrid
-        df = df.withColumn(col, st_setsrid(F.col(col), int(code)))
+        df = df.withColumn(pcol, st_setsrid(F.col(pcol), int(code)))
     return df

@@ -108,7 +108,7 @@ def test_bbox_file_pruning(spark, tmp_path):
     assert got3.columns == got.columns
 
 
-def test_geo_metadata_content(spark, tmp_path):
+def test_geo_key_content(spark, tmp_path):
     out = str(tmp_path / "gp")
     geo = write_geoparquet_std(_pts(spark), out)
     assert geo["version"] == "1.1.0"
@@ -277,12 +277,22 @@ def test_iso_wkb_no_ewkb_header_and_roundtrip(spark, tmp_path):
 
 
 def test_empty_dataframe_writes_metadata_only(spark, tmp_path):
-    out = str(tmp_path / "gp")
-    geo = write_geoparquet_std(_pts(spark).where(F.lit(False)), out)
-    assert geo["columns"]["geom"]["geometry_types"] == []
-    assert "bbox" not in geo["columns"]["geom"]
-    assert geoparquet_metadata(out) == geo
-    assert spark.read.parquet(out).count() == 0
+    from datafusion_geo_spark.sources.geoio import read_geoparquet_std
+    for covering in (False, True):
+        out = str(tmp_path / f"gp_{covering}")
+        geo = write_geoparquet_std(_pts(spark).where(F.lit(False)), out,
+                                   covering=covering)
+        assert geo["columns"]["geom"]["geometry_types"] == []
+        assert "bbox" not in geo["columns"]["geom"]
+        assert geoparquet_metadata(out) == geo
+        assert spark.read.parquet(out).count() == 0
+        # the zero-row file's schema is the frame written: the declared
+        # covering column is there, the sink's helper columns are not
+        names = pq.read_schema(os.path.join(out, "part-00000.parquet")).names
+        assert names == (["id", "geom", "bbox"] if covering
+                         else ["id", "geom"])
+        win = read_geoparquet_std(spark, out, bbox=(0.0, 0.0, 9.0, 9.0))
+        assert win.count() == 0
 
 
 def test_overwrite_and_error_modes(spark, tmp_path):

@@ -3,7 +3,9 @@
 through the Hadoop FileSystem, so a filesystem URI counts the same
 bytes as a bare local path instead of silently counting 0."""
 
-from datafusion_geo_spark.streaming.runner import _source_bytes
+from datafusion_geo_spark.streaming import runner
+from datafusion_geo_spark.streaming.runner import (_source_bytes,
+                                                   stateful_shuffle_partitions)
 
 
 def _tree(tmp_path):
@@ -25,3 +27,32 @@ def test_source_bytes_sums_paths_and_skips_missing(spark, tmp_path):
     assert _source_bytes(spark, tmp_path.as_uri(), one) == want + 1000
     assert _source_bytes(spark, (tmp_path / "missing").as_uri()) == 0
 
+
+
+class _ObjectStoreFS:
+    """Hadoop FileSystem stand-in for an object-store bucket: one
+    96 MiB prefix, nothing else."""
+
+    SIZES = {"s3a://bucket/events": 96 << 20}
+
+    class _Summary:
+        def __init__(self, n):
+            self._n = n
+
+        def getLength(self):
+            return self._n
+
+    def exists(self, p):
+        return p in self.SIZES
+
+    def getContentSummary(self, p):
+        return self._Summary(self.SIZES[p])
+
+
+def test_object_store_source_gets_more_than_one_partition(spark,
+                                                          monkeypatch):
+    monkeypatch.setattr(runner, "fs_for",
+                        lambda _spark, p: (_ObjectStoreFS(), p))
+    got = stateful_shuffle_partitions(spark, "s3a://bucket/events")
+    assert got == min(3, spark.sparkContext.defaultParallelism)
+    assert got > 1

@@ -1,7 +1,7 @@
 """Regression tests for the round-10 ADVICE fixes.
 
 1. adjusted_rand pair counts stay exact past the 2^53 double window
-   (evals.py pairs2 now uses _idiv, not a double '/2').
+   (evals.py pairs2 now uses util.idiv, not a double '/2').
 2. krippendorff_alpha counts NULL-bearing units explicitly
    (n_skipped) instead of silently dropping them from o_mis2 while
    keeping their labels in the marginals.
@@ -26,7 +26,7 @@ from datafusion_geo_spark.operators.edit_join import (_del1,
 def test_ari_pairs_exact_beyond_double_window(spark):
     # c = 2^28+3: c*(c-1) = 2^56 + 5*2^28 + 6 needs ~55 significant
     # bits, NOT double-representable, so a double '/2' would round;
-    # _idiv keeps C(c,2) exact. (n_total = 2c stays well inside the
+    # util.idiv keeps C(c,2) exact. (n_total = 2c stays well inside the
     # operator's n*(n-1) <= 2^63 domain.)
     c = 2 ** 28 + 3
     conf = spark.createDataFrame([("x", "p", c), ("y", "q", c)],

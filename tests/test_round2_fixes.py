@@ -8,8 +8,8 @@
 3. GridIndex auto cell heuristic on an all-point batch must not collapse
    to a ~0 cell (query() over a realistic envelope would iterate
    (extent/cell)² buckets).
-4. read_geo_parquet must not drop geometries wider than ~2 cells whose
-   bbox-centroid cell sits outside the naive ±1 window.
+4. A bbox-windowed GeoParquet read must not drop a geometry whose
+   centre is far outside the window while its bbox overlaps it.
 """
 
 import os
@@ -114,22 +114,21 @@ def test_grid_index_all_points_terminates():
 
 def test_pruned_read_keeps_wide_geometries(spark):
     from datafusion_geo_spark.functions import st_geomfromtext
-    from datafusion_geo_spark.sources.geoio import (read_geo_parquet,
-                                                    write_geo_parquet)
+    from datafusion_geo_spark.sources.geoio import (read_geoparquet_std,
+                                                    write_geoparquet_std)
     out_dir = os.path.join(CACHE, "wide_pq")
     rows = [(i, f"POINT({(i % 40) * 5} {(i // 40) * 5})") for i in range(200)]
-    # one geometry spanning x∈[0,400]: centroid cell_x=25 (cell=8), far
-    # outside the naive ±1 window of a (0,0,10,10) query
+    # one geometry spanning x∈[0,400]: its centre (200, 0) is far outside
+    # a (0,0,10,10) window, but its bbox overlaps it
     rows.append((999, "LINESTRING(0 0,400 0)"))
     src = (spark.createDataFrame(rows, "id long, wkt string")
            .withColumn("geom", st_geomfromtext(F.col("wkt"))).drop("wkt"))
-    write_geo_parquet(src, out_dir, cell=8.0)
-    pruned = read_geo_parquet(spark, out_dir, bbox=(0, 0, 10, 10), cell=8.0)
+    write_geoparquet_std(src, out_dir, covering=True)
+    pruned = read_geoparquet_std(spark, out_dir, bbox=(0, 0, 10, 10))
     ids = {r.id for r in pruned.select("id").collect()}
-    assert 999 in ids, "wide geometry dropped by centroid-cell pruning"
+    assert 999 in ids, "wide geometry dropped by the bbox window"
     # still actually prunes: far-away points are not read
     assert len(ids) < 200
-    # row-group-skippable bbox filter is native (pushed filters present)
+    # row-group-skippable covering filter is native (pushed filters)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "xmin" in plan and "PushedFilters" in plan
+    assert "PushedFilters" in plan and "bbox.xmin" in plan

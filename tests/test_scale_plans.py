@@ -188,14 +188,13 @@ def test_range_join_no_nested_loop(spark):
 
 
 def test_geo_parquet_window_prunes_partitions(spark):
-    """The driver-checked geoio query must keep both pruning layers: a
-    native PartitionFilters entry on the cell columns (directories never
-    opened) and pushed bbox range filters (row-group skipping)."""
+    """The gated geoio query must keep its row-group pruning
+    layer: the window's range filter on the GeoParquet covering column
+    is pushed to the parquet scan (row groups skipped from stats)."""
     import __spark_entry__ as entrymod
     df = entrymod.queries()["geo_parquet_window"](spark, SF_DIR)
     plan = plan_of(df)
-    assert "PartitionFilters: [" in plan and "cell_x" in plan
-    assert "PushedFilters: [" in plan and "xmin" in plan
+    assert "PushedFilters: [" in plan and "bbox.xmin" in plan
 
 
 def test_sphere_paths_window_parallelism_scales(spark):

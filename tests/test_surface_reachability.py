@@ -50,9 +50,8 @@ KEPT = {
     "register_fixture_views": "fixture temp views for SQL-first use of "
                               "register_all",
     "sp_vocab_bpe": "SentencePiece vocab rows for an exported BPE model",
-    "cosine": "public dot/norm/cosine column API; the kernels use "
-              "prenormed forms",
-    "clear_merge_cache": "public reset of the process-level BPE merge memo",
+    "geoparquet_metadata": "public read of a GeoParquet dataset's geo "
+                           "metadata (manifest, else first footer)",
 }
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
