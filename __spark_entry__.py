@@ -5798,6 +5798,10 @@ _FIRST50 = [
     "streaming_join", "ann_recall", "hamming_recall", "pq_topk",
     "ivfpq_topk", "spatial_knn_join", "knn_join", "cluster_within",
     "neardup_components",
+    # the ST_Transform kernel (one projection path in geo/proj.py)
+    "transform_points", "transform_utm", "stateplane_lcc",
+    "lambert93_roundtrip", "albers_conus", "osgb_grid", "laea_europe",
+    "crs_pipeline",
     # the oldest green rows (round 6)
     "url_dedup", "validity_literal", "value_quantiles", "vocab_encode",
     "zonal_stats",
@@ -5813,9 +5817,7 @@ _FIRST50 = [
     "alpha_resample", "asof_nearest", "auc_by_group", "auc_eval",
     "bpe_encode", "calibration_bins", "chunk_udtf", "corpus_diff",
     "csv_roundtrip", "domain_entropy", "dup_cluster_hist", "events_pivot",
-    "feature_corr", "hard_negatives", "heldout_ppl", "hll_by_group",
-    "hll_estimate", "hll_setops", "join_size_estimate", "ks_drift",
-    "lang_confusion",
+    "feature_corr",
 ]
 
 
@@ -6016,9 +6018,10 @@ def _pii_regexes() -> tuple[str, str]:
 
 def _transform_utm_oracle() -> str:
     """DuckDB twin of _q_transform_utm: the identical Krüger forward
-    chain (geo/proj.py lonlat_to_utm, same constants, same term order),
-    hyperbolics expanded via exp/ln (DuckDB has none), every literal
-    ::DOUBLE-cast, compared at cm rounding (see _rb2)."""
+    chain (geo/proj.py TMGeneric on the UTM n³ literals, same constants,
+    same term order), hyperbolics expanded via exp/ln (DuckDB has
+    none), every literal ::DOUBLE-cast, compared at cm rounding (see
+    _rb2)."""
     from datafusion_geo_spark.geo.proj import (A_TM, ALPHA_TM, K0_UTM,
                                                TT_TM)
     D = "0.017453292519943295::DOUBLE"          # DEG2RAD

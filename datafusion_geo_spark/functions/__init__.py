@@ -1007,9 +1007,11 @@ def st_distance(a: Geom, b: Geom) -> Column:
 
 @_sql("ST_Transform", kernel=kernels.transform_srid, rtype=BinaryType())
 def st_transform(g: Geom, to_srid: Int, from_srid: Int = None) -> Column:
-    """ST_Transform for EPSG:4326 <-> EPSG:3857 (spherical web
-    mercator, closed-form — geo/proj.py; beyond-reference utility).
-    PostGIS semantics: source SRID from the geometry's EWKB header, or
+    """ST_Transform between EPSG:4326 (and its 4269/4258 aliases),
+    3857 web mercator, UTM 326xx/327xx and every geo/proj.py
+    CRS_REGISTRY code, closed-form (beyond-reference utility); a
+    projected -> projected pair composes through 4326. PostGIS
+    semantics: source SRID from the geometry's EWKB header, or
     ``from_srid`` for plain-WKB inputs; output stamped with to_srid."""
 
 

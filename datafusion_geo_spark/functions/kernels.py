@@ -1044,84 +1044,61 @@ def dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
 
 def transform_srid(s: pd.Series, to_srid: pd.Series,
                    from_srid: Optional[pd.Series] = None) -> pd.Series:
-    """ST_Transform for the closed-form CRSs (geo/proj.py): 4326<->3857,
-    4326<->UTM 326xx/327xx (Krüger series), and every proj.CRS_REGISTRY
-    code (LCC 2SP / Albers / generic TM, optional Helmert datum shift),
-    with projected->projected routed through the 4326 hub; PostGIS
-    semantics — source SRID from the EWKB header unless from_srid is
-    given.
-    Vectorized numpy fast path for uniform plain-WKB point batches on
-    the 4326->3857 pair with an explicit constant from_srid; the
-    per-row driver otherwise (UTM pairs take that path)."""
+    """ST_Transform (geo/proj.py; PostGIS semantics — source SRID from
+    the EWKB header unless from_srid is given). The batch's non-NULL
+    rows are grouped by (source SRID, target SRID), and each group's
+    coordinates go through the pair's one ``proj.transformer`` array
+    function in one call: plain-WKB point and uniform linestring groups
+    through the numpy codecs, any other group through
+    ``proj.map_vertices`` over its distinct geometries."""
     from ..geo import proj
-    tl = to_srid.tolist()
-    fl = from_srid.tolist() if from_srid is not None else None
-    vals = s.tolist()
-    if fl is not None and len(vals):
-        t0 = _num(tl[0])
-        f0 = _num(fl[0])
-        const_pair = (t0 is not None and f0 is not None
-                      and all(_num(v) == t0 for v in tl)
-                      and all(_num(v) == f0 for v in fl))
-        if const_pair and (int(f0), int(t0)) == (proj.SRID_LONLAT,
-                                                 proj.SRID_MERCATOR):
-            pb = vector.decode_points(vals)
-            if pb is not None and np.all(
-                    (np.abs(pb.y[pb.valid]) < 90.0)
-                    | np.isnan(pb.y[pb.valid])):
-                # errstate: invalid slots may hold garbage coords
-                with np.errstate(all="ignore"):
-                    x = proj.R_MAJOR * (pb.x * proj.DEG2RAD)
-                    y = proj.R_MAJOR * np.log(np.tan(
-                        proj.PI_4 + (pb.y * proj.DEG2RAD) * 0.5))
-                return _obj_series(vector.encode_points(
-                    x, y, valid=pb.valid, srid=int(t0)))
-        if const_pair:
-            # registry-CRS batch fast paths (numpy twins of the
-            # scalar Snyder chains, geo/proj.py *_np): 4326 -> CRS
-            # forward and CRS -> 4326 inverse over uniform point
-            # batches — the map-only 100 TB shape for state plane /
-            # Albers / national-grid reprojection
-            f0i, t0i = int(f0), int(t0)
-            crs_f = (proj.CRS_REGISTRY.get(t0i)
-                     if f0i == proj.SRID_LONLAT else None)
-            crs_i = (proj.CRS_REGISTRY.get(f0i)
-                     if t0i == proj.SRID_LONLAT else None)
-            if crs_f is not None or crs_i is not None:
-                pb = vector.decode_points(vals)
-                ok = pb is not None and (
-                    crs_i is not None
-                    or np.all((np.abs(pb.y[pb.valid]) < 90.0)
-                              | np.isnan(pb.y[pb.valid])))
-                if ok:
-                    with np.errstate(all="ignore"):
-                        if crs_f is not None:
-                            x, y = crs_f.forward_np(pb.x, pb.y)
-                        else:
-                            x, y = crs_i.inverse_np(pb.x, pb.y)
-                    return _obj_series(vector.encode_points(
-                        x, y, valid=pb.valid, srid=t0i))
-                # uniform plain-WKB LINESTRING batches (trajectories):
-                # the *_np twins are elementwise, so the (n, k) vertex
-                # matrices flow straight through
-                lb = vector.decode_uniform_lines(vals)
-                if lb is not None:
-                    lx = lb.coords[:, :, 0]
-                    ly = lb.coords[:, :, 1]
-                    ok = (crs_i is not None
-                          or np.all((np.abs(ly[lb.valid]) < 90.0)
-                                    | np.isnan(ly[lb.valid])))
-                    if ok:
-                        with np.errstate(all="ignore"):
-                            if crs_f is not None:
-                                x, y = crs_f.forward_np(lx, ly)
-                            else:
-                                x, y = crs_i.inverse_np(lx, ly)
-                        return _obj_series(vector.encode_uniform_lines(
-                            np.stack([x, y], axis=-1),
-                            valid=lb.valid, srid=t0i))
-    return _rows(lambda g, t, f=None: to_wkb(proj.transform_geometry(
-        g, int(t), None if f is None else int(f))), "gnn", s, to_srid, from_srid)
+    vals = s.to_numpy(dtype=object)
+    to = pd.to_numeric(to_srid).to_numpy(dtype=float)
+    keep = ~pd.isna(vals) & ~np.isnan(to)
+    if from_srid is not None:
+        src = pd.to_numeric(from_srid).to_numpy(dtype=float)
+        keep &= ~np.isnan(src)
+    else:
+        # NaN where a header carries no SRID: its transformer raises
+        src = np.full(len(vals), np.nan)
+        src[keep] = [np.nan if r is None else r
+                     for r in map(wkb_srid, vals[keep])]
+    rows = np.flatnonzero(keep)
+    fs, ts = src[rows], to[rows]
+    if len(rows) and (fs == fs[0]).all() and (ts == ts[0]).all():
+        # one pair, the common case: no grouping pass
+        groups = {(fs[0], ts[0]): np.arange(len(rows))}
+    else:
+        groups = pd.DataFrame({"f": fs, "t": ts}).groupby(
+            ["f", "t"], dropna=False, sort=False).indices
+    out = np.full(len(vals), None, dtype=object)
+    for (f, t), idx in groups.items():
+        idx, dst = rows[idx], int(t)
+        fn = proj.transformer(None if f != f else int(f), dst)
+        out[idx] = _obj_series(
+            _transform_group(fn, list(vals[idx]), dst)).to_numpy()
+    return _obj_series(out)
+
+
+def _transform_group(f: Callable, vals: list, dst: int) -> list:
+    """(E)WKB of every geometry in ``vals`` (non-NULL, one SRID pair)
+    with its coordinates mapped by the array function ``f`` and the
+    SRID stamped ``dst``."""
+    if 0 < dst < 2 ** 31:  # an SRID the numpy encoders write like to_wkb
+        pb = vector.decode_points(vals)
+        if pb is not None:
+            x, y = f(pb.x, pb.y)
+            return vector.encode_points(x, y, srid=dst)
+        lb = vector.decode_uniform_lines(vals)
+        if lb is not None:
+            x, y = f(lb.coords[:, :, 0], lb.coords[:, :, 1])
+            return vector.encode_uniform_lines(np.stack([x, y], axis=-1),
+                                               srid=dst)
+    from ..geo import proj
+    geoms = {v: from_wkb(v) for v in dict.fromkeys(vals)}
+    enc = {v: to_wkb(g.with_srid(dst)) for v, g in
+           zip(geoms, proj.map_vertices(list(geoms.values()), f))}
+    return [enc[v] for v in vals]
 
 
 # ------------------------------------------- accessors (beyond-reference)

@@ -1,12 +1,17 @@
 """Coordinate reference transforms (beyond-reference utility).
 
-Supports the one projection pair that covers the overwhelming share of
-web/tile workloads — WGS84 lon/lat (EPSG:4326) <-> spherical web
-mercator (EPSG:3857) — with the standard closed-form spherical formulas
-(no proj4 dependency; the container has none). Any other SRID pair
-raises. PostGIS ST_Transform semantics: the source SRID comes from the
-geometry (EWKB) unless the caller supplies one; the result is stamped
-with the target SRID.
+ST_Transform between WGS84 lon/lat (EPSG:4326; NAD83 4269 and ETRS89
+4258 are WGS84-identical aliases), spherical web mercator
+(EPSG:3857), UTM (EPSG:326xx north / 327xx south) and every CRS in
+``CRS_REGISTRY``, with closed-form formulas (no proj4 dependency; the
+container has none). Each projection is written once, as a
+``forward``/``inverse`` pair over numpy arrays, and
+:func:`transformer` routes an SRID pair through the 4326 hub to one
+array function — the single path both :func:`transform_geometry` and
+the ST_Transform kernel use. Any other SRID pair raises. PostGIS
+ST_Transform semantics: the source SRID comes from the geometry (EWKB)
+unless the caller supplies one; the result is stamped with the target
+SRID.
 
 Determinism: the arithmetic is written with explicit literal constants
 and a fixed operation order (lon * DEG2RAD, then * R) so a SQL oracle
@@ -16,7 +21,10 @@ last ulp before any rounding.
 
 from __future__ import annotations
 
+import copy
 import math
+
+import numpy as np
 
 from .geom import Geometry
 
@@ -33,25 +41,12 @@ SRID_MERCATOR = 3857
 GEOGRAPHIC_ALIASES = frozenset({4269, 4258})
 
 
-def lonlat_to_mercator(lon: float, lat: float) -> tuple:
-    if not (-90.0 < lat < 90.0):
-        raise ValueError(f"latitude {lat} out of (-90, 90) for EPSG:3857")
-    x = R_MAJOR * (lon * DEG2RAD)
-    y = R_MAJOR * math.log(math.tan(PI_4 + (lat * DEG2RAD) * 0.5))
-    return (x, y)
-
-
-def mercator_to_lonlat(x: float, y: float) -> tuple:
-    lon = (x / R_MAJOR) * RAD2DEG
-    lat = (2.0 * math.atan(math.exp(y / R_MAJOR)) - 2.0 * PI_4) * RAD2DEG
-    return (lon, lat)
-
-
 # ---- UTM (EPSG:326xx north / 327xx south) — closed-form Transverse
 # Mercator, Krüger α/β series to n³ (public formulas; sub-mm inside a
 # standard 6° zone). Constants precomputed once from WGS84
 # f = 1/298.257223563 and hard-coded as shortest-repr literals so a SQL
-# oracle can embed the identical doubles.
+# oracle can embed the identical doubles. A zone is a TMGeneric on
+# these literals (see _projection).
 K0_UTM = 0.9996
 FE_UTM = 500000.0
 FN_SOUTH = 10000000.0
@@ -73,131 +68,6 @@ def utm_zone(srid: int):
     if 32701 <= srid <= 32760:
         return srid - 32700, False
     return None
-
-
-def lonlat_to_utm(lon: float, lat: float, zone: int,
-                  north: bool) -> tuple:
-    """Forward Transverse Mercator (Krüger series). Operation order is
-    fixed and mirrored term-for-term by the SQL oracle (which expands
-    sinh/cosh/atanh via exp/ln); outputs are compared at 2 dp (cm), far
-    above the few-ulp libm-vs-exp-form divergence."""
-    lam0 = (zone * 6 - 183) * DEG2RAD
-    sphi = math.sin(lat * DEG2RAD)
-    t = math.sinh(math.atanh(sphi) - TT_TM * math.atanh(TT_TM * sphi))
-    lam = lon * DEG2RAD - lam0
-    xi_p = math.atan2(t, math.cos(lam))
-    eta_p = math.atanh(math.sin(lam) / math.sqrt(1.0 + t * t))
-    xi = xi_p
-    eta = eta_p
-    for j, aj in enumerate(ALPHA_TM, start=1):
-        xi = xi + aj * math.sin(2 * j * xi_p) * math.cosh(2 * j * eta_p)
-        eta = eta + aj * math.cos(2 * j * xi_p) * math.sinh(2 * j * eta_p)
-    e = FE_UTM + K0_UTM * A_TM * eta
-    nn = (0.0 if north else FN_SOUTH) + K0_UTM * A_TM * xi
-    return (e, nn)
-
-
-def utm_to_lonlat(e: float, nn: float, zone: int, north: bool) -> tuple:
-    """Inverse Transverse Mercator (Krüger β/δ series)."""
-    lam0 = (zone * 6 - 183) * DEG2RAD
-    xi = (nn - (0.0 if north else FN_SOUTH)) / (K0_UTM * A_TM)
-    eta = (e - FE_UTM) / (K0_UTM * A_TM)
-    xi_p = xi
-    eta_p = eta
-    for j, bj in enumerate(BETA_TM, start=1):
-        xi_p = xi_p - bj * math.sin(2 * j * xi) * math.cosh(2 * j * eta)
-        eta_p = eta_p - bj * math.cos(2 * j * xi) * math.sinh(2 * j * eta)
-    chi = math.asin(math.sin(xi_p) / math.cosh(eta_p))
-    lat = chi
-    for j, dj in enumerate(DELTA_TM, start=1):
-        lat = lat + dj * math.sin(2 * j * chi)
-    lon = lam0 + math.atan2(math.sinh(eta_p), math.cos(xi_p))
-    return (lon * RAD2DEG, lat * RAD2DEG)
-
-
-def transform_geometry(g: Geometry, to_srid: int,
-                       from_srid: int = None) -> Geometry:
-    """PostGIS-style ST_Transform: 4326 <-> 3857 (spherical web
-    mercator), 4326 <-> UTM (EPSG:326xx/327xx, Krüger series), and any
-    CRS in CRS_REGISTRY (Lambert Conformal Conic / Albers / generic
-    Transverse Mercator with optional Helmert datum shift — state
-    plane, Lambert-93, CONUS Albers, NAD83 UTM, OSGB). Projected ->
-    projected composes through the 4326 hub. ``from_srid`` falls back
-    to the geometry's own SRID; missing both is an error (PostGIS:
-    'cannot transform geometry with unknown SRID')."""
-    src = from_srid if from_srid is not None else g.srid
-    if src is None:
-        raise ValueError("ST_Transform: source SRID unknown "
-                         "(geometry has none and no from_srid given)")
-    src, dst = int(src), int(to_srid)
-    if src == dst:
-        return g.with_srid(dst)
-    # geographic datum aliases: NAD83 (4269) and ETRS89 (4258) are
-    # WGS84-identical here (the registry's null-transform convention),
-    # so their lon/lat coordinates route exactly like 4326 — but the
-    # OUTPUT keeps the requested SRID stamp
-    src_g = SRID_LONLAT if src in GEOGRAPHIC_ALIASES else src
-    dst_g = SRID_LONLAT if dst in GEOGRAPHIC_ALIASES else dst
-    if src_g == dst_g:
-        return g.with_srid(dst)
-    src = src_g
-    if dst_g != dst:
-        return transform_geometry(g, dst_g, from_srid=src) \
-            .with_srid(dst)
-    dst = dst_g
-    if (src, dst) == (SRID_LONLAT, SRID_MERCATOR):
-        f = lonlat_to_mercator
-    elif (src, dst) == (SRID_MERCATOR, SRID_LONLAT):
-        f = mercator_to_lonlat
-    elif src == SRID_LONLAT and utm_zone(dst) is not None:
-        zone, north = utm_zone(dst)
-
-        def f(lon, lat):
-            return lonlat_to_utm(lon, lat, zone, north)
-    elif dst == SRID_LONLAT and utm_zone(src) is not None:
-        zone, north = utm_zone(src)
-
-        def f(e, nn):
-            return utm_to_lonlat(e, nn, zone, north)
-    else:
-        # registry CRSs route through the 4326 hub: src -> lon/lat
-        # via inverse (identity when src IS 4326), then lon/lat ->
-        # dst via forward — so any registered pair composes, e.g.
-        # 2263 -> 3857 or 27700 -> 5070
-        inv = fwd = None
-        if src == SRID_LONLAT:
-            inv = None
-        elif src in CRS_REGISTRY:
-            inv = CRS_REGISTRY[src].inverse
-        elif utm_zone(src) is not None:
-            zi, ni = utm_zone(src)
-            inv = (lambda e, nn, _z=zi, _n=ni:
-                   utm_to_lonlat(e, nn, _z, _n))
-        if dst == SRID_LONLAT:
-            fwd = None
-        elif dst in CRS_REGISTRY:
-            fwd = CRS_REGISTRY[dst].forward
-        elif dst == SRID_MERCATOR:
-            fwd = lonlat_to_mercator
-        elif utm_zone(dst) is not None:
-            zo, no = utm_zone(dst)
-            fwd = (lambda lon, lat, _z=zo, _n=no:
-                   lonlat_to_utm(lon, lat, _z, _n))
-        if src == SRID_MERCATOR:
-            inv = mercator_to_lonlat
-        ok_src = (src == SRID_LONLAT or inv is not None)
-        ok_dst = (dst == SRID_LONLAT or fwd is not None)
-        if not (ok_src and ok_dst):
-            raise ValueError(
-                f"ST_Transform: unsupported SRID pair {src} -> {dst} "
-                f"(supported: {SRID_LONLAT} <-> {SRID_MERCATOR}, "
-                f"{SRID_LONLAT} <-> UTM 326xx/327xx, and the "
-                f"registered CRSs {sorted(CRS_REGISTRY)})")
-
-        def f(cx, cy):
-            lon, lat = inv(cx, cy) if inv is not None else (cx, cy)
-            return fwd(lon, lat) if fwd is not None else (lon, lat)
-    return g.map_coords(lambda c: f(c[0], c[1])).with_srid(dst)
 
 
 # PostGIS ST_DistanceSphere radius (mean Earth radius, meters)
@@ -358,10 +228,9 @@ _QUARTER_PI = PI_4
 
 class Ellipsoid:
     """Reference ellipsoid with every derived constant the projection
-    formulas need, including Krüger series coefficients to n⁴ (one
-    order above the UTM module constants; ~1e-12 rad — the generic
-    path is used for non-WGS84 ellipsoids where no precomputed
-    literals exist)."""
+    formulas need, including Krüger series coefficients to n⁴
+    (~1e-12 rad). UTM zones instead run on a WGS84 copy carrying the
+    hard-coded n³ literals (``_UTM_WGS84``), which SQL oracles embed."""
 
     def __init__(self, name: str, a: float, inv_f: float):
         self.name = name
@@ -431,19 +300,6 @@ class Ellipsoid:
             - (1.0 / (2.0 * self.e))
             * math.log((1.0 - self.e * s) / (1.0 + self.e * s)))
 
-    def chi_to_phi(self, chi: float) -> float:
-        c1, c2, c3, c4 = self.chi
-        return (chi + c1 * math.sin(2.0 * chi)
-                + c2 * math.sin(4.0 * chi)
-                + c3 * math.sin(6.0 * chi)
-                + c4 * math.sin(8.0 * chi))
-
-    def beta_to_phi(self, beta: float) -> float:
-        a1, a2, a3 = self.auth
-        return (beta + a1 * math.sin(2.0 * beta)
-                + a2 * math.sin(4.0 * beta)
-                + a3 * math.sin(6.0 * beta))
-
 
 WGS84 = Ellipsoid("WGS84", 6378137.0, 298.257223563)
 GRS80 = Ellipsoid("GRS80", 6378137.0, 298.257222101)
@@ -467,43 +323,11 @@ class Helmert:
         self.p = (tx, ty, tz, rx_as * self.ARCSEC, ry_as * self.ARCSEC,
                   rz_as * self.ARCSEC, s_ppm * 1e-6)
 
-    @staticmethod
-    def _geodetic_to_ecef(lon, lat, ell: Ellipsoid):
-        s, c = math.sin(lat), math.cos(lat)
-        nu = ell.a / math.sqrt(1.0 - ell.e2 * s * s)
-        return (nu * c * math.cos(lon), nu * c * math.sin(lon),
-                nu * (1.0 - ell.e2) * s)
-
-    @staticmethod
-    def _ecef_to_geodetic(x, y, z, ell: Ellipsoid):
-        """Bowring's closed one-step formula (sub-mm for earth-surface
-        points, h≈0)."""
-        p = math.sqrt(x * x + y * y)
-        th = math.atan2(z * ell.a, p * ell.b)
-        st, ct = math.sin(th), math.cos(th)
-        lat = math.atan2(z + ell.ep2 * ell.b * st * st * st,
-                         p - ell.e2 * ell.a * ct * ct * ct)
-        return (math.atan2(y, x), lat)
-
-    def _apply(self, x, y, z, sign: float):
-        tx, ty, tz, rx, ry, rz, ds = (sign * v for v in self.p)
-        k = 1.0 + ds
-        return (tx + k * (x - rz * y + ry * z),
-                ty + k * (rz * x + y - rx * z),
-                tz + k * (-ry * x + rx * y + z))
-
-    def from_wgs84(self, lon, lat, ell: Ellipsoid):
-        """WGS84 geographic (radians) -> target-datum geographic on
-        ``ell`` (radians)."""
-        x, y, z = self._geodetic_to_ecef(lon, lat, WGS84)
-        return self._ecef_to_geodetic(*self._apply(x, y, z, 1.0), ell)
-
-    def _shift_np(self, lon, lat, src: Ellipsoid, dst: Ellipsoid,
-                  sign: float):
-        """Vectorized datum shift (numpy arrays, radians): geodetic on
-        ``src`` -> ECEF -> Helmert(sign) -> geodetic on ``dst`` —
-        the same op sequence as the scalar methods."""
-        import numpy as np
+    def _shift(self, lon, lat, src: Ellipsoid, dst: Ellipsoid,
+               sign: float):
+        """Datum shift (numpy arrays, radians): geodetic on ``src`` ->
+        ECEF -> Helmert(sign) -> geodetic on ``dst`` by Bowring's closed
+        one-step formula (sub-mm for earth-surface points, h≈0)."""
         s, c = np.sin(lat), np.cos(lat)
         nu = src.a / np.sqrt(1.0 - src.e2 * s * s)
         x = nu * c * np.cos(lon)
@@ -521,15 +345,13 @@ class Helmert:
                           p - dst.e2 * dst.a * ct * ct * ct)
         return np.arctan2(y2, x2), lat2
 
-    def from_wgs84_np(self, lon, lat, ell: Ellipsoid):
-        return self._shift_np(lon, lat, WGS84, ell, 1.0)
-
-    def to_wgs84_np(self, lon, lat, ell: Ellipsoid):
-        return self._shift_np(lon, lat, ell, WGS84, -1.0)
+    def from_wgs84(self, lon, lat, ell: Ellipsoid):
+        """WGS84 geographic (radians) -> target-datum geographic on
+        ``ell`` (radians)."""
+        return self._shift(lon, lat, WGS84, ell, 1.0)
 
     def to_wgs84(self, lon, lat, ell: Ellipsoid):
-        x, y, z = self._geodetic_to_ecef(lon, lat, ell)
-        return self._ecef_to_geodetic(*self._apply(x, y, z, -1.0), WGS84)
+        return self._shift(lon, lat, ell, WGS84, -1.0)
 
 
 class LCC2SP:
@@ -551,35 +373,9 @@ class LCC2SP:
         self.rho0 = self.RF * t0 ** self.n
         self.fe, self.fn = fe, fn
 
-    def forward(self, lon: float, lat: float):
+    def forward(self, lon, lat):
         if self.datum is not None:
             lam, phi = self.datum.from_wgs84(
-                lon * DEG2RAD, lat * DEG2RAD, self.ell)
-        else:
-            lam, phi = lon * DEG2RAD, lat * DEG2RAD
-        rho = self.RF * self.ell.t(phi) ** self.n
-        th = self.n * (lam - self.lon0)
-        return (self.fe + rho * math.sin(th),
-                self.fn + self.rho0 - rho * math.cos(th))
-
-    def inverse(self, x: float, y: float):
-        dx, dy = x - self.fe, self.rho0 - (y - self.fn)
-        rho = math.copysign(math.sqrt(dx * dx + dy * dy), self.n)
-        tp = (rho / self.RF) ** (1.0 / self.n)
-        chi = 2.0 * (_QUARTER_PI - math.atan(tp))
-        phi = self.ell.chi_to_phi(chi)
-        lam = math.atan2(dx, dy) / self.n + self.lon0
-        if self.datum is not None:
-            lam, phi = self.datum.to_wgs84(lam, phi, self.ell)
-        return (lam * RAD2DEG, phi * RAD2DEG)
-
-    # vectorized twins (numpy arrays of degrees / native units) — the
-    # batch fast path the Spark kernel uses for uniform point columns;
-    # same operation order as the scalar methods (libm-ulp parity)
-    def forward_np(self, lon, lat):
-        import numpy as np
-        if self.datum is not None:
-            lam, phi = self.datum.from_wgs84_np(
                 lon * DEG2RAD, lat * DEG2RAD, self.ell)
         else:
             lam, phi = lon * DEG2RAD, lat * DEG2RAD
@@ -592,8 +388,7 @@ class LCC2SP:
         return (self.fe + rho * np.sin(th),
                 self.fn + self.rho0 - rho * np.cos(th))
 
-    def inverse_np(self, x, y):
-        import numpy as np
+    def inverse(self, x, y):
         dx, dy = x - self.fe, self.rho0 - (y - self.fn)
         rho = np.copysign(np.sqrt(dx * dx + dy * dy), self.n)
         tp = (rho / self.RF) ** (1.0 / self.n)
@@ -603,7 +398,7 @@ class LCC2SP:
                + c3 * np.sin(6.0 * chi) + c4 * np.sin(8.0 * chi))
         lam = np.arctan2(dx, dy) / self.n + self.lon0
         if self.datum is not None:
-            lam, phi = self.datum.to_wgs84_np(lam, phi, self.ell)
+            lam, phi = self.datum.to_wgs84(lam, phi, self.ell)
         return (lam * RAD2DEG, phi * RAD2DEG)
 
 
@@ -625,63 +420,9 @@ class AlbersEA:
         self.qp = ell.q(0.5 * math.pi)
         self.fe, self.fn = fe, fn
 
-    def forward(self, lon: float, lat: float):
+    def forward(self, lon, lat):
         if self.datum is not None:
             lam, phi = self.datum.from_wgs84(
-                lon * DEG2RAD, lat * DEG2RAD, self.ell)
-        else:
-            lam, phi = lon * DEG2RAD, lat * DEG2RAD
-        rho = (self.AU
-               * math.sqrt(self.C - self.n * self.ell.q(phi)) / self.n)
-        th = self.n * (lam - self.lon0)
-        return (self.fe + rho * math.sin(th),
-                self.fn + self.rho0 - rho * math.cos(th))
-
-    def inverse(self, x: float, y: float):
-        dx, dy = x - self.fe, self.rho0 - (y - self.fn)
-        rho = math.sqrt(dx * dx + dy * dy)
-        qv = (self.C - (rho * self.n / self.AU) ** 2) / self.n
-        # |q| <= qp by construction of the authalic latitude: clamp
-        # qv itself (not just sinβ) so a point at/beyond the pole
-        # radius feeds the Newton loop a representable residual —
-        # the step divides by cos(φ)~1e-16 at the pole and an
-        # unclamped qv excess would kick φ far off the series seed
-        if qv > self.qp:
-            qv = self.qp
-        elif qv < -self.qp:
-            qv = -self.qp
-        sb = qv / self.qp
-        if sb >= 1.0:
-            # at the pole the authalic and geodetic latitudes agree
-            # exactly; Newton there divides a libm-ULP residual by
-            # cos(φ)~1e-16 — skip it
-            phi = 0.5 * math.pi
-        elif sb <= -1.0:
-            phi = -0.5 * math.pi
-        else:
-            # series seed (~1e-7 rad) + Snyder 3-16 Newton refinement
-            # to full double precision (4 fixed iters, deterministic)
-            phi = self.ell.beta_to_phi(math.asin(sb))
-            e2, e = self.ell.e2, self.ell.e
-            for _ in range(4):
-                s = math.sin(phi)
-                d = 1.0 - e2 * s * s
-                phi = phi + (d * d / (2.0 * math.cos(phi))) * (
-                    qv / (1.0 - e2) - s / d
-                    + (1.0 / (2.0 * e))
-                    * math.log((1.0 - e * s) / (1.0 + e * s)))
-        # Snyder 14-11 note: with n < 0 the signs of x, (ρ0−y) flip
-        sgn = 1.0 if self.n >= 0.0 else -1.0
-        th = math.atan2(sgn * dx, sgn * dy)
-        lam = th / self.n + self.lon0
-        if self.datum is not None:
-            lam, phi = self.datum.to_wgs84(lam, phi, self.ell)
-        return (lam * RAD2DEG, phi * RAD2DEG)
-
-    def forward_np(self, lon, lat):
-        import numpy as np
-        if self.datum is not None:
-            lam, phi = self.datum.from_wgs84_np(
                 lon * DEG2RAD, lat * DEG2RAD, self.ell)
         else:
             lam, phi = lon * DEG2RAD, lat * DEG2RAD
@@ -695,15 +436,20 @@ class AlbersEA:
         return (self.fe + rho * np.sin(th),
                 self.fn + self.rho0 - rho * np.cos(th))
 
-    def inverse_np(self, x, y):
-        import numpy as np
+    def inverse(self, x, y):
         dx, dy = x - self.fe, self.rho0 - (y - self.fn)
         rho = np.sqrt(dx * dx + dy * dy)
         qv = (self.C - (rho * self.n / self.AU) ** 2) / self.n
-        # pole clamp on qv itself — see the scalar inverse
+        # |q| <= qp by construction of the authalic latitude: clamp
+        # qv itself (not just sinβ) so a point at/beyond the pole
+        # radius feeds the Newton loop a representable residual —
+        # the step divides by cos(φ)~1e-16 at the pole and an
+        # unclamped qv excess would kick φ far off the series seed
         qv = np.clip(qv, -self.qp, self.qp)
         sb = np.clip(qv / self.qp, -1.0, 1.0)
         pole = np.abs(sb) >= 1.0
+        # series seed (~1e-7 rad) + Snyder 3-16 Newton refinement to
+        # full double precision (4 fixed iters, deterministic)
         b = np.arcsin(sb)
         a1, a2, a3 = self.ell.auth
         phi = (b + a1 * np.sin(2.0 * b) + a2 * np.sin(4.0 * b)
@@ -723,7 +469,7 @@ class AlbersEA:
         th = np.arctan2(sgn * dx, sgn * dy)
         lam = th / self.n + self.lon0
         if self.datum is not None:
-            lam, phi = self.datum.to_wgs84_np(lam, phi, self.ell)
+            lam, phi = self.datum.to_wgs84(lam, phi, self.ell)
         return (lam * RAD2DEG, phi * RAD2DEG)
 
 
@@ -753,45 +499,9 @@ class TMGeneric:
         else:
             self.fn = fn
 
-    def forward(self, lon: float, lat: float):
+    def forward(self, lon, lat):
         if self.datum is not None:
             lam_a, phi = self.datum.from_wgs84(
-                lon * DEG2RAD, lat * DEG2RAD, self.ell)
-        else:
-            lam_a, phi = lon * DEG2RAD, lat * DEG2RAD
-        ell = self.ell
-        s = math.sin(phi)
-        t = math.sinh(math.atanh(s) - ell.e * math.atanh(ell.e * s))
-        lam = lam_a - self.lon0
-        xip = math.atan2(t, math.cos(lam))
-        etap = math.atanh(math.sin(lam) / math.sqrt(1.0 + t * t))
-        xi, eta = xip, etap
-        for j, aj in enumerate(ell.alpha, start=1):
-            xi = xi + aj * math.sin(2 * j * xip) * math.cosh(2 * j * etap)
-            eta = eta + aj * math.cos(2 * j * xip) * math.sinh(2 * j * etap)
-        return (self.fe + self.KA * eta, self.fn + self.KA * xi)
-
-    def inverse(self, x: float, y: float):
-        ell = self.ell
-        xi = (y - self.fn) / self.KA
-        eta = (x - self.fe) / self.KA
-        xip, etap = xi, eta
-        for j, bj in enumerate(ell.beta, start=1):
-            xip = xip - bj * math.sin(2 * j * xi) * math.cosh(2 * j * eta)
-            etap = etap - bj * math.cos(2 * j * xi) * math.sinh(2 * j * eta)
-        chi = math.asin(math.sin(xip) / math.cosh(etap))
-        phi = chi
-        for j, dj in enumerate(ell.delta, start=1):
-            phi = phi + dj * math.sin(2 * j * chi)
-        lam = self.lon0 + math.atan2(math.sinh(etap), math.cos(xip))
-        if self.datum is not None:
-            lam, phi = self.datum.to_wgs84(lam, phi, ell)
-        return (lam * RAD2DEG, phi * RAD2DEG)
-
-    def forward_np(self, lon, lat):
-        import numpy as np
-        if self.datum is not None:
-            lam_a, phi = self.datum.from_wgs84_np(
                 lon * DEG2RAD, lat * DEG2RAD, self.ell)
         else:
             lam_a, phi = lon * DEG2RAD, lat * DEG2RAD
@@ -807,8 +517,7 @@ class TMGeneric:
             eta = eta + aj * np.cos(2 * j * xip) * np.sinh(2 * j * etap)
         return (self.fe + self.KA * eta, self.fn + self.KA * xi)
 
-    def inverse_np(self, x, y):
-        import numpy as np
+    def inverse(self, x, y):
         ell = self.ell
         xi = (y - self.fn) / self.KA
         eta = (x - self.fe) / self.KA
@@ -822,7 +531,7 @@ class TMGeneric:
             phi = phi + dj * np.sin(2 * j * chi)
         lam = self.lon0 + np.arctan2(np.sinh(etap), np.cos(xip))
         if self.datum is not None:
-            lam, phi = self.datum.to_wgs84_np(lam, phi, ell)
+            lam, phi = self.datum.to_wgs84(lam, phi, ell)
         return (lam * RAD2DEG, phi * RAD2DEG)
 
 
@@ -931,66 +640,9 @@ class LAEA:
         self.D = (ell.a / unit_m) * ell.m(p0) / (self.Rq * self.cb1)
         self.fe, self.fn = fe, fn
 
-    def forward(self, lon: float, lat: float):
+    def forward(self, lon, lat):
         if self.datum is not None:
             lam, phi = self.datum.from_wgs84(
-                lon * DEG2RAD, lat * DEG2RAD, self.ell)
-        else:
-            lam, phi = lon * DEG2RAD, lat * DEG2RAD
-        b = math.asin(self.ell.q(phi) / self.qp)
-        sb, cb = math.sin(b), math.cos(b)
-        dl = lam - self.lon0
-        bb = self.Rq * math.sqrt(
-            2.0 / (1.0 + self.sb1 * sb + self.cb1 * cb * math.cos(dl)))
-        return (self.fe + bb * self.D * cb * math.sin(dl),
-                self.fn + (bb / self.D)
-                * (self.cb1 * sb - self.sb1 * cb * math.cos(dl)))
-
-    def inverse(self, x: float, y: float):
-        xp, yp = x - self.fe, y - self.fn
-        rho = math.hypot(xp / self.D, self.D * yp)
-        if rho == 0.0:
-            # projection center: q = qp·sinβ1, λ = λ0; φ still goes
-            # through the shared series+Newton path below
-            qv, lam = self.qp * self.sb1, self.lon0
-        else:
-            ce = 2.0 * math.asin(rho / (2.0 * self.Rq))
-            qv = self.qp * (math.cos(ce) * self.sb1
-                            + self.D * yp * math.sin(ce)
-                            * self.cb1 / rho)
-            lam = self.lon0 + math.atan2(
-                xp * math.sin(ce),
-                self.D * rho * self.cb1 * math.cos(ce)
-                - self.D * self.D * yp * self.sb1 * math.sin(ce))
-        # pole clamp on qv itself (Albers discipline): keeps the
-        # Newton residual representable where cos(φ) ~ 1e-16
-        if qv > self.qp:
-            qv = self.qp
-        elif qv < -self.qp:
-            qv = -self.qp
-        sb = qv / self.qp
-        if sb >= 1.0:  # pole: authalic == geodetic, skip Newton
-            phi = 0.5 * math.pi
-        elif sb <= -1.0:
-            phi = -0.5 * math.pi
-        else:
-            phi = self.ell.beta_to_phi(math.asin(sb))
-            e2, e = self.ell.e2, self.ell.e
-            for _ in range(4):  # Snyder 3-16 Newton (Albers
-                s = math.sin(phi)  # discipline)
-                d = 1.0 - e2 * s * s
-                phi = phi + (d * d / (2.0 * math.cos(phi))) * (
-                    qv / (1.0 - e2) - s / d
-                    + (1.0 / (2.0 * e))
-                    * math.log((1.0 - e * s) / (1.0 + e * s)))
-        if self.datum is not None:
-            lam, phi = self.datum.to_wgs84(lam, phi, self.ell)
-        return (lam * RAD2DEG, phi * RAD2DEG)
-
-    def forward_np(self, lon, lat):
-        import numpy as np
-        if self.datum is not None:
-            lam, phi = self.datum.from_wgs84_np(
                 lon * DEG2RAD, lat * DEG2RAD, self.ell)
         else:
             lam, phi = lon * DEG2RAD, lat * DEG2RAD
@@ -1008,16 +660,18 @@ class LAEA:
                 self.fn + (bb / self.D)
                 * (self.cb1 * sb - self.sb1 * cb * np.cos(dl)))
 
-    def inverse_np(self, x, y):
-        import numpy as np
+    def inverse(self, x, y):
         xp, yp = x - self.fe, y - self.fn
         rho = np.hypot(xp / self.D, self.D * yp)
         ce = 2.0 * np.arcsin(rho / (2.0 * self.Rq))
         with np.errstate(all="ignore"):
             qv = self.qp * (np.cos(ce) * self.sb1
                             + self.D * yp * np.sin(ce) * self.cb1 / rho)
+        # projection center (rho = 0): q = qp·sinβ1 and λ = λ0; φ
+        # still goes through the shared series + Newton path below
         qv = np.where(rho == 0.0, self.qp * self.sb1, qv)
-        # pole clamp on qv itself — see the scalar inverse
+        # pole clamp on qv itself (the Albers discipline): keeps the
+        # Newton residual representable where cos(φ) ~ 1e-16
         qv = np.clip(qv, -self.qp, self.qp)
         sb = np.clip(qv / self.qp, -1.0, 1.0)
         pole = np.abs(sb) >= 1.0
@@ -1040,13 +694,121 @@ class LAEA:
             - self.D * self.D * yp * self.sb1 * np.sin(ce))
         lam = np.where(rho == 0.0, self.lon0, lam)
         if self.datum is not None:
-            lam, phi = self.datum.to_wgs84_np(lam, phi, self.ell)
+            lam, phi = self.datum.to_wgs84(lam, phi, self.ell)
         return (lam * RAD2DEG, phi * RAD2DEG)
 
 
 #: ETRS89-extended / LAEA Europe — the EU statistics CRS
 CRS_REGISTRY[3035] = LAEA(GRS80, lat0=52.0, lon0=10.0,
                           fe=4321000.0, fn=3210000.0)
+
+
+def _check_latitude(lat, bad, domain: str) -> None:
+    """ValueError naming the first latitude flagged in ``bad``."""
+    if np.any(bad):
+        raise ValueError(f"latitude {float(np.asarray(lat)[bad][0])} "
+                         f"out of {domain}")
+
+
+class WebMercator:
+    """Spherical web mercator (EPSG:3857) on the R_MAJOR sphere."""
+
+    def forward(self, lon, lat):
+        _check_latitude(lat, np.abs(lat) >= 90.0, "(-90, 90) for EPSG:3857")
+        x = R_MAJOR * (lon * DEG2RAD)
+        y = R_MAJOR * np.log(np.tan(PI_4 + (lat * DEG2RAD) * 0.5))
+        return (x, y)
+
+    def inverse(self, x, y):
+        lon = (x / R_MAJOR) * RAD2DEG
+        lat = (2.0 * np.arctan(np.exp(y / R_MAJOR)) - 2.0 * PI_4) * RAD2DEG
+        return (lon, lat)
+
+
+#: WGS84 with the hard-coded n³ UTM literals in place of the computed
+#: n⁴ series: TMGeneric on it is the UTM chain term for term
+_UTM_WGS84 = copy.copy(WGS84)
+_UTM_WGS84.A, _UTM_WGS84.e = A_TM, TT_TM
+_UTM_WGS84.alpha, _UTM_WGS84.beta, _UTM_WGS84.delta = (
+    ALPHA_TM, BETA_TM, DELTA_TM)
+
+
+def _projection(srid: int):
+    """The projection object (``forward`` from lon/lat, ``inverse``
+    back) of a projected SRID, or None when it is not supported."""
+    if srid in CRS_REGISTRY:
+        return CRS_REGISTRY[srid]
+    if srid == SRID_MERCATOR:
+        return WebMercator()
+    zone = utm_zone(srid)
+    if zone is None:
+        return None
+    z, north = zone
+    return TMGeneric(_UTM_WGS84, lat0=0.0, lon0=z * 6 - 183, k0=K0_UTM,
+                     fe=FE_UTM, fn=0.0 if north else FN_SOUTH)
+
+
+def _identity(x, y):
+    return (x, y)
+
+
+def transformer(src, dst):
+    """The one array function ``f(x, y) -> (x, y)`` taking coordinates
+    in SRID ``src`` to SRID ``dst``: geographic aliases route as 4326,
+    and a projected -> projected pair composes through the 4326 hub
+    (inverse, then forward). ``src`` None is PostGIS's 'cannot
+    transform geometry with unknown SRID'; a pair with an unsupported
+    side raises too."""
+    if src is None:
+        raise ValueError("ST_Transform: source SRID unknown "
+                         "(geometry has none and no from_srid given)")
+    src, dst = int(src), int(dst)
+    src = SRID_LONLAT if src in GEOGRAPHIC_ALIASES else src
+    dst = SRID_LONLAT if dst in GEOGRAPHIC_ALIASES else dst
+    if src == dst:
+        return _identity
+    inv = None if src == SRID_LONLAT else _projection(src)
+    fwd = None if dst == SRID_LONLAT else _projection(dst)
+    if ((inv is None and src != SRID_LONLAT)
+            or (fwd is None and dst != SRID_LONLAT)):
+        raise ValueError(
+            f"ST_Transform: unsupported SRID pair {src} -> {dst} "
+            f"(supported: {SRID_LONLAT} <-> {SRID_MERCATOR}, "
+            f"{SRID_LONLAT} <-> UTM 326xx/327xx, and the "
+            f"registered CRSs {sorted(CRS_REGISTRY)})")
+
+    def f(x, y):
+        # NaN lanes (POINT EMPTY in a point batch) and pole edges
+        # produce NaN/inf quietly, as the formulas give them
+        with np.errstate(all="ignore"):
+            if inv is not None:
+                x, y = inv.inverse(x, y)
+            if fwd is None:
+                return (x, y)
+            _check_latitude(y, np.abs(y) > 90.0, f"[-90, 90] for EPSG:{dst}")
+            return fwd.forward(x, y)
+    return f
+
+
+def map_vertices(geoms: list, f) -> list:
+    """``geoms`` with every vertex mapped by the array function ``f``
+    in ONE call over their concatenated vertices (``vertices()`` and
+    ``map_coords`` walk coordinates in the same order)."""
+    xy = np.array([c for g in geoms for c in g.vertices()],
+                  dtype=float).reshape(-1, 2)
+    x, y = f(xy[:, 0], xy[:, 1])
+    it = zip(x.tolist(), y.tolist())
+    return [g.map_coords(lambda c: next(it)) for g in geoms]
+
+
+def transform_geometry(g: Geometry, to_srid: int,
+                       from_srid: int = None) -> Geometry:
+    """PostGIS-style ST_Transform of one geometry through
+    :func:`transformer`. ``from_srid`` falls back to the geometry's
+    own SRID; the result is stamped with ``to_srid``."""
+    f = transformer(from_srid if from_srid is not None else g.srid,
+                    to_srid)
+    return map_vertices([g], f)[0].with_srid(int(to_srid))
 
 
 # ------------------------------------------------------------ PROJJSON

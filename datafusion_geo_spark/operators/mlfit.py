@@ -30,21 +30,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from . import util
+from .util import round6
 from .text import words_col
 
 #: feature names, in model order: bias, word count, short words
 #: (len <= 3), long words (len >= 8). All exact int64 per document.
 FEATURES = ("bias", "n_words", "n_short", "n_long")
 RIDGE_LAMBDA = 1  # added to the Gram diagonal: SPD => pivot-safe
-
-
-def r6(x: float) -> float:
-    """Python twin of util.round6_binary: round-half-up at 6 dp on the
-    magnitude, computed in IEEE doubles (Python floats ARE doubles, so
-    this is the same value the JVM/DuckDB expression produces)."""
-    import math
-    s = -1.0 if x < 0 else 1.0
-    return s * math.floor(abs(x) * 1000000.0 + 0.5) / 1000000.0
 
 
 def doc_features(df: DataFrame, text_col: str = "text",
@@ -97,15 +89,15 @@ def solve_spd_r6(g: Sequence[Sequence[int]], b: Sequence[int],
          + [float(b[i])] for i in range(k)]
     for p in range(k):
         for i in range(p + 1, k):
-            f = r6(a[i][p] / a[p][p])
+            f = round6(a[i][p] / a[p][p])
             for j in range(p, k + 1):
-                a[i][j] = r6(a[i][j] - r6(f * a[p][j]))
+                a[i][j] = round6(a[i][j] - round6(f * a[p][j]))
     w = [0.0] * k
     for i in range(k - 1, -1, -1):
         acc = a[i][k]
         for j in range(i + 1, k):
-            acc = r6(acc - r6(a[i][j] * w[j]))
-        w[i] = r6(acc / a[i][i])
+            acc = round6(acc - round6(a[i][j] * w[j]))
+        w[i] = round6(acc / a[i][i])
     return w
 
 
@@ -204,8 +196,8 @@ def logreg_fit(feat: DataFrame, iters: int = LOGREG_ITERS,
             row = feat.agg(*aggs).collect()[0]
             n = row["n"]
             for j in range(k):
-                gbar = r6((row[f"g{j}"] / 1000000.0) / n)
-                w[j] = r6(w[j] - r6(lr * gbar))
+                gbar = round6((row[f"g{j}"] / 1000000.0) / n)
+                w[j] = round6(w[j] - round6(lr * gbar))
         return w
 
 

@@ -20,7 +20,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from .util import memo_get, round6_binary
+from .util import memo_get, round6, round6_binary
 
 
 def as_double(v: Column) -> Column:
@@ -171,16 +171,6 @@ def ann_bucketed_topk(emb: DataFrame, n_planes: int = 6, max_query_id: int = 8,
 TRAIN_SAMPLE_CAP = 4096
 
 
-def _r6(x: float) -> float:
-    """Python twin of operators.util.round6_binary — the identical IEEE
-    op sequence (sign(x)*floor(|x|*1e6+0.5)/1e6 + 0.0), so a local fold
-    over Spark-collected doubles rounds exactly as the JVM expression
-    does."""
-    import math
-    s = 0.0 if x == 0.0 else (1.0 if x > 0.0 else -1.0)
-    return s * math.floor(abs(x) * 1e6 + 0.5) / 1e6 + 0.0
-
-
 def _dot_fold(a, b) -> float:
     """Left-to-right add fold, matching F.aggregate(zip_with(a,b,*),0.0)
     and DuckDB list_reduce order — bit-identical across all three."""
@@ -244,7 +234,7 @@ def kmeans_centroids(vecs: DataFrame, n_centroids: int = 8,
             best = max(
                 # same -2.0 zero-denominator pin as cos6 (the local
                 # Lloyd fold must rank exactly like the inlined plan)
-                (_r6(_dot_fold(v, c) / (n * cn)) if n * cn != 0
+                (round6(_dot_fold(v, c) / (n * cn)) if n * cn != 0
                  else -2.0, -cid)
                 for cid, c, cn in zip(cids, cents, cns))
             members.setdefault(-best[1], []).append(v)
@@ -254,7 +244,7 @@ def kmeans_centroids(vecs: DataFrame, n_centroids: int = 8,
             dim = len(vs[0])
             new_cids.append(cid)
             new_cents.append([
-                _r6(sum(v[p] for v in vs) / len(vs)) for p in range(dim)])
+                round6(sum(v[p] for v in vs) / len(vs)) for p in range(dim)])
         cids, cents = new_cids, new_cents
     return list(zip(cids, cents))
 
@@ -956,7 +946,7 @@ def pq_train(vecs: DataFrame, m: int = 8, ksub: int = 16, iters: int = 2,
             members: dict = {}
             for sv in svs:
                 best = min(
-                    (_r6(_l2sq_fold(sv, c)), cid)
+                    (round6(_l2sq_fold(sv, c)), cid)
                     for cid, c in zip(cids, cents))
                 members.setdefault(best[1], []).append(sv)
             cids, cents = [], []
@@ -964,7 +954,7 @@ def pq_train(vecs: DataFrame, m: int = 8, ksub: int = 16, iters: int = 2,
                 vs = members[cid]
                 cids.append(cid)
                 cents.append([
-                    _r6(sum(v[p] for v in vs) / len(vs)) for p in range(d)])
+                    round6(sum(v[p] for v in vs) / len(vs)) for p in range(d)])
         out.extend((s, cid, c) for cid, c in zip(cids, cents))
     return out
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 from contextlib import contextmanager
 
 import pyspark.sql.functions as F
@@ -36,6 +37,16 @@ def round6_binary(col: Column) -> Column:
     """:func:`round_binary` at 6 dp — the repo-wide convention for every
     oracle-compared double."""
     return round_binary(col, 6)
+
+
+def round6(x: float) -> float:
+    """Python twin of :func:`round6_binary`: the identical IEEE op
+    sequence sign(x)·floor(|x|·1e6 + 0.5)/1e6 + 0.0 (Python floats are
+    doubles), so a driver-side fold over collected doubles rounds
+    exactly as the JVM expression does — the trailing ``+ 0.0``
+    included, which turns a negative rounded to zero into 0.0."""
+    s = 0.0 if x == 0.0 else (1.0 if x > 0.0 else -1.0)
+    return s * math.floor(abs(x) * 1000000.0 + 0.5) / 1000000.0 + 0.0
 
 
 def idiv(num: Column, den: Column) -> Column:

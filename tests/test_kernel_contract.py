@@ -174,9 +174,7 @@ ARGS = {
     "ST_MakeValid": [(BOWTIE,)],
     "ST_ShortestLine": [(SQ, _g("POINT(20 20)"))],
     "ST_Project": [(PT, 10.0, 0.5)],
-    # UTM, not 3857: a constant 4326->3857 pair takes a numpy fast path
-    # that differs from the scalar one by an ulp (tolerance pinned in
-    # test_kernel_fastpath_parity.py), and a NULL row switches paths
+    # source SRID from the EWKB header, then from from_srid
     "ST_Transform": [(_g("POINT(-71.06 42.28)", 4326), 3857),
                      (LL1, 32619, 4326)],
     "ST_X": [(PT,)],

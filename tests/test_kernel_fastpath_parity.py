@@ -56,22 +56,102 @@ def test_distance_point_pairs_parity():
         assert v == want
 
 
+#: ST_Transform targets: web mercator, a UTM north and a UTM south
+#: zone, every registered CRS, and the 4269 geographic alias
+TRANSFORM_TARGETS = ([3857, 32631, 32733] + sorted(proj.CRS_REGISTRY)
+                     + [4269])
+
+
+def _transform_rows(geoms, srid=None):
+    """(E)WKB of ``geoms`` (None stays NULL), stamped ``srid`` when
+    given; two NULL rows ride along."""
+    vals = [None if g is None else
+            to_wkb(g if srid is None else g.with_srid(srid)) for g in geoms]
+    return vals[:2] + [None] + vals[2:] + [None]
+
+
+def _transform_parity(vals, to, frm=None):
+    """The kernel on one batch == proj.transform_geometry on each row
+    alone, byte for byte (NULL in any argument -> NULL)."""
+    n = len(vals)
+    to = to if isinstance(to, list) else [to] * n
+    frm = frm if isinstance(frm, list) or frm is None else [frm] * n
+    got = kernels.transform_srid(
+        pd.Series(vals, dtype=object), pd.Series(to),
+        None if frm is None else pd.Series(frm)).tolist()
+    for i, v in enumerate(vals):
+        f = None if frm is None else frm[i]
+        if v is None or (frm is not None and f is None):
+            assert got[i] is None, i
+            continue
+        want = to_wkb(proj.transform_geometry(from_wkb(v), to[i], f))
+        assert got[i] == want, (i, to[i], f, from_wkb(v))
+
+
 def test_transform_fast_path_vs_object_parity():
-    pts = [(RNG.uniform(-179, 179), RNG.uniform(-80, 80)) for _ in range(32)]
-    s = pd.Series([to_wkb(Geometry("Point", p)) for p in pts], dtype=object)
-    to = pd.Series([3857] * 32)
-    frm = pd.Series([4326] * 32)
-    fast = kernels.transform_srid(s, to, frm).tolist()
-    for i, v in enumerate(fast):
-        g = from_wkb(bytes(v))
-        want = proj.transform_geometry(
-            from_wkb(bytes(s.iloc[i])), 3857, 4326)
-        assert g.srid == 3857
-        assert g.parts[0] == want.parts[0]          # x: pure multiplies
-        # y: numpy's vectorized tan/log can differ from libm by an ulp
-        # (~4e-9 at 2e7 magnitude); the 6-dp output rounding the oracle
-        # compares under absorbs this entirely
-        assert g.parts[1] == pytest.approx(want.parts[1], abs=1e-7)
+    pts = [(RNG.uniform(-20, 20), RNG.uniform(-60, 70)) for _ in range(8)]
+    line = Geometry("LineString", pts[:4])
+    hole = from_wkt("POLYGON((0 40,12 40,12 52,0 52,0 40),"
+                    "(4 44,4 48,8 48,8 44,4 44))")
+    multi = from_wkt("MULTIPOLYGON(((1 50,2 50,2 51,1 50)),"
+                     "((-3 45,-2 45,-2 46,-3 45)))")
+    empty = Geometry("Point", None)
+    mixed = ([Geometry("Point", p) for p in pts[:3]]
+             + [Geometry("Point", p, 4326) for p in pts[3:]]
+             + [line, hole, multi, empty])
+    plain_points = [Geometry("Point", p) for p in pts] + [empty]
+    lines = [Geometry("LineString", pts[i:i + 3]) for i in range(5)]
+    for to in TRANSFORM_TARGETS:
+        # with from_srid: plain and EWKB rows mixed, a NULL from_srid
+        vals = _transform_rows(mixed)
+        frm = [4326] * len(vals)
+        frm[1] = None
+        _transform_parity(vals, to, frm)
+        # without from_srid: the source SRID comes from each header,
+        # 4326 and its 4269 alias in one batch
+        _transform_parity(_transform_rows(mixed[:6], 4326)
+                          + _transform_rows(mixed[6:], 4269), to)
+        # uniform plain point / line batches (the numpy codecs)
+        _transform_parity(_transform_rows(plain_points), to, 4326)
+        _transform_parity(_transform_rows(lines), to, 4326)
+    # several SRID pairs in one batch, one group each
+    vals = _transform_rows(mixed, 4326)
+    _transform_parity(vals, [TRANSFORM_TARGETS[i % len(TRANSFORM_TARGETS)]
+                             for i in range(len(vals))])
+    # projected -> projected through the 4326 hub, header and from_srid
+    stamped = kernels.transform_srid(
+        pd.Series(_transform_rows(mixed, 4326), dtype=object),
+        pd.Series([2263] * (len(mixed) + 2))).tolist()
+    _transform_parity(stamped, 5070)
+    _transform_parity([None if v is None else to_wkb(from_wkb(v)
+                                                     .with_srid(None))
+                       for v in stamped], 32733, 2263)
+    # identity pairs keep SRIDs the WKB writer leaves unstamped (0)
+    # or writes signed (negative)
+    for srid in (0, -5):
+        _transform_parity(_transform_rows(plain_points), srid, srid)
+
+    # the errors still raise, whichever path the group takes
+    def run(geoms, to, frm=None):
+        n = len(geoms)
+        return kernels.transform_srid(
+            pd.Series([to_wkb(g) for g in geoms], dtype=object),
+            pd.Series([to] * n),
+            None if frm is None else pd.Series([frm] * n))
+
+    ok = Geometry("Point", (1.0, 2.0))
+    pole = Geometry("Point", (1.0, 90.0))
+    with pytest.raises(ValueError, match=r"latitude 90.0 out of"):
+        run([ok, pole], 3857, 4326)
+    with pytest.raises(ValueError, match=r"latitude -90.0 out of"):
+        run([Geometry("LineString", [(0.0, 1.0), (0.0, -90.0)])], 3857,
+            4326)
+    with pytest.raises(ValueError, match="source SRID unknown"):
+        run([ok.with_srid(4326), ok], 3857)
+    with pytest.raises(ValueError, match="unsupported SRID pair"):
+        run([ok], 99999, 4326)
+    with pytest.raises(ValueError, match="unsupported SRID pair"):
+        run([ok], 4326, 99999)
 
 
 def test_st_xy_fast_path_parity():

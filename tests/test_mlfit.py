@@ -9,9 +9,10 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.mlfit import (doc_features,
-                                                  gram_moments, r6,
+                                                  gram_moments,
                                                   ridge_fit,
                                                   solve_spd_r6)
+from datafusion_geo_spark.operators.util import round6
 
 
 def test_solver_close_to_numpy_on_random_spd():
@@ -38,7 +39,7 @@ def test_solver_deterministic_and_r6_grid():
     w2 = solve_spd_r6(g, b)
     assert w1 == w2
     for v in w1:
-        assert v == r6(v)  # every weight sits on the 6-dp grid
+        assert v == round6(v)  # every weight sits on the 6-dp grid
 
 
 def test_features_and_gram_exact(spark):

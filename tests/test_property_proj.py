@@ -4,7 +4,6 @@ area.
 
 Invariants:
   * forward∘inverse is identity to family-specific tolerance
-  * numpy twins agree with the scalar chain
   * the hub composition src -> dst equals inverse-then-forward
   * conformal conics preserve tiny-circle shape (local isotropy);
     equal-area projections preserve tiny-quad area
@@ -14,7 +13,6 @@ Invariants:
 
 import math
 
-import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -53,19 +51,6 @@ def test_roundtrip_fuzz(code, u, v):
     lon2, lat2 = crs.inverse(x, y)
     tol = 1e-7 if code == 27700 else 1e-9
     assert abs(lon2 - lon) < tol and abs(lat2 - lat) < tol
-
-
-@settings(max_examples=100, deadline=None)
-@given(code_st, unit, unit)
-def test_numpy_twin_fuzz(code, u, v):
-    lon, lat = _pt(code, u, v)
-    crs = CRS_REGISTRY[code]
-    xs, ys = crs.forward(lon, lat)
-    xv, yv = crs.forward_np(np.array([lon]), np.array([lat]))
-    assert abs(xv[0] - xs) < 1e-6 and abs(yv[0] - ys) < 1e-6
-    los, las = crs.inverse(xs, ys)
-    lov, lav = crs.inverse_np(np.array([xs]), np.array([ys]))
-    assert abs(lov[0] - los) < 1e-10 and abs(lav[0] - las) < 1e-10
 
 
 @settings(max_examples=40, deadline=None)

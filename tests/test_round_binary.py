@@ -15,7 +15,8 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from datafusion_geo_spark.operators.util import ROUND6_SQL, round6_binary
+from datafusion_geo_spark.operators.util import (ROUND6_SQL, round6,
+                                                 round6_binary)
 
 # the live trap values ±, plus exact dyadic halves, zeros, and a spread
 BOUNDARY = [
@@ -27,6 +28,11 @@ BOUNDARY = [
     20037508.342789244, -20037508.342789244,  # mercator extremes
     1e-9, -1e-9, 9.9999995, -9.9999995,
 ]
+
+
+#: zeros of both signs, negatives that round to zero, and 6-dp halves —
+#: where a Python twin without the trailing ``+ 0.0`` returns -0.0
+TWIN_PROBES = [0.0, -0.0, -1e-9, 2.5e-7, -2.5e-7, 1.0000005, -1.0000005]
 
 
 def _expected(x: float) -> float:
@@ -95,3 +101,15 @@ def test_null_propagates(spark):
     row = spark.createDataFrame([(None,)], "x double").select(
         round6_binary(F.col("x")).alias("r")).collect()[0]
     assert row["r"] is None
+
+
+def test_python_twin_matches_spark_bits(spark):
+    """util.round6 (the driver-side folds of mlfit and similarity)
+    returns the bits round6_binary gives in Spark, sign of zero
+    included."""
+    df = spark.createDataFrame(list(enumerate(TWIN_PROBES)),
+                               "i int, x double")
+    rows = (df.select("i", round6_binary(F.col("x")).alias("r"))
+            .orderBy("i").collect())
+    for r, x in zip(rows, TWIN_PROBES):
+        assert round6(x).hex() == r["r"].hex(), (x, round6(x), r["r"])

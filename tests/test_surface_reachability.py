@@ -52,6 +52,9 @@ KEPT = {
     "sp_vocab_bpe": "SentencePiece vocab rows for an exported BPE model",
     "geoparquet_metadata": "public read of a GeoParquet dataset's geo "
                            "metadata (manifest, else first footer)",
+    "transform_geometry": "per-geometry ST_Transform over the same "
+                          "transformer; the kernel's batches are pinned "
+                          "against it row by row",
 }
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

@@ -6,10 +6,17 @@ import random
 import pyspark.sql.functions as F
 import pytest
 
-from datafusion_geo_spark.geo.proj import (lonlat_to_utm,
-                                           transform_geometry,
-                                           utm_to_lonlat, utm_zone)
+from datafusion_geo_spark.geo.proj import (transform_geometry, transformer,
+                                           utm_zone)
 from datafusion_geo_spark.geo.wkt import from_wkt, to_wkt
+
+
+def lonlat_to_utm(lon, lat, zone, north):
+    return transformer(4326, (32600 if north else 32700) + zone)(lon, lat)
+
+
+def utm_to_lonlat(e, n, zone, north):
+    return transformer((32600 if north else 32700) + zone, 4326)(e, n)
 
 
 def test_known_anchors():
