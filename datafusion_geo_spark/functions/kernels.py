@@ -186,8 +186,10 @@ def geom_from_text(s: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
     """WKT -> (E)WKB. Mirrors ST_GeomFromText
     (/root/reference/src/function/geom_from_text.rs:50-76).
 
-    Fast path: an all-POINT batch parses via one vectorized regex extract
-    and encodes with the numpy point codec (no SRID only)."""
+    Fast path, without an SRID argument: an all-'POINT(x y)' batch, or
+    an all-LINESTRING batch with one vertex count, parses with vectorized
+    str ops and one numpy float parse and encodes through
+    ``vector.encode``."""
     if srid is None:
         fast = _fast_points_from_text(s)
         if fast is None:
@@ -238,10 +240,10 @@ def _fast_points_from_text(s: pd.Series) -> Optional[pd.Series]:
     if parsed is None:
         return None
     bx, by, isnull = parsed
-    xs = np.empty(len(s)); ys = np.empty(len(s))
-    xs[~isnull] = bx
-    ys[~isnull] = by
-    return _obj_series(vector.encode_points(xs, ys, valid=~isnull))
+    xy = np.empty((len(s), 2))
+    xy[~isnull, 0] = bx
+    xy[~isnull, 1] = by
+    return _obj_series(vector.encode("Point", xy, valid=~isnull))
 
 
 def _fast_lines_from_text(s: pd.Series) -> Optional[pd.Series]:
@@ -270,7 +272,7 @@ def _fast_lines_from_text(s: pd.Series) -> Optional[pd.Series]:
         return None
     coords = np.empty((len(s), k, 2))
     coords[~isnull] = vals.reshape(len(body), k, 2)
-    return _obj_series(vector.encode_uniform_lines(coords, valid=~isnull))
+    return _obj_series(vector.encode("LineString", coords, valid=~isnull))
 
 
 def geom_from_geojson(s: pd.Series) -> pd.Series:
@@ -318,10 +320,9 @@ def _fast_points_from_geojson(s: pd.Series) -> Optional[pd.Series]:
     vals = np.fromstring(joined, dtype=float, sep=",")
     if len(vals) != 2 * len(body) or np.isnan(vals).any():
         return None
-    xs = np.empty(len(s)); ys = np.empty(len(s))
-    xs[~isnull] = vals[0::2]
-    ys[~isnull] = vals[1::2]
-    return _obj_series(vector.encode_points(xs, ys, valid=~isnull))
+    xy = np.empty((len(s), 2))
+    xy[~isnull] = vals.reshape(len(body), 2)
+    return _obj_series(vector.encode("Point", xy, valid=~isnull))
 
 
 def _fast_lines_from_geojson(s: pd.Series) -> Optional[pd.Series]:
@@ -351,7 +352,7 @@ def _fast_lines_from_geojson(s: pd.Series) -> Optional[pd.Series]:
         return None
     coords = np.empty((len(s), k, 2))
     coords[~isnull] = vals.reshape(len(body), k, 2)
-    return _obj_series(vector.encode_uniform_lines(coords, valid=~isnull))
+    return _obj_series(vector.encode("LineString", coords, valid=~isnull))
 
 
 def geom_from_wkb(s: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
@@ -391,26 +392,30 @@ def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
     xs = pd.to_numeric(x, errors="coerce").to_numpy(float)
     ys = pd.to_numeric(y, errors="coerce").to_numpy(float)
     valid = ~(np.isnan(xs) | np.isnan(ys))
-    return _obj_series(vector.encode_points(xs, ys, valid=valid))
+    return _obj_series(vector.encode("Point", np.stack([xs, ys], axis=1),
+                                     valid=valid))
 
 
 # ------------------------------------------------------------ serializers
 
-def _unary_to_str(fn: Callable[[Geometry], str], point_fast, line_fast=None):
+def _unary_to_str(fn: Callable[[Geometry], str], point_fast, line_fast=None,
+                  ewkt: bool = False):
+    """Text kernel: ``point_fast``/``line_fast`` format a decoded point
+    or linestring batch, ``ewkt`` prefixes ``SRID=n;`` like ``to_ewkt``."""
     def kernel(s: pd.Series) -> pd.Series:
-        vals = s.tolist()
-        pb = vector.decode_points(vals)
-        if pb is not None:
-            return _obj_series(point_fast(pb))
-        if line_fast is not None:
-            lb = vector.decode_uniform_lines(vals)
-            if lb is not None:
-                return _obj_series(line_fast(lb))
-        return _rows(fn, "g", s)
+        b = vector.decode(s.tolist())
+        fast = None if b is None else \
+            {"Point": point_fast, "LineString": line_fast}.get(b.typ)
+        if fast is None:
+            return _rows(fn, "g", s)
+        out = fast(b)
+        if ewkt and b.srid:
+            out = [t if t is None else f"SRID={b.srid};{t}" for t in out]
+        return _obj_series(out)
     return kernel
 
 
-def _points_to_wkt(pb: vector.PointBatch) -> list:
+def _points_to_wkt(pb: vector.Batch) -> list:
     # POINT EMPTY travels as NaN coords with valid=True (e.g. centroid
     # of an empty geometry) — _fmt would raise on int(NaN)
     v = pb.valid
@@ -419,7 +424,7 @@ def _points_to_wkt(pb: vector.PointBatch) -> list:
             for i in range(pb.n)]
 
 
-def _lines_to_wkt(lb: vector.LineBatch) -> list:
+def _lines_to_wkt(lb: vector.Batch) -> list:
     v = lb.valid
     c = lb.coords
     if lb.k == 0:   # a batch of empty linestrings (e.g. empty clips)
@@ -429,15 +434,18 @@ def _lines_to_wkt(lb: vector.LineBatch) -> list:
         if v[i] else None for i in range(lb.n)]
 
 
-def _points_to_geojson(pb: vector.PointBatch) -> list:
+def _points_to_geojson(pb: vector.Batch) -> list:
     v = pb.valid
-    return ['{"type":"Point","coordinates":[%s,%s]}' % (_fmt(pb.x[i]), _fmt(pb.y[i]))
-            if v[i] else None for i in range(pb.n)]
+    return [('{"type":"Point","coordinates":[]}' if pb.x[i] != pb.x[i]
+             else '{"type":"Point","coordinates":[%s,%s]}'
+             % (_fmt(pb.x[i]), _fmt(pb.y[i]))) if v[i] else None
+            for i in range(pb.n)]
 
 
-# plain-WKB fast batches carry no SRID, so WKT == EWKT on them
+# WKT drops a fast batch's SRID, EWKT prefixes it
 as_text = _unary_to_str(to_wkt, _points_to_wkt, _lines_to_wkt)   # as_text.rs:88-110
-as_ewkt = _unary_to_str(to_ewkt, _points_to_wkt, _lines_to_wkt)  # as_ewkt.rs:88-101
+as_ewkt = _unary_to_str(to_ewkt, _points_to_wkt, _lines_to_wkt,  # as_ewkt.rs:88-101
+                        ewkt=True)
 
 
 def _geojson(g: Geometry) -> str:
@@ -508,19 +516,10 @@ def box2d_rows(s: pd.Series) -> pd.DataFrame:
     """Per-row bounding box -> DataFrame(xmin,ymin,xmax,ymax) backing the
     Box2D struct UDF (/root/reference/src/function/box2d.rs:46-77;
     struct layout /root/reference/src/geo/box.rs:11-16)."""
-    vals = s.tolist()
-    pb = vector.decode_points(vals)
-    if pb is not None:
-        x = _nullable(pb.x, pb.valid)
-        y = _nullable(pb.y, pb.valid)
-        return pd.DataFrame({"xmin": x, "ymin": y, "xmax": x, "ymax": y})
-    lb = vector.decode_uniform_lines(vals)
-    if lb is not None:
-        xmin, ymin, xmax, ymax = vector.lines_bbox(lb)
-        return pd.DataFrame({"xmin": _nullable(xmin, lb.valid),
-                             "ymin": _nullable(ymin, lb.valid),
-                             "xmax": _nullable(xmax, lb.valid),
-                             "ymax": _nullable(ymax, lb.valid)})
+    b = vector.decode(s.tolist())
+    if b is not None and b.k:
+        return pd.DataFrame({c: _nullable(v, b.valid) for c, v in zip(
+            ("xmin", "ymin", "xmax", "ymax"), vector.bounds(b.coords))})
     nulls = (None, None, None, None)   # a NULL or empty geometry
     return pd.DataFrame(
         [nulls if b is None else b for b in _rows(Geometry.bounds, "g", s)],
@@ -566,7 +565,8 @@ def point_bbox_from_xy(x: pd.Series, y: pd.Series) -> pd.DataFrame:
     ys = pd.to_numeric(y, errors="coerce").to_numpy(float)
     valid = ~(np.isnan(xs) | np.isnan(ys))
     return pd.DataFrame({
-        "geom": vector.encode_points(xs, ys, valid=valid),
+        "geom": vector.encode("Point", np.stack([xs, ys], axis=1),
+                              valid=valid),
         "xmin": _nullable(xs, valid), "ymin": _nullable(ys, valid),
         "xmax": _nullable(xs, valid), "ymax": _nullable(ys, valid)})
 
@@ -640,19 +640,28 @@ def box2d_from_array(s: pd.Series) -> pd.DataFrame:
 
 # ------------------------------------------------------------ predicates
 
-def _pred_const_vs_points(fn_name: str, g: Geometry,
-                          pb: "vector.PointBatch", g_is_left: bool):
-    """Vectorized predicate between a constant geometry and a point
-    batch. Returns a bool ndarray or None when unsupported.
+def _pred_const_vs_batch(fn_name: str, g: Geometry, b: vector.Batch,
+                         g_is_left: bool):
+    """Vectorized predicate between a constant geometry and a decoded
+    point or linestring batch. Returns a bool ndarray or None when
+    unsupported.
 
     For point arguments every supported predicate reduces to membership:
     intersects(pt, G) == covers(G, pt) == covered_by(pt, G) ==
-    "pt is on/in G" (boundary inclusive); equals needs G to be a point."""
+    "pt is on/in G" (boundary inclusive); equals needs G to be a point.
+    A linestring batch answers intersects with a constant point."""
+    if b.typ == "LineString":
+        if fn_name == "intersects" and g.typ == "Point" \
+                and g.parts is not None:
+            return vector.point_on_uniform_lines(b, *g.parts)
+        return None
+    if b.typ != "Point":
+        return None
     if g.typ == "Point":
         if g.parts is None:
             return None
         px, py = g.parts
-        return vector.points_equal_xy(pb, px, py)
+        return vector.points_equal_xy(b, px, py)
     membership_ok = (
         (fn_name == "intersects")
         or (fn_name == "covers" and g_is_left)       # G covers pt
@@ -660,42 +669,30 @@ def _pred_const_vs_points(fn_name: str, g: Geometry,
     if not membership_ok:
         return None
     if g.typ == "Polygon" and len(g.parts) == 1:
-        return vector.points_in_ring(pb, g.parts[0])
+        return vector.points_in_ring(b, g.parts[0])
     if g.typ == "LineString":
         # membership of many points on one small line: few segments
-        out = None
-        import numpy as _np
-        for i in range(len(g.parts) - 1):
-            (ax, ay), (bx, by) = g.parts[i], g.parts[i + 1]
-            scale = 1.0 + _np.abs(pb.x) + _np.abs(pb.y)
-            cross = (bx - ax) * (pb.y - ay) - (by - ay) * (pb.x - ax)
-            on = ((_np.abs(cross) <= vector.EPS * scale)
-                  & (pb.x >= min(ax, bx) - vector.EPS)
-                  & (pb.x <= max(ax, bx) + vector.EPS)
-                  & (pb.y >= min(ay, by) - vector.EPS)
-                  & (pb.y <= max(ay, by) + vector.EPS))
-            out = on if out is None else (out | on)
+        out = np.zeros(b.n, dtype=bool)
+        for (ax, ay), (bx, by) in zip(g.parts, g.parts[1:]):
+            out |= vector._on_segment_arr(b.x, b.y, ax, ay, bx, by)
         return out
     return None
 
 
-def _box_class_fast(fn, al: list, bl: list):
+def _box_class_fast(fn, al: list, bl: list, ra, rb):
     """Rectangle-pair class-memo fast path shared by the binary
-    predicates and the relate family: when BOTH batches decode as
-    uniform axis-aligned rectangles, any point-set function of the pair
-    is constant within a (Allen-x, Allen-y) interval-relation class
+    predicates and the relate family: when BOTH batches are uniform
+    axis-aligned rectangles (``ra``/``rb``, the ``vector.rectangles`` of
+    each side), any point-set function of the pair is constant within
+    a (Allen-x, Allen-y) interval-relation class
     (vector.box_pair_classes), so ``fn`` runs once per distinct class —
     on the first actual pair of that class, so the result is the
     generic path's own answer — instead of once per distinct pair
     (≤ 169 evaluations per batch vs ~batch-size). Returns an object
-    list, or None when the batches are not rectangle-shaped."""
-    ba = vector.decode_boxes(al)
-    if ba is None:
+    list, or None when either side is not rectangles."""
+    if ra is None or rb is None:
         return None
-    bb = vector.decode_boxes(bl)
-    if bb is None:
-        return None
-    code = vector.box_pair_classes(ba, bb)
+    code = vector.box_pair_classes(ra, rb)
     out = np.full(len(al), None, dtype=object)
     idx = np.flatnonzero(code >= 0)
     if len(idx):
@@ -713,57 +710,50 @@ def _binary_pred(fn: Callable[[Geometry, Geometry], bool], fn_name: str):
     def pred(x: Geometry, y: Geometry) -> bool:
         return bool(fn(x, y))
 
+    def notnull(vals: list) -> np.ndarray:
+        return np.array([v is not None for v in vals])
+
     def kernel(a: pd.Series, b: pd.Series) -> pd.Series:
         al, bl = a.tolist(), b.tolist()
 
-        # ---- vectorized fast paths --------------------------------
+        # ---- vectorized fast paths: a constant (broadcast literal)
+        # side stays a Geometry, any other side is decoded once
         ga = _const_geom(al) if len(al) else None
         gb = _const_geom(bl) if len(bl) else None
-        pa = vector.decode_points(al) if ga is None else None
-        pbb = vector.decode_points(bl) if gb is None else None
+        da = vector.decode(al) if ga is None else None
+        db = vector.decode(bl) if gb is None else None
+        pair = (da.typ, db.typ) if da is not None and db is not None \
+            else None
 
         fastres = None
-        valid = None
-        if gb is not None and pa is not None:
-            fastres = _pred_const_vs_points(fn_name, gb, pa, g_is_left=False)
-            valid = pa.valid & np.array([v is not None for v in bl])
-        elif ga is not None and pbb is not None:
-            fastres = _pred_const_vs_points(fn_name, ga, pbb, g_is_left=True)
-            valid = pbb.valid & np.array([v is not None for v in al])
-        elif pa is not None and pbb is not None and fn_name in ("intersects", "equals"):
-            fastres = ((np.abs(pa.x - pbb.x) <= vector.EPS)
-                       & (np.abs(pa.y - pbb.y) <= vector.EPS))
+        if gb is not None and da is not None:
+            fastres = _pred_const_vs_batch(fn_name, gb, da, g_is_left=False)
+            valid = da.valid & notnull(bl)
+        elif ga is not None and db is not None:
+            fastres = _pred_const_vs_batch(fn_name, ga, db, g_is_left=True)
+            valid = db.valid & notnull(al)
+        elif pair == ("Point", "Point") and fn_name in ("intersects", "equals"):
+            fastres = ((np.abs(da.x - db.x) <= vector.EPS)
+                       & (np.abs(da.y - db.y) <= vector.EPS))
             if fn_name == "equals":
                 # POINT EMPTY ≡ POINT EMPTY (NaN coords): the object path
                 # (algos.equals) returns True for two empties; the NaN
                 # comparison above yields False — align the fast path.
-                both_empty = (np.isnan(pa.x) & np.isnan(pa.y)
-                              & np.isnan(pbb.x) & np.isnan(pbb.y))
+                both_empty = (np.isnan(da.x) & np.isnan(da.y)
+                              & np.isnan(db.x) & np.isnan(db.y))
                 fastres = fastres | both_empty
-            valid = pa.valid & pbb.valid
-        elif gb is not None and gb.typ == "Point" and fn_name == "intersects":
-            la = vector.decode_uniform_lines(al)
-            if la is not None and gb.parts is not None:
-                fastres = vector.point_on_uniform_lines(la, *gb.parts)
-                valid = la.valid & np.array([v is not None for v in bl])
-        elif ga is not None and ga.typ == "Point" and fn_name == "intersects":
-            lb_ = vector.decode_uniform_lines(bl)
-            if lb_ is not None and ga.parts is not None:
-                fastres = vector.point_on_uniform_lines(lb_, *ga.parts)
-                valid = lb_.valid & np.array([v is not None for v in al])
-        elif ga is None and gb is None and fn_name == "intersects":
+            valid = da.valid & db.valid
+        elif pair == ("LineString", "LineString") and fn_name == "intersects":
             # line×line pairs (the big×big spatial-join hot path)
-            la_ = vector.decode_uniform_lines(al)
-            lb2 = vector.decode_uniform_lines(bl) if la_ is not None else None
-            if la_ is not None and lb2 is not None:
-                fastres = vector.lines_intersect_lines(la_, lb2)
-                valid = la_.valid & lb2.valid
+            fastres = vector.lines_intersect_lines(da, db)
+            valid = da.valid & db.valid
         if fastres is not None:
             return _bool_nullable(fastres, valid)
-        if ga is None and gb is None and pa is None and pbb is None:
+        if pair is not None:
             # rectangle×rectangle batches: one evaluation per interval-
             # relation class instead of per distinct pair
-            bres = _box_class_fast(pred, al, bl)
+            bres = _box_class_fast(pred, al, bl, vector.rectangles(da),
+                                   vector.rectangles(db))
             if bres is not None:
                 return _obj_series(bres)
         return _rows(pred, "gg", a, b)
@@ -790,21 +780,15 @@ boundary = _per_row(_wkb(algos.boundary), "g")  # boundary.rs:71-87
 def translate(s: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
     """ST_Translate (/root/reference/src/function/translate.rs:56-98).
     Unlike the reference, offsets may be per-row columns, not only literal
-    scalars (translate.rs:57-62 restricts to scalars)."""
-    vals = s.tolist()
-    dxa = pd.to_numeric(dx, errors="coerce").to_numpy(float)
-    dya = pd.to_numeric(dy, errors="coerce").to_numpy(float)
-    off_ok = ~(np.isnan(dxa) | np.isnan(dya))
-    pb = vector.decode_points(vals)
-    if pb is not None:
-        valid = pb.valid & off_ok
-        return _obj_series(vector.encode_points(pb.x + dxa, pb.y + dya,
-                                                valid=valid))
-    lb = vector.decode_uniform_lines(vals)
-    if lb is not None:
-        valid = lb.valid & off_ok
-        c = lb.coords + np.stack([dxa, dya], axis=1)[:, None, :]
-        return _obj_series(vector.encode_uniform_lines(c, valid=valid))
+    scalars (translate.rs:57-62 restricts to scalars). A fixed-layout
+    batch moves as one numpy sum and keeps its SRID."""
+    b = vector.decode(s.tolist())
+    if b is not None:
+        dxa = pd.to_numeric(dx, errors="coerce").to_numpy(float)
+        dya = pd.to_numeric(dy, errors="coerce").to_numpy(float)
+        valid = b.valid & ~(np.isnan(dxa) | np.isnan(dya))
+        c = b.coords + np.stack([dxa, dya], axis=1)[:, None, :]
+        return _obj_series(vector.encode(b.typ, c, valid=valid, srid=b.srid))
     return _rows(lambda g, x, y: to_wkb(g.translate(x, y)), "gnn", s, dx, dy)
 
 
@@ -840,7 +824,10 @@ def _box_class_kernel(fn):
     takes the rectangle class-memo fast path (_box_class_fast) when both
     batches are rectangles."""
     def kernel(a: pd.Series, b: pd.Series) -> pd.Series:
-        bres = _box_class_fast(fn, a.tolist(), b.tolist())
+        al, bl = a.tolist(), b.tolist()
+        ra = vector.rectangles(vector.decode(al))
+        rb = None if ra is None else vector.rectangles(vector.decode(bl))
+        bres = _box_class_fast(fn, al, bl, ra, rb)
         if bres is not None:
             return _obj_series(bres)
         return _rows(fn, "gg", a, b)
@@ -873,7 +860,6 @@ st_relate_match = _per_row(
 
 # set operations (geo/overlay.py boundary-classification overlay;
 # beyond-reference — PostGIS ST_Intersection/ST_Union/ST_Difference)
-_POLY_EMPTY_WKB = b"\x01\x03\x00\x00\x00\x00\x00\x00\x00"
 
 
 def geom_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -884,23 +870,25 @@ def geom_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
     of the result is one of its corners because each clamp bound
     dominates the interior candidates), or POLYGON EMPTY when the
     interval product is empty or degenerate (dimensional collapse —
-    same rule as the generic overlay). Byte parity with the object
-    path is fuzz-pinned (tests/test_setops.py)."""
+    same rule as the generic overlay), with the left side's SRID. Byte
+    parity with the object path is fuzz-pinned (tests/test_setops.py)."""
     al, bl = a.tolist(), b.tolist()
-    ba = vector.decode_boxes(al)
-    bb = vector.decode_boxes(bl) if ba is not None else None
-    if ba is None or bb is None:
+    da = vector.decode(al)
+    ra = vector.rectangles(da)
+    rb = None if ra is None else vector.rectangles(vector.decode(bl))
+    if rb is None:
         return _rows(_wkb(overlay.intersection), "gg", a, b)
-    valid = ba.valid & bb.valid
-    ix0 = np.maximum(ba.x0, bb.x0)
-    iy0 = np.maximum(ba.y0, bb.y0)
-    ix1 = np.minimum(ba.x1, bb.x1)
-    iy1 = np.minimum(ba.y1, bb.y1)
-    pos = valid & (ix0 < ix1) & (iy0 < iy1)
-    rects = vector.encode_boxes(ix0, iy0, ix1, iy1, valid=pos)
-    out = [rects[i] if pos[i] else (_POLY_EMPTY_WKB if valid[i] else None)
-           for i in range(len(al))]
-    return _obj_series(out)
+    valid = ~np.isnan(ra[0]) & ~np.isnan(rb[0])
+    x0, y0 = np.maximum(ra[0], rb[0]), np.maximum(ra[1], rb[1])
+    x1, y1 = np.minimum(ra[2], rb[2]), np.minimum(ra[3], rb[3])
+    pos = valid & (x0 < x1) & (y0 < y1)
+    # the overlay's canonical ring: min corner first, counter-clockwise
+    ring = np.stack([x0, y0, x1, y0, x1, y1, x0, y1, x0, y0], axis=1)
+    rects = vector.encode("Polygon", ring.reshape(-1, 5, 2), valid=pos,
+                          srid=da.srid)
+    empty = to_wkb(Geometry("Polygon", [], da.srid))
+    return _obj_series([r if p else (empty if v else None) for r, p, v
+                        in zip(rects, pos.tolist(), valid.tolist())])
 
 
 geom_union = _per_row(_wkb(overlay.union), "gg")
@@ -958,7 +946,13 @@ st_polygonize_all = _per_row(_wkb(polygonize_mod.polygonize), "G")
 st_rotate = _per_row(_wkb(edit.rotate), "gnnn")
 
 
-def _dist_points_to_const(pb: "vector.PointBatch", g) -> np.ndarray:
+def _point_batch(vals: list) -> Optional[vector.Batch]:
+    """``vals`` decoded when it is a point batch, else None."""
+    b = vector.decode(vals)
+    return b if b is not None and b.typ == "Point" else None
+
+
+def _dist_points_to_const(pb: vector.Batch, g) -> np.ndarray:
     """Vectorized distance from a point batch to one constant geometry:
     numpy point-to-segment over the constant's few edges, then zero out
     points lying inside polygon parts (shell minus holes)."""
@@ -994,8 +988,7 @@ def _distance_fast(al: list, bl: list) -> Optional[pd.Series]:
     """Vectorized distance cases shared by distance() and dwithin():
     point×point pairs (pure numpy) and point-column × constant geometry
     (numpy per-edge loop). None when neither applies."""
-    pa = vector.decode_points(al)
-    pbb = vector.decode_points(bl)
+    pa, pbb = _point_batch(al), _point_batch(bl)
     if pa is not None and pbb is not None:
         dx0, dy0 = pa.x - pbb.x, pa.y - pbb.y
         d = np.sqrt(dx0 * dx0 + dy0 * dy0)  # sqrt-form: see _dist_points_to_const
@@ -1048,9 +1041,9 @@ def transform_srid(s: pd.Series, to_srid: pd.Series,
     the EWKB header unless from_srid is given). The batch's non-NULL
     rows are grouped by (source SRID, target SRID), and each group's
     coordinates go through the pair's one ``proj.transformer`` array
-    function in one call: plain-WKB point and uniform linestring groups
-    through the numpy codecs, any other group through
-    ``proj.map_vertices`` over its distinct geometries."""
+    function in one call: a fixed-layout group through the numpy codec,
+    any other group through ``proj.map_vertices`` over its distinct
+    geometries."""
     from ..geo import proj
     vals = s.to_numpy(dtype=object)
     to = pd.to_numeric(to_srid).to_numpy(dtype=float)
@@ -1083,17 +1076,13 @@ def transform_srid(s: pd.Series, to_srid: pd.Series,
 def _transform_group(f: Callable, vals: list, dst: int) -> list:
     """(E)WKB of every geometry in ``vals`` (non-NULL, one SRID pair)
     with its coordinates mapped by the array function ``f`` and the
-    SRID stamped ``dst``."""
-    if 0 < dst < 2 ** 31:  # an SRID the numpy encoders write like to_wkb
-        pb = vector.decode_points(vals)
-        if pb is not None:
-            x, y = f(pb.x, pb.y)
-            return vector.encode_points(x, y, srid=dst)
-        lb = vector.decode_uniform_lines(vals)
-        if lb is not None:
-            x, y = f(lb.coords[:, :, 0], lb.coords[:, :, 1])
-            return vector.encode_uniform_lines(np.stack([x, y], axis=-1),
-                                               srid=dst)
+    SRID stamped ``dst``: a fixed-layout group (plain WKB or EWKB of
+    one SRID) as one array call over its decoded coordinates, any other
+    group over its distinct geometries' vertices."""
+    b = vector.decode(vals)
+    if b is not None:
+        x, y = f(b.coords[:, :, 0], b.coords[:, :, 1])
+        return vector.encode(b.typ, np.stack([x, y], axis=-1), srid=dst)
     from ..geo import proj
     geoms = {v: from_wkb(v) for v in dict.fromkeys(vals)}
     enc = {v: to_wkb(g.with_srid(dst)) for v, g in
@@ -1118,7 +1107,7 @@ def _pt_y(g) -> Optional[float]:
 def st_x(s: pd.Series) -> pd.Series:
     """ST_X (PostGIS): x of a POINT; NULL for empty/non-point.
     Vectorized for uniform point batches."""
-    pb = vector.decode_points(s.tolist())
+    pb = _point_batch(s.tolist())
     if pb is not None:
         return pd.Series(_nullable(pb.x, pb.valid & ~np.isnan(pb.x)))
     return _rows(_pt_x, "g", s)
@@ -1126,7 +1115,7 @@ def st_x(s: pd.Series) -> pd.Series:
 
 def st_y(s: pd.Series) -> pd.Series:
     """ST_Y (PostGIS): y of a POINT; NULL for empty/non-point."""
-    pb = vector.decode_points(s.tolist())
+    pb = _point_batch(s.tolist())
     if pb is not None:
         return pd.Series(_nullable(pb.y, pb.valid & ~np.isnan(pb.y)))
     return _rows(_pt_y, "g", s)

@@ -4,12 +4,12 @@ reference (/root/reference/src/geo/)."""
 
 from .geom import Geometry, GEOM_TYPES, TYPE_CODE
 from .wkt import from_wkt, to_wkt, to_ewkt, fmt_num
-from .wkb import from_wkb, to_wkb, wkb_srid, point_wkb
+from .wkb import from_wkb, to_wkb, wkb_srid
 from . import algos
 
 __all__ = [
     "Geometry", "GEOM_TYPES", "TYPE_CODE",
     "from_wkt", "to_wkt", "to_ewkt", "fmt_num",
-    "from_wkb", "to_wkb", "wkb_srid", "point_wkb",
+    "from_wkb", "to_wkb", "wkb_srid",
     "algos",
 ]

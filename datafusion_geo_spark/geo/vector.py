@@ -1,16 +1,20 @@
-"""numpy-vectorized WKB batch codecs and kernels.
+"""numpy-vectorized (E)WKB batch codec and kernels.
 
 The reference gets columnar speed from rayon-parallel Rust loops over
 Arrow arrays (/root/reference/src/function/intersects.rs:104-130). The
 Spark engine's equivalent lever inside each Python worker is numpy over
-the whole Arrow batch: when a geometry column is *uniform* (all plain
-little-endian WKB points, or linestrings with one vertex count), the
-batch decodes into flat float64 arrays with two frombuffer calls, and
-predicates/transforms run as numpy expressions — 10-50× over per-row
-object decoding. Mixed/EWKB batches fall back to the object path.
+the whole Arrow batch: when a geometry column is *fixed-layout* (every
+non-NULL value a little-endian 2-D POINT, LINESTRING of k vertices or
+one-ring POLYGON of k vertices, all with one header, SRID included),
+the batch decodes into one (n, k, 2) float64 array with one join and
+one frombuffer, and predicates/transforms run as numpy expressions —
+10-50x over per-row object decoding. ``decode`` and ``encode`` are the
+one codec pair; the header layout itself is ``wkb.fixed_header``. Batches
+with mixed types, vertex counts or SRIDs, big-endian or Z/M values fall
+back to the object path.
 
 Uniformity is the common case by construction: geometry columns written
-by one pipeline stage share a type and layout.
+by one pipeline stage share a type, a layout and an SRID.
 """
 
 from __future__ import annotations
@@ -19,172 +23,90 @@ from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
 
-_POINT_LEN = 21  # 1 byte order + 4 type + 2*8 coords
-
-_POINT_DTYPE = np.dtype({
-    "names": ["bo", "typ", "x", "y"],
-    "formats": ["u1", "<u4", "<f8", "<f8"],
-    "offsets": [0, 1, 5, 13],
-    "itemsize": _POINT_LEN,
-})
+from .wkb import fixed_header, fixed_layout
 
 
-class PointBatch:
-    """Decoded uniform point batch: x/y float64 arrays + validity mask
-    (True where the input value was non-null)."""
+class Batch:
+    """A decoded fixed-layout batch: ``coords`` (n, k, 2) float64, NaN
+    on NULL rows; ``valid`` True where the value was non-NULL; ``typ``
+    "Point" (k = 1), "LineString" or "Polygon" (one ring of k vertices);
+    ``srid`` the SRID every value carries, or None. A point batch also
+    has its coordinates as contiguous ``x``/``y`` arrays, the operands
+    of the point kernels (strided views into ``coords`` made
+    ``points_in_ring`` ~1.6x slower)."""
 
-    __slots__ = ("x", "y", "valid", "n")
+    __slots__ = ("coords", "valid", "typ", "srid", "n", "k", "x", "y")
 
-    def __init__(self, x: np.ndarray, y: np.ndarray, valid: np.ndarray):
-        self.x, self.y, self.valid = x, y, valid
-        self.n = len(valid)
-
-
-class LineBatch:
-    """Decoded uniform linestring batch: coords (n, k, 2) + validity."""
-
-    __slots__ = ("coords", "valid", "n", "k")
-
-    def __init__(self, coords: np.ndarray, valid: np.ndarray):
-        self.coords, self.valid = coords, valid
-        self.n = len(valid)
-        self.k = coords.shape[1] if coords.size else 0
-
-
-def _gather(values: Sequence) -> Tuple[list, np.ndarray]:
-    """Non-null values + validity mask."""
-    valid = np.fromiter((v is not None for v in values), dtype=bool,
-                        count=len(values))
-    if valid.all():
-        return list(values), valid
-    return [v for v in values if v is not None], valid
+    def __init__(self, coords: np.ndarray, valid: np.ndarray, typ: str,
+                 srid: Optional[int]):
+        self.coords, self.valid, self.typ, self.srid = coords, valid, typ, srid
+        self.n, self.k = coords.shape[0], coords.shape[1]
+        self.x = self.y = None
+        if typ == "Point":
+            self.x = np.ascontiguousarray(coords[:, 0, 0])
+            self.y = np.ascontiguousarray(coords[:, 0, 1])
 
 
-def decode_points(values: Sequence) -> Optional[PointBatch]:
-    """Try to decode a batch as uniform plain-WKB points; None on mixed
-    content (caller falls back to the object path)."""
-    vs, valid = _gather(values)
-    n = len(valid)
-    if not vs:
-        # all-null batch: coordinate arrays must still be n-length so
-        # downstream masks line up (valid is all False anyway)
-        return PointBatch(np.full(n, np.nan), np.full(n, np.nan), valid)
-    if len(vs[0]) != _POINT_LEN:
+def decode(values: Sequence) -> Optional[Batch]:
+    """Decode a batch whose non-NULL values share one fixed layout; None
+    otherwise (the caller falls back to the object path). The first
+    value's header decides the layout, so a batch it rules out is
+    rejected before any join. An all-NULL batch decodes as points with
+    every row invalid, so a point fast path answers it with NULLs."""
+    n = len(values)
+    v0 = next((v for v in values if v is not None), None)
+    if v0 is None:
+        return Batch(np.full((n, 1, 2), np.nan), np.zeros(n, bool),
+                     "Point", None)
+    v0 = bytes(v0)
+    layout = fixed_layout(v0)
+    if layout is None:
+        return None
+    typ, srid, k = layout
+    L = len(v0)
+    # a strided sample of lengths rejects a mixed batch without a pass
+    if any(v is not None and len(v) != L for v in values[::n // 16 + 1]):
+        return None
+    vs = [v for v in values if v is not None]
+    m = len(vs)
+    if list(map(len, vs)).count(L) != m:
         return None
     try:
         joined = b"".join(vs)
     except TypeError:
         joined = b"".join(bytes(v) for v in vs)
-    if len(joined) != _POINT_LEN * len(vs):
+    H = L - 16 * k  # header bytes, then k (x, y) pairs
+    rows = np.frombuffer(joined, dtype=np.dtype({
+        "names": ["hdr", "xy"], "formats": [f"V{H}", ("<f8", (k, 2))],
+        "offsets": [0, H], "itemsize": L}))
+    if not (rows["hdr"] == rows["hdr"][0]).all():
         return None
-    arr = np.frombuffer(joined, dtype=_POINT_DTYPE)
-    if not ((arr["bo"] == 1).all() and (arr["typ"] == 1).all()):
-        return None
-    x = np.full(n, np.nan)
-    y = np.full(n, np.nan)
-    x[valid] = arr["x"]
-    y[valid] = arr["y"]
-    return PointBatch(x, y, valid)
+    if m == n:
+        return Batch(rows["xy"].copy(), np.ones(n, bool), typ, srid)
+    valid = np.fromiter((v is not None for v in values), bool, n)
+    coords = np.full((n, k, 2), np.nan)
+    coords[valid] = rows["xy"]
+    return Batch(coords, valid, typ, srid)
 
 
-def decode_uniform_lines(values: Sequence) -> Optional[LineBatch]:
-    """Try to decode as uniform plain-WKB linestrings (same vertex count
-    per row); None on mixed content."""
-    vs, valid = _gather(values)
-    if not vs:
-        # all-null batch: no vertex count to decode — object fallback
-        # handles it trivially (every row -> None)
-        return None
-    L = len(vs[0])
-    if L < 9 or (L - 9) % 16 != 0:
-        return None
-    k = (L - 9) // 16
-    try:
-        joined = b"".join(vs)
-    except TypeError:
-        joined = b"".join(bytes(v) for v in vs)
-    if len(joined) != L * len(vs):
-        return None
-    raw = np.frombuffer(joined, dtype=np.uint8).reshape(len(vs), L)
-    if not (raw[:, 0] == 1).all():
-        return None
-    hdr = raw[:, 1:9].copy().view("<u4").reshape(len(vs), 2)
-    if not ((hdr[:, 0] == 2).all() and (hdr[:, 1] == k).all()):
-        return None
-    coords = raw[:, 9:].copy().view("<f8").reshape(len(vs), k, 2)
-    m = np.empty((len(valid), k, 2))
-    m.fill(np.nan)
-    m[valid] = coords
-    return LineBatch(m, valid)
-
-
-_EPOINT_DTYPE = np.dtype([("bo", "u1"), ("typ", "<u4"), ("srid", "<u4"),
-                          ("x", "<f8"), ("y", "<f8")])
-_EPOINT_LEN = 25
-_SRID_FLAG = 0x20000000
-
-
-def encode_points(x: np.ndarray, y: np.ndarray,
-                  valid: Optional[np.ndarray] = None,
-                  srid: Optional[int] = None) -> List[Optional[bytes]]:
-    """Vectorized point encoder → list of WKB objects: 21-byte plain
-    WKB, or 25-byte EWKB when ``srid`` is given (one SRID for the whole
-    batch — the transform/constructor use case)."""
-    n = len(x)
-    if srid is None:
-        arr = np.empty(n, dtype=_POINT_DTYPE)
-        arr["bo"] = 1
-        arr["typ"] = 1
-        L = _POINT_LEN
-    else:
-        arr = np.empty(n, dtype=_EPOINT_DTYPE)
-        arr["bo"] = 1
-        arr["typ"] = 1 | _SRID_FLAG
-        arr["srid"] = int(srid)
-        L = _EPOINT_LEN
-    arr["x"] = x
-    arr["y"] = y
-    buf = arr.tobytes()
-    mv = memoryview(buf)
-    if valid is None:
-        return [bytes(mv[i * L:(i + 1) * L]) for i in range(n)]
-    return [bytes(mv[i * L:(i + 1) * L]) if valid[i] else None
-            for i in range(n)]
-
-
-def encode_uniform_lines(coords: np.ndarray,
-                         valid: Optional[np.ndarray] = None,
-                         srid: Optional[int] = None) -> List[Optional[bytes]]:
-    """Vectorized linestring encoder for (n, k, 2) coords: plain WKB,
-    or EWKB with one batch-wide SRID (the transform output shape)."""
-    n, k = coords.shape[0], coords.shape[1]
-    if srid is None:
-        L = 9 + 16 * k
-        raw = np.empty((n, L), dtype=np.uint8)
-        raw[:, 0] = 1
-        hdr = np.empty((n, 2), dtype="<u4")
-        hdr[:, 0] = 2
-        hdr[:, 1] = k
-        raw[:, 1:9] = hdr.view(np.uint8).reshape(n, 8)
-        raw[:, 9:] = coords.astype("<f8").reshape(n, k * 2) \
-            .view(np.uint8)
-    else:
-        L = 13 + 16 * k
-        raw = np.empty((n, L), dtype=np.uint8)
-        raw[:, 0] = 1
-        hdr = np.empty((n, 3), dtype="<u4")
-        hdr[:, 0] = 2 | _SRID_FLAG
-        hdr[:, 1] = int(srid)
-        hdr[:, 2] = k
-        raw[:, 1:13] = hdr.view(np.uint8).reshape(n, 12)
-        raw[:, 13:] = coords.astype("<f8").reshape(n, k * 2) \
-            .view(np.uint8)
+def encode(typ: str, coords: np.ndarray, valid: Optional[np.ndarray] = None,
+           srid: Optional[int] = None) -> List[Optional[bytes]]:
+    """(E)WKB of each row of ``coords`` — (n, 2) points or (n, k, 2) — in
+    the fixed layout ``typ`` with one batch SRID, byte for byte what
+    ``to_wkb`` writes; None where ``valid`` is False."""
+    n = len(coords)
+    k = coords.shape[1] if coords.ndim == 3 else 1
+    hdr = np.frombuffer(fixed_header(typ, srid, k), dtype=np.uint8)
+    H, L = len(hdr), len(hdr) + 16 * k
+    raw = np.empty((n, L), dtype=np.uint8)
+    raw[:, :H] = hdr
+    raw[:, H:] = np.ascontiguousarray(coords, dtype="<f8") \
+        .reshape(n, 2 * k).view(np.uint8)
     buf = raw.tobytes()
-    mv = memoryview(buf)
+    offs = range(0, n * L, L)
     if valid is None:
-        return [bytes(mv[i * L:(i + 1) * L]) for i in range(n)]
-    return [bytes(mv[i * L:(i + 1) * L]) if valid[i] else None
-            for i in range(n)]
+        return [buf[o:o + L] for o in offs]
+    return [buf[o:o + L] if ok else None for o, ok in zip(offs, valid.tolist())]
 
 
 # ------------------------------------------------------------ predicates
@@ -192,11 +114,11 @@ def encode_uniform_lines(coords: np.ndarray,
 EPS = 1e-12
 
 
-def points_equal_xy(b: PointBatch, px: float, py: float) -> np.ndarray:
+def points_equal_xy(b: Batch, px: float, py: float) -> np.ndarray:
     return (np.abs(b.x - px) <= EPS) & (np.abs(b.y - py) <= EPS)
 
 
-def points_in_ring(b: PointBatch, ring: Sequence[Tuple[float, float]]) -> np.ndarray:
+def points_in_ring(b: Batch, ring: Sequence[Tuple[float, float]]) -> np.ndarray:
     """Vectorized point-in-polygon (single ring, boundary-inclusive):
     ray cast + on-edge check, looping over edges (few) not points (many)."""
     x, y = b.x, b.y
@@ -204,12 +126,7 @@ def points_in_ring(b: PointBatch, ring: Sequence[Tuple[float, float]]) -> np.nda
     on_edge = np.zeros(len(x), dtype=bool)
     for i in range(len(ring) - 1):
         (ax, ay), (bx, by) = ring[i], ring[i + 1]
-        scale = 1.0 + np.abs(x) + np.abs(y)
-        cross = (bx - ax) * (y - ay) - (by - ay) * (x - ax)
-        on = ((np.abs(cross) <= EPS * scale)
-              & (x >= min(ax, bx) - EPS) & (x <= max(ax, bx) + EPS)
-              & (y >= min(ay, by) - EPS) & (y <= max(ay, by) + EPS))
-        on_edge |= on
+        on_edge |= _on_segment_arr(x, y, ax, ay, bx, by)
         crosses = (ay > y) != (by > y)
         with np.errstate(invalid="ignore", divide="ignore"):
             xint = ax + (y - ay) * (bx - ax) / (by - ay)
@@ -217,25 +134,20 @@ def points_in_ring(b: PointBatch, ring: Sequence[Tuple[float, float]]) -> np.nda
     return inside | on_edge
 
 
-def point_on_uniform_lines(lb: LineBatch, px: float, py: float) -> np.ndarray:
+def point_on_uniform_lines(lb: Batch, px: float, py: float) -> np.ndarray:
     """Vectorized: does the literal point lie on each linestring? Loops
     over the (few) segments, vectorized over rows."""
     c = lb.coords
     out = np.zeros(lb.n, dtype=bool)
     for s in range(lb.k - 1):
-        ax, ay = c[:, s, 0], c[:, s, 1]
-        bx, by = c[:, s + 1, 0], c[:, s + 1, 1]
-        scale = 1.0 + abs(px) + abs(py)
-        cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        on = ((np.abs(cross) <= EPS * scale)
-              & (px >= np.minimum(ax, bx) - EPS) & (px <= np.maximum(ax, bx) + EPS)
-              & (py >= np.minimum(ay, by) - EPS) & (py <= np.maximum(ay, by) + EPS))
-        out |= on
+        out |= _on_segment_arr(px, py, c[:, s, 0], c[:, s, 1],
+                               c[:, s + 1, 0], c[:, s + 1, 1])
     return out
 
 
-def lines_bbox(lb: LineBatch) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    c = lb.coords
+def bounds(c: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Per-row (xmin, ymin, xmax, ymax) of (n, k, 2) coordinates, k >= 1
+    (NaN on a decoded batch's NULL rows)."""
     return (c[:, :, 0].min(axis=1), c[:, :, 1].min(axis=1),
             c[:, :, 0].max(axis=1), c[:, :, 1].max(axis=1))
 
@@ -266,76 +178,46 @@ def _segments_intersect_arr(ax, ay, bx, by, cx, cy, dx, dy) -> np.ndarray:
     return proper | touch
 
 
-def lines_intersect_lines(la: LineBatch, lb: LineBatch) -> np.ndarray:
-    """Vectorized row-wise ST_Intersects between two uniform linestring
-    batches — replicates algos.intersects for the LineString×LineString
-    case (bbox reject, then any segment pair intersects). Loops over the
+def lines_intersect_lines(la: Batch, lb: Batch,
+                          ia: Optional[np.ndarray] = None,
+                          ib: Optional[np.ndarray] = None) -> np.ndarray:
+    """Vectorized ST_Intersects between two linestring batches, row by
+    row or, given ``ia``/``ib``, for the pairs (la[ia[t]], lb[ib[t]]) —
+    replicates algos.intersects for the LineString×LineString case
+    (bbox reject, then any segment pair intersects). Loops over the
     (few) segment-index pairs, vectorized over the (many) rows."""
-    axmin, aymin, axmax, aymax = lines_bbox(la)
-    bxmin, bymin, bxmax, bymax = lines_bbox(lb)
+    ca = la.coords if ia is None else la.coords[ia]
+    cb = lb.coords if ib is None else lb.coords[ib]
+    axmin, aymin, axmax, aymax = bounds(ca)
+    bxmin, bymin, bxmax, bymax = bounds(cb)
     disjoint = ((axmax < bxmin - EPS) | (bxmax < axmin - EPS)
                 | (aymax < bymin - EPS) | (bymax < aymin - EPS))
-    out = np.zeros(la.n, dtype=bool)
-    ca, cb = la.coords, lb.coords
-    live = ~disjoint
+    out = np.zeros(len(ca), dtype=bool)
     for i in range(la.k - 1):
         for j in range(lb.k - 1):
-            hit = _segments_intersect_arr(
+            out |= _segments_intersect_arr(
                 ca[:, i, 0], ca[:, i, 1], ca[:, i + 1, 0], ca[:, i + 1, 1],
                 cb[:, j, 0], cb[:, j, 1], cb[:, j + 1, 0], cb[:, j + 1, 1])
-            out |= hit
-    return out & live
+    return out & ~disjoint
 
 
-# ------------------------------------------------------------ box batches
+# ------------------------------------------------------------ rectangles
 
-_BOX_LEN = 93  # 1 bo + 4 type + 4 nrings + 4 npts + 5*16 coords
-_BOX_HDR = bytes([1]) + (3).to_bytes(4, "little") \
-    + (1).to_bytes(4, "little") + (5).to_bytes(4, "little")
-
-
-class BoxBatch:
-    """Decoded uniform axis-aligned-rectangle batch: per-row corner
-    arrays (x0 < x1, y0 < y1 strictly — degenerate rings fall back to
-    the object path) + validity mask."""
-
-    __slots__ = ("x0", "y0", "x1", "y1", "valid", "n")
-
-    def __init__(self, x0, y0, x1, y1, valid):
-        self.x0, self.y0, self.x1, self.y1 = x0, y0, x1, y1
-        self.valid = valid
-        self.n = len(valid)
-
-
-def decode_boxes(values: Sequence) -> Optional[BoxBatch]:
-    """Try to decode a batch as uniform plain-WKB single-ring rectangle
-    polygons (any vertex order/orientation, closed, strictly
-    non-degenerate); None on mixed content — caller falls back."""
-    vs, valid = _gather(values)
-    n = len(valid)
-    if not vs:
-        nan = np.full(n, np.nan)
-        return BoxBatch(nan, nan, nan, nan, valid)
-    if len(vs[0]) != _BOX_LEN:
+def rectangles(b: Optional[Batch]) -> Optional[Tuple[np.ndarray, ...]]:
+    """Corners (x0, y0, x1, y1) per row when every non-NULL row of ``b``
+    is an axis-aligned rectangle: a finite, closed 5-vertex ring in any
+    vertex order or orientation, strictly non-degenerate (degenerate
+    rings fall back to the object path); NaN on NULL rows. None when
+    ``b`` is None or holds any other shape."""
+    if b is None or b.typ != "Polygon" or b.k != 5:
         return None
-    try:
-        joined = b"".join(vs)
-    except TypeError:
-        joined = b"".join(bytes(v) for v in vs)
-    if len(joined) != _BOX_LEN * len(vs):
-        return None
-    raw = np.frombuffer(joined, dtype=np.uint8).reshape(len(vs), _BOX_LEN)
-    hdr = np.frombuffer(_BOX_HDR, dtype=np.uint8)
-    if not (raw[:, :13] == hdr).all():
-        return None
-    c = raw[:, 13:].copy().view("<f8").reshape(len(vs), 5, 2)
-    if not np.isfinite(c).all():
-        return None
+    c = b.coords
     xs, ys = c[:, :4, 0], c[:, :4, 1]
     x0, x1 = xs.min(axis=1), xs.max(axis=1)
     y0, y1 = ys.min(axis=1), ys.max(axis=1)
-    # closed ring, strictly non-degenerate
-    ok = ((c[:, 4, 0] == c[:, 0, 0]) & (c[:, 4, 1] == c[:, 0, 1])
+    # finite, closed ring, strictly non-degenerate
+    ok = (np.isfinite(c).all(axis=(1, 2))
+          & (c[:, 4, 0] == c[:, 0, 0]) & (c[:, 4, 1] == c[:, 0, 1])
           & (x0 < x1) & (y0 < y1))
     # every vertex on a corner, each extreme hit exactly twice
     on_x = (xs == x0[:, None]) | (xs == x1[:, None])
@@ -348,61 +230,29 @@ def decode_boxes(values: Sequence) -> Optional[BoxBatch]:
     dy = c[:, 1:, 1] - c[:, :-1, 1]
     ok &= ((dx == 0) | (dy == 0)).all(axis=1)
     ok &= ((dx != 0) | (dy != 0)).all(axis=1)
-    if not ok.all():
+    if not (ok | ~b.valid).all():
         return None
-    fx0 = np.full(n, np.nan)
-    fy0 = np.full(n, np.nan)
-    fx1 = np.full(n, np.nan)
-    fy1 = np.full(n, np.nan)
-    fx0[valid], fy0[valid], fx1[valid], fy1[valid] = x0, y0, x1, y1
-    return BoxBatch(fx0, fy0, fx1, fy1, valid)
+    return x0, y0, x1, y1
 
 
-def box_pair_classes(a: BoxBatch, b: BoxBatch) -> np.ndarray:
-    """Topology-class code per row for a rectangle pair: the Allen
-    interval relation of (a, b) in x and in y, encoded as the base-3
-    digits of the four boundary comparisons per axis. Any point-set
-    predicate of two axis-aligned rectangles is constant within a
-    class, so kernels evaluate one representative pair per distinct
-    code (invalid rows get code -1)."""
+def box_pair_classes(a: Tuple[np.ndarray, ...],
+                     b: Tuple[np.ndarray, ...]) -> np.ndarray:
+    """Topology-class code per row for a pair of ``rectangles`` results:
+    the Allen interval relation of (a, b) in x and in y, encoded as the
+    base-3 digits of the four boundary comparisons per axis. Any
+    point-set predicate of two axis-aligned rectangles is constant
+    within a class, so kernels evaluate one representative pair per
+    distinct code (rows NULL on either side get code -1)."""
     def axis(a0, a1, b0, b1):
-        s = (np.sign(a0 - b0).astype(np.int64) + 1) * 27 \
-            + (np.sign(a0 - b1).astype(np.int64) + 1) * 9 \
-            + (np.sign(a1 - b0).astype(np.int64) + 1) * 3 \
-            + (np.sign(a1 - b1).astype(np.int64) + 1)
-        return s
-    valid = a.valid & b.valid
-    code = np.full(a.n, -1, dtype=np.int64)
+        return ((np.sign(a0 - b0).astype(np.int64) + 1) * 27
+                + (np.sign(a0 - b1).astype(np.int64) + 1) * 9
+                + (np.sign(a1 - b0).astype(np.int64) + 1) * 3
+                + (np.sign(a1 - b1).astype(np.int64) + 1))
+    valid = ~np.isnan(a[0]) & ~np.isnan(b[0])
+    code = np.full(len(valid), -1, dtype=np.int64)
     if valid.any():
-        xa0, xa1 = np.where(valid, a.x0, 0.0), np.where(valid, a.x1, 1.0)
-        ya0, ya1 = np.where(valid, a.y0, 0.0), np.where(valid, a.y1, 1.0)
-        xb0, xb1 = np.where(valid, b.x0, 0.0), np.where(valid, b.x1, 1.0)
-        yb0, yb1 = np.where(valid, b.y0, 0.0), np.where(valid, b.y1, 1.0)
+        xa0, ya0, xa1, ya1 = (v[valid] for v in a)
+        xb0, yb0, xb1, yb1 = (v[valid] for v in b)
         code[valid] = (axis(xa0, xa1, xb0, xb1) * 81
-                       + axis(ya0, ya1, yb0, yb1))[valid]
+                       + axis(ya0, ya1, yb0, yb1))
     return code
-
-
-def encode_boxes(x0: np.ndarray, y0: np.ndarray,
-                 x1: np.ndarray, y1: np.ndarray,
-                 valid: Optional[np.ndarray] = None) -> List[Optional[bytes]]:
-    """Vectorized rectangle-polygon encoder in the overlay's canonical
-    ring layout (min corner first, counter-clockwise):
-    (x0 y0, x1 y0, x1 y1, x0 y1, x0 y0)."""
-    n = len(x0)
-    arr = np.empty((n, _BOX_LEN), dtype=np.uint8)
-    arr[:, :13] = np.frombuffer(_BOX_HDR, dtype=np.uint8)
-    c = np.empty((n, 10), dtype="<f8")
-    c[:, 0], c[:, 1] = x0, y0
-    c[:, 2], c[:, 3] = x1, y0
-    c[:, 4], c[:, 5] = x1, y1
-    c[:, 6], c[:, 7] = x0, y1
-    c[:, 8], c[:, 9] = x0, y0
-    arr[:, 13:] = c.view(np.uint8).reshape(n, 80)
-    buf = arr.tobytes()
-    mv = memoryview(buf)
-    L = _BOX_LEN
-    if valid is None:
-        return [bytes(mv[i * L:(i + 1) * L]) for i in range(n)]
-    return [bytes(mv[i * L:(i + 1) * L]) if valid[i] else None
-            for i in range(n)]

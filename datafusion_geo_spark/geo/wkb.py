@@ -200,8 +200,36 @@ def wkb_srid(buf: bytes) -> Optional[int]:
     return None
 
 
-def point_wkb(x: float, y: float, srid: Optional[int] = None) -> bytes:
-    """Fast-path point encoder (no Geometry object)."""
-    if srid:
-        return struct.pack("<BIidd", 1, 1 | _EWKB_SRID_FLAG, srid, x, y)
-    return struct.pack("<BIdd", 1, 1, x, y)
+def fixed_header(typ: str, srid: Optional[int], k: int) -> bytes:
+    """The bytes ``to_wkb`` writes before the k vertices of a POINT
+    (k = 1), a LINESTRING or a one-ring POLYGON: the fixed-layout values
+    of geo/vector.py's batch codec."""
+    out: List[bytes] = []
+    _header(TYPE_CODE[typ], srid, out)
+    if typ == "LineString":
+        out.append(struct.pack("<I", k))
+    elif typ == "Polygon":
+        out.append(struct.pack("<II", 1, k))
+    return b"".join(out)
+
+
+def fixed_layout(buf: bytes) -> Optional[Tuple[str, Optional[int], int]]:
+    """(type, SRID, vertex count) of a value that is exactly
+    ``fixed_header`` + k little-endian 2-D vertices; None for any other
+    value (big-endian, Z/M, multi-ring, multi-part or malformed)."""
+    if len(buf) < 9 or buf[0] != 1:
+        return None
+    raw = int.from_bytes(buf[1:5], "little")
+    srid, off = None, 5
+    if raw & _EWKB_SRID_FLAG:
+        srid, off = int.from_bytes(buf[5:9], "little", signed=True), 9
+    code = raw & ~_EWKB_SRID_FLAG
+    if code not in (1, 2, 3):
+        return None
+    # a polygon's vertex count follows its ring count
+    k = 1 if code == 1 else \
+        int.from_bytes(buf[off + 4 * (code - 2):off + 4 * (code - 1)], "little")
+    hdr = fixed_header(GEOM_TYPES[code], srid, k)
+    if len(buf) != len(hdr) + 16 * k or not buf.startswith(hdr):
+        return None
+    return GEOM_TYPES[code], srid, k

@@ -217,16 +217,11 @@ def _cell_true_pairs(key, la, rb, cell: float):
     # exact refinement on surviving candidates
     ga = la["_geom"].tolist()
     gb = rb["_geom"].tolist()
-    la_b = vector.decode_uniform_lines(ga)
-    rb_b = vector.decode_uniform_lines(gb)
-    if la_b is not None and rb_b is not None:
-        ca, cb = la_b.coords, rb_b.coords
-        keep = np.zeros(len(ia), dtype=bool)
-        for i in range(la_b.k - 1):
-            for j in range(rb_b.k - 1):
-                keep |= vector._segments_intersect_arr(
-                    ca[ia, i, 0], ca[ia, i, 1], ca[ia, i + 1, 0], ca[ia, i + 1, 1],
-                    cb[ib, j, 0], cb[ib, j, 1], cb[ib, j + 1, 0], cb[ib, j + 1, 1])
+    la_b = vector.decode(ga)
+    rb_b = vector.decode(gb)
+    if la_b is not None and rb_b is not None \
+            and la_b.typ == rb_b.typ == "LineString":
+        keep = vector.lines_intersect_lines(la_b, rb_b, ia, ib)
         keep &= la_b.valid[ia] & rb_b.valid[ib]
     else:  # mixed geometry: object path with per-pair memo
         memo = {}

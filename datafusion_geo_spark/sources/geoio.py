@@ -146,10 +146,11 @@ def write_geoparquet_std(df: DataFrame, path: str,
     header stripped — the spec carries CRS in metadata, not per-value)
     and the files are written by pyarrow INSIDE ``mapInArrow`` tasks —
     one file per partition, no driver collect, the exact DataSource-V2
-    writer shape. The ``geo`` statistics (geometry types, SRIDs, bbox)
-    ride the write job as hidden helper columns fused into the same
-    Arrow crossing as the ISO re-encode, are aggregated per task and
-    come back on the task report rows — one corpus pass. Each task
+    writer shape. Each task computes the ISO re-encode and the ``geo``
+    statistics (geometry types, SRIDs, bbox) from each Arrow batch's
+    geometry column with the engine's own kernels, in the same Python
+    worker that writes the file, and aggregates them into the task
+    report row — one corpus pass, one Python crossing. Each task
     buffers its partition's Arrow batches to stamp the file's OWN
     ``geo`` (types, bbox and, without ``crs_projjson``, a registry crs
     iff the file's SRIDs allow one) into its footer: pyarrow fixes the
@@ -189,7 +190,7 @@ def write_geoparquet_std(df: DataFrame, path: str,
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ..functions import st_geometrytype, st_setsrid, st_srid
+    from ..functions import st_setsrid
 
     if mode == "overwrite" and os.path.isdir(path):
         shutil.rmtree(path)
@@ -197,22 +198,45 @@ def write_geoparquet_std(df: DataFrame, path: str,
         raise ValueError(f"write_geoparquet_std: path exists: {path}")
     os.makedirs(path, exist_ok=True)
 
-    # SRID must be read BEFORE the ISO re-encode strips it; the helper
-    # column fuses into the same Python crossing as the strip itself
-    out = (df.withColumn("__gp_s", st_srid(F.col(geom_col)))
-           .withColumn(geom_col, st_setsrid(F.col(geom_col), 0)))
-    bx = box2d(F.col(geom_col))
+    # the written schema: ISO geometry, then the covering column
+    out = df.withColumn(geom_col, st_setsrid(F.col(geom_col), 0))
     if covering:  # persisted covering column, spec field names
+        bx = box2d(F.col(geom_col))
         out = out.withColumn("bbox", F.struct(
             *[bx[c].alias(c) for c in _BBOX]))
-    _HX = ["__gp_x0", "__gp_y0", "__gp_x1", "__gp_y1", "__gp_t", "__gp_s"]
-    for h, c in zip(_HX, _BBOX):
-        out = out.withColumn(h, bx[c])
-    out = out.withColumn(_HX[4], st_geometrytype(F.col(geom_col)))
+    schema = to_arrow_schema(out.schema)
+
+    def _iso_batch(batch):
+        """The batch as written (ISO geometry, covering bbox) and its
+        bbox, geometry-type names and non-zero SRIDs."""
+        import pandas as pd
+        import pyarrow as pa
+
+        from ..functions import kernels
+        g = batch.column(geom_col).to_pandas()
+        srids = {s for s in kernels.srid(g) if s is not None and s != 0}
+        iso = kernels.set_srid(g, pd.Series(0, index=g.index))
+        bb = kernels.box2d_rows(iso).astype(float)
+        types = {t for t in kernels.geometry_type(iso) if t is not None}
+        fields, cols = [], []
+        for f in schema:
+            if f.name == geom_col:
+                cols.append(pa.array(iso, f.type, from_pandas=True))
+            elif covering and f.name == "bbox":
+                cols.append(pa.StructArray.from_arrays(
+                    [pa.array(bb[c], pa.float64(), from_pandas=True)
+                     for c in _BBOX], fields=list(f.type)))
+            else:  # passed through as Spark delivered it
+                f = batch.schema.field(f.name)
+                cols.append(batch.column(f.name))
+            fields.append(f)
+        return (pa.RecordBatch.from_arrays(
+                    cols, schema=pa.schema(fields, batch.schema.metadata)),
+                [bb[c].min() for c in _BBOX[:2]]
+                + [bb[c].max() for c in _BBOX[2:]], types, srids)
 
     def _write(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark import TaskContext
         tc = TaskContext.get()
@@ -226,20 +250,14 @@ def write_geoparquet_std(df: DataFrame, path: str,
         ftypes: set = set()            # file geometry-type names
         fsrids: set = set()            # file SRID set (non-null)
         for batch in batches:
-            for j, agg in enumerate((pc.min, pc.min, pc.max, pc.max)):
-                v = agg(batch.column(_HX[j])).as_py()
-                if v is not None:
-                    fb[j] = v if fb[j] is None else \
-                        (min if j < 2 else max)(fb[j], v)
-            ftypes.update(
-                t for t in pc.unique(batch.column(_HX[4])).to_pylist()
-                if t is not None)
-            fsrids.update(
-                s for s in pc.unique(batch.column(_HX[5])).to_pylist()
-                if s is not None and s != 0)
-            keep = [i for i, f_ in enumerate(batch.schema)
-                    if f_.name not in _HX]
-            chunks.append(batch.select(keep))
+            iso, bb, types, srids = _iso_batch(batch)
+            for j, v in enumerate(bb):
+                if v == v:  # NaN when the batch has no non-empty geometry
+                    fb[j] = float(v) if fb[j] is None else \
+                        (min if j < 2 else max)(fb[j], float(v))
+            ftypes |= types
+            fsrids |= srids
+            chunks.append(iso)
             n += batch.num_rows
         if chunks:
             # Per-file crs is stamped only when THIS file's SRIDs allow
@@ -268,7 +286,7 @@ def write_geoparquet_std(df: DataFrame, path: str,
                  "srids": pa.array([sorted(fsrids)],
                                    type=pa.list_(pa.int64()))})
 
-    written = out.mapInArrow(
+    written = df.mapInArrow(
         _write, "file string, rows long, xmin double, ymin double, "
                 "xmax double, ymax double, types array<string>, "
                 "srids array<long>").collect()
@@ -281,11 +299,10 @@ def write_geoparquet_std(df: DataFrame, path: str,
          if xs else None),
         crs_projjson, covering)
     if not written:  # empty input: still emit one all-metadata file
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        schema = to_arrow_schema(out.drop(*_HX).schema).with_metadata(
+        empty = schema.with_metadata(
             {b"geo": json.dumps(geo, sort_keys=True).encode("utf-8")})
-        pq.write_table(schema.empty_table(),
+        pq.write_table(empty.empty_table(),
                        os.path.join(path, "part-00000.parquet"))
     # Dataset manifest sidecar (underscore-prefixed → invisible to
     # parquet dataset readers): per-file rows + bbox collected from

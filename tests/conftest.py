@@ -1,6 +1,17 @@
 import os
+import sys
 
 import pytest
+
+#: the checkout these tests belong to: first on this process's sys.path
+#: and on the PYTHONPATH Spark's Python workers inherit, so the package,
+#: ``__spark_entry__`` and ``bench`` under test are this checkout's own
+#: whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+              if p])
 
 
 def pytest_configure(config):

@@ -4,12 +4,8 @@ dedup. Driver-level oracle checks live in test_entry_oracle.py; these
 cover semantics the fixture queries don't reach (forward direction,
 exclusive matches, empty right side) and pin the scale-plan shapes."""
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.asof_join import asof_join
 

@@ -4,10 +4,12 @@ populate in a live local session — if a Spark upgrade breaks the
 management-bean or status-store reflection, this catches it at test
 time instead of silently degrading the r8+ bench telemetry to None."""
 
-import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
 import bench
+
+#: the checkout root (tests/conftest.py puts it first on sys.path)
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_jvm_counters_populate(spark):
@@ -39,7 +41,7 @@ def test_last_stdout_line_is_compact_summary():
     import ast
     import json
 
-    src = open("/root/repo/bench.py").read()
+    src = (ROOT / "bench.py").read_text()
     tree = ast.parse(src)
     main = next(n for n in ast.walk(tree)
                 if isinstance(n, ast.FunctionDef) and n.name == "main")

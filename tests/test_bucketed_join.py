@@ -2,12 +2,8 @@
 Exchange on either side (the 100-TB shuffle-elimination lever,
 sources/bucketed.py)."""
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.sources.bucketed import bucketed_join, write_bucketed
 

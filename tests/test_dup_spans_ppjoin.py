@@ -4,11 +4,8 @@ join) — operators/dedup.py. Oracle-level checks live in
 test_entry_oracle.py (dup_spans / jaccard_prefix)."""
 
 import itertools
-import sys
 
 import pyspark.sql.functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.dedup import (dup_span_stats,
                                                   jaccard_prefix_pairs)

@@ -2,12 +2,8 @@
 distance-band join via d-expanded grid cells. Fixture-level oracle check
 lives in test_entry_oracle.py."""
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.spatial_join import dwithin_join
 

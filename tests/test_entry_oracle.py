@@ -5,13 +5,11 @@ values after order-insensitive alignment (SURVEY.md §5 strategy)."""
 
 import math
 import os
-import sys
 
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

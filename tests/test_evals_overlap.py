@@ -388,8 +388,6 @@ def test_js_flagged_equals_two_frame_operator(spark):
 def test_streaming_wer_equals_batch(spark):
     """Bounded streaming replay must equal the batch wer_eval row —
     commutative int64 sums make it batch-split insensitive."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
     sf = "/root/testdata/sf0.001"
     a = entrymod.queries()["wer_eval"](spark, sf).collect()

@@ -6,11 +6,9 @@ the oracles never exercise."""
 import pytest
 
 import math
-import sys
 
 import pyspark.sql.functions as F
 
-sys.path.insert(0, "/root/repo")
 from datafusion_geo_spark.operators.evals import (
     average_precision, ece_from_scores, kendall_overlap, mcc_multiclass,
     rrf_fuse, rrf_weights_micro, spearman_overlap)

@@ -5,9 +5,6 @@ that order — and every declared query must carry an oracle twin (the
 driver's weaker rows-only path is opt-out by omission, which this repo
 never uses)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 
 

@@ -5,11 +5,12 @@ keyed to the reference's golden test inputs (FIXTURES.md §1)."""
 
 import math
 
+import numpy as np
 import pytest
 
 from datafusion_geo_spark.geo import (
-    Geometry, from_wkt, to_wkt, to_ewkt, from_wkb, to_wkb, wkb_srid, point_wkb,
-    algos,
+    Geometry, from_wkt, to_wkt, to_ewkt, from_wkb, to_wkb, wkb_srid,
+    algos, vector,
 )
 
 
@@ -60,8 +61,10 @@ def test_ewkt_srid():
 
 
 def test_point_wkb_fastpath():
-    assert point_wkb(3.5, -4.25) == to_wkb(Geometry.point(3.5, -4.25))
-    assert point_wkb(1, 2, srid=4326) == to_wkb(Geometry.point(1, 2, srid=4326))
+    assert vector.encode("Point", np.array([[3.5, -4.25]])) \
+        == [to_wkb(Geometry.point(3.5, -4.25))]
+    assert vector.encode("Point", np.array([[1.0, 2.0]]), srid=4326) \
+        == [to_wkb(Geometry.point(1, 2, srid=4326))]
 
 
 def test_big_endian_read():

@@ -2,12 +2,9 @@
 
 import os
 import shutil
-import sys
 
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.functions import st_astext
 from datafusion_geo_spark.sources.geoio import read_wkt_csv

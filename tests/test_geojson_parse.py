@@ -1,12 +1,8 @@
 """ST_GeomFromGeoJSON: parser unit tests, serializer-inverse property,
 and the Spark column/SQL surface."""
 
-import sys
-
 import pytest
 from hypothesis import given, settings
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.geo.geojson import from_geojson
 from datafusion_geo_spark.geo.wkt import from_wkt, to_wkt

@@ -1,10 +1,6 @@
 """GridIndex (reference index.rs parity) and the plan auditor."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.geo.geom import Geometry
 from datafusion_geo_spark.geo.index import GridIndex

@@ -5,13 +5,10 @@ drift that oracle queries can mask when a fixture never exercises the
 fallback."""
 
 import random
-import sys
 
 import numpy as np
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.functions import kernels
 from datafusion_geo_spark.geo import algos, proj
@@ -22,9 +19,9 @@ from datafusion_geo_spark.geo.wkt import from_wkt
 RNG = random.Random(42)
 
 
-def _point_series(n, lo=-50.0, hi=50.0):
+def _point_series(n, lo=-50.0, hi=50.0, srid=None):
     pts = [(RNG.uniform(lo, hi), RNG.uniform(lo, hi)) for _ in range(n)]
-    vals = [to_wkb(Geometry("Point", p)) for p in pts]
+    vals = [to_wkb(Geometry("Point", p, srid)) for p in pts]
     vals[3] = None                     # a null row rides along
     return pd.Series(vals, dtype=object), pts
 
@@ -111,9 +108,12 @@ def test_transform_fast_path_vs_object_parity():
         # 4326 and its 4269 alias in one batch
         _transform_parity(_transform_rows(mixed[:6], 4326)
                           + _transform_rows(mixed[6:], 4269), to)
-        # uniform plain point / line batches (the numpy codecs)
+        # uniform point / line batches (the numpy codec), plain WKB and
+        # EWKB with the source SRID in the header
         _transform_parity(_transform_rows(plain_points), to, 4326)
         _transform_parity(_transform_rows(lines), to, 4326)
+        _transform_parity(_transform_rows(plain_points, 4326), to)
+        _transform_parity(_transform_rows(lines, 4326), to)
     # several SRID pairs in one batch, one group each
     vals = _transform_rows(mixed, 4326)
     _transform_parity(vals, [TRANSFORM_TARGETS[i % len(TRANSFORM_TARGETS)]
@@ -155,14 +155,15 @@ def test_transform_fast_path_vs_object_parity():
 
 
 def test_st_xy_fast_path_parity():
-    s, pts = _point_series(32)
-    xs = kernels.st_x(s).tolist()
-    ys = kernels.st_y(s).tolist()
-    for i in range(32):
-        if s.iloc[i] is None:
-            assert xs[i] is None and ys[i] is None
-        else:
-            assert (xs[i], ys[i]) == pts[i]
+    for srid in (None, 2263):  # plain WKB and EWKB
+        s, pts = _point_series(32, srid=srid)
+        xs = kernels.st_x(s).tolist()
+        ys = kernels.st_y(s).tolist()
+        for i in range(32):
+            if s.iloc[i] is None:
+                assert xs[i] is None and ys[i] is None
+            else:
+                assert (xs[i], ys[i]) == pts[i]
 
 
 def test_dwithin_fast_vs_object_consistency():

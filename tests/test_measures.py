@@ -3,12 +3,8 @@ ST_Perimeter, ST_Centroid, ST_ConvexHull, ST_Simplify, ST_Distance,
 ST_DWithin) — algorithm edge cases through the DataFrame and SQL
 surfaces. Fixture-level oracle checks live in test_entry_oracle.py."""
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.functions import (register_all, st_astext,
                                             st_centroid, st_convexhull,

@@ -2,11 +2,7 @@
 normal equations. Oracle-level replays live in test_entry_oracle.py
 (linreg_weights / linreg_score)."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.mlfit import (doc_features,
                                                   gram_moments,

@@ -1,11 +1,7 @@
 """Multimodal plumbing tests: schema/batch-shape contracts of the
 mapInPandas stages (decode stub, resize, frame sampling)."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators import multimodal
 from datafusion_geo_spark.operators.multimodal import (decode_features,

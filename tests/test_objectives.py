@@ -1,11 +1,7 @@
 """Unit tests for operators/objectives.py (T5-style span corruption).
 Oracle-level byte replay lives in test_entry_oracle.py."""
 
-import sys
-
 import pyspark.sql.functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.objectives import span_corruption
 

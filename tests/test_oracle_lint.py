@@ -25,10 +25,8 @@ Two automated checks over every ``oracle_sql()`` string:
 """
 
 import re
-import sys
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 
 _LIT_OP_LIT = re.compile(

@@ -2,11 +2,7 @@
 exact-substring duplication audit. Oracle-level check (copy-augmented
 fixture) lives in test_entry_oracle.py."""
 
-import sys
-
 import pyspark.sql.functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.dedup import passage_dedup_stats
 

@@ -2,12 +2,8 @@
 repetition stats, PII masking, stratified sampling, sequence packing,
 and the interval×interval overlap join."""
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 def _docs(spark, rows):

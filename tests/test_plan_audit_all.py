@@ -13,11 +13,9 @@ slow enough to gate out.
 """
 
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -6,13 +6,9 @@
     keyed time series, for both directions and both match modes.
 """
 
-import sys
-
 import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.geo.dialect import from_dialect, to_dialect
 from datafusion_geo_spark.geo.geom import Geometry

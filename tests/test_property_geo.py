@@ -18,7 +18,7 @@ from hypothesis import given, settings, strategies as st
 
 from datafusion_geo_spark.geo import algos, vector
 from datafusion_geo_spark.geo.geom import Geometry
-from datafusion_geo_spark.geo.wkb import from_wkb, point_wkb, to_wkb
+from datafusion_geo_spark.geo.wkb import from_wkb, to_wkb
 from datafusion_geo_spark.geo.wkt import from_wkt, to_wkt
 
 # finite doubles that survive repr round-trip exactly
@@ -68,7 +68,7 @@ def test_wkt_roundtrip(g):
 @settings(max_examples=100, deadline=None)
 def test_vector_point_codec_matches_scalar(gs):
     wkbs = [None if g is None else to_wkb(g) for g in gs]
-    pb = vector.decode_points(wkbs)
+    pb = vector.decode(wkbs)
     assert pb is not None
     for i, g in enumerate(gs):
         if g is None:
@@ -82,7 +82,7 @@ def test_vector_point_codec_matches_scalar(gs):
 @settings(max_examples=100, deadline=None)
 def test_vector_points_in_ring_matches_algos(pts, poly):
     wkbs = [to_wkb(p) for p in pts]
-    pb = vector.decode_points(wkbs)
+    pb = vector.decode(wkbs)
     got = vector.points_in_ring(pb, poly.parts[0])
     for i, p in enumerate(pts):
         exp = algos.intersects(p, poly)
@@ -113,8 +113,8 @@ def test_self_axioms(g):
 def test_vector_lines_intersect_matches_algos(xs, ys):
     n = min(len(xs), len(ys))
     xs, ys = xs[:n], ys[:n]
-    la = vector.decode_uniform_lines([to_wkb(g) for g in xs])
-    lb = vector.decode_uniform_lines([to_wkb(g) for g in ys])
+    la = vector.decode([to_wkb(g) for g in xs])
+    lb = vector.decode([to_wkb(g) for g in ys])
     got = vector.lines_intersect_lines(la, lb)
     for i in range(n):
         assert bool(got[i]) == algos.intersects(xs[i], ys[i]), (
@@ -148,11 +148,11 @@ def test_wkb_decoder_never_crashes(b):
 @settings(max_examples=100, deadline=None)
 def test_vector_line_codec_roundtrip(lines):
     wkbs = [to_wkb(g) for g in lines]
-    lb = vector.decode_uniform_lines(wkbs)
+    lb = vector.decode(wkbs)
     assert lb is not None and lb.k == 3
-    enc = vector.encode_uniform_lines(lb.coords, valid=lb.valid)
+    enc = vector.encode("LineString", lb.coords, valid=lb.valid)
     assert enc == wkbs
-    xmin, ymin, xmax, ymax = vector.lines_bbox(lb)
+    xmin, ymin, xmax, ymax = vector.bounds(lb.coords)
     for i, g in enumerate(lines):
         xs = [c[0] for c in g.parts]
         ys = [c[1] for c in g.parts]

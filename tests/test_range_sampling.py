@@ -1,12 +1,8 @@
 """Unit + plan tests for the bucketized range join and deterministic
 hash splitting/sampling operators."""
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.range_join import range_join
 from datafusion_geo_spark.operators.sampling import (HASH_BUCKETS,

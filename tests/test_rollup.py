@@ -8,12 +8,10 @@ r11 optimization is for)."""
 import glob
 import os
 import shutil
-import sys
 
 import pyspark.sql.functions as F
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

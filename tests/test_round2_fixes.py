@@ -14,12 +14,10 @@
 
 import os
 import shutil
-import sys
 
 import pyspark.sql.functions as F
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                      ".cache", "round2_test")

@@ -8,12 +8,10 @@ partial+final, and column pruning holds (SURVEY.md §4.2, §7.3).
 """
 
 import os
-import sys
 
 import pyspark.sql.functions as F
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -6,12 +6,9 @@ and the scale-plan shape (cid equi-join, no cross product in the
 pairing stage)."""
 
 import math
-import sys
 
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.similarity import semantic_dedup
 

@@ -9,12 +9,8 @@
    side with a clear error instead of OOMing the driver.
 """
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 def _sig_df(spark, rows):

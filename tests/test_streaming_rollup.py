@@ -5,11 +5,8 @@ semantics the oracle can't see: per-key directory replacement on
 update, idempotent re-runs."""
 
 import os
-import sys
 
 import pyspark.sql.functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.streaming.rollup import streaming_hourly_rollup
 

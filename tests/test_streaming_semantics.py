@@ -13,7 +13,6 @@ until then it still merges. Both sides of that contract are asserted.
 
 import os
 import shutil
-import sys
 import time
 import uuid
 
@@ -21,7 +20,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
-sys.path.insert(0, "/root/repo")
 
 CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                      ".cache", "stream_semantics")

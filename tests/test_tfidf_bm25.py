@@ -4,12 +4,9 @@ these pin ranking semantics on a hand corpus and the scale-plan shapes
 (bm25: no explode, distributed TakeOrdered top-k)."""
 
 import math
-import sys
 
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.text import bm25_search, tfidf_top_terms
 

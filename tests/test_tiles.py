@@ -1,12 +1,8 @@
 """Unit + plan tests for make_tiles (operators/tiles.py). Fixture-level
 oracle check lives in test_entry_oracle.py."""
 
-import sys
-
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from datafusion_geo_spark.operators.tiles import make_tiles
 

@@ -11,7 +11,6 @@ _kmeans_ctes/_pq_oracle/_ivfpq_oracle replay the bounded sample fit,
 not the full corpus."""
 
 import math
-import sys
 
 import duckdb
 import numpy as np
@@ -20,7 +19,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 from datafusion_geo_spark.operators.similarity import TRAIN_SAMPLE_CAP
 

@@ -8,11 +8,8 @@ any true cosine — so the zero-norm row deterministically LOSES every
 ranking. This exercises all three orderings on a corpus containing a
 zero-norm vector."""
 
-import sys
-
 import pyspark.sql.functions as F
 
-sys.path.insert(0, "/root/repo")
 from datafusion_geo_spark.operators.similarity import (
     _assign_inline, _ranked_lists_inline, cosine_topk, prenorm)
 
