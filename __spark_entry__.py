@@ -5815,9 +5815,12 @@ _FIRST50 = [
     "grid_spatial_join", "minhash_pairs",
     # the next-oldest green rows (round 7), alphabetically
     "alpha_resample", "asof_nearest", "auc_by_group", "auc_eval",
-    "bpe_encode", "calibration_bins", "chunk_udtf", "corpus_diff",
-    "csv_roundtrip", "domain_entropy", "dup_cluster_hist", "events_pivot",
-    "feature_corr",
+    # queries calling a WKT/GeoJSON kernel, translate or ST_SetSRID (the
+    # text pair in geo/vector.py, its POINT EMPTY decode, the SRID
+    # re-encode)
+    "wkt_roundtrip_points", "translate_points", "wkb_roundtrip",
+    "srid_ewkt", "geojson_points", "geojson_parse", "geojsonl_roundtrip",
+    "pyds_roundtrip", "pyds_write_roundtrip",
 ]
 
 

@@ -1082,6 +1082,12 @@ def st_extent(g: Geom) -> Column:
     return st_extent_agg(box2d(g))
 
 
+def _vertex_list(pts: Column) -> Column:
+    """WKT vertex list ``x y,x y,...`` of an array of (x, y) structs."""
+    return F.array_join(F.transform(pts, lambda p: F.concat(
+        p["x"].cast("string"), F.lit(" "), p["y"].cast("string"))), ",")
+
+
 def st_collect_points_agg(x, y) -> Column:
     """PostGIS-style ST_Collect aggregate for POINT inputs: one
     canonical MULTIPOINT WKT per group, built ENTIRELY JVM-side —
@@ -1096,12 +1102,8 @@ def st_collect_points_agg(x, y) -> Column:
     corpus; use st_extent_agg when only the bounds are needed."""
     pts = F.sort_array(F.collect_list(
         F.struct(_num(x, "double").alias("x"), _num(y, "double").alias("y"))))
-    body = F.array_join(
-        F.transform(pts, lambda p: F.concat(p["x"].cast("string"),
-                                            F.lit(" "),
-                                            p["y"].cast("string"))), ",")
-    return F.when(F.size(pts) > 0,
-                  F.concat(F.lit("MULTIPOINT("), body, F.lit(")"))) \
+    return F.when(F.size(pts) > 0, F.concat(
+        F.lit("MULTIPOINT("), _vertex_list(pts), F.lit(")"))) \
             .otherwise(F.lit("MULTIPOINT EMPTY"))
 
 
@@ -1121,12 +1123,8 @@ def st_makeline_agg(x, y, order_by) -> Column:
         F.struct(_num(order_by, "double").alias("o"),
                  _num(x, "double").alias("x"),
                  _num(y, "double").alias("y"))))
-    body = F.array_join(
-        F.transform(pts, lambda p: F.concat(p["x"].cast("string"),
-                                            F.lit(" "),
-                                            p["y"].cast("string"))), ",")
-    return F.when(F.size(pts) >= 2,
-                  F.concat(F.lit("LINESTRING("), body, F.lit(")"))) \
+    return F.when(F.size(pts) >= 2, F.concat(
+        F.lit("LINESTRING("), _vertex_list(pts), F.lit(")"))) \
             .otherwise(F.lit("LINESTRING EMPTY"))
 
 

@@ -8,8 +8,11 @@ partition-level parallelism replaces the reference's rayon threads
 (SURVEY.md §3.1).
 
 A kernel first tries its vectorized numpy fast paths, chosen from the
-batch's shape; every other batch runs through one per-row driver,
-``_rows``, which owns the whole per-row contract:
+batch's shape: a fixed-layout batch reads and writes through
+``geo/vector.py``'s codec pairs, ``decode``/``encode`` for (E)WKB and
+``parse_text``/``format_text`` for WKT and GeoJSON. Every other batch
+runs through the one per-row path, ``_rows``, which owns the whole
+per-row contract:
 
 - null in → null out; binary predicates are null if either side is null
   (SURVEY.md §1.2, reference intersects.rs:111-127);
@@ -33,9 +36,10 @@ from ..geo import triangulate as triangulate_mod
 from ..geo import validity as validity_mod
 from ..geo import polygonize as polygonize_mod
 from ..geo import subdivide as subdivide_mod
+from ..geo.geojson import from_geojson, to_geojson
 from ..geo.geom import Geometry
 from ..geo.wkb import from_wkb, to_wkb, wkb_srid
-from ..geo.wkt import fmt_num, from_wkt, to_ewkt, to_wkt
+from ..geo.wkt import from_wkt, to_ewkt, to_wkt
 
 
 def _obj_series(values) -> pd.Series:
@@ -57,23 +61,11 @@ def _const_geom(vals: list) -> Optional[Geometry]:
     return None if first is None else from_wkb(bytes(first))
 
 
-def _fmt(v: float) -> str:
-    return str(int(v)) if v == int(v) and abs(v) < 1e15 else repr(v)
-
-
 def _num(v):
     """None when a numeric cell is SQL NULL: pandas delivers null numerics
     as NaN in float Series, so ``is None`` alone misses them (null-in →
     null-out contract for every numeric-argument kernel)."""
     return None if v is None or v != v else v
-
-
-# NOTE: a pandas-based "vectorized" formatter (int astype(str) + Series
-# concat) measured FASTER single-threaded (0.59s vs 0.80s per 600k) but
-# 2× SLOWER inside Spark with 32 concurrent python workers (4.3s vs 1.9s
-# per query) — the large object-array intermediates thrash the allocator
-# under concurrency, while the per-row f-string loop stays cache-local.
-# Keep the loop; benchmark any replacement IN-CLUSTER, not single-thread.
 
 
 def _nullable(arr: np.ndarray, valid: np.ndarray):
@@ -182,177 +174,39 @@ def _with_srid(g: Geometry, srid=None) -> bytes:
 
 # ------------------------------------------------------------ constructors
 
+def _one_value(col: pd.Series):
+    """The value every row of ``col`` holds, or None when rows differ or
+    one is NULL (a literal argument, the reference's scalar case)."""
+    v = col.iloc[0] if len(col) else None
+    return None if _num(v) is None or not (col == v).all() else v
+
+
+def _from_text(s: pd.Series, fmt: str, parse: Callable,
+               srid: Optional[pd.Series] = None) -> pd.Series:
+    """(E)WKB of ``fmt`` text: a fixed-layout batch through
+    ``vector.parse_text`` and ``vector.encode`` (which stamps an SRID
+    argument holding one value), any other through ``parse`` per row."""
+    r = None if srid is None else _one_value(srid)
+    b = None if srid is not None and r is None else \
+        vector.parse_text(s.tolist(), fmt)
+    if b is not None:
+        return _obj_series(vector.encode(b.typ, b.coords, b.valid,
+                                         None if r is None else int(r)))
+    return _rows(lambda t, r=None: _with_srid(parse(t), r), "vn", s, srid)
+
+
 def geom_from_text(s: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
-    """WKT -> (E)WKB. Mirrors ST_GeomFromText
-    (/root/reference/src/function/geom_from_text.rs:50-76).
-
-    Fast path, without an SRID argument: an all-'POINT(x y)' batch, or
-    an all-LINESTRING batch with one vertex count, parses with vectorized
-    str ops and one numpy float parse and encodes through
-    ``vector.encode``."""
-    if srid is None:
-        fast = _fast_points_from_text(s)
-        if fast is None:
-            fast = _fast_lines_from_text(s)
-        if fast is not None:
-            return fast
-    return _rows(lambda t, r=None: _with_srid(from_wkt(t), r), "vn", s, srid)
-
-
-_POINTS_ALLNULL = object()  # sentinel: batch parsed, every row NULL
-
-
-def _parse_points_fast(s: pd.Series):
-    """Shared C-speed parse of an all-'POINT(x y)' batch: strip the
-    keyword with vectorized str ops, join the batch into one buffer,
-    float-parse with numpy. Returns (xs_body, ys_body, isnull) with
-    the body arrays aligned to the non-null rows, ``_POINTS_ALLNULL``
-    for an all-null batch, or None when any row needs the full parser
-    (SRID, EMPTY, extra spaces, wrong arity, non-finite text)."""
-    isnull = s.isna().to_numpy()
-    body = s.dropna()
-    if len(body) == 0:
-        return _POINTS_ALLNULL
-    ok = (body.str.startswith("POINT(") & body.str.endswith(")")).all()
-    if not ok:
-        return None
-    inner = body.str.slice(6, -1)
-    # PER-ROW arity: exactly one separating space ⇒ exactly 'x y'. The
-    # batch-total float count alone lets a 3-coord row ('POINT(1 2 3)',
-    # which the strict parser truncates to XY) and a 1-coord row (which
-    # it rejects) compensate into two silently wrong points.
-    if not (inner.str.count(" ") == 1).all():
-        return None
-    joined = " ".join(inner.tolist())
-    vals = np.fromstring(joined, dtype=float, sep=" ")
-    if len(vals) != 2 * len(body):  # malformed → full parser
-        return None
-    if np.isnan(vals).any():
-        return None
-    return vals[0::2], vals[1::2], isnull
-
-
-def _fast_points_from_text(s: pd.Series) -> Optional[pd.Series]:
-    """All-'POINT(x y)' batches encoded to WKB at C speed."""
-    parsed = _parse_points_fast(s)
-    if parsed is _POINTS_ALLNULL:
-        return _obj_series([None] * len(s))
-    if parsed is None:
-        return None
-    bx, by, isnull = parsed
-    xy = np.empty((len(s), 2))
-    xy[~isnull, 0] = bx
-    xy[~isnull, 1] = by
-    return _obj_series(vector.encode("Point", xy, valid=~isnull))
-
-
-def _fast_lines_from_text(s: pd.Series) -> Optional[pd.Series]:
-    """All-'LINESTRING(x y,...)' batches with one shared vertex count."""
-    isnull = s.isna().to_numpy()
-    body = s.dropna()
-    if len(body) == 0:
-        return None
-    ok = (body.str.startswith("LINESTRING(") & body.str.endswith(")")).all()
-    if not ok:
-        return None
-    ncommas = body.str.count(",")
-    k = int(ncommas.iloc[0]) + 1
-    if k < 2 or not (ncommas == k - 1).all():
-        return None
-    raw = body.str.slice(11, -1)
-    # PER-ROW arity: k 2-D points ⇒ exactly k separating spaces. Same
-    # compensation hazard as the point path — a 3-D row and a 1-D row
-    # with matching comma counts would otherwise misparse together.
-    if not (raw.str.count(" ") == k).all():
-        return None
-    inner = raw.str.replace(",", " ", regex=False)
-    joined = " ".join(inner.tolist())
-    vals = np.fromstring(joined, dtype=float, sep=" ")
-    if len(vals) != 2 * k * len(body) or np.isnan(vals).any():
-        return None
-    coords = np.empty((len(s), k, 2))
-    coords[~isnull] = vals.reshape(len(body), k, 2)
-    return _obj_series(vector.encode("LineString", coords, valid=~isnull))
+    """WKT -> (E)WKB. Mirrors ST_GeomFromText (reference
+    geom_from_text.rs:50-76)."""
+    return _from_text(s, "wkt", from_wkt, srid)
 
 
 def geom_from_geojson(s: pd.Series) -> pd.Series:
-    """GeoJSON text -> (E)WKB — PostGIS-parity ST_GeomFromGeoJSON; the
-    inverse of as_geojson (the reference only serializes,
-    /root/reference/src/function/as_geojson.rs:88-110). A legacy ``crs``
-    EPSG member becomes the SRID (EWKB).
-
-    Fast paths mirror geom_from_text's: an all-Point batch in the
-    serializer's canonical key order parses via vectorized str ops +
-    one numpy float parse; same for all-LineString batches with one
-    shared vertex count (11.9 s → ~1 s for 600k×2 parses at sf0.1).
-    Anything else (crs, elevation, spacing, mixed types) falls back to
-    the full json.loads parser per row."""
-    fast = _fast_points_from_geojson(s)
-    if fast is None:
-        fast = _fast_lines_from_geojson(s)
-    if fast is not None:
-        return fast
-    from ..geo.geojson import from_geojson
-    return _rows(lambda t: to_wkb(from_geojson(t)), "v", s)
-
-
-_GJ_POINT_PRE = '{"type":"Point","coordinates":['
-_GJ_LINE_PRE = '{"type":"LineString","coordinates":[['
-
-
-def _fast_points_from_geojson(s: pd.Series) -> Optional[pd.Series]:
-    """All-'{"type":"Point","coordinates":[x,y]}' batches at C speed."""
-    isnull = s.isna().to_numpy()
-    body = s.dropna()
-    if len(body) == 0:
-        return _obj_series([None] * len(s))
-    ok = (body.str.startswith(_GJ_POINT_PRE) & body.str.endswith("]}")).all()
-    if not ok:
-        return None
-    inner = body.str.slice(len(_GJ_POINT_PRE), -2)
-    # PER-ROW arity check: exactly one comma ⇒ exactly [x,y]. A batch
-    # total alone lets a 3-float row and a 1-float row compensate each
-    # other into two silently wrong points — elevation ([x,y,z]) and
-    # short rows must fall back to the strict parser.
-    if not (inner.str.count(",") == 1).all():
-        return None
-    joined = ",".join(inner.tolist())
-    vals = np.fromstring(joined, dtype=float, sep=",")
-    if len(vals) != 2 * len(body) or np.isnan(vals).any():
-        return None
-    xy = np.empty((len(s), 2))
-    xy[~isnull] = vals.reshape(len(body), 2)
-    return _obj_series(vector.encode("Point", xy, valid=~isnull))
-
-
-def _fast_lines_from_geojson(s: pd.Series) -> Optional[pd.Series]:
-    """All-LineString batches with one shared vertex count."""
-    isnull = s.isna().to_numpy()
-    body = s.dropna()
-    if len(body) == 0:
-        return None
-    ok = (body.str.startswith(_GJ_LINE_PRE) & body.str.endswith("]]}")).all()
-    if not ok:
-        return None
-    raw = body.str.slice(len(_GJ_LINE_PRE), -3)
-    # PER-ROW 2-D check: with m "],["-separated positions a 2-D row has
-    # exactly 2m−1 commas; a 3-D row has 3m−1, which collides with some
-    # 2-D comma count whenever m is even (3m−1 = 2k−1 ⇔ k = 3m/2) — so
-    # comma totals alone would consume z values as the next point's x.
-    npairs = raw.str.count(r"\],\[") + 1
-    k = int(npairs.iloc[0])
-    inner = raw.str.replace("],[", ",", regex=False)
-    ncommas = inner.str.count(",")
-    if k < 2 or not (npairs == k).all() \
-            or not (ncommas == 2 * k - 1).all():
-        return None
-    joined = ",".join(inner.tolist())
-    vals = np.fromstring(joined, dtype=float, sep=",")
-    if len(vals) != 2 * k * len(body) or np.isnan(vals).any():
-        return None
-    coords = np.empty((len(s), k, 2))
-    coords[~isnull] = vals.reshape(len(body), k, 2)
-    return _obj_series(vector.encode("LineString", coords, valid=~isnull))
+    """GeoJSON text -> (E)WKB — PostGIS-parity ST_GeomFromGeoJSON, the
+    inverse of as_geojson (the reference only serializes, as_geojson.rs:
+    88-110). A legacy ``crs`` EPSG member becomes the SRID (EWKB); such a
+    value, elevation or any other spacing parses per row."""
+    return _from_text(s, "geojson", from_geojson)
 
 
 def geom_from_wkb(s: pd.Series, srid: Optional[pd.Series] = None) -> pd.Series:
@@ -398,84 +252,25 @@ def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
 
 # ------------------------------------------------------------ serializers
 
-def _unary_to_str(fn: Callable[[Geometry], str], point_fast, line_fast=None,
+def _unary_to_str(fn: Callable[[Geometry], str], fmt: str,
                   ewkt: bool = False):
-    """Text kernel: ``point_fast``/``line_fast`` format a decoded point
-    or linestring batch, ``ewkt`` prefixes ``SRID=n;`` like ``to_ewkt``."""
+    """Text kernel: a fixed-layout batch prints through
+    ``vector.format_text``; ``ewkt`` prefixes ``SRID=n;`` like ``to_ewkt``."""
     def kernel(s: pd.Series) -> pd.Series:
         b = vector.decode(s.tolist())
-        fast = None if b is None else \
-            {"Point": point_fast, "LineString": line_fast}.get(b.typ)
-        if fast is None:
+        if b is None:
             return _rows(fn, "g", s)
-        out = fast(b)
+        out = vector.format_text(b, fmt)
         if ewkt and b.srid:
             out = [t if t is None else f"SRID={b.srid};{t}" for t in out]
         return _obj_series(out)
     return kernel
 
 
-def _points_to_wkt(pb: vector.Batch) -> list:
-    # POINT EMPTY travels as NaN coords with valid=True (e.g. centroid
-    # of an empty geometry) — _fmt would raise on int(NaN)
-    v = pb.valid
-    return [("POINT EMPTY" if pb.x[i] != pb.x[i]
-             else f"POINT({_fmt(pb.x[i])} {_fmt(pb.y[i])})") if v[i] else None
-            for i in range(pb.n)]
-
-
-def _lines_to_wkt(lb: vector.Batch) -> list:
-    v = lb.valid
-    c = lb.coords
-    if lb.k == 0:   # a batch of empty linestrings (e.g. empty clips)
-        return ["LINESTRING EMPTY" if v[i] else None for i in range(lb.n)]
-    return ["LINESTRING(" + ",".join(
-        f"{_fmt(c[i, j, 0])} {_fmt(c[i, j, 1])}" for j in range(lb.k)) + ")"
-        if v[i] else None for i in range(lb.n)]
-
-
-def _points_to_geojson(pb: vector.Batch) -> list:
-    v = pb.valid
-    return [('{"type":"Point","coordinates":[]}' if pb.x[i] != pb.x[i]
-             else '{"type":"Point","coordinates":[%s,%s]}'
-             % (_fmt(pb.x[i]), _fmt(pb.y[i]))) if v[i] else None
-            for i in range(pb.n)]
-
-
 # WKT drops a fast batch's SRID, EWKT prefixes it
-as_text = _unary_to_str(to_wkt, _points_to_wkt, _lines_to_wkt)   # as_text.rs:88-110
-as_ewkt = _unary_to_str(to_ewkt, _points_to_wkt, _lines_to_wkt,  # as_ewkt.rs:88-101
-                        ewkt=True)
-
-
-def _geojson(g: Geometry) -> str:
-    """GeoJSON fragment — ST_AsGeoJSON
-    (/root/reference/src/function/as_geojson.rs:88-110). Compact separators,
-    key order type→coordinates, numbers via fmt_num (oracle-reproducible)."""
-    def coords(c):
-        return "[" + fmt_num(c[0]) + "," + fmt_num(c[1]) + "]"
-
-    def arr(items):
-        return "[" + ",".join(items) + "]"
-
-    t, p = g.typ, g.parts
-    if t == "Point":
-        body = coords(p) if p is not None else "[]"
-    elif t in ("LineString", "MultiPoint"):
-        body = arr(coords(c) for c in p)
-    elif t in ("Polygon", "MultiLineString"):
-        body = arr(arr(coords(c) for c in part) for part in p)
-    elif t == "MultiPolygon":
-        body = arr(arr(arr(coords(c) for c in ring) for ring in poly) for poly in p)
-    elif t == "GeometryCollection":
-        return ('{"type":"GeometryCollection","geometries":['
-                + ",".join(_geojson(sub) for sub in p) + "]}")
-    else:
-        raise ValueError(t)
-    return '{"type":"' + t + '","coordinates":' + body + "}"
-
-
-as_geojson = _unary_to_str(_geojson, _points_to_geojson)
+as_text = _unary_to_str(to_wkt, "wkt")                 # as_text.rs:88-110
+as_ewkt = _unary_to_str(to_ewkt, "wkt", ewkt=True)     # as_ewkt.rs:88-101
+as_geojson = _unary_to_str(to_geojson, "geojson")      # as_geojson.rs:88-110
 
 
 def geometry_type_name(g: Geometry) -> str:
@@ -500,9 +295,16 @@ def set_srid(s: pd.Series, srid_s: pd.Series) -> pd.Series:
     the header; this rewrites it). PostGIS uses SRID 0 for "unknown";
     this engine's unknown is an absent EWKB flag, so srid NULL or <= 0
     clears the header (ST_SRID then returns NULL, the same contract the
-    reference's header-less WKB produces)."""
+    reference's header-less WKB produces). A fixed-layout batch with one
+    SRID value re-encodes through ``vector.encode``."""
+    srid_s = srid_s.where(srid_s.notna(), 0)
+    r = _one_value(srid_s)
+    b = None if r is None else vector.decode(s.tolist())
+    if b is not None:
+        return _obj_series(vector.encode(b.typ, b.coords, b.valid,
+                                         int(r) if r >= 1 else None))
     return _rows(lambda g, r: to_wkb(g.with_srid(int(r) if r >= 1 else None)),
-                 "gn", s, srid_s.where(srid_s.notna(), 0))
+                 "gn", s, srid_s)
 
 
 # Planar area (PostGIS ST_Area; engine utility beyond the reference
@@ -600,27 +402,12 @@ def box_subdivide_stats(xmin: pd.Series, ymin: pd.Series,
 
 def wkt_roundtrip(s: pd.Series) -> pd.Series:
     """Fused ST_AsText(ST_GeomFromText(x)) — canonical-form WKT in ONE
-    Python crossing. The plan-level alternative is two chained-dependent
-    pandas UDFs (construct then serialize) = two ArrowEvalPython stages
-    round-tripping the intermediate WKB through the JVM; fusing keeps the
-    intermediate in-process (same rationale as geom_bbox_from_text).
-
-    r11: an all-'POINT(x y)' batch additionally skips the WKB
-    encode/decode hop entirely — the shared C-speed parse yields the
-    coordinate arrays and the canonical string forms directly from
-    them with the SAME ``_fmt`` the serializer uses (byte-identical
-    output; parity-fuzzed in tests/test_geo_core.py). The fast parse
-    rejects NaN/EMPTY/SRID, so the 'POINT EMPTY' branch of
-    _points_to_wkt is unreachable here by construction."""
-    parsed = _parse_points_fast(s)
-    if parsed is _POINTS_ALLNULL:
-        return _obj_series([None] * len(s))
-    if parsed is not None:
-        bx, by, isnull = parsed
-        out = np.empty(len(s), dtype=object)
-        out[~isnull] = [f"POINT({_fmt(x)} {_fmt(y)})"
-                        for x, y in zip(bx, by)]
-        return _obj_series(out)
+    Python crossing instead of two chained pandas UDFs (two
+    ArrowEvalPython stages round-tripping the WKB through the JVM). A
+    fixed-layout batch prints straight from its parsed coordinates."""
+    b = vector.parse_text(s.tolist(), "wkt")
+    if b is not None:
+        return _obj_series(vector.format_text(b, "wkt"))
     return as_text(geom_from_text(s))
 
 

@@ -1,10 +1,9 @@
-"""GeoJSON (RFC 7946) geometry parsing → ``Geometry``.
+"""GeoJSON (RFC 7946) geometry reader/writer.
 
-The inverse of the ST_AsGeoJSON serializer (functions/kernels.py
-``_geojson``); the reference only SERIALIZES GeoJSON
-(/root/reference/src/function/as_geojson.rs:88-110) — parsing is a
-PostGIS-parity extension (``ST_GeomFromGeoJSON``) an ingest pipeline
-needs to read the format back.
+``to_geojson`` is the ST_AsGeoJSON serializer (reference
+as_geojson.rs:88-110); ``from_geojson`` reads it back. The reference
+only SERIALIZES GeoJSON — parsing is a PostGIS-parity extension
+(``ST_GeomFromGeoJSON``) an ingest pipeline needs.
 
 Semantics follow PostGIS ST_GeomFromGeoJSON:
   * geometry objects only — a Feature / FeatureCollection raises (the
@@ -25,6 +24,7 @@ import re
 from typing import Optional
 
 from .geom import Geometry
+from .wkt import fmt_num
 
 _SRID_RE = re.compile(r"(?:urn:ogc:def:crs:EPSG::|EPSG:)(\d+)$", re.I)
 
@@ -122,3 +122,30 @@ def from_geojson(s: str) -> Geometry:
         raise ValueError("invalid GeoJSON: nesting too deep") from None
     srid = _crs_srid(obj) if isinstance(obj, dict) else None
     return g.with_srid(srid) if srid is not None else g
+
+
+def to_geojson(g: Geometry) -> str:
+    """GeoJSON fragment — ST_AsGeoJSON (reference as_geojson.rs:88-110).
+    Compact separators, key order type→coordinates, numbers via fmt_num
+    (oracle-reproducible)."""
+    def coords(c):
+        return "[" + fmt_num(c[0]) + "," + fmt_num(c[1]) + "]"
+
+    def arr(items):
+        return "[" + ",".join(items) + "]"
+
+    t, p = g.typ, g.parts
+    if t == "Point":
+        body = coords(p) if p is not None else "[]"
+    elif t in ("LineString", "MultiPoint"):
+        body = arr(coords(c) for c in p)
+    elif t in ("Polygon", "MultiLineString"):
+        body = arr(arr(coords(c) for c in part) for part in p)
+    elif t == "MultiPolygon":
+        body = arr(arr(arr(coords(c) for c in ring) for ring in poly) for poly in p)
+    elif t == "GeometryCollection":
+        return ('{"type":"GeometryCollection","geometries":['
+                + ",".join(to_geojson(sub) for sub in p) + "]}")
+    else:
+        raise ValueError(t)
+    return '{"type":"' + t + '","coordinates":' + body + "}"

@@ -1,4 +1,4 @@
-"""numpy-vectorized (E)WKB batch codec and kernels.
+"""numpy-vectorized fixed-layout batch codecs and kernels.
 
 The reference gets columnar speed from rayon-parallel Rust loops over
 Arrow arrays (/root/reference/src/function/intersects.rs:104-130). The
@@ -8,10 +8,12 @@ non-NULL value a little-endian 2-D POINT, LINESTRING of k vertices or
 one-ring POLYGON of k vertices, all with one header, SRID included),
 the batch decodes into one (n, k, 2) float64 array with one join and
 one frombuffer, and predicates/transforms run as numpy expressions —
-10-50x over per-row object decoding. ``decode`` and ``encode`` are the
-one codec pair; the header layout itself is ``wkb.fixed_header``. Batches
-with mixed types, vertex counts or SRIDs, big-endian or Z/M values fall
-back to the object path.
+10-50x over per-row object decoding. ``decode``/``encode`` are the one
+(E)WKB codec pair (header layout: ``wkb.fixed_header``), and
+``parse_text``/``format_text`` the one WKT/GeoJSON pair, spelling each
+value as ``to_wkt``/``to_geojson`` do. Batches with mixed types, vertex
+counts or SRIDs, big-endian or Z/M values, or other spellings fall back
+to the object path.
 
 Uniformity is the common case by construction: geometry columns written
 by one pipeline stage share a type, a layout and an SRID.
@@ -19,11 +21,13 @@ by one pipeline stage share a type, a layout and an SRID.
 
 from __future__ import annotations
 
+import json
 from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
 
 from .wkb import fixed_header, fixed_layout
+from .wkt import fmt_num
 
 
 class Batch:
@@ -82,10 +86,14 @@ def decode(values: Sequence) -> Optional[Batch]:
     if not (rows["hdr"] == rows["hdr"][0]).all():
         return None
     if m == n:
-        return Batch(rows["xy"].copy(), np.ones(n, bool), typ, srid)
-    valid = np.fromiter((v is not None for v in values), bool, n)
-    coords = np.full((n, k, 2), np.nan)
-    coords[valid] = rows["xy"]
+        coords, valid = rows["xy"].copy(), np.ones(n, bool)
+    else:
+        valid = np.fromiter((v is not None for v in values), bool, n)
+        coords = np.full((n, k, 2), np.nan)
+        coords[valid] = rows["xy"]
+    if typ == "Point":  # wkb reads a point with a NaN x as POINT EMPTY
+        p = coords[:, 0]
+        p[np.isnan(p[:, 0])] = np.nan
     return Batch(coords, valid, typ, srid)
 
 
@@ -95,6 +103,8 @@ def encode(typ: str, coords: np.ndarray, valid: Optional[np.ndarray] = None,
     the fixed layout ``typ`` with one batch SRID, byte for byte what
     ``to_wkb`` writes; None where ``valid`` is False."""
     n = len(coords)
+    if valid is not None and not valid.any():  # no row: no header to build
+        return [None] * n
     k = coords.shape[1] if coords.ndim == 3 else 1
     hdr = np.frombuffer(fixed_header(typ, srid, k), dtype=np.uint8)
     H, L = len(hdr), len(hdr) + 16 * k
@@ -107,6 +117,121 @@ def encode(typ: str, coords: np.ndarray, valid: Optional[np.ndarray] = None,
     if valid is None:
         return [buf[o:o + L] for o in offs]
     return [buf[o:o + L] if ok else None for o, ok in zip(offs, valid.tolist())]
+
+
+# ------------------------------------------------------------ text
+
+#: (format, type) -> (prefix, suffix, x-y separator, vertex separator,
+#: the text of a value without vertices), as wkt.to_wkt and
+#: geojson.to_geojson write a fixed-layout value
+_TEXT = {
+    ("wkt", "Point"): ("POINT(", ")", " ", ",", "POINT EMPTY"),
+    ("wkt", "LineString"): ("LINESTRING(", ")", " ", ",", "LINESTRING EMPTY"),
+    ("wkt", "Polygon"): ("POLYGON((", "))", " ", ",", "POLYGON(())"),
+    ("geojson", "Point"): ('{"type":"Point","coordinates":[', "]}", ",",
+                           "],[", '{"type":"Point","coordinates":[]}'),
+    ("geojson", "LineString"): ('{"type":"LineString","coordinates":[[', "]]}",
+                                ",", "],[", '{"type":"LineString","coordinates":[]}'),
+    ("geojson", "Polygon"): ('{"type":"Polygon","coordinates":[[[', "]]]}",
+                             ",", "],[", '{"type":"Polygon","coordinates":[[]]}'),
+}
+
+#: number bytes (no whitespace, inf, nan or hex: both parsers agree)
+_NUMBER = np.zeros(256, bool)
+_NUMBER[np.frombuffer(b"0123456789+-.eE", np.uint8)] = True
+
+
+def parse_text(values: Sequence, fmt: str) -> Optional[Batch]:
+    """The batch of ``fmt`` text ("wkt" or "geojson") whose non-NULL
+    values (NULL: None or NaN) are one fixed layout spelled as
+    ``format_text`` prints it, numbers finite and in any form the object
+    parser (``wkt.from_wkt``/``geojson.from_geojson``) reads; None
+    otherwise. The first value's prefix picks the layout, so a batch it
+    rules out costs no pass. POINT EMPTY rows are NaN."""
+    n = len(values)
+    v0 = next((v for v in values if v is not None and v == v), None)
+    for typ in ("Point", "LineString", "Polygon"):
+        pre, suf, xy, vsep, empty = _TEXT[fmt, typ]
+        if v0.__class__ is str and (v0.startswith(pre) or v0 == empty):
+            break
+    else:
+        return None
+    # a strided sample rejects a mixed batch without a pass
+    if any(v.__class__ is str and not v.startswith(pre) and v != empty
+           for v in values[::n // 16 + 1]):
+        return None
+    body = [v for v in values if v.__class__ is str]
+    if any(v is not None and v == v for v in values if v.__class__ is not str):
+        return None
+    valid = np.fromiter((v.__class__ is str for v in values), bool, n)
+    ne = body.count(empty)
+    if ne == len(body) and typ == "LineString":
+        return Batch(np.empty((n, 0, 2)), valid, typ, None)
+    full = [v for v in body if v != empty] if ne else body
+    inner = [v[len(pre):-len(suf)] for v in full
+             if v.startswith(pre) and v.endswith(suf)]
+    m = len(inner)
+    k = inner[0].count(vsep) + 1 if m else 0
+    # per-row arity: every row has the first row's vertex count
+    if not m or m != len(full) or (ne and typ != "Point") \
+            or (typ == "Point" and k != 1) \
+            or [r.count(vsep) for r in inner].count(k - 1) != m:
+        return None
+    joined = vsep.join(inner)
+    if not joined.isascii():
+        return None
+    raw = np.frombuffer(joined.encode(), np.uint8)
+    # number bytes and separators only, the separators in order (x-y
+    # within a vertex, vertex between): two numbers per vertex
+    sep = np.zeros(256, bool)
+    sep[np.frombuffer((xy + vsep).encode(), np.uint8)] = True
+    if not (_NUMBER | sep)[raw].all() or raw[sep[raw]].tobytes() \
+            != ((xy + vsep) * (m * k))[:-len(vsep)].encode():
+        return None
+    flat = joined.replace(vsep, ",").replace(xy, ",")
+    try:
+        if fmt == "wkt":
+            # a non-blank separator makes numpy read each field whole or
+            # stop (or raise); a stop loses the trailing 0, even in the last
+            vals = np.fromstring(flat + ",0", sep=",")[:-1]
+        else:  # json's own number grammar and int -> float rule
+            vals = np.array(json.loads("[" + flat + "]"), float)
+    except (ValueError, OverflowError):
+        return None
+    if len(vals) != 2 * m * k or not np.isfinite(vals).all():
+        return None
+    xyk = vals.reshape(m, k, 2)
+    if fmt == "geojson" and typ == "Polygon" \
+            and not (xyk[:, 0] == xyk[:, -1]).all():
+        return None   # from_geojson closes an open ring
+    coords = np.full((n, k, 2), np.nan)
+    coords[np.flatnonzero(valid)[[v != empty for v in body]] if ne
+           else valid] = xyk
+    return Batch(coords, valid, typ, None)
+
+
+def format_text(b: Batch, fmt: str) -> List[Optional[str]]:
+    """Each row of ``b`` as ``fmt`` text ("wkt" or "geojson"), byte for
+    byte what ``wkt.to_wkt`` / ``geojson.to_geojson`` write for it: a
+    point with a NaN x is POINT EMPTY, any other non-finite coordinate
+    raises as ``wkt.fmt_num`` does; None on NULL rows."""
+    pre, suf, xy, vsep, empty = _TEXT[fmt, b.typ]
+    full = b.valid & ~np.isnan(b.x) if b.typ == "Point" \
+        else b.valid & (b.k > 0)
+    # one f-string per value: pandas string ops over object arrays
+    # measured 2x slower inside Spark's concurrent Python workers
+    nums = map(fmt_num, b.coords[full].ravel().tolist())
+    if b.k <= 1:
+        texts = [f"{pre}{x}{xy}{y}{suf}" for x, y in zip(nums, nums)]
+    else:
+        verts = [f"{x}{xy}{y}" for x, y in zip(nums, nums)]
+        texts = [pre + vsep.join(verts[i:i + b.k]) + suf
+                 for i in range(0, len(verts), b.k)]
+    if full.all():
+        return texts
+    out = np.where(b.valid, empty, None)
+    out[full] = np.array(texts, dtype=object)
+    return out.tolist()
 
 
 # ------------------------------------------------------------ predicates

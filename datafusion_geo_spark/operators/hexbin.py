@@ -25,6 +25,9 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..geo.geom import Geometry
+from ..geo.wkt import to_wkt
+
 SQRT3 = 1.7320508075688772   # repr(math.sqrt(3)) — the oracle mirrors it
 
 
@@ -84,6 +87,4 @@ def hexagon_wkt(q: int, r: int, size: float, ndigits: int = 6) -> str:
         pts.append((rnd(cx + size * math.cos(a)),
                     rnd(cy + size * math.sin(a))))
     pts.append(pts[0])
-    from ..geo.wkt import fmt_num
-    body = ",".join(f"{fmt_num(px)} {fmt_num(py)}" for px, py in pts)
-    return f"POLYGON(({body}))"
+    return to_wkt(Geometry("Polygon", [pts]))

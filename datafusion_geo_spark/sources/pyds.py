@@ -122,7 +122,7 @@ class GeoJsonLinesWriter(DataSourceWriter):
         import os
         import uuid
 
-        from ..functions.kernels import _geojson
+        from ..geo.geojson import to_geojson
         from ..geo.wkb import from_wkb
 
         prop_fields = [f.name for f in self.schema.fields
@@ -132,7 +132,7 @@ class GeoJsonLinesWriter(DataSourceWriter):
         with open(out, "w", encoding="utf-8") as fh:
             for row in iterator:
                 geom = row["geom"]
-                gj = "null" if geom is None else _geojson(from_wkb(geom))
+                gj = "null" if geom is None else to_geojson(from_wkb(geom))
                 props = json.dumps({k: row[k] for k in prop_fields},
                                    separators=(",", ":"))
                 fh.write('{"type":"Feature","geometry":%s,'

@@ -18,6 +18,7 @@ import pytest
 
 from datafusion_geo_spark.functions import kernels
 from datafusion_geo_spark.geo import algos, de9im, overlay, proj, relate, vector
+from datafusion_geo_spark.geo.geojson import to_geojson
 from datafusion_geo_spark.geo.geom import Geometry
 from datafusion_geo_spark.geo.wkb import from_wkb, to_wkb
 from datafusion_geo_spark.geo.wkt import from_wkt, to_ewkt, to_wkt
@@ -161,7 +162,7 @@ def _translate_obj(s, dx, dy):
 UNARY = {
     "as_text": (kernels.as_text, _obj(to_wkt, "g")),
     "as_ewkt": (kernels.as_ewkt, _obj(to_ewkt, "g")),
-    "as_geojson": (kernels.as_geojson, _obj(kernels._geojson, "g")),
+    "as_geojson": (kernels.as_geojson, _obj(to_geojson, "g")),
     "box2d_rows": (kernels.box2d_rows, _box2d_obj),
     "st_x": (kernels.st_x, _obj(kernels._pt_x, "g")),
     "st_y": (kernels.st_y, _obj(kernels._pt_y, "g")),

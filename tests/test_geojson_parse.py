@@ -66,12 +66,12 @@ def test_rejects(bad, msg):
 
 def test_inverse_of_serializer_property():
     from tests.test_property_dialect_asof import any_geom
-    from datafusion_geo_spark.functions.kernels import _geojson
+    from datafusion_geo_spark.geo.geojson import to_geojson
 
     @given(any_geom)
     @settings(max_examples=200, deadline=None)
     def roundtrip(g):
-        assert to_wkt(from_geojson(_geojson(g))) == to_wkt(g)
+        assert to_wkt(from_geojson(to_geojson(g))) == to_wkt(g)
 
     roundtrip()
 
@@ -113,16 +113,15 @@ def test_fast_paths_match_full_parser():
     """Uniform Point / LineString batches take the vectorized path; the
     result must be byte-identical to the per-row json.loads path."""
     import pandas as pd
-    from datafusion_geo_spark.functions.kernels import (
-        _fast_lines_from_geojson, _fast_points_from_geojson,
-        geom_from_geojson)
+    from datafusion_geo_spark.functions.kernels import geom_from_geojson
+    from datafusion_geo_spark.geo.vector import parse_text
     from datafusion_geo_spark.geo.geojson import from_geojson
     from datafusion_geo_spark.geo.wkb import to_wkb
 
     pts = pd.Series(
         ['{"type":"Point","coordinates":[%d,%d]}' % (i, -i)
          for i in range(200)] + [None])
-    fast = _fast_points_from_geojson(pts)
+    fast = parse_text(pts.tolist(), "geojson")
     assert fast is not None  # the fast path must actually engage
     assert list(geom_from_geojson(pts)) == \
         [None if v is None else to_wkb(from_geojson(v)) for v in pts]
@@ -130,14 +129,14 @@ def test_fast_paths_match_full_parser():
     lines = pd.Series(
         ['{"type":"LineString","coordinates":[[%d,0],[%d,5],[9,9]]}'
          % (i, i + 1) for i in range(200)] + [None])
-    fast = _fast_lines_from_geojson(lines)
+    fast = parse_text(lines.tolist(), "geojson")
     assert fast is not None
     assert list(geom_from_geojson(lines)) == \
         [None if v is None else to_wkb(from_geojson(v)) for v in lines]
 
     # elevation breaks the float count -> falls back, still correct
     elev = pd.Series(['{"type":"Point","coordinates":[1,2,3]}'])
-    assert _fast_points_from_geojson(elev) is None
+    assert parse_text(elev.tolist(), "geojson") is None
     assert list(geom_from_geojson(elev)) == [to_wkb(from_geojson(elev[0]))]
 
 
@@ -146,14 +145,13 @@ def test_fast_path_rejects_mixed_arity_and_3d_batches():
     LineStrings with even vertex counts must NOT take the fast path
     (review finding: batch-total float counts let them slip through)."""
     import pandas as pd
-    from datafusion_geo_spark.functions.kernels import (
-        _fast_lines_from_geojson, _fast_points_from_geojson,
-        geom_from_geojson)
+    from datafusion_geo_spark.functions.kernels import geom_from_geojson
+    from datafusion_geo_spark.geo.vector import parse_text
 
     # 3 floats + 1 float = 4 = 2 rows x 2: totals match, rows are wrong
     mixed = pd.Series(['{"type":"Point","coordinates":[1,2,3]}',
                        '{"type":"Point","coordinates":[4]}'])
-    assert _fast_points_from_geojson(mixed) is None
+    assert parse_text(mixed.tolist(), "geojson") is None
     out = geom_from_geojson(pd.Series([mixed[0]]))  # z dropped, correct
     from datafusion_geo_spark.geo.wkb import from_wkb
     from datafusion_geo_spark.geo.wkt import to_wkt
@@ -166,7 +164,7 @@ def test_fast_path_rejects_mixed_arity_and_3d_batches():
     # old comma-total check parsed this as 3 2-D points
     threed = pd.Series(
         ['{"type":"LineString","coordinates":[[0,0,7],[1,1,8]]}'] * 3)
-    assert _fast_lines_from_geojson(threed) is None
+    assert parse_text(threed.tolist(), "geojson") is None
     got = geom_from_geojson(threed)
     assert all(to_wkt(from_wkb(b)) == "LINESTRING(0 0,1 1)" for b in got)
 
