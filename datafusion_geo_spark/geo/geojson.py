@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import re
+from math import isfinite
 from typing import Optional
 
 from .geom import Geometry
@@ -33,12 +34,17 @@ _GEOM_TYPES = ("Point", "LineString", "Polygon", "MultiPoint",
 
 
 def _pos(c) -> tuple:
-    """One coordinate position: [x, y] or [x, y, z] (z dropped)."""
+    """One coordinate position: [x, y] or [x, y, z] (z dropped); x and y
+    must be finite (``json`` reads ``NaN``, ``Infinity`` and ``1e400``
+    as non-finite floats, which ``to_geojson`` could not print)."""
     if (not isinstance(c, (list, tuple)) or len(c) < 2
             or not all(isinstance(v, (int, float)) and not isinstance(v, bool)
                        for v in c[:2])):
         raise ValueError(f"invalid GeoJSON coordinate position: {c!r}")
-    return (float(c[0]), float(c[1]))
+    x, y = float(c[0]), float(c[1])
+    if not (isfinite(x) and isfinite(y)):
+        raise ValueError(f"non-finite GeoJSON coordinate: {c!r}")
+    return (x, y)
 
 
 def _seq(x, what: str):

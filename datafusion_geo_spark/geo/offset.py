@@ -20,8 +20,14 @@ Numbers", and of GEOS's OffsetCurveBuilder):
    over-shrunk or pinched curve get non-positive winding and vanish),
    stitch survivors into rings, classify shells (CCW) vs holes (CW).
 3. **Composition** — a polygon buffer = dilated shell minus eroded
-   holes (erosion may split or empty a hole); a multi-part buffer =
-   the union of per-part clean results (any-part-nonzero rule).
+   holes; a negative buffer = eroded shell minus dilated holes; a path
+   closing exactly on its start = the polygon whose shell and hole are
+   both that loop; a multi-part buffer = the union of per-part clean
+   results (any-part-nonzero rule). Erosion (``_erode``) may split or
+   empty a ring's region: past the inradius the positive-winding rule
+   alone keeps faces of inverted loops, so a resolved face survives
+   only if its interior point is inside the ring and at least the
+   arc-chord depth ``w·cos(π/(4·quadsegs))`` from it.
 
 Stage 2 is skipped when the raw output is a single convex ring (convex ⇒
 simple), which covers the high-volume fixture case (capsules of straight
@@ -240,27 +246,29 @@ def _clean_path(coords: Sequence[Coord], w: float) -> List[Coord]:
 
 
 def offset_path(coords: Sequence[Coord], w: float,
-                quadsegs: int) -> List[List[Coord]]:
-    """Raw offset rings of a path (dilation), resolved as one group
-    under the positive-winding rule. A path that ends exactly where it
-    starts, with three or more segments and no doubling-back joint, has
-    no caps: its rings are the right side forward and the left side
-    backward, each a closed loop with a round arc at every joint, the
-    closing one included. Capping it instead puts two half-circle caps
-    on the same center whose arcs are rotated copies of each other by
-    the closing turn, and a near-zero rotation makes near-coincident
-    arc chords the arrangement cannot stitch (fuzz-found:
-    LINESTRING(50 1e-05,0 0,50 50,50 1e-05) buffered to EMPTY, and the
-    jitter retries are snapped back onto the same closed path). Any
-    other path is one ring (``offset_open_ring``)."""
+                quadsegs: int) -> List[List[List[Coord]]]:
+    """Clean polygons of a path's dilation. A simple path that ends
+    exactly where it starts, with three or more segments and no
+    doubling-back joint, has no caps: it is the polygon whose shell and
+    hole are both that loop (:func:`_buffer_polygon` — the loop's
+    region dilated, minus the region eroded by ``w``, which is empty
+    once ``w`` passes the inradius). Capping it instead puts two
+    half-circle caps on the same center whose arcs are rotated copies
+    of each other by the closing turn, and a near-zero rotation makes
+    near-coincident arc chords the arrangement cannot stitch
+    (fuzz-found: LINESTRING(50 1e-05,0 0,50 50,50 1e-05) buffered to
+    EMPTY, and the jitter retries are snapped back onto the same closed
+    path). Any other path, a self-crossing closed one included (it
+    bounds no region), is one capped ring (``offset_open_ring``)
+    resolved under the positive-winding rule."""
+    from .validity import _line_simple_violation
     cs = _clean_path(coords, w)
-    if len(cs) >= 4 and cs[0] == cs[-1]:
-        loop = cs[:-1]
-        _, turns = _turns(loop, closed=True)
-        if all(abs(abs(t) - math.pi) >= _SPIKE_EPS for t in turns):
-            return [_loop_offset(loop, w, quadsegs, "out"),
-                    _loop_offset(loop[::-1], w, quadsegs, "out")]
-    return [_open_offset(cs, w, quadsegs)]
+    if (len(cs) >= 4 and cs[0] == cs[-1]
+            and all(abs(abs(t) - math.pi) >= _SPIKE_EPS
+                    for t in _turns(cs[:-1], closed=True)[1])
+            and _line_simple_violation(cs) is None):
+        return _buffer_polygon([cs, cs], w, quadsegs)
+    return resolve([[_open_offset(cs, w, quadsegs)]], ["pos"])
 
 
 def offset_open_ring(coords: Sequence[Coord], w: float,
@@ -586,19 +594,45 @@ def _point_in_ring_fast(p: Coord, ring: Sequence[Coord]) -> bool:
 
 # --------------------------------------------------------------- buffer
 
+def _erode(ring: Sequence[Coord], w: float,
+           quadsegs: int) -> List[List[List[Coord]]]:
+    """Clean polygons of the region inside the closed ``ring`` shrunk by
+    ``w``: its 'in' offset curve resolved under the positive-winding
+    rule, keeping only the faces that are really ``w`` deep. Past the
+    inradius the inward offset lines cross over and the chord
+    connectors close inverted loops with positive winding (the
+    triangle POLYGON((0 0,1 0,0 1,0 0)) eroded by 3 left a face of
+    area 3.04). A kept face's interior point lies inside the ring and
+    at least the arc-chord depth ``w·cos(π/(4·quadsegs))`` from it (a
+    reflex arc's chords cut that far in); a face failing either test
+    is dropped."""
+    from .algos import _pt_seg_dist, point_in_ring
+    from .metrics import point_on_surface
+    depth = w * math.cos(math.pi / (4.0 * max(1, int(quadsegs))))
+    edges = list(zip(ring, ring[1:]))
+    kept = []
+    for poly in resolve([[ring_offset_curve(ring, w, quadsegs, "in")]],
+                        ["pos"]):
+        p = point_on_surface(Geometry("Polygon", poly)).parts
+        if (p is not None and point_in_ring(p, ring) == 1
+                and min(_pt_seg_dist(p, a, b) for a, b in edges) >= depth):
+            kept.append(poly)
+    return kept
+
+
 def _buffer_polygon(rings: Sequence[Sequence[Coord]], w: float,
                     quadsegs: int) -> List[List[List[Coord]]]:
     """Clean polygons for one polygon part: dilate the shell, erode each
-    hole, subtract. Erosion may split a hole or empty it; dilation may
-    create holes (a concave pocket whose mouth seals)."""
+    hole (:func:`_erode`), subtract. Erosion may split a hole or empty
+    it; dilation may create holes (a concave pocket whose mouth
+    seals)."""
     grown = resolve([[ring_offset_curve(rings[0], w, quadsegs, "out")]],
                     ["pos"])
     if not grown:
         return []
     new_holes: List[List[Coord]] = []
     for hole in rings[1:]:
-        for poly in resolve([[ring_offset_curve(hole, w, quadsegs, "in")]],
-                            ["pos"]):
+        for poly in _erode(hole, w, quadsegs):
             # erosion of a simple region yields simply connected parts;
             # only the shells matter, reversed to CW hole orientation
             new_holes.append(poly[0][::-1])
@@ -662,8 +696,7 @@ def _buffer_path_once(g: Geometry, w: float, quadsegs: int) -> Geometry:
                             ["pos"]))
         elif part.typ == "LineString":
             if part.parts:
-                part_polys.append(
-                    resolve([offset_path(part.parts, w, quadsegs)], ["pos"]))
+                part_polys.append(offset_path(part.parts, w, quadsegs))
         elif part.typ == "Polygon":
             if part.parts:
                 part_polys.append(_buffer_polygon(part.parts, w, quadsegs))
@@ -785,12 +818,11 @@ def offset_curve_geometry(g, d: float, quadsegs: int = 8):
 
 def erode_polygons(g, w: float, quadsegs: int = 8):
     """NEGATIVE polygon buffer (PostGIS ST_Buffer with width < 0):
-    each member polygon's shell is eroded inward by ``w`` (the 'in'
-    offset curve resolved under the positive-winding rule — over-
-    erosion empties or splits a part), and each hole is DILATED by
-    ``w`` and subtracted through the exact overlay. Non-areal members
-    contribute nothing (PostGIS: negative buffer of points/lines is
-    EMPTY)."""
+    each member polygon's shell is eroded inward by ``w``
+    (:func:`_erode` — over-erosion empties or splits a part), and each
+    hole is DILATED by ``w`` and subtracted through the exact overlay.
+    Non-areal members contribute nothing (PostGIS: negative buffer of
+    points/lines is EMPTY)."""
     from .geom import Geometry
     from .overlay import difference, union_all
     out_parts = []
@@ -800,8 +832,7 @@ def erode_polygons(g, w: float, quadsegs: int = 8):
         rings = [list(r) for r in m.parts if len(r) >= 4]
         if not rings:
             continue
-        shell_polys = resolve(
-            [[ring_offset_curve(rings[0], w, quadsegs, "in")]], ["pos"])
+        shell_polys = _erode(rings[0], w, quadsegs)
         if not shell_polys:
             continue
         base = Geometry(

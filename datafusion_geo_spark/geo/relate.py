@@ -16,15 +16,15 @@ overlay/clip machinery (geo/overlay.py) and the covers family
                    point-set split across a line/area, lines crossing
                    at points, a line passing through an area
 
-Interior conventions (documented simplifications for exotic inputs):
-a LineString's boundary is its two endpoints (empty when closed),
-taken per member for multi-lines — PostGIS's mod-2 rule differs only
-when member endpoints coincide. GeometryCollections relate member-
-pairwise.
+Interior conventions: a (Multi)LineString's boundary is the mod-2
+rule's — the member endpoints that occur an odd number of times (a
+closed member contributes none; two members sharing an endpoint join
+there), as in de9im.py. GeometryCollections relate member-pairwise.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import List, Optional, Tuple
 
 from .algos import (EPS, _on_segment, covers, intersects, point_in_polygon,
@@ -45,13 +45,10 @@ def _dim(g: Geometry) -> int:
 
 
 def _line_endpoints(g: Geometry) -> List[Coord]:
-    """Boundary points of the line members (per-member endpoints;
-    closed members contribute none)."""
-    out: List[Coord] = []
-    for ln in _line_members(g):
-        if dist(ln[0], ln[-1]) > EPS:
-            out.extend((ln[0], ln[-1]))
-    return out
+    """Boundary points of the line members under the mod-2 rule: the
+    member endpoints occurring an odd number of times."""
+    ends = Counter(p for ln in _line_members(g) for p in (ln[0], ln[-1]))
+    return [p for p, n in ends.items() if n % 2 == 1]
 
 
 def _on_any_line(p: Coord, g: Geometry) -> bool:

@@ -17,6 +17,7 @@ coordinates, and PostGIS-style trimmed output
 from __future__ import annotations
 
 import re
+from math import isfinite
 from typing import List, Optional, Tuple
 
 from .geom import Coord, Geometry
@@ -54,11 +55,17 @@ class _Parser:
             raise ValueError(f"WKT parse error at {self.pos}: expected {tok!r}, got {t!r}")
 
     def number(self) -> float:
+        """The next token as a finite float: ``inf``, ``nan`` and a
+        literal past the double range (``1e400``) raise, as the fast
+        text codec does; ``fmt_num`` could not print them back."""
         t = self.next()
         try:
-            return float(t)
+            v = float(t)
         except (TypeError, ValueError):
             raise ValueError(f"WKT parse error at {self.pos}: expected number, got {t!r}")
+        if not isfinite(v):
+            raise ValueError(f"WKT parse error at {self.pos}: non-finite number {t!r}")
+        return v
 
     def coord(self) -> Coord:
         x = self.number()

@@ -22,7 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from .util import idiv, round6_binary
+from .util import idiv, micro, round6_binary
 
 __all__ = ["auc_exact", "ks_stat", "ks_from_hist", "pearson_corr",
            "hist_quantiles", "quantiles_from_hist", "categorical_drift",
@@ -279,10 +279,6 @@ def cat_drift_from_hist(hist: DataFrame) -> DataFrame:
           / (F.col("n_b") + F.col("c")).cast("double"))
     psi_t = (pa - pb) * F.log(pa / pb)
 
-    def micro(col):
-        return (F.signum(col) * F.floor(F.abs(col) * F.lit(1e6)
-                                        + F.lit(0.5))).cast("long")
-
     # chi terms are nonnegative (d²/positive), so they carry NO sign
     # handling and can ride at NANO (1e9) fixed point: rounding each
     # term at micro and THEN multiplying the sum by N amplified the
@@ -444,11 +440,7 @@ def ndcg_overlap(bf: DataFrame, ann: DataFrame, k: int = 10) -> DataFrame:
     wmap = F.map_from_arrays(
         F.array(*[F.lit(r) for r in range(1, k + 1)]),
         F.array(*[F.lit(w) for w in W]))
-    gain = F.greatest(
-        F.lit(0),
-        (F.signum(F.col("sim")) * F.floor(F.abs(F.col("sim"))
-                                          * F.lit(1e6) + F.lit(0.5)))
-        .cast("long"))
+    gain = F.greatest(F.lit(0), micro(F.col("sim")))
     judged = bf.select("query_id", "neighbor_id", gain.alias("_g"),
                        F.col("rank").alias("_rb"))
     idcg = (judged.groupBy("query_id")
@@ -513,9 +505,7 @@ def embedding_drift(old: DataFrame, new: DataFrame,
          .join(side_count(new, "n_new"), "label"))
     cs = round6_binary(dot(F.col("mo"), F.col("mn"))
                        / (norm(F.col("mo")) * norm(F.col("mn"))))
-    micro = (F.signum(cs) * F.floor(F.abs(cs) * F.lit(1e6) + F.lit(0.5))) \
-        .cast("long")
-    return j.select("label", "n_old", "n_new", micro.alias("cos_micro"))
+    return j.select("label", "n_old", "n_new", micro(cs).alias("cos_micro"))
 
 
 def _sratio6(num, den):
@@ -527,8 +517,8 @@ def _sratio6(num, den):
     a double (identical on both engines)."""
     num = num.cast("long")
     den = den.cast("long")
-    micro = idiv(F.lit(2_000_000) * F.abs(num) + den, F.lit(2) * den)
-    return (F.signum(num) * micro / F.lit(1_000_000.0) + F.lit(0.0))
+    q6 = idiv(F.lit(2_000_000) * F.abs(num) + den, F.lit(2) * den)
+    return (F.signum(num) * q6 / F.lit(1_000_000.0) + F.lit(0.0))
 
 
 def mcc_multiclass(conf: DataFrame, true_col: str, pred_col: str,
@@ -778,11 +768,6 @@ def _js_tail(u: DataFrame) -> DataFrame:
     p = F.col("cp").cast("double") / F.col("np").cast("double")
     q = F.col("cq").cast("double") / F.col("nq").cast("double")
     m = (p + q) / F.lit(2.0)
-
-    def micro(col):
-        return (F.signum(col)
-                * F.floor(F.abs(col) * F.lit(1e6) + F.lit(0.5))) \
-            .cast("long")
 
     ta = F.when(F.col("cp") > 0, micro(p * F.log(p / m))) \
         .otherwise(F.lit(0))

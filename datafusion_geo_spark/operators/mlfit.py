@@ -30,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from . import util
-from .util import round6
+from .util import micro, round6, round6_binary
 from .text import words_col
 
 #: feature names, in model order: bias, word count, short words
@@ -130,12 +130,8 @@ def ridge_score(df: DataFrame, text_col: str = "text",
         yhat = yhat + F.lit(w[i]) * F.col(f"x{i}")
     # left-to-right sum, 6-dp round, then micro units — the oracle
     # parenthesizes identically
-    from .util import round6_binary
     yr = round6_binary(yhat)
-    yhat_micro = (F.signum(yr) * F.floor(F.abs(yr) * F.lit(1e6)
-                                         + F.lit(0.5))).cast("long")
-    return (feat.select(F.col(id_col), "y",
-                        yhat_micro.alias("yhat_micro"))
+    return (feat.select(F.col(id_col), "y", micro(yr).alias("yhat_micro"))
             .withColumn("resid_micro",
                         F.col("y") * F.lit(1_000_000)
                         - F.col("yhat_micro")))
@@ -175,7 +171,6 @@ def logreg_fit(feat: DataFrame, iters: int = LOGREG_ITERS,
     sigmoid's exp is the one op trusted to libm parity (same contract
     as the bm25/tfidf ln) — everything else is exact or 6-dp gridded.
     """
-    from .util import round6_binary
     k = 4
     n = None
     w = [0.0] * k
@@ -189,9 +184,7 @@ def logreg_fit(feat: DataFrame, iters: int = LOGREG_ITERS,
             for j in range(k):
                 e = round6_binary(err * (F.col(f"x{j}")
                                          / F.lit(FEATURE_SCALE)))
-                aggs.append(F.sum((F.signum(e) * F.floor(
-                    F.abs(e) * F.lit(1e6) + F.lit(0.5))).cast("long"))
-                    .alias(f"g{j}"))
+                aggs.append(F.sum(micro(e)).alias(f"g{j}"))
             aggs.append(F.count(F.lit(1)).alias("n"))
             row = feat.agg(*aggs).collect()[0]
             n = row["n"]

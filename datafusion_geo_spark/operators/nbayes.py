@@ -15,12 +15,12 @@ is micro-int'ed (signed 6-dp, floor-half-up) BEFORE the per-document
 sum, so class scores are exact int64 and the argmax + tie-break
 (score desc, label asc) replays bit-for-bit in any engine:
 
-    score(d, l) = smicro(ln(docs_l / D))
-                  - T_d * smicro(ln(N_l + V))
-                  + sum_w n_dw * smicro(ln(c_wl + 1))
+    score(d, l) = micro(ln(docs_l / D))
+                  - T_d * micro(ln(N_l + V))
+                  + sum_w n_dw * micro(ln(c_wl + 1))
 
 The sparse trick that keeps prediction join-shaped: words with
-c_wl = 0 contribute n_dw * smicro(ln(1)) = 0, so the per-word sum only
+c_wl = 0 contribute n_dw * micro(ln(1)) = 0, so the per-word sum only
 needs (doc-word) x (class-word, c > 0) — an inner equi-join on the
 word, never a doc x vocab x class grid. Unseen-at-predict-time words
 fold into the T_d * ln(N_l + V) term automatically (their numerator
@@ -36,15 +36,10 @@ no driver collect, no Python.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
 from .text import words_col
-
-
-def _smicro(x: Column) -> Column:
-    """Signed 6-dp micro-int (the evals.py discipline)."""
-    return (F.signum(x)
-            * F.floor(F.abs(x) * F.lit(1e6) + F.lit(0.5))).cast("long")
+from .util import micro
 
 
 def _tok(docs: DataFrame, label_col: str, text_col: str,
@@ -81,10 +76,10 @@ def nb_class_table(docs: DataFrame, label_col: str = "lang",
                F.sum("n_docs").over(w_all).alias("_d")))
     return out.select(
         "label", "n_docs", "n_tokens",
-        _smicro(F.log(F.col("n_docs").cast("double")
+        micro(F.log(F.col("n_docs").cast("double")
                       / F.col("_d").cast("double")))
         .alias("prior_micro"),
-        _smicro(F.log((F.col("n_tokens") + F.col("_v"))
+        micro(F.log((F.col("n_tokens") + F.col("_v"))
                       .cast("double"))).alias("lnden_micro"))
 
 
@@ -99,7 +94,7 @@ def nb_word_counts(docs: DataFrame, label_col: str = "lang",
     return (tok.groupBy(F.col("_l").alias("label"), "w")
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
             .withColumn("lnlik_micro",
-                        _smicro(F.log((F.col("c") + F.lit(1))
+                        micro(F.log((F.col("c") + F.lit(1))
                                       .cast("double")))))
 
 

@@ -22,6 +22,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .util import round6_binary
+
 __all__ = ["table_profile", "skew_audit"]
 
 
@@ -107,10 +109,7 @@ def skew_audit(df: DataFrame, key_col: str) -> DataFrame:
     gini_num = (F.col("r2")
                 - (F.col("n_keys") + F.lit(1)) * F.col("n_rows"))
     gini_den = F.col("n_keys") * F.col("n_rows")
-    g6 = (F.signum(gini_num.cast("double") / gini_den.cast("double"))
-          * F.floor(F.abs(gini_num.cast("double")
-                          / gini_den.cast("double")) * F.lit(1e6)
-                    + F.lit(0.5)) / F.lit(1e6) + F.lit(0.0))
+    g6 = round6_binary(gini_num.cast("double") / gini_den.cast("double"))
     return agg.select("n_keys", "n_rows", "max_size", "p99_size", "r2",
                       g6.alias("gini"))
 
@@ -129,7 +128,6 @@ def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     quantize coarser for more. One row per unordered pair (i < j in
     ``cols`` order): (col_x, col_y, n_rows, cov_num, varx_num,
     vary_num, corr 6-dp); corr is NULL for a zero-variance column."""
-    from .util import round6_binary
 
     k = len(cols)
     if k < 2:
@@ -281,7 +279,6 @@ def benford_aggs():
 
 def benford_finalize(totals: DataFrame) -> DataFrame:
     """The fixed-order nine-term chi-square tail over a totals row."""
-    from .util import round6_binary
 
     n = (F.col("n_rows") - F.col("n_excluded")).cast("long")
     chi = None

@@ -20,6 +20,8 @@ from typing import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .util import micro
+
 HASH_BUCKETS = 10_000
 
 
@@ -325,8 +327,7 @@ def wrs_topn(df: DataFrame, stratum_col: str, key_col: str,
     u = (seeded_h64(seed_tag, 0, F.col(key_col)) + F.lit(1)) \
         .cast("double") / F.lit(4294967296.0)
     clock = -F.log(u) / w.cast("double")
-    clock_micro = (F.signum(clock) * F.floor(F.abs(clock) * F.lit(1e6)
-                                             + F.lit(0.5))).cast("long")
+    clock_micro = micro(clock)
     base = df.select(F.col(stratum_col), F.col(key_col),
                      w.alias("w"), clock_micro.alias("clock_micro"))
     win = Window.partitionBy(stratum_col).orderBy("clock_micro", key_col)
@@ -438,14 +439,14 @@ def dsir_select(docs: DataFrame, target: Column, k: int = 50,
       * per-bucket counts for target (rows where ``target``) and
         source (ALL rows) are exact int64; the Laplace-smoothed
         log-ratio collapses to ONE ln of an exact-int64 rational,
-        micro-rounded:  lr[b] = smicro(ln( ((ct+1)·(ts+B)) /
+        micro-rounded:  lr[b] = micro(ln( ((ct+1)·(ts+B)) /
         ((tt+B)·(cs+1)) ))  — libm-parity contract;
       * a document's log-weight is the exact int64 SUM of its grams'
         lr micro-ints (join against the broadcast B-row table);
       * Gumbel key: u = (seeded_h64(id)+1)/(2^32+1), strictly inside
         (0,1) so -ln(-ln(u)) is always finite (u=1 would be NULL in
         Spark / -inf in DuckDB); same IEEE division in both engines,
-        g = smicro(-ln(-ln(u))), key = logw + g — exact int64, so
+        g = micro(-ln(-ln(u))), key = logw + g — exact int64, so
         the top-k race replays bit-for-bit;
       * top-k via orderBy(key desc, id).limit(k) — TakeOrdered, no
         global window.
@@ -485,8 +486,7 @@ def dsir_select(docs: DataFrame, target: Column, k: int = 50,
     num = ((F.col("ct") + F.lit(1)) * (F.col("ts") + F.lit(B)))
     den = ((F.col("tt") + F.lit(B)) * (F.col("cs") + F.lit(1)))
     lr = F.log(num.cast("double") / den.cast("double"))
-    lr_micro = (F.signum(lr) * F.floor(F.abs(lr) * F.lit(1e6)
-                                       + F.lit(0.5))).cast("long")
+    lr_micro = micro(lr)
     lrt = hist.select("bucket", lr_micro.alias("lr_micro"))
 
     dg = (base.select("_id", F.explode("_g").alias("gram"))
@@ -507,8 +507,7 @@ def dsir_select(docs: DataFrame, target: Column, k: int = 50,
     u = (seeded_h64(seed_tag, 0, F.col("_id")) + F.lit(1)) \
         .cast("double") / F.lit(4294967297.0)
     gum = -F.log(-F.log(u))
-    gum_micro = (F.signum(gum) * F.floor(F.abs(gum) * F.lit(1e6)
-                                         + F.lit(0.5))).cast("long")
+    gum_micro = micro(gum)
     keyed = scored.withColumn(
         "key_micro", (F.col("logw_micro") + gum_micro).cast("long"))
     top = (keyed.orderBy(F.desc("key_micro"), F.asc("_id")).limit(k)

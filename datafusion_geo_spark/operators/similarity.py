@@ -20,7 +20,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from .util import memo_get, round6, round6_binary
+from .util import memo_get, micro, round6, round6_binary
 
 
 def as_double(v: Column) -> Column:
@@ -1055,9 +1055,7 @@ def pq_search(vecs: DataFrame, m: int = 8, ksub: int = 16,
     table = F.broadcast(
         qsubs.join(F.broadcast(cdf), "s")
         .select("query_id", "s", "cid",
-                (F.signum(dp) * F.floor(F.abs(dp) * F.lit(1e6)
-                                        + F.lit(0.5))).cast("long")
-                .alias("dp_micro"))
+                micro(dp).alias("dp_micro"))
         .localCheckpoint(eager=True))
     exploded = codes.select(F.col(id_col).alias("neighbor_id"),
                             F.posexplode(F.col("codes"))
@@ -1196,9 +1194,7 @@ def ivfpq_search(vecs: DataFrame, n_coarse: int = 8, coarse_iters: int = 2,
     cdp = round6_binary(dot(F.col("qv"), F.col("cvec")))
     coarse_dp = (qv.crossJoin(cvdf)
                  .select("query_id", "cid",
-                         (F.signum(cdp) * F.floor(F.abs(cdp) * F.lit(1e6)
-                                                  + F.lit(0.5)))
-                         .cast("long").alias("coarse_micro")))
+                         micro(cdp).alias("coarse_micro")))
     probe_t = F.broadcast(probes.join(coarse_dp, ["query_id", "cid"]))
     cbdf = F.broadcast(spark.createDataFrame(
         cb, "s int, cid int, cvec array<double>"))
@@ -1210,9 +1206,7 @@ def ivfpq_search(vecs: DataFrame, n_coarse: int = 8, coarse_iters: int = 2,
         qsubs.join(cbdf, "s")
         .select(F.col("query_id").alias("q2"), F.col("s").alias("s2"),
                 F.col("cid").alias("cid2"),
-                (F.signum(sdp) * F.floor(F.abs(sdp) * F.lit(1e6)
-                                         + F.lit(0.5)))
-                .cast("long").alias("dp_micro")))
+                micro(sdp).alias("dp_micro")))
 
     # 5. serve: probe-pruned code scan -> per-subspace table lookups
     cand = inv.join(probe_t, "cid")
@@ -1301,11 +1295,6 @@ def cluster_cohesion(vecs: DataFrame, centroids: list,
     r = vecs.select(F.col(id_col), ranked.alias("_rk"))
     own = F.element_at(F.col("_rk"), 1)
     snd = F.element_at(F.col("_rk"), 2)
-
-    def micro(c: Column) -> Column:
-        return (F.signum(c) * F.floor(F.abs(c) * F.lit(1e6)
-                                      + F.lit(0.5))).cast("long")
-
     rows = r.select(own["cid"].alias("cid"),
                     micro(-own["ncs"]).alias("_o"),
                     micro(-snd["ncs"]).alias("_s"))
@@ -1376,15 +1365,10 @@ def mauve_eval(p_vecs: DataFrame, q_vecs: DataFrame, fitted: list,
     p = F.col("np") / F.col("n_p")
     q = F.col("nq") / F.col("n_q")
     r = lam * p + (F.lit(1.0) - lam) * q
-
-    def smicro(x):
-        return (F.signum(x)
-                * F.floor(F.abs(x) * F.lit(1e6) + F.lit(0.5))).cast("long")
-
     term_p = F.when(F.col("np") > 0,
-                    smicro(p * F.log(p / r))).otherwise(F.lit(0))
+                    micro(p * F.log(p / r))).otherwise(F.lit(0))
     term_q = F.when(F.col("nq") > 0,
-                    smicro(q * F.log(q / r))).otherwise(F.lit(0))
+                    micro(q * F.log(q / r))).otherwise(F.lit(0))
     kl = (hj.select("j", "n_p", "n_q", "k_clusters",
                     term_p.alias("tp"), term_q.alias("tq"))
           .groupBy("j", "n_p", "n_q", "k_clusters")
@@ -1415,5 +1399,4 @@ def mauve_eval(p_vecs: DataFrame, q_vecs: DataFrame, fitted: list,
     return out.select(
         "n_p", "n_q", "k_clusters", "area2_scaled",
         # exact int in, one final 6-dp-rounded divide out
-        (F.signum(mv) * F.floor(F.abs(mv) * F.lit(1e6) + F.lit(0.5))
-         / F.lit(1e6) + F.lit(0.0)).alias("mauve"))
+        round6_binary(mv).alias("mauve"))

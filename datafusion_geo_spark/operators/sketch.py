@@ -30,6 +30,8 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .util import round6_binary
+
 __all__ = ["seeded_h64", "count_min_sketch", "count_min_topk",
            "bloom_positions", "bloom_filter_new",
            "hll_registers", "hll_estimate", "hll_by_group",
@@ -222,10 +224,8 @@ def regs_estimate(regs: DataFrame, b: int = 8,
            * F.lit(float(1 << maxrho)) / z_full)
     est = F.when((raw <= F.lit(2.5 * m)) & (v > 0),
                  F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double")))            .otherwise(raw)
-    est6 = (F.signum(est) * F.floor(F.abs(est) * F.lit(1e6) + F.lit(0.5))
-            / F.lit(1e6) + F.lit(0.0))
     return agg.select(*group_cols, "n_registers", "z_scaled",
-                      est6.alias("est"))
+                      round6_binary(est).alias("est"))
 
 
 def hll_by_group(keys: DataFrame, group_col: str, key_col: str,
@@ -268,9 +268,7 @@ def hll_set_ops(a_keys: DataFrame, b_keys: DataFrame, key_col: str,
         F.col("n_registers").alias("n_reg_u"),
         F.col("z_scaled").alias("z_u"), F.col("est").alias("est_union"))
     inter = (F.col("est_a") + F.col("est_b")) - F.col("est_union")
-    inter6 = (F.signum(inter) * F.floor(F.abs(inter) * F.lit(1e6)
-                                        + F.lit(0.5))
-              / F.lit(1e6) + F.lit(0.0))
+    inter6 = round6_binary(inter)
     return (ea.crossJoin(eb).crossJoin(eu)
             .select("n_reg_a", "z_a", "est_a", "n_reg_b", "z_b", "est_b",
                     "n_reg_u", "z_u", "est_union",
@@ -310,10 +308,9 @@ def cms_join_size(a_keys: DataFrame, b_keys: DataFrame, key_col: str,
                  .cast("long").alias("true_size")))
     over = (F.col("est_size").cast("double")
             / F.col("true_size").cast("double"))
-    o6 = (F.signum(over) * F.floor(F.abs(over) * F.lit(1e6) + F.lit(0.5))
-          / F.lit(1e6) + F.lit(0.0))
     return (true.crossJoin(F.broadcast(est))  # both: exactly 1 row
-            .select("true_size", "est_size", o6.alias("over_ratio")))
+            .select("true_size", "est_size",
+                    round6_binary(over).alias("over_ratio")))
 
 
 def kmv_quantile_sketch(events: DataFrame, group_col: str, value_col: str,

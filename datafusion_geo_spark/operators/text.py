@@ -15,7 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from .util import idiv, round6_binary
+from .util import idiv, micro, round6_binary
 
 # Shared constants (mirrored into oracle SQL) ---------------------------
 
@@ -507,10 +507,8 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     vocab = toks.groupBy("w").agg(F.count("*").alias("cnt"))
     total = toks.agg(F.count("*").alias("total"))
     lp = F.log(F.col("cnt").cast("double") / F.col("total").cast("double"))
-    lp_micro = (F.signum(lp) * F.floor(F.abs(lp) * F.lit(1e6) + F.lit(0.5))
-                ).cast("long")
     scored = (toks.join(vocab, "w").crossJoin(F.broadcast(total))
-              .withColumn("_lp", lp_micro))
+              .withColumn("_lp", micro(lp)))
     return (scored.groupBy(id_col)
             .agg(F.count("*").alias("n_tokens"),
                  F.sum("_lp").alias("lp_micro_sum"),
@@ -582,6 +580,63 @@ def percentile_quality_filter(df: DataFrame, pct: float = 0.25,
             .drop("_thr", "_score"))
 
 
+# Held-out perplexity: one split -> score -> aggregate scaffold ----------
+
+def _heldout_split(df: DataFrame, text_col: str, id_col: str,
+                   keys: list):
+    """(train, test) halves of the deterministic 90/10 held-out split:
+    repo hash bucket ``h64(id) % 10000 < 9000`` trains (the
+    sampling.with_split semantics), the rest is held out. Both halves
+    carry ``keys``, ``id_col`` and the lower-cased text ``_t``; the
+    words are split where they are exploded (:func:`_words`,
+    :func:`_pairs`), because for an explode of a projected word-array
+    column Spark infers ``size(_w) > 0`` below that projection and
+    splits every row twice."""
+    from .dedup import h64
+    b = h64(F.col(id_col).cast("string")) % F.lit(10000)
+    base = df.select(*[F.col(k) for k in keys], F.col(id_col),
+                     F.lower(F.col(text_col)).alias("_t"), b.alias("_b"))
+    return base.where(F.col("_b") < 9000), base.where(F.col("_b") >= 9000)
+
+
+def _words(half: DataFrame, *cols) -> DataFrame:
+    """``cols`` and one row ``w`` per word of a split half."""
+    return half.select(*cols, F.explode(words_col(F.col("_t"))).alias("w"))
+
+
+def _with_totals(sc: DataFrame, keys: list, *totals: DataFrame) -> DataFrame:
+    """Attach the train-side totals (one row per key) to the held-out
+    stream as broadcast dims: a join on ``keys``, or a crossJoin of
+    the one-row frames when there are none."""
+    for t in totals:
+        sc = (sc.join(F.broadcast(t), keys) if keys
+              else sc.crossJoin(F.broadcast(t)))
+    return sc
+
+
+def _perplexity(sc: DataFrame, keys: list, id_col: str, lp: Column,
+                n_name: str, unseen: dict) -> DataFrame:
+    """The shared tail of the held-out perplexity operators, one row per
+    key: test docs, scored units (``n_name``), one NULL count per
+    ``unseen`` entry (output name -> column that is NULL for an unseen
+    unit), ``lp_micro_sum`` and ``ppl_micro``.
+
+    Each unit's log-prob ``lp`` rounds to a micro int BEFORE the sum
+    (fold-order free); perplexity exp(-mean) is a fixed literal chain
+    on the two integers, 6-dp rounded and returned in micro units
+    (ln/exp libm-parity contract, as bm25/logreg)."""
+    agg = sc.groupBy(*keys).agg(
+        F.countDistinct(id_col).alias("n_test_docs"),
+        F.count(F.lit(1)).alias(n_name),
+        *[F.sum(F.col(c).isNull().cast("long")).alias(name)
+          for name, c in unseen.items()],
+        F.sum(micro(lp)).alias("lp_micro_sum"))
+    mean = (F.col("lp_micro_sum") / F.lit(1000000.0)) / F.col(n_name)
+    ppl = micro(round6_binary(F.exp(-mean)))
+    return agg.select(*keys, "n_test_docs", n_name, *unseen,
+                      "lp_micro_sum", ppl.alias("ppl_micro"))
+
+
 def heldout_perplexity(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """Held-out perplexity of the corpus-trained unigram LM — the
@@ -589,51 +644,26 @@ def heldout_perplexity(df: DataFrame, text_col: str = "text",
     data pipeline tracks across corpus versions (rising held-out ppl =
     the new crawl drifted).
 
-    Deterministic 90/10 train/test split by the repo hash bucket
-    (sampling.with_split semantics); the LM is add-1 smoothed over the
-    TRAIN vocabulary so held-out OOV tokens score ln(1/(T+V+1)) instead
-    of -inf. Per-token log-probs round to micro ints BEFORE the sum
-    (fold-order free); perplexity exp(-mean) is a fixed literal chain
-    on the two integers (ln/exp libm-parity contract, as bm25/logreg).
+    The LM is add-1 smoothed over the TRAIN vocabulary so held-out OOV
+    tokens score ln(1/(T+V+1)) instead of -inf (split and perplexity
+    tail: :func:`_heldout_split`, :func:`_perplexity`).
 
     ONE row out: test doc/token counts, OOV count, lp_micro_sum, and
     ppl_micro. Scale shape: token-count shuffle + one broadcast-able
     vocab join + two one-row aggregates — the unigram_logprob plan plus
     a split predicate evaluated in the scan."""
-    from .dedup import h64
-    from .util import round6_binary
-    b = h64(F.col(id_col).cast("string")) % F.lit(10000)
-    base = df.select(F.col(id_col), F.col(text_col).alias("_t"),
-                     b.alias("_b"))
-    ttoks = (base.where(F.col("_b") < 9000)
-             .select(F.explode(words_col(F.lower(F.col("_t"))))
-                     .alias("w")))
+    train, test = _heldout_split(df, text_col, id_col, [])
+    ttoks = _words(train)
     vocab = ttoks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     tot = ttoks.agg(F.count(F.lit(1)).alias("total"))
     vs = vocab.agg(F.count(F.lit(1)).alias("v"))
-    htoks = (base.where(F.col("_b") >= 9000)
-             .select(F.col(id_col),
-                     F.explode(words_col(F.lower(F.col("_t"))))
-                     .alias("w")))
-    sc = (htoks.join(vocab, "w", "left")
-          .crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(vs)))
+    htoks = _words(test, id_col)
+    sc = _with_totals(htoks.join(vocab, "w", "left"), [], tot, vs)
     lp = F.log((F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(1))
                .cast("double")
                / (F.col("total") + F.col("v") + F.lit(1)).cast("double"))
-    lp_micro = (F.signum(lp) * F.floor(F.abs(lp) * F.lit(1e6)
-                                       + F.lit(0.5))).cast("long")
-    agg = sc.agg(
-        F.countDistinct(id_col).alias("n_test_docs"),
-        F.count(F.lit(1)).alias("n_test_tokens"),
-        F.sum(F.col("cnt").isNull().cast("long")).alias("n_oov"),
-        F.sum(lp_micro).alias("lp_micro_sum"))
-    mean = (F.col("lp_micro_sum") / F.lit(1000000.0)) \
-        / F.col("n_test_tokens")
-    p = round6_binary(F.exp(-mean))
-    ppl_micro = (F.signum(p) * F.floor(F.abs(p) * F.lit(1e6)
-                                       + F.lit(0.5))).cast("long")
-    return agg.select("n_test_docs", "n_test_tokens", "n_oov",
-                      "lp_micro_sum", ppl_micro.alias("ppl_micro"))
+    return _perplexity(sc, [], id_col, lp, "n_test_tokens",
+                       {"n_oov": "cnt"})
 
 
 def _bigrams_col(words: Column) -> Column:
@@ -649,6 +679,31 @@ def _bigrams_col(words: Column) -> Column:
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
 
 
+def _pairs(half: DataFrame, *cols) -> DataFrame:
+    """``cols`` and one row ``p`` = (w1, w2) per adjacent word pair of a
+    split half (:func:`_bigrams_col` over the word array projected
+    once)."""
+    return (half.select(*cols, words_col(F.col("_t")).alias("_w"))
+            .select(*cols, F.explode(_bigrams_col(F.col("_w"))).alias("p")))
+
+
+def _bigram_counts(train: DataFrame, test: DataFrame, keys: list,
+                   id_col: str):
+    """(vocab, bg, hbg) per key of a :func:`_heldout_split`: the train
+    vocabulary ``(keys, w, cnt)``, the train bigram counts ``(keys, w1,
+    w2, c12)`` and the held-out bigram stream ``(keys, id_col, w1,
+    w2)``."""
+    vocab = (_words(train, *keys).groupBy(*keys, "w")
+             .agg(F.count(F.lit(1)).alias("cnt")))
+    bg = (_pairs(train, *keys)
+          .groupBy(*keys, F.col("p.w1").alias("w1"),
+                   F.col("p.w2").alias("w2"))
+          .agg(F.count(F.lit(1)).alias("c12")))
+    hbg = _pairs(test, *keys, id_col).select(
+        *keys, id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+    return vocab, bg, hbg
+
+
 def bigram_heldout_perplexity(df: DataFrame, text_col: str = "text",
                               id_col: str = "doc_id") -> DataFrame:
     """Held-out perplexity of an INTERPOLATED BIGRAM LM — the
@@ -656,48 +711,28 @@ def bigram_heldout_perplexity(df: DataFrame, text_col: str = "text",
     is blind to shuffled or boilerplate-stitched text; bigram ppl is
     the standard next sanity metric a data pipeline tracks).
 
-    Same deterministic 90/10 md5-bucket split. Jelinek-Mercer mix with
-    a fixed λ = 0.75 (exact in binary, so both engines multiply the
-    same double):
+    Jelinek-Mercer mix with a fixed λ = 0.75 (exact in binary, so both
+    engines multiply the same double):
 
         p(w2|w1) = 0.75·c(w1w2)/c(w1)      (ML bigram; 0 if c(w1)=0)
                  + 0.25·(c(w2)+1)/(T+V+1)  (heldout_ppl's add-1 unigram)
-
-    Bigram extraction is map-only (:func:`_bigrams_col`); per-pair
-    log-probs round to micro ints BEFORE the sum (fold-order free);
-    perplexity exp(-mean) follows the heldout_ppl literal chain
-    (ln/exp libm-parity contract).
 
     ONE row out: (n_test_docs, n_test_bigrams, n_unseen_ctx,
     n_unseen_pair, lp_micro_sum, ppl_micro). Scale shape: two grouped
     counts over the train stream, the held-out stream joined on
     (w1,w2) and twice on the unigram vocab (word-key shuffles), two
     one-row broadcast totals."""
-    from .dedup import h64
-    from .util import round6_binary
-    b = h64(F.col(id_col).cast("string")) % F.lit(10000)
-    base = df.select(F.col(id_col),
-                     words_col(F.lower(F.col(text_col))).alias("_w"),
-                     b.alias("_b"))
-    train = base.where(F.col("_b") < 9000)
-    ttoks = train.select(F.explode(F.col("_w")).alias("w"))
-    vocab = ttoks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    tot = ttoks.agg(F.count(F.lit(1)).alias("total"))
+    train, test = _heldout_split(df, text_col, id_col, [])
+    vocab, bg, hbg = _bigram_counts(train, test, [], id_col)
+    tot = _words(train).agg(F.count(F.lit(1)).alias("total"))
     vs = vocab.agg(F.count(F.lit(1)).alias("v"))
-    bg = (train.select(F.explode(_bigrams_col(F.col("_w"))).alias("p"))
-          .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-          .agg(F.count(F.lit(1)).alias("c12")))
-    hbg = (base.where(F.col("_b") >= 9000)
-           .select(F.col(id_col),
-                   F.explode(_bigrams_col(F.col("_w"))).alias("p"))
-           .select(id_col, F.col("p.w1").alias("w1"),
-                   F.col("p.w2").alias("w2")))
-    sc = (hbg.join(bg, ["w1", "w2"], "left")
-          .join(vocab.select(F.col("w").alias("w1"),
-                             F.col("cnt").alias("c1")), "w1", "left")
-          .join(vocab.select(F.col("w").alias("w2"),
-                             F.col("cnt").alias("c2")), "w2", "left")
-          .crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(vs)))
+    sc = _with_totals(
+        hbg.join(bg, ["w1", "w2"], "left")
+        .join(vocab.select(F.col("w").alias("w1"),
+                           F.col("cnt").alias("c1")), "w1", "left")
+        .join(vocab.select(F.col("w").alias("w2"),
+                           F.col("cnt").alias("c2")), "w2", "left"),
+        [], tot, vs)
     p_bg = F.when(
         F.col("c1").isNotNull(),
         F.lit(0.75) * (F.coalesce(F.col("c12"), F.lit(0)).cast("double")
@@ -706,23 +741,9 @@ def bigram_heldout_perplexity(df: DataFrame, text_col: str = "text",
                            .cast("double")
                            / (F.col("total") + F.col("v") + F.lit(1))
                            .cast("double"))
-    lp = F.log(p_bg + p_uni)
-    lp_micro = (F.signum(lp) * F.floor(F.abs(lp) * F.lit(1e6)
-                                       + F.lit(0.5))).cast("long")
-    agg = sc.agg(
-        F.countDistinct(id_col).alias("n_test_docs"),
-        F.count(F.lit(1)).alias("n_test_bigrams"),
-        F.sum(F.col("c1").isNull().cast("long")).alias("n_unseen_ctx"),
-        F.sum(F.col("c12").isNull().cast("long")).alias("n_unseen_pair"),
-        F.sum(lp_micro).alias("lp_micro_sum"))
-    mean = (F.col("lp_micro_sum") / F.lit(1000000.0)) \
-        / F.col("n_test_bigrams")
-    p = round6_binary(F.exp(-mean))
-    ppl_micro = (F.signum(p) * F.floor(F.abs(p) * F.lit(1e6)
-                                       + F.lit(0.5))).cast("long")
-    return agg.select("n_test_docs", "n_test_bigrams", "n_unseen_ctx",
-                      "n_unseen_pair", "lp_micro_sum",
-                      ppl_micro.alias("ppl_micro"))
+    return _perplexity(sc, [], id_col, F.log(p_bg + p_uni),
+                       "n_test_bigrams",
+                       {"n_unseen_ctx": "c1", "n_unseen_pair": "c12"})
 
 
 def pmi_top_bigrams(df: DataFrame, text_col: str = "text",
@@ -774,58 +795,35 @@ def pmi_top_bigrams(df: DataFrame, text_col: str = "text",
                 / (F.col("c1") * F.col("c2")).cast("double")
                 * (F.col("n_tok").cast("double")
                    / F.col("n_bg").cast("double")))
-    pm = (F.signum(pmi) * F.floor(F.abs(pmi) * F.lit(1e6) + F.lit(0.5))) \
-        .cast("long")
-    return (j.select("w1", "w2", "c12", "c1", "c2", pm.alias("pmi_micro"))
+    return (j.select("w1", "w2", "c12", "c1", "c2",
+                     micro(pmi).alias("pmi_micro"))
             .orderBy(F.desc("pmi_micro"), F.asc("w1"), F.asc("w2"))
             .limit(k))
 
 
-def kn_bigram_perplexity_by(df: DataFrame, group_col: str,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
-    """Per-group interpolated Kneser-Ney bigram perplexity — ONE
-    independent KN LM per value of ``group_col`` (e.g. language), the
-    grouped twin of :func:`kn_bigram_perplexity` (same 90/10 md5
-    split, same D = 0.75 smoothing, same micro-int logprob sums; see
-    that docstring for the model). Groups never share counts: every
-    dict (vocab, bigrams, continuation/following types, B, V) carries
-    the group key, so the per-group plan is the ungrouped plan with
-    the key added to every groupBy/join — the held-out stream still
-    shuffles once per distinct join key, and the one-row broadcast
-    totals become |groups|-row broadcast dims. Output one row per
-    group: (group_col, n_test_docs, n_test_bigrams, n_unseen_ctx,
-    n_unseen_pair, lp_micro_sum, ppl_micro)."""
-    from .dedup import h64
-    from .util import round6_binary
-    g = group_col
-    b = h64(F.col(id_col).cast("string")) % F.lit(10000)
-    base = (df.where(F.col(g).isNotNull())
-            .select(F.col(g), F.col(id_col),
-                    words_col(F.lower(F.col(text_col))).alias("_w"),
-                    b.alias("_b")))
-    train = base.where(F.col("_b") < 9000)
-    ttoks = train.select(g, F.explode(F.col("_w")).alias("w"))
-    vocab = ttoks.groupBy(g, "w").agg(F.count(F.lit(1)).alias("cnt"))
-    vs = vocab.groupBy(g).agg(F.count(F.lit(1)).alias("v"))
-    bg = (train.select(g, F.explode(_bigrams_col(F.col("_w"))).alias("p"))
-          .groupBy(g, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-          .agg(F.count(F.lit(1)).alias("c12")))
-    nf = bg.groupBy(g, "w1").agg(F.count(F.lit(1)).alias("nf"))
-    npr = bg.groupBy(g, "w2").agg(F.count(F.lit(1)).alias("np"))
-    bt = bg.groupBy(g).agg(F.count(F.lit(1)).alias("btypes"))
-    hbg = (base.where(F.col("_b") >= 9000)
-           .select(g, F.col(id_col),
-                   F.explode(_bigrams_col(F.col("_w"))).alias("p"))
-           .select(g, id_col, F.col("p.w1").alias("w1"),
-                   F.col("p.w2").alias("w2")))
-    ctx = (vocab.select(g, F.col("w").alias("w1"), F.col("cnt").alias("c1"))
-           .join(nf, [g, "w1"], "left"))
-    sc = (hbg.join(bg, [g, "w1", "w2"], "left")
-          .join(ctx, [g, "w1"], "left")
-          .join(npr, [g, "w2"], "left")
-          .join(F.broadcast(bt), g)
-          .join(F.broadcast(vs), g))
+def _kn_bigram(df: DataFrame, keys: list, text_col: str,
+               id_col: str) -> DataFrame:
+    """The interpolated Kneser-Ney held-out perplexity of
+    :func:`kn_bigram_perplexity`, one independent LM per value of
+    ``keys`` (none: one corpus-wide LM). Every dict (vocab, bigrams,
+    continuation/following types, B, V) carries the keys, and the
+    train totals attach as broadcast dims (:func:`_with_totals`)."""
+    train, test = _heldout_split(df, text_col, id_col, keys)
+    vocab, bg, hbg = _bigram_counts(train, test, keys, id_col)
+    vs = vocab.groupBy(*keys).agg(F.count(F.lit(1)).alias("v"))
+    nf = bg.groupBy(*keys, "w1").agg(F.count(F.lit(1)).alias("nf"))
+    npr = bg.groupBy(*keys, "w2").agg(F.count(F.lit(1)).alias("np"))
+    bt = bg.groupBy(*keys).agg(F.count(F.lit(1)).alias("btypes"))
+    # the two w1-keyed dims fuse into ONE dict-sized join (c(w1) and
+    # N1+(w1·) ride together), so the held-out stream shuffles once per
+    # distinct join key: (w1,w2), w1, w2
+    ctx = (vocab.select(*keys, F.col("w").alias("w1"),
+                        F.col("cnt").alias("c1"))
+           .join(nf, [*keys, "w1"], "left"))
+    sc = _with_totals(hbg.join(bg, [*keys, "w1", "w2"], "left")
+                      .join(ctx, [*keys, "w1"], "left")
+                      .join(npr, [*keys, "w2"], "left"),
+                      keys, bt, vs)
     p_cont = ((F.coalesce(F.col("np"), F.lit(0)) + F.lit(1)).cast("double")
               / (F.col("btypes") + F.col("v") + F.lit(1)).cast("double"))
     p_seen = (F.greatest(F.coalesce(F.col("c12"), F.lit(0)).cast("double")
@@ -834,23 +832,22 @@ def kn_bigram_perplexity_by(df: DataFrame, group_col: str,
               + F.lit(0.75) * F.col("nf").cast("double")
               / F.col("c1").cast("double") * p_cont)
     p = F.when(F.col("nf").isNotNull(), p_seen).otherwise(p_cont)
-    lp = F.log(p)
-    lp_micro = (F.signum(lp) * F.floor(F.abs(lp) * F.lit(1e6)
-                                       + F.lit(0.5))).cast("long")
-    agg = sc.groupBy(g).agg(
-        F.countDistinct(id_col).alias("n_test_docs"),
-        F.count(F.lit(1)).alias("n_test_bigrams"),
-        F.sum(F.col("nf").isNull().cast("long")).alias("n_unseen_ctx"),
-        F.sum(F.col("c12").isNull().cast("long")).alias("n_unseen_pair"),
-        F.sum(lp_micro).alias("lp_micro_sum"))
-    mean = (F.col("lp_micro_sum") / F.lit(1000000.0)) \
-        / F.col("n_test_bigrams")
-    pp = round6_binary(F.exp(-mean))
-    ppl_micro = (F.signum(pp) * F.floor(F.abs(pp) * F.lit(1e6)
-                                        + F.lit(0.5))).cast("long")
-    return agg.select(g, "n_test_docs", "n_test_bigrams", "n_unseen_ctx",
-                      "n_unseen_pair", "lp_micro_sum",
-                      ppl_micro.alias("ppl_micro"))
+    return _perplexity(sc, keys, id_col, F.log(p), "n_test_bigrams",
+                       {"n_unseen_ctx": "nf", "n_unseen_pair": "c12"})
+
+
+def kn_bigram_perplexity_by(df: DataFrame, group_col: str,
+                            text_col: str = "text",
+                            id_col: str = "doc_id") -> DataFrame:
+    """Per-group interpolated Kneser-Ney bigram perplexity — ONE
+    independent KN LM per non-NULL value of ``group_col`` (e.g.
+    language), the grouped twin of :func:`kn_bigram_perplexity` (see
+    that docstring for the model). Groups never share counts; the
+    one-row broadcast totals become |groups|-row broadcast dims.
+    Output one row per group: (group_col, n_test_docs, n_test_bigrams,
+    n_unseen_ctx, n_unseen_pair, lp_micro_sum, ppl_micro)."""
+    return _kn_bigram(df.where(F.col(group_col).isNotNull()), [group_col],
+                      text_col, id_col)
 
 
 def kn_bigram_perplexity(df: DataFrame, text_col: str = "text",
@@ -865,10 +862,10 @@ def kn_bigram_perplexity(df: DataFrame, text_col: str = "text",
     frequent but predictable from 'San', so its continuation mass is
     tiny.
 
-    Same deterministic 90/10 md5-bucket split. With discount D = 0.75
-    (exact in binary) and train-side counts c(w1 w2), c(w1),
-    N1+(w1·) = distinct words following w1, N1+(·w2) = distinct words
-    preceding w2, B = distinct bigram types, V = vocab size:
+    With discount D = 0.75 (exact in binary) and train-side counts
+    c(w1 w2), c(w1), N1+(w1·) = distinct words following w1,
+    N1+(·w2) = distinct words preceding w2, B = distinct bigram types,
+    V = vocab size:
 
         p_cont(w2)  = (N1+(·w2) + 1) / (B + V + 1)      (add-1 so
                        unseen words keep a finite logprob)
@@ -878,69 +875,13 @@ def kn_bigram_perplexity(df: DataFrame, text_col: str = "text",
                       (contexts with no train bigram — unseen words and
                        doc-final-only words — back off fully)
 
-    Per-pair logprobs round to micro ints BEFORE the sum (fold-order
-    free); perplexity follows the shared exp(-mean) literal chain. ONE
-    row out, the bigram_ppl shape: (n_test_docs, n_test_bigrams,
+    ONE row out, the bigram_ppl shape: (n_test_docs, n_test_bigrams,
     n_unseen_ctx, n_unseen_pair, lp_micro_sum, ppl_micro) — unseen_ctx
     here counts N1+(w1·)-null contexts. Scale: the same two grouped
     counts as bigram_ppl plus two dict-sized distinct-neighbor counts
     DERIVED FROM the bigram table (no extra corpus pass), two one-row
     broadcast totals."""
-    from .dedup import h64
-    from .util import round6_binary
-    b = h64(F.col(id_col).cast("string")) % F.lit(10000)
-    base = df.select(F.col(id_col),
-                     words_col(F.lower(F.col(text_col))).alias("_w"),
-                     b.alias("_b"))
-    train = base.where(F.col("_b") < 9000)
-    ttoks = train.select(F.explode(F.col("_w")).alias("w"))
-    vocab = ttoks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    vs = vocab.agg(F.count(F.lit(1)).alias("v"))
-    bg = (train.select(F.explode(_bigrams_col(F.col("_w"))).alias("p"))
-          .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-          .agg(F.count(F.lit(1)).alias("c12")))
-    nf = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("nf"))
-    npr = bg.groupBy("w2").agg(F.count(F.lit(1)).alias("np"))
-    bt = bg.agg(F.count(F.lit(1)).alias("btypes"))
-    hbg = (base.where(F.col("_b") >= 9000)
-           .select(F.col(id_col),
-                   F.explode(_bigrams_col(F.col("_w"))).alias("p"))
-           .select(id_col, F.col("p.w1").alias("w1"),
-                   F.col("p.w2").alias("w2")))
-    # the two w1-keyed dims fuse into ONE dict-sized join (c(w1) and
-    # N1+(w1·) ride together), so the held-out stream shuffles once per
-    # distinct join key: (w1,w2), w1, w2
-    ctx = (vocab.select(F.col("w").alias("w1"), F.col("cnt").alias("c1"))
-           .join(nf, "w1", "left"))
-    sc = (hbg.join(bg, ["w1", "w2"], "left")
-          .join(ctx, "w1", "left")
-          .join(npr, "w2", "left")
-          .crossJoin(F.broadcast(bt)).crossJoin(F.broadcast(vs)))
-    p_cont = ((F.coalesce(F.col("np"), F.lit(0)) + F.lit(1)).cast("double")
-              / (F.col("btypes") + F.col("v") + F.lit(1)).cast("double"))
-    p_seen = (F.greatest(F.coalesce(F.col("c12"), F.lit(0)).cast("double")
-                         - F.lit(0.75), F.lit(0.0))
-              / F.col("c1").cast("double")
-              + F.lit(0.75) * F.col("nf").cast("double")
-              / F.col("c1").cast("double") * p_cont)
-    p = F.when(F.col("nf").isNotNull(), p_seen).otherwise(p_cont)
-    lp = F.log(p)
-    lp_micro = (F.signum(lp) * F.floor(F.abs(lp) * F.lit(1e6)
-                                       + F.lit(0.5))).cast("long")
-    agg = sc.agg(
-        F.countDistinct(id_col).alias("n_test_docs"),
-        F.count(F.lit(1)).alias("n_test_bigrams"),
-        F.sum(F.col("nf").isNull().cast("long")).alias("n_unseen_ctx"),
-        F.sum(F.col("c12").isNull().cast("long")).alias("n_unseen_pair"),
-        F.sum(lp_micro).alias("lp_micro_sum"))
-    mean = (F.col("lp_micro_sum") / F.lit(1000000.0)) \
-        / F.col("n_test_bigrams")
-    pp = round6_binary(F.exp(-mean))
-    ppl_micro = (F.signum(pp) * F.floor(F.abs(pp) * F.lit(1e6)
-                                        + F.lit(0.5))).cast("long")
-    return agg.select("n_test_docs", "n_test_bigrams", "n_unseen_ctx",
-                      "n_unseen_pair", "lp_micro_sum",
-                      ppl_micro.alias("ppl_micro"))
+    return _kn_bigram(df, [], text_col, id_col)
 
 
 # Sentence segmentation --------------------------------------------------
@@ -1002,18 +943,16 @@ def domain_entropy(df: DataFrame, text_col: str = "text",
     cnts = (toks.groupBy("domain", "w")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     term = F.col("cnt").cast("double") * F.log(F.col("cnt").cast("double"))
-    micro = F.floor(term * F.lit(1e6) + F.lit(0.5)).cast("long")
+    term_micro = F.floor(term * F.lit(1e6) + F.lit(0.5)).cast("long")
     agg = (cnts.groupBy("domain")
            .agg(F.sum("cnt").cast("long").alias("n_tokens"),
                 F.count(F.lit(1)).cast("long").alias("vocab"),
-                F.sum(micro).alias("s_micro")))
+                F.sum(term_micro).alias("s_micro")))
     nd = F.col("n_tokens").cast("double")
     h = (F.log(nd)
          - (F.col("s_micro").cast("double") / F.lit(1e6)) / nd)
-    h6 = (F.signum(h) * F.floor(F.abs(h) * F.lit(1e6) + F.lit(0.5))
-          / F.lit(1e6) + F.lit(0.0))
     return agg.select("domain", "n_tokens", "vocab", "s_micro",
-                      h6.alias("entropy"))
+                      round6_binary(h).alias("entropy"))
 
 
 def distinct_ngrams(df: DataFrame, group_col: str = "source",
@@ -1082,14 +1021,9 @@ def zipf_fit(df: DataFrame, group_col: str = "source",
     win = Window.partitionBy("grp").orderBy(F.desc("c"), F.asc("t"))
     ranked = (cnt.withColumn("r", F.row_number().over(win))
               .where(F.col("r") <= top_n))
-
-    def milli(col):
-        return (F.signum(col) * F.floor(F.abs(col) * F.lit(1e3)
-                                        + F.lit(0.5))).cast("long")
-
     pts = ranked.select(
-        "grp", milli(F.log(F.col("r").cast("double"))).alias("x"),
-        milli(F.log(F.col("c").cast("double"))).alias("y"))
+        "grp", micro(F.log(F.col("r").cast("double")), 3).alias("x"),
+        micro(F.log(F.col("c").cast("double")), 3).alias("y"))
     s = pts.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),

@@ -15,7 +15,7 @@ platforms nor replayable in SQL):
   dict word (frequency-weighted, per occurrence), capped to the top
   ``seed_multi_cap`` multi-char pieces by (count desc, piece asc) —
   plus ALL single characters (guaranteed coverage);
-* piece scores are micro-int log-probs  smicro(ln(cnt / total)) —
+* piece scores are micro-int log-probs  micro(ln(cnt / total)) —
   Viterbi then compares exact int64 sums, so segmentation is
   bit-deterministic on both engines (the only doubles are the ln
   calls, identical-argument libm on both sides — the heldout_ppl
@@ -45,7 +45,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from .text import words_col
-from .util import memo_get
+from .util import memo_get, micro
 
 #: training-dict word-length cap (longer words are URLs/hashes)
 MAX_WORD = 24
@@ -55,12 +55,6 @@ MAX_PIECE = 4
 #: real path score (|score| <= ~20e6 micro per piece, <= MAX_WORD
 #: pieces per word)
 NEG = -(10 ** 12)
-
-
-def _smicro(x: Column) -> Column:
-    """Signed 6-dp micro-int (the evals.py discipline)."""
-    return (F.signum(x)
-            * F.floor(F.abs(x) * F.lit(1e6) + F.lit(0.5))).cast("long")
 
 
 def word_dict(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -97,14 +91,14 @@ def _substrings(w: Column) -> Column:
 
 
 def _scored(pieces: DataFrame) -> DataFrame:
-    """Attach micro-int log-prob scores: smicro(ln(cnt/total)) with
+    """Attach micro-int log-prob scores: micro(ln(cnt/total)) with
     total as a full-frame window (no cross join)."""
     t = pieces.withColumn("_tot",
                           F.sum("cnt").over(Window.partitionBy())
                           .cast("long"))
     return t.select(
         "piece", "cnt",
-        _smicro(F.log(F.col("cnt") / F.col("_tot"))).alias("score_micro"))
+        micro(F.log(F.col("cnt") / F.col("_tot"))).alias("score_micro"))
 
 
 def _score_map(fitted: List[Tuple[str, int, int]]) -> Column:

@@ -14,6 +14,12 @@ ROUND6_SQL = ("((CASE WHEN ({x}) < 0 THEN -1 ELSE 1 END) * "
               "floor(abs({x}) * 1000000.0 + 0.5) / 1000000.0 + 0.0)")
 
 
+def _half_away(col: Column, scale: Column) -> Column:
+    """``sign(x)·floor(|x|·scale + 0.5)`` — the one engine-exact rounding
+    step behind :func:`round_binary` and :func:`micro`."""
+    return F.signum(col) * F.floor(F.abs(col) * scale + F.lit(0.5))
+
+
 def round_binary(col: Column, digits: int = 6) -> Column:
     """Half-away-from-zero rounding of the BINARY double value.
 
@@ -30,7 +36,18 @@ def round_binary(col: Column, digits: int = 6) -> Column:
     the pre-round input agrees. The trailing ``+ 0.0`` normalizes -0.0.
     """
     s = F.lit(float(10 ** digits))
-    return F.signum(col) * F.floor(F.abs(col) * s + F.lit(0.5)) / s + F.lit(0.0)
+    return _half_away(col, s) / s + F.lit(0.0)
+
+
+def micro(col: Column, digits: int = 6) -> Column:
+    """The signed scaled integer ``sign(x)·floor(|x|·10^d + 0.5)`` as a
+    long — micro units at the default 6 digits, the numerator of
+    :func:`round_binary` (and of ``ROUND6_SQL``), so it is engine-exact
+    under the same contract. Every per-term logprob, KL term or score
+    that is summed or ranked as an exact int64 rounds through here,
+    BEFORE the sum: an integer sum is fold-order free, a double sum
+    over shuffled rows is not."""
+    return _half_away(col, F.lit(float(10 ** digits))).cast("long")
 
 
 def round6_binary(col: Column) -> Column:

@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.mlfit import doc_features, ridge_fit
-from ..operators.util import round6_binary
+from ..operators.util import micro, round6_binary
 from ..sources.fixtures import load_documents_stream, load_table
 from .runner import run_bounded_complete
 
@@ -33,8 +33,7 @@ def streaming_ridge_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(1, len(w)):
         yhat = yhat + F.lit(w[i]) * F.col(f"x{i}")
     yr = round6_binary(yhat)
-    ym = (F.signum(yr) * F.floor(F.abs(yr) * F.lit(1e6)
-                                 + F.lit(0.5))).cast("long")
+    ym = micro(yr)
     scored = feat.select("lang", "y", ym.alias("yhat_micro"))
     agg = (scored.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -314,6 +314,56 @@ def test_buffer_closed_quadrilateral_keeps_its_hole():
     sample_check(b, 0.5, ((-32, 52), (-52, 52)), [ring])
 
 
+TRIANGLE = [(0.0, 0.0), (1.0, 0.0), (0.0, 1.0), (0.0, 0.0)]
+
+
+def test_erosion_beyond_inradius_is_empty():
+    """The triangle's inradius is 0.29: eroding it by 3 leaves nothing.
+    Its inward offset lines cross over and close an inverted loop the
+    positive-winding rule alone kept (area 3.04)."""
+    b = algos.buffer(Geometry.polygon([TRIANGLE]), -3.0, Q)
+    assert b.is_empty()
+
+
+def test_hole_eroded_away_leaves_no_spurious_hole():
+    """A hole eroded past its inradius fills completely: the buffer
+    covers the hole's interior and its area is the filled shell's."""
+    sq = [(-10.0, -10.0), (10.0, -10.0), (10.0, 10.0), (-10.0, 10.0),
+          (-10.0, -10.0)]
+    b = algos.buffer(Geometry.polygon([sq, TRIANGLE]), 3.0, Q)
+    filled = algos.buffer(Geometry.polygon([sq]), 3.0, Q)
+    assert b.typ == "Polygon" and len(b.parts) == 1
+    assert algos.covers(b, Geometry("Point", (0.2, 0.2)))
+    assert algos.area(b) == pytest.approx(algos.area(filled), rel=1e-12)
+
+
+@pytest.mark.parametrize("w", [1.0, 3.0])
+def test_closed_path_wider_than_inradius_is_the_polygon_buffer(w):
+    """A closed triangle path buffered wider than its inradius covers
+    the whole triangle: the same region as the polygon's buffer, not
+    an annulus with a spurious hole (r = 1 gave 6.60) or lost regions
+    (r = 3 gave 20.38 and missed POINT(0 0))."""
+    line = algos.buffer(Geometry.linestring(TRIANGLE), w, Q)
+    poly = algos.buffer(Geometry.polygon([TRIANGLE]), w, Q)
+    assert line.typ == "Polygon" and len(line.parts) == 1
+    assert algos.area(line) == pytest.approx(algos.area(poly), rel=1e-12)
+    assert algos.covers(line, Geometry("Point", (0.0, 0.0)))
+    sample_check(line, w, ((-w - 1, w + 2), (-w - 1, w + 2)), [TRIANGLE])
+
+
+@pytest.mark.parametrize("w", [0.5, 3.0])
+def test_self_crossing_closed_path_covers_its_vertices(w):
+    """Containment-property find: a closed path crossing itself at
+    (0.5, 0.5) bounds no region, so it takes the capped route; as two
+    closed offset loops it lost four of its vertices at r = 3."""
+    g = Geometry.linestring([(1.0, 1.0), (2.0, 1.0), (-1.0, 0.0),
+                             (0.0, 0.0), (1.0, 1.0)])
+    b = algos.buffer(g, w, Q)
+    for v in g.vertices():
+        assert algos.covers(b, Geometry("Point", v)), v
+    sample_check(b, w, ((-w - 2, w + 3), (-w - 1, w + 2)), [g.parts])
+
+
 def test_buffer_near_coincident_start_not_empty():
     """Deep-fuzz regression: a path start 6e-8 off a later joint/segment
     made both the arrangement and the single small-jitter retry empty;

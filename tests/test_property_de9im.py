@@ -3,7 +3,7 @@ implemented boolean predicate family on random small-integer
 geometries (integer grids keep every intersection exactly
 representable, so the two code paths cannot diverge by float noise)."""
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from datafusion_geo_spark.geo import relate as relmod
 from datafusion_geo_spark.geo.algos import covers, equals, intersects
@@ -18,15 +18,27 @@ def grid_points(draw):
     return Geometry("Point", (float(draw(ic)), float(draw(ic))))
 
 
-@st.composite
-def grid_lines(draw):
+def _grid_path(draw, start=None):
     n = draw(st.integers(2, 4))
-    cs = []
+    cs = [start] if start else []
     while len(cs) < n:
         c = (float(draw(ic)), float(draw(ic)))
         if not cs or c != cs[-1]:
             cs.append(c)
-    return Geometry("LineString", tuple(cs))
+    return tuple(cs)
+
+
+@st.composite
+def grid_lines(draw):
+    return Geometry("LineString", _grid_path(draw))
+
+
+@st.composite
+def grid_multilines(draw):
+    """Two members, the second starting where the first ends: under
+    the mod-2 boundary rule that shared endpoint is interior."""
+    a = _grid_path(draw)
+    return Geometry("MultiLineString", (a, _grid_path(draw, a[-1])))
 
 
 @st.composite
@@ -42,11 +54,15 @@ def grid_boxes(draw):
     return Geometry("Polygon", (ring,))
 
 
-geoms = st.one_of(grid_points(), grid_lines(), grid_boxes())
+geoms = st.one_of(grid_points(), grid_lines(), grid_multilines(),
+                  grid_boxes())
 
 
 @settings(max_examples=150, deadline=None)
 @given(geoms, geoms)
+@example(Geometry("MultiLineString", (((0.0, 0.0), (1.0, 0.0)),
+                                      ((1.0, 0.0), (2.0, 0.0)))),
+         Geometry("Point", (1.0, 0.0)))
 def test_matrix_consistent_with_predicates(a, b):
     m = relate(a, b)
     assert m is not None

@@ -57,6 +57,18 @@ def test_overlaps_crosses():
     assert not crosses(A, B)                              # area x area
 
 
+def test_multiline_boundary_is_mod2():
+    """Two members sharing an endpoint join there: under the mod-2
+    boundary rule (ST_Relate gives 0F1FF0FF2) the shared point is
+    interior, so the MultiLineString contains it and does not touch
+    it, and a line through it crosses; the unshared ends stay
+    boundary."""
+    ml = W("MULTILINESTRING((0 0,1 0),(1 0,2 0))")
+    assert contains(ml, W("POINT(1 0)")) and not touches(ml, W("POINT(1 0)"))
+    assert crosses(W("LINESTRING(1 -1,1 1)"), ml)
+    assert touches(ml, W("POINT(0 0)")) and not contains(ml, W("POINT(2 0)"))
+
+
 boxes = st.tuples(st.integers(-12, 12), st.integers(-12, 12),
                   st.integers(1, 10), st.integers(1, 10))
 

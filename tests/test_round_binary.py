@@ -15,7 +15,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from datafusion_geo_spark.operators.util import (ROUND6_SQL, round6,
+from datafusion_geo_spark.operators.util import (ROUND6_SQL, micro, round6,
                                                  round6_binary)
 
 # the live trap values ±, plus exact dyadic halves, zeros, and a spread
@@ -113,3 +113,31 @@ def test_python_twin_matches_spark_bits(spark):
             .orderBy("i").collect())
     for r, x in zip(rows, TWIN_PROBES):
         assert round6(x).hex() == r["r"].hex(), (x, round6(x), r["r"])
+
+
+def _micro_sql(digits: int) -> str:
+    """The numerator of ROUND6_SQL — sign(x)·floor(|x|·1e6 + 0.5) — at
+    ``digits``, as a BIGINT."""
+    num = ROUND6_SQL[1:ROUND6_SQL.rindex(" / ")]
+    return f"CAST({num.replace('1000000.0', f'{10 ** digits}.0')} AS BIGINT)"
+
+
+@pytest.mark.parametrize("digits", [6, 3])
+def test_micro_matches_numpy_and_duckdb_numerator(spark, digits):
+    """util.micro is round_binary's numerator as a long: Spark, the
+    numpy spec and DuckDB's ROUND6_SQL numerator agree on every
+    boundary value, at the default 6 digits and at 3."""
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(BOUNDARY)],
+                               "i int, x double")
+    rows = (df.select("i", micro(F.col("x"), digits).alias("m"))
+            .orderBy("i").collect())
+    if digits == 6:
+        assert rows == (df.select("i", micro(F.col("x")).alias("m"))
+                        .orderBy("i").collect())
+    con = duckdb.connect()
+    for r, x in zip(rows, BOUNDARY):
+        exp = int(np.sign(x) * np.floor(abs(x) * 10.0 ** digits + 0.5))
+        duck = con.execute(
+            f"SELECT {_micro_sql(digits).format(x='v')} "
+            "FROM (SELECT ?::DOUBLE AS v)", [x]).fetchone()[0]
+        assert r["m"] == exp == duck, (x, r["m"], exp, duck)

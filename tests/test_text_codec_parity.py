@@ -205,12 +205,29 @@ def test_wkt_infinity_raises_in_every_batch(bad):
 
 def test_overflowing_number_takes_the_row_path():
     """A number past the float range reads as infinity: the text pair
-    keeps to finite values, the per-row parsers decide the rest."""
+    keeps to finite values, and the per-row parser rejects it too."""
     for fmt, t in (("wkt", "POINT(1e400 2)"),
                    ("geojson", '{"type":"Point","coordinates":[1e400,2]}')):
         assert vector.parse_text([t, t], fmt) is None
     s = pd.Series(["POINT(1e400 2)"])
-    assert kernels.geom_from_text(s).tolist() == [to_wkb(from_wkt(s[0]))]
+    with pytest.raises(ValueError):
+        kernels.geom_from_text(s)
+
+
+@pytest.mark.parametrize("fmt,text", [
+    ("wkt", "POINT(inf 2)"), ("wkt", "POINT(-inf 2)"),
+    ("wkt", "POINT(nan 5)"), ("wkt", "POINT(1e400 2)"),
+    ("wkt", "LINESTRING(0 0,1 2 nan)"),
+    ("geojson", '{"type":"Point","coordinates":[1e400,2]}'),
+    ("geojson", '{"type":"Point","coordinates":[NaN,2]}'),
+    ("geojson", '{"type":"LineString","coordinates":[[0,0],[1,-Infinity]]}'),
+])
+def test_object_parsers_reject_non_finite_numbers(fmt, text):
+    """No non-finite coordinate gets in: to_wkt/to_geojson could not
+    print it back, so both object parsers raise, as the text pair
+    declines it."""
+    with pytest.raises(ValueError):
+        PARSE[fmt][0](text)
 
 
 @pytest.mark.parametrize("bad", ["LINESTRING(1 2 3,4)",
