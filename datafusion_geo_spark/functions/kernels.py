@@ -68,14 +68,11 @@ def _num(v):
     return None if v is None or v != v else v
 
 
-def _nullable(arr: np.ndarray, valid: np.ndarray):
-    """Float array → pandas-ready values with real None (NOT NaN — NaN
-    survives Arrow as a non-null double) where invalid."""
-    if valid.all():
-        return arr
-    out = arr.astype(object)
-    out[~valid] = None
-    return out
+def _nullable(arr: np.ndarray, valid: np.ndarray) -> np.ndarray:
+    """Float array with NaN where invalid: pyspark's pandas serializer
+    passes ``mask=series.isnull()`` to Arrow, so NaN arrives in Spark as
+    NULL (tests/test_sql_surface.py pins the SQL result)."""
+    return arr if valid.all() else np.where(valid, arr, np.nan)
 
 
 def _bool_nullable(arr: np.ndarray, valid: np.ndarray) -> pd.Series:

@@ -401,7 +401,10 @@ def equals(a: Geometry, b: Geometry) -> bool:
     ``LINESTRING(0 0,5 5,10 10)`` (reference test
     /root/reference/src/function/equals.rs:137-148). Implemented by
     canonicalization (collinear-vertex removal, ring orientation/rotation
-    normalization) rather than byte equality."""
+    normalization) rather than byte equality; pairs the canonical forms
+    tell apart but that share an envelope are settled by the DE-9IM
+    matrix (``T*F**FFF*``), which catches folded or overlapping
+    linework — ``LINESTRING(0 1,0 0,0 1)`` equals ``LINESTRING(0 0,0 1)``."""
     if a.is_empty() and b.is_empty():
         return True
     if a.is_empty() != b.is_empty():
@@ -412,7 +415,15 @@ def equals(a: Geometry, b: Geometry) -> bool:
         if c[0] in ("MP", "ML", "MPG") and len(c[1]) == 1:
             return ({"MP": "P", "ML": "L", "MPG": "PG"}[c[0]], c[1][0])
         return c
-    return unwrap(ca) == unwrap(cb)
+    if unwrap(ca) == unwrap(cb):
+        return True
+    # equal point sets have equal envelopes, so only those pairs pay
+    # for the full matrix
+    if a.bounds() != b.bounds():
+        return False
+    from .de9im import relate, relate_match
+    m = relate(a, b)
+    return m is not None and bool(relate_match(m, "T*F**FFF*"))
 
 
 # ---------------------------------------------------------------- boundary

@@ -22,6 +22,7 @@ by one pipeline stage share a type, a layout and an SRID.
 from __future__ import annotations
 
 import json
+import warnings
 from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
@@ -192,11 +193,14 @@ def parse_text(values: Sequence, fmt: str) -> Optional[Batch]:
     try:
         if fmt == "wkt":
             # a non-blank separator makes numpy read each field whole or
-            # stop (or raise); a stop loses the trailing 0, even in the last
-            vals = np.fromstring(flat + ",0", sep=",")[:-1]
+            # stop; a stop loses the trailing 0, even in the last. numpy
+            # warns on a stop where later versions raise: both reject
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", DeprecationWarning)
+                vals = np.fromstring(flat + ",0", sep=",")[:-1]
         else:  # json's own number grammar and int -> float rule
             vals = np.array(json.loads("[" + flat + "]"), float)
-    except (ValueError, OverflowError):
+    except (ValueError, OverflowError, DeprecationWarning):
         return None
     if len(vals) != 2 * m * k or not np.isfinite(vals).all():
         return None

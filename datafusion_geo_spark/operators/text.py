@@ -600,7 +600,8 @@ def _heldout_split(df: DataFrame, text_col: str, id_col: str,
 
 
 def _words(half: DataFrame, *cols) -> DataFrame:
-    """``cols`` and one row ``w`` per word of a split half."""
+    """``cols`` and one row ``w`` per word of the lower-cased text ``_t``
+    (a split half, or the corpus for distinct_ngrams and zipf_fit)."""
     return half.select(*cols, F.explode(words_col(F.col("_t"))).alias("w"))
 
 
@@ -680,9 +681,8 @@ def _bigrams_col(words: Column) -> Column:
 
 
 def _pairs(half: DataFrame, *cols) -> DataFrame:
-    """``cols`` and one row ``p`` = (w1, w2) per adjacent word pair of a
-    split half (:func:`_bigrams_col` over the word array projected
-    once)."""
+    """``cols`` and one row ``p`` = (w1, w2) per adjacent word pair of
+    ``_t`` (:func:`_bigrams_col` over the word array projected once)."""
     return (half.select(*cols, words_col(F.col("_t")).alias("_w"))
             .select(*cols, F.explode(_bigrams_col(F.col("_w"))).alias("p")))
 
@@ -970,14 +970,13 @@ def distinct_ngrams(df: DataFrame, group_col: str = "source",
     group: (group, n_tokens, n_distinct_1, distinct1_ratio,
     n_bigrams, n_distinct_2, distinct2_ratio)."""
     base = df.select(F.col(group_col).alias("grp"),
-                     words_col(F.lower(F.col(text_col))).alias("_w"))
-    uni = (base.select("grp", F.explode(F.col("_w")).alias("t"))
-           .where(F.col("t") != "")
+                     F.lower(F.col(text_col)).alias("_t"))
+    uni = (_words(base, "grp")
+           .where(F.col("w") != "")
            .groupBy("grp")
            .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
-                F.countDistinct("t").cast("long").alias("n_distinct_1")))
-    bi = (base.select("grp", F.explode(_bigrams_col(F.col("_w")))
-                      .alias("p"))
+                F.countDistinct("w").cast("long").alias("n_distinct_1")))
+    bi = (_pairs(base, "grp")
           .select("grp", F.concat_ws(" ", F.col("p.w1"), F.col("p.w2"))
                   .alias("b"))
           .groupBy("grp")
@@ -1013,12 +1012,12 @@ def zipf_fit(df: DataFrame, group_col: str = "source",
     from pyspark.sql import Window
 
     base = df.select(F.col(group_col).alias("grp"),
-                     words_col(F.lower(F.col(text_col))).alias("_w"))
-    cnt = (base.select("grp", F.explode(F.col("_w")).alias("t"))
-           .where(F.col("t") != "")
-           .groupBy("grp", "t")
+                     F.lower(F.col(text_col)).alias("_t"))
+    cnt = (_words(base, "grp")
+           .where(F.col("w") != "")
+           .groupBy("grp", "w")
            .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    win = Window.partitionBy("grp").orderBy(F.desc("c"), F.asc("t"))
+    win = Window.partitionBy("grp").orderBy(F.desc("c"), F.asc("w"))
     ranked = (cnt.withColumn("r", F.row_number().over(win))
               .where(F.col("r") <= top_n))
     pts = ranked.select(

@@ -138,6 +138,10 @@ def test_equals_topological():
     assert algos.equals(b, a)
     assert algos.equals(a, from_wkt("LINESTRING(10 10,0 0)"))  # reversed
     assert not algos.equals(a, from_wkt("LINESTRING(0 0,5 6,10 10)"))
+    # a line folded back on itself covers the same point set
+    folded = from_wkt("LINESTRING(10 10,0 0,10 10)")
+    assert algos.equals(a, folded) and algos.equals(folded, a)
+    assert not algos.equals(a, from_wkt("LINESTRING(10 10,0 0,5 6)"))
     # polygons: rotated start vertex + reversed winding are equal
     p1 = from_wkt("POLYGON((0 0,10 0,10 10,0 10,0 0))")
     p2 = from_wkt("POLYGON((10 10,0 10,0 0,10 0,10 10))")

@@ -63,6 +63,8 @@ geoms = st.one_of(grid_points(), grid_lines(), grid_multilines(),
 @example(Geometry("MultiLineString", (((0.0, 0.0), (1.0, 0.0)),
                                       ((1.0, 0.0), (2.0, 0.0)))),
          Geometry("Point", (1.0, 0.0)))
+@example(Geometry("LineString", ((0.0, 0.0), (0.0, 1.0))),
+         Geometry("LineString", ((0.0, 1.0), (0.0, 0.0), (0.0, 1.0))))
 def test_matrix_consistent_with_predicates(a, b):
     m = relate(a, b)
     assert m is not None

@@ -412,3 +412,18 @@ def test_grid_grouped_keeps_pinned_repartition(spark):
     assert plan.count("REPARTITION_BY_NUM") >= 2
     assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize("name", ["distinct_ngrams", "zipf_fit"])
+def test_word_operators_split_each_document_once(spark, name):
+    """distinct_ngrams and zipf_fit split the words at the explode: an
+    explode of a projected word-array column makes Spark infer a
+    ``size(split(...)) > 0`` filter below the projection, which splits
+    every document a second time. One ``split(`` per scan of the
+    documents in the optimized plan."""
+    import re
+
+    import __spark_entry__ as entrymod
+    plan = optimized_of(entrymod.queries()[name](spark, SF_DIR))
+    scans = len(re.findall(r"Relation \[", plan))
+    assert scans and plan.count("split(") == scans, plan

@@ -233,3 +233,31 @@ def test_setsrid_roundtrip_sql(spark):
     assert rows["cleared"] is None
     assert rows["nulled"] is None
     assert rows["null_geom"] is None
+
+
+def test_float_fast_paths_null_and_empty_rows(spark, sql):
+    """A NULL row and a POINT EMPTY row read as SQL NULL through the
+    float fast paths of ST_X, Box2D and ST_Distance (NaN crosses Arrow
+    as NULL), exactly as through the per-row object path, which a
+    LINESTRING row in the same batch forces."""
+    cols = """ST_X(g) x, Box2D(g) b,
+              ST_Distance(g, ST_Point(0.0, 0.0)) d_pair,
+              ST_Distance(g, ST_GeomFromText('LINESTRING(0 0,10 0)')) d_const"""
+
+    def run(extra):
+        rows = [(1, "POINT(3 4)"), (2, None), (3, "POINT EMPTY"),
+                (4, "POINT(-1 2)")] + extra
+        (spark.createDataFrame(rows, "id long, wkt string").coalesce(1)
+         .createOrReplaceTempView("float_fast_t"))
+        got = sql(f"""SELECT id, {cols} FROM (
+                        SELECT id, ST_GeomFromText(wkt) g FROM float_fast_t)
+                      WHERE id < 5 ORDER BY id""")
+        return [tuple(r) for r in got]
+
+    fast = run([])
+    assert fast == run([(5, "LINESTRING(0 0,1 1)")])
+    assert [r[1:] for r in fast] == [
+        (3.0, (3.0, 4.0, 3.0, 4.0), 5.0, 4.0),
+        (None, (None, None, None, None), None, None),
+        (None, (None, None, None, None), None, None),
+        (-1.0, (-1.0, 2.0, -1.0, 2.0), math.sqrt(5.0), math.sqrt(5.0))]

@@ -12,6 +12,11 @@ the MEDIAN as "warm" (all reps in "reps") — the r11 checklist carried
 phantom regressions from single-run neighbor noise (queries timed right
 after a heavy one inherit its GC/worker churn; VERDICT r11 item 9).
 
+One fixed order: one untimed warm-up query (the first name) absorbs the
+slow first query after JVM start, then every name is timed in sorted
+order, so two sweeps of the same names compare the same positions
+whatever order ``queries()`` returns them in (it follows the gate).
+
 Output: one JSON line per query on stdout + a summary file
 (tools/sweep_<tag>.json) sorted slowest-first. Usage:
 
@@ -66,11 +71,18 @@ def main():
 
     qmap = entrymod.queries()
     only = set(sys.argv[1:])
-    if only:
-        qmap = {k: v for k, v in qmap.items() if k in only}
+    names = sorted(k for k in qmap if k in only or not only)
+    if names:
+        spark.sparkContext.setJobDescription("sweep:warm-up")
+        try:
+            qmap[names[0]](spark, SF_DIR).write.format("noop") \
+                .mode("overwrite").save()
+        except Exception:  # noqa: BLE001 — its timed run records it
+            pass
 
     results = {}
-    for name, fn in qmap.items():
+    for name in names:
+        fn = qmap[name]
         spark.sparkContext.setJobDescription(f"sweep:{name}")
         row = {"err": None}
         try:
