@@ -315,14 +315,15 @@ def box2d_rows(s: pd.Series) -> pd.DataFrame:
     """Per-row bounding box -> DataFrame(xmin,ymin,xmax,ymax) backing the
     Box2D struct UDF (/root/reference/src/function/box2d.rs:46-77;
     struct layout /root/reference/src/geo/box.rs:11-16)."""
-    b = vector.decode(s.tolist())
-    if b is not None and b.k:
-        return pd.DataFrame({c: _nullable(v, b.valid) for c, v in zip(
-            ("xmin", "ymin", "xmax", "ymax"), vector.bounds(b.coords))})
-    nulls = (None, None, None, None)   # a NULL or empty geometry
-    return pd.DataFrame(
-        [nulls if b is None else b for b in _rows(Geometry.bounds, "g", s)],
-        columns=["xmin", "ymin", "xmax", "ymax"])
+    # envelopes from vector.envelopes; only the non-NULL rows in no fixed
+    # layout run Geometry.bounds (an EMPTY geometry stays NULL)
+    vals = s.tolist()
+    env, _, fixed = vector.envelopes(vals)
+    idx = [i for i in np.flatnonzero(~fixed) if vals[i] is not None]
+    if idx:
+        env[idx] = [(np.nan,) * 4 if b is None else b
+                    for b in _rows(Geometry.bounds, "g", s.iloc[idx])]
+    return pd.DataFrame(env, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
 def extent_array(s: pd.Series):
@@ -490,6 +491,73 @@ def _box_class_fast(fn, al: list, bl: list, ra, rb):
     return list(out)
 
 
+#: predicate -> (its answer when the right argument lies inside the
+#: left, a rectangle; when the left lies inside the right), for an inner
+#: side that is not degenerate and whose envelope is inside by more than
+#: the margin (``_by_envelope``)
+_INSIDE = {
+    "intersects": (True, True), "covers": (True, False),
+    "covered_by": (False, True), "equals": (False, False),
+    "contains": (True, False), "within": (False, True),
+    "touches": (False, False), "overlaps": (False, False),
+    "crosses": (False, False),
+}
+
+
+def _envelope_side(vals: list):
+    """One argument's envelopes (non-finite bounds NaN), non-degenerate
+    flags, and whether it is a rectangle column; a literal (one value in
+    every row) is read once."""
+    n = len(vals)
+    one = n > 1 and vals.count(vals[0]) == n
+    src = vals[:1] if one else vals
+    env, solid, _ = vector.envelopes(src)
+    env[~np.isfinite(env)] = np.nan   # a non-finite bound decides nothing
+    rect = vector.rectangles(vector.decode(src)) is not None
+    if one:
+        env, solid = np.repeat(env, n, axis=0), np.repeat(solid, n)
+    return env, solid, rect
+
+
+def _by_envelope(fn: Callable, fn_name: str, a: pd.Series, b: pd.Series,
+                 al: list, bl: list) -> pd.Series:
+    """Filter, then refine: rows whose envelopes are apart by more than
+    the margin (``algos.BOX_MARGIN``) are False for every predicate in
+    ``_INSIDE``; rows where one side is a rectangle (the whole column is
+    ``vector.rectangles``, a literal included) and the other side's
+    envelope lies inside it by more than the margin, that side
+    non-degenerate, take the ``_INSIDE`` answer. Every other row (NULL,
+    EMPTY, degenerate, no fixed layout, near an edge) runs through
+    ``_rows``."""
+    ea, sa, ra = _envelope_side(al)
+    eb, sb, rb = _envelope_side(bl)
+    m = algos.BOX_MARGIN * (1.0 + np.maximum(np.abs(ea).max(axis=1),
+                                             np.abs(eb).max(axis=1)))
+    apart = ((ea[:, 2] < eb[:, 0] - m) | (eb[:, 2] < ea[:, 0] - m)
+             | (ea[:, 3] < eb[:, 1] - m) | (eb[:, 3] < ea[:, 1] - m))
+
+    def inside(e, s, r, rect):
+        # e (solid) strictly inside r, the envelope of a rectangle column
+        if not rect:
+            return np.zeros(len(e), bool)
+        return (s & (e[:, 0] > r[:, 0] + m) & (e[:, 1] > r[:, 1] + m)
+                & (e[:, 2] < r[:, 2] - m) & (e[:, 3] < r[:, 3] - m))
+
+    out = np.full(len(al), None, dtype=object)
+    out[apart] = False
+    rest = ~apart
+    for ins, ans in zip((inside(eb, sb, ea, ra), inside(ea, sa, eb, rb)),
+                        _INSIDE[fn_name]):
+        out[ins] = ans
+        rest &= ~ins
+    idx = np.flatnonzero(rest)
+    if len(idx) == len(al):
+        return _rows(fn, "gg", a, b)
+    if len(idx):
+        out[idx] = _rows(fn, "gg", a.iloc[idx], b.iloc[idx]).to_numpy()
+    return _obj_series(out)
+
+
 def _binary_pred(fn: Callable[[Geometry, Geometry], bool], fn_name: str):
     def pred(x: Geometry, y: Geometry) -> bool:
         return bool(fn(x, y))
@@ -540,7 +608,7 @@ def _binary_pred(fn: Callable[[Geometry, Geometry], bool], fn_name: str):
                                    vector.rectangles(db))
             if bres is not None:
                 return _obj_series(bres)
-        return _rows(pred, "gg", a, b)
+        return _by_envelope(pred, fn_name, a, b, al, bl)
     return kernel
 
 
@@ -601,12 +669,13 @@ convex_hull = _per_row(_wkb(algos.convex_hull), "g")  # PostGIS ST_ConvexHull
 envelope = _per_row(_wkb(algos.envelope), "g")        # PostGIS ST_Envelope
 
 
-def _box_class_kernel(fn):
+def _box_class_kernel(fn, fn_name: Optional[str] = None):
     """(wkb, wkb) -> scalar kernel whose result is a pure point-set
     function of the pair (the contains/touches/overlaps/relate family —
     NOT coordinate-dependent kernels like azimuth/closest_point): it
     takes the rectangle class-memo fast path (_box_class_fast) when both
-    batches are rectangles."""
+    batches are rectangles, then, for a predicate named in ``_INSIDE``,
+    settles what it can from envelopes (``_by_envelope``)."""
     def kernel(a: pd.Series, b: pd.Series) -> pd.Series:
         al, bl = a.tolist(), b.tolist()
         ra = vector.rectangles(vector.decode(al))
@@ -614,7 +683,9 @@ def _box_class_kernel(fn):
         bres = _box_class_fast(fn, al, bl, ra, rb)
         if bres is not None:
             return _obj_series(bres)
-        return _rows(fn, "gg", a, b)
+        if fn_name is None:
+            return _rows(fn, "gg", a, b)
+        return _by_envelope(fn, fn_name, a, b, al, bl)
     return kernel
 
 
@@ -626,11 +697,11 @@ closest_point = _per_row(_wkb(algos.closest_point), "gg")  # ST_ClosestPoint
 
 # topological predicates beyond the covers family (geo/relate.py;
 # PostGIS ST_Contains/Within/Touches/Overlaps/Crosses)
-st_contains = _box_class_kernel(relate.contains)
-st_within = _box_class_kernel(relate.within)
-st_touches = _box_class_kernel(relate.touches)
-st_overlaps = _box_class_kernel(relate.overlaps)
-st_crosses = _box_class_kernel(relate.crosses)
+st_contains = _box_class_kernel(relate.contains, "contains")
+st_within = _box_class_kernel(relate.within, "within")
+st_touches = _box_class_kernel(relate.touches, "touches")
+st_overlaps = _box_class_kernel(relate.overlaps, "overlaps")
+st_crosses = _box_class_kernel(relate.crosses, "crosses")
 
 # full DE-9IM matrix (geo/de9im.py; PostGIS ST_Relate / ST_RelateMatch;
 # beyond the reference's covers/intersects/equals predicate surface)

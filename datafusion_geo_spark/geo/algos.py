@@ -22,6 +22,15 @@ from .geom import Coord, Geometry, dist, ring_area2
 
 EPS = 1e-12
 
+#: Relative gap between two envelopes that no tolerance below can close:
+#: a pair whose envelopes are apart, or one of which lies inside the
+#: other, by more than BOX_MARGIN * (1 + the pair's largest |coordinate|)
+#: is decided from the envelopes alone (functions/kernels.py). It exceeds
+#: the absolute EPS of ``_bbox_disjoint`` and the range checks, the
+#: EPS * (1 + |x| + |y|) of ``_on_segment``, and EPS on split parameters
+#: along a segment no longer than twice that coordinate.
+BOX_MARGIN = 1e-9
+
 
 # ---------------------------------------------------------------- primitives
 

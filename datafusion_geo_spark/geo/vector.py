@@ -281,6 +281,62 @@ def bounds(c: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarra
             c[:, :, 0].max(axis=1), c[:, :, 1].max(axis=1))
 
 
+def envelopes(values: Sequence) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per row: the envelope (an (n, 4) array of xmin, ymin, xmax, ymax),
+    a non-degenerate flag and a fixed-layout flag. Rows are grouped by
+    (length, first 5 bytes) and each group goes through ``decode``, so a
+    mixed batch of fixed layouts needs no other codec. A row of a group
+    in no fixed layout (multi-ring, multi-part, big-endian, Z/M, mixed
+    SRIDs) and a NULL row have a NaN envelope; a fixed-layout row has
+    ``bounds`` of its vertices (NaN for POINT EMPTY). Non-degenerate: the
+    envelope is finite and the row is a point, a line whose envelope has
+    extent, or a closed ring whose shoelace area is not zero."""
+    n = len(values)
+    env = np.full((n, 4), np.nan)
+    solid = np.zeros(n, bool)
+    fixed = np.zeros(n, bool)
+    b = decode(values)
+    if b is not None:   # one layout: the batch is the only group
+        by_typ = {b.typ: [(np.arange(n), b)]} if b.k else {}
+    else:
+        groups: dict = {}
+        for i, v in enumerate(values):
+            if v is not None and v == v:
+                groups.setdefault((len(v), bytes(v[:5])), []).append(i)
+        by_typ = {}
+        for rows in groups.values():
+            b = decode([values[i] for i in rows])
+            if b is not None and b.k:
+                by_typ.setdefault(b.typ, []).append((rows, b))
+    for typ, part in by_typ.items():
+        # one pass per type: each group padded to the longest with its
+        # last vertex, which moves no bound and adds no shoelace term
+        k = max(b.k for _, b in part)
+        rows = np.concatenate([r for r, _ in part])
+        c = np.empty((len(rows), k, 2))
+        o = 0
+        for r, b in part:
+            c[o:o + len(r), :b.k] = b.coords
+            c[o:o + len(r), b.k:] = b.coords[:, -1:]
+            o += len(r)
+        e = np.stack(bounds(c), axis=1)
+        env[rows] = e
+        fixed[rows] = np.concatenate([b.valid for _, b in part])
+        if typ == "Point":
+            solid[rows] = True
+        elif typ == "LineString":
+            solid[rows] = (e[:, 2] > e[:, 0]) | (e[:, 3] > e[:, 1])
+        else:
+            x, y = c[:, :, 0], c[:, :, 1]
+            with np.errstate(invalid="ignore", over="ignore"):  # inf rows
+                area2 = (x[:, :-1] * y[:, 1:]
+                         - x[:, 1:] * y[:, :-1]).sum(axis=1)
+            solid[rows] = ((area2 != 0) & np.isfinite(area2)
+                           & (c[:, 0] == c[:, -1]).all(axis=1))
+    solid &= np.isfinite(env).all(axis=1)
+    return env, solid, fixed
+
+
 def _on_segment_arr(px, py, ax, ay, bx, by) -> np.ndarray:
     """Vectorized algos._on_segment: p on closed segment ab."""
     cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
